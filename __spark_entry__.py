@@ -28,7 +28,7 @@ from smartdatapipeline_spark.operators import anomaly as A
 from smartdatapipeline_spark.operators import forecast as FC
 from smartdatapipeline_spark.operators import kpi as K
 from smartdatapipeline_spark.operators import metrics as M
-from smartdatapipeline_spark.session import read_events
+from smartdatapipeline_spark.session import env_int, local_frame, read_events
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -63,7 +63,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartdatapipeline_spark.functions.skew import salted_layout
 
     df = read_events(spark, sf_dir)
-    salt = int(os.environ.get("SPARK_GRAFT_EVENTS_SALT", "0"))
+    salt = env_int("SPARK_GRAFT_EVENTS_SALT", minimum=0) or 0
     return salted_layout(
         df, spark.sparkContext.defaultParallelism, "user_id", salt, "ts"
     )
@@ -318,7 +318,7 @@ def q_metrics_read_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered desc with a deterministic limit, then output-normalized with
     the unified ``value`` column for agg=avg."""
     gold = K.run_daily_kpis(_sourced_events(spark, sf_dir), metric_col="event_type")
-    sources = spark.createDataFrame(_SOURCES_ROWS, "id int, name string")
+    sources = local_frame(spark, _SOURCES_ROWS, "id int, name string")
     out = M.fetch_metric_daily(
         gold,
         metric="purchase",
@@ -1164,8 +1164,8 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["cent_id"], r["_cv"], r["_cn"])
             for r in SIM.kmeans_centroids(emb, k=16, seed=42).collect()
         ]
-    cents = spark.createDataFrame(
-        _KMEANS_CENTS[sf_dir], "cent_id int, _cv array<double>, _cn double"
+    cents = local_frame(
+        spark, _KMEANS_CENTS[sf_dir], "cent_id int, _cv array<double>, _cn double"
     )
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return SIM.ivf_topk_with_centroids(emb, queries, cents, k=10, nprobe=8)
@@ -2450,7 +2450,7 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         ev.unpersist()
     rows = [(float(q), float(v)) for q, v in zip(qs, vals)]
-    return spark.createDataFrame(rows, "q double, value double")
+    return local_frame(spark, rows, "q double, value double")
 
 
 def q_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3381,8 +3381,8 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["sub"], r["cent_id"], r["_cv"])
             for r in SIM.pq_train(emb, m=16, k=16, seed=42).collect()
         ]
-    cb = spark.createDataFrame(
-        _PQ_CODEBOOKS[sf_dir], "sub int, cent_id int, _cv array<double>"
+    cb = local_frame(
+        spark, _PQ_CODEBOOKS[sf_dir], "sub int, cent_id int, _cv array<double>"
     )
     codes = SIM.pq_encode(emb, cb)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
@@ -3538,8 +3538,8 @@ def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (r["sub"], r["cent_id"], r["_cv"])
             for r in SIM.pq_train(emb, m=16, k=16, seed=42).collect()
         ]
-    cb = spark.createDataFrame(
-        _PQ_CODEBOOKS[sf_dir], "sub int, cent_id int, _cv array<double>"
+    cb = local_frame(
+        spark, _PQ_CODEBOOKS[sf_dir], "sub int, cent_id int, _cv array<double>"
     )
     codes = SIM.pq_encode(emb, cb)
     queries = emb.filter(F.col("vec_id") % 50 == 0)

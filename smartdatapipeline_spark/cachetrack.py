@@ -48,3 +48,13 @@ def release_plan_caches(df: DataFrame) -> None:
         except Exception:  # noqa: BLE001 — session may already be stopped
             pass
     df._sdp_caches = []  # type: ignore[attr-defined]
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a ``localCheckpoint`` frame. Its blocks
+    otherwise stay pinned until a JVM GC lets Spark's ContextCleaner
+    notice the RDD is unreachable — on a shared session that can be many
+    calls later. Call once nothing will read ``df`` again: reading it
+    afterwards fails, because a local checkpoint keeps no lineage to
+    recompute from."""
+    df._jdf.logicalPlan().rdd().unpersist(False)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """⟨a, b⟩ as a strict left fold in index order (deterministic —
@@ -497,9 +499,7 @@ def kmeans_centroids(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    cents = vectors.sparkSession.createDataFrame(
-        rows, "cent_id int, _cv array<double>"
-    )
+    cents = local_frame(vectors.sparkSession, rows, "cent_id int, _cv array<double>")
     return cents.select("cent_id", "_cv", norm2(F.col("_cv")).alias("_cn"))
 
 
@@ -780,7 +780,7 @@ def pq_train(
             (j, i, [float(x) for x in c])
             for i, c in enumerate(model.clusterCenters())
         ]
-    return spark.createDataFrame(rows, "sub int, cent_id int, _cv array<double>")
+    return local_frame(spark, rows, "sub int, cent_id int, _cv array<double>")
 
 
 def _l2sq(a: Column, b: Column) -> Column:

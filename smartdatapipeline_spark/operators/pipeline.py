@@ -24,6 +24,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.cachetrack import release_checkpoint
 from smartdatapipeline_spark.operators.kpi import run_daily_kpis
 from smartdatapipeline_spark.sources.ingest import (
     clean_rows,
@@ -374,34 +375,39 @@ def ingest_and_refresh(
     # recompute the anti-join AGAINST ITS OWN OUTPUT and lose the batch.
     # Checkpointing cuts the lineage so the plan can't re-read silver.
     to_insert = to_insert.localCheckpoint(eager=True)
-    inserted = to_insert.count()
-    stats["duplicate_rows"] = stats["ingested_rows"] - inserted
-    if inserted == 0:
-        return stats
-
-    if store == "snapshot":
-        SS.append(
-            to_insert.withColumn("event_date", F.to_date("ts")),
-            silver_path,
-            partition_col="event_date",
-        )
-        if incremental:
-            stats["refresh"] = refresh_gold_from_changes(
-                spark, silver_path, gold_path
-            )
+    # Released before returning: left to the ContextCleaner, the
+    # checkpoint's blocks outlive the call until a JVM GC happens to run.
+    try:
+        inserted = to_insert.count()
+        stats["duplicate_rows"] = stats["ingested_rows"] - inserted
+        if inserted == 0:
             return stats
-        silver = SS.read_table(spark, silver_path).drop("event_date")
-    else:
-        append_silver(to_insert, silver_path)
-        silver = spark.read.parquet(silver_path)
 
-    touched = to_insert.select(F.to_date("ts").alias("_d")).distinct()
-    affected = silver.join(
-        F.broadcast(touched), F.to_date(silver["ts"]) == touched["_d"], "left_semi"
-    )
-    gold = run_daily_kpis(affected)
-    if store == "snapshot":
-        SS.overwrite_partitions(gold, gold_path, partition_col="metric_date")
-    else:
-        overwrite_gold_partitions(gold, gold_path)
-    return stats
+        if store == "snapshot":
+            SS.append(
+                to_insert.withColumn("event_date", F.to_date("ts")),
+                silver_path,
+                partition_col="event_date",
+            )
+            if incremental:
+                stats["refresh"] = refresh_gold_from_changes(
+                    spark, silver_path, gold_path
+                )
+                return stats
+            silver = SS.read_table(spark, silver_path).drop("event_date")
+        else:
+            append_silver(to_insert, silver_path)
+            silver = spark.read.parquet(silver_path)
+
+        touched = to_insert.select(F.to_date("ts").alias("_d")).distinct()
+        affected = silver.join(
+            F.broadcast(touched), F.to_date(silver["ts"]) == touched["_d"], "left_semi"
+        )
+        gold = run_daily_kpis(affected)
+        if store == "snapshot":
+            SS.overwrite_partitions(gold, gold_path, partition_col="metric_date")
+        else:
+            overwrite_gold_partitions(gold, gold_path)
+        return stats
+    finally:
+        release_checkpoint(to_insert)

@@ -60,6 +60,22 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def env_int(name: str, minimum: int) -> int | None:
+    """Integer env knob ``name`` clamped to ``minimum``; None when unset
+    or empty. A value that is not an integer raises a ``ValueError``
+    naming the variable, instead of a bare ``int()`` error at some
+    distant call site — and a 0 or negative partition pin never reaches
+    ``spark.sql.shuffle.partitions``."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return None
+    try:
+        value = int(raw)
+    except ValueError:
+        raise ValueError(f"{name} must be an integer, got {raw!r}") from None
+    return max(minimum, value)
+
+
 def stream_state_partitions(
     rows_per_batch: int,
     cpus: int | None = None,
@@ -86,9 +102,9 @@ def stream_state_partitions(
     formula outright (a cluster operator pinning state partitioning for
     checkpoint compatibility across resizes).
     """
-    explicit = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
-    if explicit:
-        return int(explicit)
+    explicit = env_int("SPARK_GRAFT_STREAM_PARTS", minimum=1)
+    if explicit is not None:
+        return explicit
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     derived = max(floor, rows_per_batch // target_rows)
@@ -126,9 +142,9 @@ def loop_shuffle_partitions(
     only the small-graph end stops paying for reducers it cannot feed.
     ``SPARK_GRAFT_LOOP_PARTS`` pins the value outright (A/B probes,
     cluster operators)."""
-    explicit = os.environ.get("SPARK_GRAFT_LOOP_PARTS")
-    if explicit:
-        return int(explicit)
+    explicit = env_int("SPARK_GRAFT_LOOP_PARTS", minimum=1)
+    if explicit is not None:
+        return explicit
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     derived = max(floor, (n_rows + target_rows - 1) // target_rows)
@@ -193,6 +209,41 @@ def canonicalize_timestamps(df):
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str):
+    """A driver-side table (a model's coefficients, a codebook, a merge
+    list, a dimension literal) as a JVM-only plan: ``LocalRelation`` →
+    ``LocalTableScan``.
+
+    Classic PySpark's ``createDataFrame(<list>)`` and ``parallelize``
+    plan as ``Scan ExistingRDD`` over a ``PythonRDD``: executing them
+    forks ``pyspark.daemon`` plus a Python worker per concurrently
+    running slice, and the workers stay resident for the life of the
+    session — on a UDF-free path they are pure overhead (measured on the
+    corpus benchmark: daemon + 4 workers held ~172 MiB of PSS for two
+    6–7-row tables). Here the rows travel as one Arrow batch that the
+    JVM decodes into a ``LocalRelation``, so no Python process ever
+    runs. Typed literals (``inline`` over an array of structs) would
+    also stay in the JVM, but cost one py4j call per value: ~3 s to
+    plan a 256-row PQ codebook, against ~20 ms here.
+
+    ``schema`` is a DDL string; every field is converted at its declared
+    type — an int that does not fit raises, doubles keep their exact
+    bits, ``None`` is null. ``rows`` holds tuples in field order (an
+    empty list gives an empty frame of that schema)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.session import local_frame
 from smartdatapipeline_spark.sources.readers import (
     CORRUPT_COL,
     METRIC_KEYS,
@@ -115,7 +116,7 @@ def get_or_create_sources(
 
     names = names.select(F.col("name").cast("string")).distinct()
     if existing is None:
-        existing = spark.createDataFrame([], "id long, name string")
+        existing = local_frame(spark, [], "id long, name string")
     new = names.join(existing, "name", "left_anti")
     base = existing.agg(F.coalesce(F.max("id"), F.lit(0)).alias("m"))
     new_ids = new.crossJoin(F.broadcast(base)).select(

@@ -165,6 +165,33 @@ def test_ingest_and_refresh_incremental_matches_batch_mode(spark, tmp_path):
     assert kinds == {"merge"}
 
 
+def test_ingest_and_refresh_releases_its_checkpoint(spark, tmp_path):
+    """The anti-join output is localCheckpointed (the refreshByPath
+    self-read guard) and must be unpersisted before the call returns,
+    not whenever a JVM GC lets the ContextCleaner find it. No GC is
+    forced here. Compared against the RDDs persisted before the call,
+    so caches other tests hold on the shared session do not count."""
+    from smartdatapipeline_spark.sources import readers as R
+
+    p = str(tmp_path / "a.csv")
+    open(p, "w").write(
+        "timestamp,value,metric\n"
+        "2025-01-01T00:00:00Z,10,m\n"
+        "2025-01-02T00:00:00Z,5,m\n"
+    )
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    # the second call inserts nothing and returns early
+    for _ in range(2):
+        ingest_and_refresh(
+            spark, R.read_csv(spark, p), silver, gold,
+            store="snapshot", incremental=True,
+        )
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+    assert len(_gold_rows(spark, gold)) == 2
+
+
 def test_hll_store_as_incremental_materialized_view(spark, tmp_path):
     """refresh_from_changes generalizes past gold: the HLL register
     store maintained from the silver change feed equals the direct

@@ -1,0 +1,173 @@
+"""Driver-built tables and session env knobs.
+
+``session.local_frame`` is the one route from a Python list to a
+DataFrame in the library: a JVM-only ``LocalRelation``, so a UDF-free
+query never forks ``pyspark.daemon`` or a Python worker. The source
+scan below keeps every other route (``createDataFrame`` over a list or
+RDD, ``parallelize``) out of the package and the query registry.
+"""
+from __future__ import annotations
+
+import ast
+import math
+import os
+import struct
+
+import pytest
+
+from smartdatapipeline_spark.session import (
+    env_int,
+    local_frame,
+    loop_shuffle_partitions,
+    stream_state_partitions,
+)
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _bits(x: float) -> bytes:
+    return struct.pack("<d", x)
+
+
+def test_local_frame_declared_types_and_nulls(spark):
+    df = local_frame(
+        spark,
+        [(1, 2**40, "a", 0.5, [1.0]), (None, None, None, None, None)],
+        "i int, l bigint, s string, d double, v array<double>",
+    )
+    assert df.dtypes == [
+        ("i", "int"), ("l", "bigint"), ("s", "string"),
+        ("d", "double"), ("v", "array<double>"),
+    ]
+    assert [tuple(r) for r in df.collect()] == [
+        (1, 2**40, "a", 0.5, [1.0]),
+        (None, None, None, None, None),
+    ]
+
+
+def test_local_frame_int_overflow_raises(spark):
+    # pyarrow's ArrowInvalid is a ValueError
+    with pytest.raises(ValueError, match="too large"):
+        local_frame(spark, [(2**31,)], "i int")
+
+
+def test_local_frame_empty_rows(spark):
+    df = local_frame(spark, [], "id long, name string")
+    assert df.dtypes == [("id", "bigint"), ("name", "string")]
+    assert df.collect() == []
+
+
+def test_local_frame_array_double_bits_exact(spark):
+    vals = [
+        0.1, -0.0, 1e-320, 5e-324, 1.7976931348623157e308,
+        float("inf"), float("-inf"), 2.0 / 3.0, None,
+    ]
+    got = local_frame(spark, [(7, vals)], "k int, v array<double>").first()["v"]
+    assert len(got) == len(vals)
+    for g, w in zip(got, vals):
+        assert (g is None and w is None) or _bits(g) == _bits(w)
+    nan = local_frame(spark, [(float("nan"),)], "d double").first()["d"]
+    assert math.isnan(nan)
+
+
+def test_local_frame_lineage_has_no_python_rdd(spark):
+    df = local_frame(
+        spark,
+        [(j, i, [float(i), float(j)]) for j in range(4) for i in range(64)],
+        "sub int, cent_id int, _cv array<double>",
+    )
+    qe = df._jdf.queryExecution()
+    assert qe.optimizedPlan().nodeName() == "LocalRelation"
+    joined = df.join(df.select("sub").distinct(), "sub")
+    lineage = joined._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
+    assert joined.count() == 256
+
+
+def _driver_table_calls(path: str) -> list[tuple[str, int, str]]:
+    """(enclosing function, line, method) of every createDataFrame(...)
+    and .parallelize(...) call in ``path``."""
+    tree = ast.parse(open(path).read(), filename=path)
+    found: list[tuple[str, int, str]] = []
+
+    def visit(node: ast.AST, func: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            name = func
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = child.name
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("createDataFrame", "parallelize")
+            ):
+                found.append((func, child.lineno, child.func.attr))
+            visit(child, name)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_driver_tables_only_through_local_frame():
+    files = [os.path.join(ROOT, "__spark_entry__.py")]
+    for dirpath, _, names in os.walk(os.path.join(ROOT, "smartdatapipeline_spark")):
+        files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
+    allowed = {("smartdatapipeline_spark/session.py", "local_frame", "createDataFrame")}
+    offenders = []
+    seen_helper = False
+    for path in files:
+        rel = os.path.relpath(path, ROOT)
+        for func, line, method in _driver_table_calls(path):
+            if (rel, func, method) in allowed:
+                seen_helper = True
+            else:
+                offenders.append(f"{rel}:{line} {method}( in {func}")
+    assert seen_helper, "the scan no longer finds local_frame's own call"
+    assert not offenders, (
+        "driver-side tables must go through session.local_frame "
+        "(a PythonRDD forks pyspark.daemon and workers): " + ", ".join(offenders)
+    )
+
+
+def test_env_int_unset_empty_and_clamped(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_TEST_KNOB", raising=False)
+    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) is None
+    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", " ")
+    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) is None
+    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", " 12 ")
+    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) == 12
+    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", "-3")
+    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=0) == 0
+
+
+@pytest.mark.parametrize("value", ["abc", "2.5", "4k"])
+def test_env_int_rejects_non_integers_naming_the_variable(monkeypatch, value):
+    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_TEST_KNOB"):
+        env_int("SPARK_GRAFT_TEST_KNOB", minimum=1)
+
+
+def test_partition_knobs_clamp_to_one(monkeypatch):
+    for value in ("0", "-4"):
+        monkeypatch.setenv("SPARK_GRAFT_LOOP_PARTS", value)
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", value)
+        assert loop_shuffle_partitions(10**9) == 1
+        assert stream_state_partitions(10**9, cpus=8) == 1
+
+
+def test_partition_knobs_reject_garbage(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_LOOP_PARTS", "eight")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_LOOP_PARTS"):
+        loop_shuffle_partitions(100)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "1e3")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTS"):
+        stream_state_partitions(100)
+
+
+def test_events_salt_knob(spark, monkeypatch):
+    import __spark_entry__ as E
+
+    monkeypatch.setenv("SPARK_GRAFT_EVENTS_SALT", "-2")
+    assert "user_id" in E._events(spark, E.SF0001).columns
+    monkeypatch.setenv("SPARK_GRAFT_EVENTS_SALT", "two")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_EVENTS_SALT"):
+        E._events(spark, E.SF0001)

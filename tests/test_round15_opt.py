@@ -3,9 +3,9 @@ the iterative graph loops (r14 VERDICT next-round #1).
 
 ``session.loop_shuffle_partitions`` mirrors ``stream_state_partitions``:
 the loop body's per-round shuffles run at a partition count derived
-from the loop-invariant frame's row volume (1 per 64k rows, capped at
-the core count) instead of inheriting the batch-sized session default —
-the measured cause of canonical_docs anti-scaling (15.1 s @32c vs
+from the loop-invariant frame's row volume (1 per 262,144 rows, capped
+at the core count) instead of inheriting the batch-sized session
+default — the measured cause of canonical_docs anti-scaling (15.1 s @32c vs
 8.3 s @8c on identical code). ``loop_partitions`` is the set/restore
 context manager every loop (CC, PageRank, BFS) wraps its body in.
 """

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.cachetrack import release_checkpoint
+
 
 # round count of the most recent connected_components() call — probe /
 # test observability for the O(log diameter) claim, nothing reads it in
@@ -140,6 +142,7 @@ def pagerank(
             .distinct()
             .localCheckpoint()
         )
+        superseded = [nodes]
         ranks = nodes.withColumn("rank", F.lit(1.0))
         for _it in range(iterations):
             # r14 (optimization, guide §2.3/§2.4): fold rank/outdeg on the
@@ -204,8 +207,17 @@ def pagerank(
             # 10: per-round fixed costs — checkpoint write + job — dominate
             # locally; two propagation steps per materialization halves
             # them, and the final cut lets the loop-invariant caches release)
-            if _it == iterations - 1 or (_it + 1) % 2 == 0:
+            # Intermediate checkpoints stay lazy (they materialize inside
+            # the final one's job); the final one is eager so every
+            # superseded checkpoint can be released before returning.
+            if _it == iterations - 1:
+                ranks = ranks.localCheckpoint(eager=True)
+            elif (_it + 1) % 2 == 0:
                 ranks = ranks.localCheckpoint()
+                superseded.append(ranks)
+    if iterations:  # with no iteration the result still reads ``nodes``
+        for ck in superseded:
+            release_checkpoint(ck)
     e.unpersist()
     deg.unpersist()
     return ranks
@@ -277,6 +289,9 @@ def connected_components(
         .withColumn("_label", F.col("_id"))
         .localCheckpoint(eager=True)
     )
+    # each round's checkpoint supersedes the last: release the old one
+    # once the new one is materialized, so only the result stays pinned
+    ckpt = labels
     rounds = 0
     from smartdatapipeline_spark.session import loop_partitions
 
@@ -325,12 +340,15 @@ def connected_components(
                     F.col("_prev"),
                 )
             new_labels = cur.localCheckpoint(eager=True)
+            release_checkpoint(ckpt)
+            ckpt = new_labels
             changed = (
                 new_labels.filter(F.col("_label") != F.col("_prev")).limit(1).count()
             )
             labels = new_labels.drop("_prev")
             if changed == 0:
                 break
+    release_checkpoint(both)
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = rounds
     return labels.select(

@@ -4,7 +4,9 @@
 ``ingest_and_refresh`` chains the already-tested pieces: tolerant clean
 (P1–P4) → idempotent silver upsert (S8/J4) → gold recompute for ONLY the
 touched day partitions (A1/A4) → the A7 stats dict. A user of the
-reference switches by pointing this at their raw frame.
+reference switches by pointing this at their raw frame. Silver, gold
+and the quarantine table all commit through the snapshot store
+(sources/snapstore.py), the repo's one commit mechanism.
 
 r11 adds the scale-correct version of the reference's "ingest then
 recompute affected KPIs" loop (backend/app/routers/ingest.py:183-189,
@@ -30,11 +32,6 @@ from smartdatapipeline_spark.sources.ingest import (
     clean_rows,
     ingest_stats_from_clean,
     upsert_clean_events,
-)
-from smartdatapipeline_spark.sources.sinks import (
-    append_silver,
-    overwrite_gold_partitions,
-    read_parquet_if_exists,
 )
 
 #: gold commits made by the CDC refresh carry the silver version they
@@ -253,8 +250,8 @@ def ingest_and_refresh(
     gold_path: str,
     default_metric: str | None = None,
     source_id: int = 1,
-    store: str = "parquet",
-    incremental: bool = False,
+    store: str = "snapshot",
+    incremental: bool = True,
     quarantine_path: str | None = None,
     silver_upsert: str = "antijoin",
 ) -> dict:
@@ -262,36 +259,31 @@ def ingest_and_refresh(
 
     Returns the reference's stats contract (services/ingestion.py:277-286)
     plus ``duplicate_rows`` (rows dropped by the ON-CONFLICT-DO-NOTHING
-    upsert, reference :224-226). Gold recompute touches only the
-    (metric_date) partitions present in the inserted batch — the
-    reference's "recompute affected metrics" scoped to partitions, which
-    is what keeps a 100 TB gold table's refresh proportional to the
-    batch, not the history.
+    upsert, reference :224-226) and ``refresh`` (the
+    ``refresh_gold_from_changes`` result) when rows were inserted.
 
-    ``store`` picks the sink discipline: ``"parquet"`` (default) is the
-    POSIX lock+swap path of sources/sinks.py; ``"snapshot"`` routes
-    BOTH tables through the manifest-committed snapshot store
-    (sources/snapstore.py) — silver as blind appends carrying a
-    materialized ``event_date`` partition column (so the manifest
-    tracks day values and reads prune), gold as partition overwrites —
-    the object-store-legal deployment (no renames, no locks, optimistic
-    commits). Results are identical by construction; tests pin
-    parquet==snapshot gold equality.
+    Both tables are snapshot-committed (sources/snapstore.py): silver
+    takes blind appends carrying a materialized ``event_date``
+    partition column (so the manifest tracks day values and reads
+    prune); gold is refreshed through ``refresh_gold_from_changes`` —
+    the touched days come from silver's CHANGE FEED, which also picks
+    up any OTHER writer's commits since the last refresh, and their
+    recompute reads a manifest-pruned day slice instead of scanning
+    silver. That keeps a 100 TB gold table's refresh proportional to
+    the batch, not the history.
 
-    ``incremental=True`` (snapshot store only) refreshes gold through
-    ``refresh_gold_from_changes``: the touched days come from silver's
-    CHANGE FEED — which also picks up any OTHER writer's commits since
-    the last refresh — and their recompute reads a manifest-pruned day
-    slice instead of scanning silver.
+    ``store`` and ``incremental`` accept only ``"snapshot"`` and
+    ``True``: the POSIX lock+swap parquet sink and the full-silver
+    gold recompute they once selected were removed, and any other
+    value raises ``ValueError``.
 
-    ``silver_upsert="merge"`` (r12; requires ``store="snapshot"`` and
-    ``incremental=True``) routes the ON-CONFLICT-DO-NOTHING dedup
-    through the snapshot store's row-level ``merge`` instead of the
-    read→anti-join→append dance: the storage layer itself guarantees
-    key uniqueness (keys ``(source_id, ts, metric)``, matching scoped
-    to the batch's day partitions), reading only the key columns of
-    the key-range-intersecting files rather than ALL of silver, and
-    conflicting cleanly with concurrent same-day writers.
+    ``silver_upsert="merge"`` (r12) routes the ON-CONFLICT-DO-NOTHING
+    dedup through the snapshot store's row-level ``merge`` instead of
+    the read→anti-join→append dance: the storage layer itself
+    guarantees key uniqueness (keys ``(source_id, ts, metric)``,
+    matching scoped to the batch's day partitions), reading only the
+    key columns of the key-range-intersecting files rather than ALL of
+    silver, and conflicting cleanly with concurrent same-day writers.
     ``duplicate_rows`` comes off the merge commit's recorded row
     counts. Results are identical to the default path by construction
     (tests pin the equality).
@@ -300,25 +292,30 @@ def ingest_and_refresh(
     50 capped warnings (services/ingestion.py:178-206) — fine at demo
     scale, unacceptable at 100 TB where the dropped rows ARE the
     debugging evidence. When set, every rejected row lands in a
-    dead-letter table with its rejection ``reason`` and the raw
-    columns, appended through the same store discipline as silver;
-    ``stats["quarantined_rows"]`` counts them. Re-ingesting the same
-    file appends its bad rows again (the DLQ is an audit LOG, not a
-    deduplicated table — pass the snapshot store an idempotency key
-    per logical batch upstream if replays must collapse).
+    snapshot-committed dead-letter table with its rejection ``reason``
+    and the raw columns; ``stats["quarantined_rows"]`` counts them.
+    Re-ingesting the same file appends its bad rows again (the DLQ is
+    an audit LOG, not a deduplicated table — pass the snapshot store an
+    idempotency key per logical batch upstream if replays must
+    collapse).
     """
-    if store not in ("parquet", "snapshot"):
-        raise ValueError(f"store must be 'parquet' or 'snapshot', got {store!r}")
-    if incremental and store != "snapshot":
-        raise ValueError("incremental=True requires store='snapshot'")
+    from smartdatapipeline_spark.sources import snapstore as SS
+
+    if store != "snapshot":
+        raise ValueError(
+            f"store must be 'snapshot', got {store!r}: the POSIX lock+swap "
+            "parquet sink was removed; silver and gold commit only through "
+            "the snapshot store"
+        )
+    if incremental is not True:
+        raise ValueError(
+            f"incremental must be True, got {incremental!r}: the full-silver "
+            "gold recompute was removed; gold refreshes only from silver's "
+            "change feed"
+        )
     if silver_upsert not in ("antijoin", "merge"):
         raise ValueError(
             f"silver_upsert must be 'antijoin' or 'merge', got {silver_upsert!r}"
-        )
-    if silver_upsert == "merge" and not (store == "snapshot" and incremental):
-        raise ValueError(
-            "silver_upsert='merge' requires store='snapshot' and "
-            "incremental=True (gold refresh comes from the change feed)"
         )
     clean = clean_rows(raw, default_metric=default_metric).withColumn(
         "source_id", F.lit(source_id)
@@ -332,16 +329,9 @@ def ingest_and_refresh(
         n_bad = bad.count()
         stats["quarantined_rows"] = n_bad
         if n_bad:
-            if store == "snapshot":
-                from smartdatapipeline_spark.sources import snapstore as SS
-
-                SS.append(bad, quarantine_path, partition_col=None)
-            else:
-                bad.write.mode("append").parquet(quarantine_path)
+            SS.append(bad, quarantine_path, partition_col=None)
 
     if silver_upsert == "merge":
-        from smartdatapipeline_spark.sources import snapstore as SS
-
         keys = ["source_id", "ts", "metric"]
         batch = valid.dropDuplicates(keys).withColumn(
             "event_date", F.to_date("ts")
@@ -352,62 +342,30 @@ def ingest_and_refresh(
         )
         info = SS.commit_info(silver_path, v) or {}
         inserted = info["added_rows"] if info.get("kind") == "merge" else 0
-        stats["duplicate_rows"] = stats["ingested_rows"] - inserted
-        if inserted:
-            stats["refresh"] = refresh_gold_from_changes(
-                spark, silver_path, gold_path
-            )
-        return stats
-
-    if store == "snapshot":
-        from smartdatapipeline_spark.sources import snapstore as SS
-
+    else:
         existing = (
             SS.read_table(spark, silver_path).drop("event_date")
             if SS.table_version(silver_path) > 0
             else None
         )
-    else:
-        existing = read_parquet_if_exists(spark, silver_path)
-    to_insert, _ = upsert_clean_events(valid, existing)
-    # localCheckpoint, not cache: appending to silver refreshes that
-    # path's cache entries (refreshByPath), which would silently
-    # recompute the anti-join AGAINST ITS OWN OUTPUT and lose the batch.
-    # Checkpointing cuts the lineage so the plan can't re-read silver.
-    to_insert = to_insert.localCheckpoint(eager=True)
-    # Released before returning: left to the ContextCleaner, the
-    # checkpoint's blocks outlive the call until a JVM GC happens to run.
-    try:
-        inserted = to_insert.count()
-        stats["duplicate_rows"] = stats["ingested_rows"] - inserted
-        if inserted == 0:
-            return stats
-
-        if store == "snapshot":
-            SS.append(
-                to_insert.withColumn("event_date", F.to_date("ts")),
-                silver_path,
-                partition_col="event_date",
-            )
-            if incremental:
-                stats["refresh"] = refresh_gold_from_changes(
-                    spark, silver_path, gold_path
+        to_insert, _ = upsert_clean_events(valid, existing)
+        # localCheckpoint: the count and the append (value-set scan,
+        # write, stats read-back) each evaluate the frame; the
+        # checkpoint runs the anti-join against silver once. Released
+        # right after the append: left to the ContextCleaner, its blocks
+        # outlive the call until a JVM GC happens to run.
+        to_insert = to_insert.localCheckpoint(eager=True)
+        try:
+            inserted = to_insert.count()
+            if inserted:
+                SS.append(
+                    to_insert.withColumn("event_date", F.to_date("ts")),
+                    silver_path,
+                    partition_col="event_date",
                 )
-                return stats
-            silver = SS.read_table(spark, silver_path).drop("event_date")
-        else:
-            append_silver(to_insert, silver_path)
-            silver = spark.read.parquet(silver_path)
-
-        touched = to_insert.select(F.to_date("ts").alias("_d")).distinct()
-        affected = silver.join(
-            F.broadcast(touched), F.to_date(silver["ts"]) == touched["_d"], "left_semi"
-        )
-        gold = run_daily_kpis(affected)
-        if store == "snapshot":
-            SS.overwrite_partitions(gold, gold_path, partition_col="metric_date")
-        else:
-            overwrite_gold_partitions(gold, gold_path)
-        return stats
-    finally:
-        release_checkpoint(to_insert)
+        finally:
+            release_checkpoint(to_insert)
+    stats["duplicate_rows"] = stats["ingested_rows"] - inserted
+    if inserted:
+        stats["refresh"] = refresh_gold_from_changes(spark, silver_path, gold_path)
+    return stats

@@ -20,12 +20,15 @@ cannot answer) and **Bloom word tables** (``update_bloom_store`` /
 false negatives). All three share one write discipline and one
 manifest.
 
-Write discipline: each day is one ``metric_date=…`` partition written
-through the SAME crash-consistent, lock-serialized txn sink as gold
-(``sources/sinks.py overwrite_gold_partitions``'s internals), so
-re-ingesting a day (late events, corrections) idempotently replaces
-that day's registers — and ONLY that day's — while readers always see
-fully-old or fully-new partitions. Register max-merge / bottom-k
+Write discipline: each store is a snapshot-committed table
+(``sources/snapstore.py``), the same commit path as silver and gold.
+Each day is one ``metric_date`` partition value; a day upsert is an
+``overwrite_partitions`` commit (put-if-absent log claim, no locks,
+no renames), so re-ingesting a day (late events, corrections)
+idempotently replaces that day's partials — and ONLY that day's —
+while readers see the old snapshot until the claim lands. Each batch
+records ``metric_date`` min/max stats, so range reads skip other
+days' files at the manifest level. Register max-merge / bottom-k
 distinct-union / word bit_or make replays harmless even if a day is
 upserted with a superset of its events.
 
@@ -34,19 +37,13 @@ Manifest (round 10, driver ADVICE): the store's sketch parameters
 ``_sketch_manifest.json`` at the store root and validated on every
 write AND read — ``distinct_from_store(p=8)`` against a p=12 store now
 raises instead of silently computing garbage estimates with the wrong
-register count.
+register count. The manifest is written with the snapshot store's
+durable put-if-absent, so two first writers cannot stamp different
+parameters.
 
-Backends (r11, r10 VERDICT #6): every update/read function takes
-``backend="txn"`` (default — the POSIX lock+swap sink above, unchanged)
-or ``backend="snapshot"`` — the same daily partials routed through the
-snapshot-committed table (``sources/snapstore.py``): put-if-absent
-manifest commits instead of locks and renames, so the sketch stores
-gain object-store-legal atomicity, idempotent retries, and time travel
-for free, and new deployments need only ONE commit mechanism. Day
-upserts map to ``overwrite_partitions`` on ``metric_date`` (with
-min/max column stats recorded so range reads skip at the manifest
-level); the params manifest file and its validation are identical in
-both backends.
+Only the snapshot log makes data visible: a directory that also holds
+older ``metric_date=…`` partition directories (the retired lock+swap
+layout) is read as empty until its first commit.
 """
 
 from __future__ import annotations
@@ -70,31 +67,9 @@ from smartdatapipeline_spark.functions.sketch import (
     kmv_intersect,
     kmv_partial,
 )
-from smartdatapipeline_spark.sources.sinks import (
-    _txn_partition_overwrite,
-    _write_fsync,
-    gold_writer_lock,
-    recover_partition_txn,
-)
+from smartdatapipeline_spark.sources import snapstore as SS
 
 _MANIFEST = "_sketch_manifest.json"
-
-
-def _committed_days(store_path: str) -> list[str]:
-    """Committed ``metric_date=…`` partition dirs — staging/journal
-    debris is underscore-prefixed and never matches. Empty when the
-    store dir exists but holds no committed partition (first-run txn
-    rolled back by recovery, or a pre-created dir) — the case that used
-    to crash the incremental read with 'unable to infer schema'
-    (round-10 ADVICE)."""
-    if not os.path.isdir(store_path):
-        return []
-    return sorted(
-        d
-        for d in os.listdir(store_path)
-        if d.startswith("metric_date=")
-        and os.path.isdir(os.path.join(store_path, d))
-    )
 
 
 def _read_manifest(store_path: str) -> dict | None:
@@ -112,26 +87,21 @@ def _require_manifest(
     caller's; raise on ANY mismatch (a p=8 read of a p=12 register
     store computes a negative v_empty — round-10 ADVICE). A legacy
     store without a manifest is accepted as-is on read and stamped on
-    the next locked write."""
+    the next write. Stamping is put-if-absent: a concurrent first
+    writer that won is validated against like any existing manifest."""
     want = {"kind": kind, **params}
     have = _read_manifest(store_path)
     if have is None:
-        if write_if_missing:
-            os.makedirs(store_path, exist_ok=True)
-            _write_fsync(
-                os.path.join(store_path, _MANIFEST), json.dumps(want)
-            )
-        return
+        if not write_if_missing or SS.put_if_absent(
+            store_path, _MANIFEST, json.dumps(want).encode("utf-8")
+        ):
+            return
+        have = _read_manifest(store_path)
     if have != want:
         raise ValueError(
             f"sketch store parameter mismatch at {store_path}: "
             f"store was built with {have}, caller asked for {want}"
         )
-
-
-def _check_backend(backend: str) -> None:
-    if backend not in ("txn", "snapshot"):
-        raise ValueError(f"backend must be 'txn' or 'snapshot', got {backend!r}")
 
 
 def _update_store(
@@ -143,55 +113,27 @@ def _update_store(
     key_col: str,
     ts_col: str,
     only_new_days: bool,
-    backend: str = "txn",
 ) -> int:
-    """Shared writer skeleton for all three sketch kinds: lock →
-    recover → manifest check → (incremental) skip stored days →
-    partial-sketch the remaining days → txn partition overwrite.
-    ``backend="snapshot"`` swaps the POSIX lock+txn tail for the
-    snapshot table's optimistic commit (no lock, no recovery pass —
-    uncommitted batches are invisible by construction)."""
-    _check_backend(backend)
+    """Shared writer skeleton for all sketch kinds: manifest check →
+    (incremental) skip stored days → partial-sketch the remaining days
+    → one ``overwrite_partitions`` commit. No lock and no recovery
+    pass: an uncommitted batch is invisible by construction."""
     df = (
         events.filter(F.col(key_col).isNotNull())
         .withColumn("metric_date", F.to_date(F.col(ts_col)))
     )
-    if backend == "snapshot":
-        from smartdatapipeline_spark.sources import snapstore as SS
-
-        _require_manifest(store_path, kind, params, write_if_missing=True)
-        if only_new_days and SS.table_version(store_path) > 0:
-            spark = events.sparkSession
-            have = SS.read_table(spark, store_path).select("metric_date").distinct()
-            df = df.join(F.broadcast(have), on="metric_date", how="left_anti")
-        days = [r[0] for r in df.select("metric_date").distinct().collect()]
-        if not days:
-            return 0
-        SS.overwrite_partitions(
-            partial_fn(df), store_path, "metric_date",
-            stats_cols=("metric_date",),
-        )
-        return len(days)
-    # Recovery must precede the stored-days read (round 9, pinned by
-    # tests/test_sketchstore.py): a predecessor's interrupted txn may
-    # hold a fully-staged day that the store read cannot see yet —
-    # rolling it forward FIRST means the incremental scan skips it
-    # instead of recomputing it. The day-discovery action therefore
-    # runs under the lock, like the write itself.
-    with gold_writer_lock(store_path):
-        recover_partition_txn(store_path)
-        _require_manifest(store_path, kind, params, write_if_missing=True)
-        if only_new_days and _committed_days(store_path):
-            spark = events.sparkSession
-            have = (
-                spark.read.parquet(store_path).select("metric_date").distinct()
-            )
-            df = df.join(F.broadcast(have), on="metric_date", how="left_anti")
-        days = [r[0] for r in df.select("metric_date").distinct().collect()]
-        if not days:
-            return 0
-        reg = partial_fn(df)
-        _txn_partition_overwrite(reg, store_path, "metric_date")
+    _require_manifest(store_path, kind, params, write_if_missing=True)
+    if only_new_days and SS.table_version(store_path) > 0:
+        spark = events.sparkSession
+        have = SS.read_table(spark, store_path).select("metric_date").distinct()
+        df = df.join(F.broadcast(have), on="metric_date", how="left_anti")
+    days = [r[0] for r in df.select("metric_date").distinct().collect()]
+    if not days:
+        return 0
+    SS.overwrite_partitions(
+        partial_fn(df), store_path, "metric_date",
+        stats_cols=("metric_date",),
+    )
     return len(days)
 
 
@@ -202,39 +144,24 @@ def _read_store_range(
     params: dict,
     start: dt.date | str | None,
     end: dt.date | str | None,
-    backend: str = "txn",
 ) -> DataFrame:
-    """Shared reader: manifest validation + partition-pruned range
-    scan. Raises a clear error on an empty/uncommitted store instead of
-    Spark's 'unable to infer schema'. The snapshot backend prunes at
-    the MANIFEST level via the per-batch metric_date min/max stats the
-    writer records (non-matching batch dirs never reach the scan)."""
-    _check_backend(backend)
+    """Shared reader: manifest validation + range read pruned at the
+    MANIFEST level via the per-batch metric_date min/max stats the
+    writer records (non-matching batch dirs never reach the scan).
+    Raises a clear error on a store with no commit instead of Spark's
+    'unable to infer schema'."""
     _require_manifest(store_path, kind, params, write_if_missing=False)
-    if backend == "snapshot":
-        from smartdatapipeline_spark.sources import snapstore as SS
-
-        if SS.table_version(store_path) == 0:
-            raise ValueError(
-                f"sketch store at {store_path} has no committed partitions"
-            )
-        lo = str(start) if start is not None else None
-        hi = str(end) if end is not None else None
-        if lo is None and hi is None:
-            return SS.read_table(spark, store_path)
-        return SS.read_table(
-            spark, store_path, column_range=("metric_date", lo, hi)
-        )
-    if not _committed_days(store_path):
+    if SS.table_version(store_path) == 0:
         raise ValueError(
             f"sketch store at {store_path} has no committed partitions"
         )
-    reg = spark.read.parquet(store_path)
-    if start is not None:
-        reg = reg.filter(F.col("metric_date") >= F.lit(start).cast("date"))
-    if end is not None:
-        reg = reg.filter(F.col("metric_date") <= F.lit(end).cast("date"))
-    return reg
+    if start is None and end is None:
+        return SS.read_table(spark, store_path)
+    lo = str(start) if start is not None else None
+    hi = str(end) if end is not None else None
+    return SS.read_table(
+        spark, store_path, column_range=("metric_date", lo, hi)
+    )
 
 
 # ── HLL register store (round 9) ─────────────────────────────────────
@@ -248,7 +175,6 @@ def update_register_store(
     ts_col: str = "ts",
     p: int = 8,
     only_new_days: bool = True,
-    backend: str = "txn",
 ) -> int:
     """Upsert per-(metric_date, metric) HLL register partials for the
     days present in ``events``.
@@ -269,7 +195,6 @@ def update_register_store(
         key_col=key_col,
         ts_col=ts_col,
         only_new_days=only_new_days,
-        backend=backend,
     )
 
 
@@ -288,7 +213,7 @@ def refresh_register_store_from_changes(
     deletes its partition — the same ``refresh_from_changes`` mechanism
     that maintains gold, proving it generalizes to any day-grain
     derived table. Store params are manifest-validated exactly like the
-    batch writers; the store must live on the snapshot backend."""
+    batch writers."""
     from smartdatapipeline_spark.operators.pipeline import refresh_from_changes
 
     _require_manifest(
@@ -321,7 +246,6 @@ def distinct_from_store(
     by_metric: bool = True,
     p: int | None = None,
     key_col: str = "user_id",
-    backend: str = "txn",
 ) -> DataFrame:
     """Distinct-count estimates over ``[start, end]`` (inclusive day
     grain) from STORED registers only — no events scan. Date filters
@@ -344,7 +268,6 @@ def distinct_from_store(
         params={"p": p, "key_col": key_col, "metric_col": metric_col},
         start=start,
         end=end,
-        backend=backend,
     )
     keep = [metric_col] if by_metric else []
     folded = hll_reaggregate(
@@ -364,7 +287,6 @@ def update_kmv_store(
     ts_col: str = "ts",
     k: int = 64,
     only_new_days: bool = True,
-    backend: str = "txn",
 ) -> int:
     """Upsert per-(metric_date, metric) bottom-k partials: the k
     smallest distinct h60 hashes of ``key_col`` per (day, metric) —
@@ -381,7 +303,6 @@ def update_kmv_store(
         key_col=key_col,
         ts_col=ts_col,
         only_new_days=only_new_days,
-        backend=backend,
     )
 
 
@@ -395,7 +316,6 @@ def overlap_from_store(
     metric_col: str = "metric",
     k: int | None = None,
     key_col: str = "user_id",
-    backend: str = "txn",
 ) -> DataFrame:
     """Audience-overlap estimate between two metrics over a date range
     from STORED bottom-k partials alone — the `kmv_audience_overlap`
@@ -417,7 +337,6 @@ def overlap_from_store(
         params={"k": k, "key_col": key_col, "metric_col": metric_col},
         start=start,
         end=end,
-        backend=backend,
     )
     a = kmv_fold(reg.filter(F.col(metric_col) == metric_a), k=k)
     b = kmv_fold(reg.filter(F.col(metric_col) == metric_b), k=k)
@@ -436,7 +355,6 @@ def update_bloom_store(
     m_bits: int = 4096,
     n_hashes: int = 4,
     only_new_days: bool = True,
-    backend: str = "txn",
 ) -> int:
     """Upsert per-(metric_date, metric) Bloom word tables (≤ m/60 rows
     per group per day). Stored daily filters OR-merge into any range's
@@ -459,7 +377,6 @@ def update_bloom_store(
         key_col=key_col,
         ts_col=ts_col,
         only_new_days=only_new_days,
-        backend=backend,
     )
 
 
@@ -475,7 +392,6 @@ def membership_from_store(
     m_bits: int | None = None,
     n_hashes: int | None = None,
     key_col: str = "user_id",
-    backend: str = "txn",
 ) -> DataFrame:
     """Membership test ("was this key present in the range, optionally
     for one metric") from STORED word tables alone: fold the range's
@@ -499,7 +415,6 @@ def membership_from_store(
         },
         start=start,
         end=end,
-        backend=backend,
     )
     if metric is not None:
         reg = reg.filter(F.col(metric_col) == metric)
@@ -523,7 +438,6 @@ def update_dyadic_store(
     width: int = 2048,
     metric_col: str | None = None,
     only_new_days: bool = True,
-    backend: str = "txn",
 ) -> int:
     """Upsert per-day dyadic-CMS quantile partials (≤ levels·depth·width
     cells per day): any later range-quantile question folds stored
@@ -559,7 +473,6 @@ def update_dyadic_store(
         key_col=value_col,
         ts_col=ts_col,
         only_new_days=only_new_days,
-        backend=backend,
     )
 
 
@@ -581,7 +494,6 @@ def dyadic_cells_from_store(
     start: dt.date | str | None = None,
     end: dt.date | str | None = None,
     by_metric: bool = False,
-    backend: str = "txn",
 ) -> DataFrame:
     """The range's folded cell grid from STORED daily partials —
     cell-wise SUM, partition-pruned. ``by_metric=True`` (on a store
@@ -592,7 +504,6 @@ def dyadic_cells_from_store(
     reg = _read_store_range(
         spark, store_path, kind="dyadic", params=params,
         start=start, end=end,
-        backend=backend,
     )
     keep = []
     if by_metric:
@@ -614,7 +525,6 @@ def quantiles_from_store(
     start: dt.date | str | None = None,
     end: dt.date | str | None = None,
     by_metric: bool = False,
-    backend: str = "txn",
 ) -> list[float] | dict[str, list[float]]:
     """Range quantiles (descaled to the original value domain) from
     STORED cells alone — no events rescan. total_n is derived from the
@@ -635,8 +545,7 @@ def quantiles_from_store(
     scale, levels = params["scale"], params["levels"]
     depth, width = params["depth"], params["width"]
     folded = dyadic_cells_from_store(
-        spark, store_path, start=start, end=end, by_metric=by_metric,
-        backend=backend,
+        spark, store_path, start=start, end=end, by_metric=by_metric
     )
     mcol = params["metric_col"]
     groups: dict[str | None, dict[tuple[int, int, int], int]] = {}
@@ -680,7 +589,6 @@ def rolling_distinct_from_store(
     metric_col: str = "metric",
     p: int | None = None,
     key_col: str = "user_id",
-    backend: str = "txn",
 ) -> DataFrame:
     """Trailing-``window_days`` distinct estimate for EVERY day in
     [start, end], all from stored registers (round 10) — the dashboard
@@ -708,7 +616,6 @@ def rolling_distinct_from_store(
         params={"p": p, "key_col": key_col, "metric_col": metric_col},
         start=None,
         end=end,
-        backend=backend,
     ).filter(F.col("metric_date") >= widened)
     served = reg.select(
         F.explode(
@@ -738,7 +645,6 @@ def new_audience_from_store(
     metric_col: str = "metric",
     k: int | None = None,
     key_col: str = "user_id",
-    backend: str = "txn",
 ) -> DataFrame:
     """"How many of [cur]'s distinct users were NOT active in [prev]"
     for one metric, from stored bottom-k partials alone (round 10) —
@@ -754,12 +660,10 @@ def new_audience_from_store(
     cur = _read_store_range(
         spark, store_path, kind="kmv", params=params,
         start=cur_start, end=cur_end,
-        backend=backend,
     )
     prev = _read_store_range(
         spark, store_path, kind="kmv", params=params,
         start=prev_start, end=prev_end,
-        backend=backend,
     )
     a = kmv_fold(cur.filter(F.col(metric_col) == metric), k=k)
     b = kmv_fold(prev.filter(F.col(metric_col) == metric), k=k)

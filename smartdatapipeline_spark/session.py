@@ -157,7 +157,16 @@ class loop_partitions:
     set/restore discipline bench.py uses for the streaming group).
     Results are partitioning-independent for every loop in this repo
     (min-label folds, sort_array ordered folds, distinct) — only task
-    counts change."""
+    counts change.
+
+    Assumes ONE thread drives the session while the block runs: the
+    setting is session-global, so a concurrent caller on the same
+    session plans its shuffles with the loop's count, and overlapping
+    blocks restore in the wrong order (the first to exit reinstates a
+    value the other set). Results stay correct either way; only
+    partition counts leak. Per-plan ``repartition`` on the loop frames
+    would remove the assumption, but measured worse (PERF.md "Loop
+    partitions")."""
 
     def __init__(self, spark: SparkSession, n_rows: int):
         self.spark = spark

@@ -1,509 +1,24 @@
-"""Parquet staging sinks with upsert discipline (SURVEY §2.1 S7–S11,
-§2.4 A4/A5).
+"""Plain parquet/CSV/ORC sinks (SURVEY §2.1 S7, S9).
 
-Reference upserts are RDBMS ``ON CONFLICT`` statements
-(services/kpi.py:143-231, services/ingestion.py:214-227,
-services/forecast.py:95-107); on parquet the equivalent is
-partition-overwrite: gold is partitioned by ``metric_date`` and writes
-replace only the partitions present in the incoming batch (Spark's
-*dynamic* partitionOverwriteMode), which reproduces "update the
-(date, source, metric) groups we just recomputed, leave the rest".
-
-At 100 TB this is the difference between rewriting a table and
-rewriting a day: the KPI recompute for an ingest batch touches only the
-dates the batch contained. On Delta/Iceberg the same call sites map to
-MERGE; plain parquet keeps this repo dependency-free.
+The reference's ``ON CONFLICT`` upserts (services/kpi.py:143-231,
+services/ingestion.py:214-227, services/forecast.py:95-107) live in ONE
+place: the snapshot-committed table of ``sources/snapstore.py``
+(put-if-absent log commits, after Armbrust et al., "Delta Lake",
+VLDB 2020). Silver, gold and the sketch stores all commit through it.
+What remains here are the writers with no upsert contract: append-only
+bronze, a bucketed gold table for shuffle-free aggregation, CSV export
+and ORC interchange.
 """
 
 from __future__ import annotations
 
-import ctypes
-import json
-import os
-import shutil
-import threading
-import time
-import uuid
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
-
-
-@contextmanager
-def gold_writer_lock(
-    path: str,
-    timeout_sec: float = 120.0,
-    stale_sec: float = 600.0,
-    heartbeat_sec: float | None = None,
-    breaker_grace_sec: float | None = None,
-):
-    """Single-writer discipline for path-based partition upserts
-    (round-6: the nightly-scheduler vs ingest-triggered recompute
-    interleave). Partition overwrite on bare parquet has NO
-    transactional commit, so two concurrent writers can interleave file
-    sets inside one partition directory — half of batch A's files plus
-    half of batch B's. This lock serializes writers per table path.
-
-    Mechanism: a marker directory ``<path>._LOCK`` created with
-    ``os.makedirs`` — directory creation is atomic on POSIX (one
-    concurrent creator wins, the rest get FileExistsError) — holding an
-    ``owner`` file with a per-acquisition token. While held, a daemon
-    thread HEARTBEATS the lock (``os.utime`` every ``stale_sec/3`` by
-    default), so a legitimately long write — the nightly full gold
-    recompute this lock exists to serialize — is never mistaken for a
-    crashed holder (round-7 fix; previously any hold > ``stale_sec``
-    was broken mid-write). A lock whose mtime is older than
-    ``stale_sec`` despite the heartbeat is a leaked lock from a dead
-    writer: the breaker records the owner token it observed stale,
-    atomically RENAMES the lock dir aside, then re-verifies both
-    staleness and token on the renamed dir — if a new holder
-    re-acquired in between (different token, or fresh mtime), the dir
-    is renamed straight back. While the break is in flight the renamed
-    dir itself is the sentinel: acquirers refuse to makedirs while any
-    ``<path>._LOCK.brk-*`` exists (round-8), so the lock path being
-    momentarily free during re-verification cannot admit a second
-    writer; a sentinel that outlives ``breaker_grace_sec`` (default
-    ``stale_sec/4``, floor 10 s — sized so a GC-paused or NFS-stalled
-    live breaker is not swept on the same clock that judges locks
-    stale) is debris of a crashed breaker and is swept by waiters. This
-    narrows — it does not absolutely close — the misjudged-stale
-    TOCTOU: under NFS-class mtime/clock skew a live holder can still be
-    judged stale and lose its lock, and the heartbeat's
-    owner-token-check-then-``utime`` is itself check-then-act (a break
-    plus re-acquire landing inside that microsecond window would be
-    freshened once), so freshening a successor's lock is NARROWED to
-    that window, not impossible. Release only
-    removes the lock if the owner token is still ours, so a holder
-    whose lock WAS legitimately broken cannot silently delete the next
-    holder's lock. Waiters poll until ``timeout_sec`` then raise
-    TimeoutError rather than deadlock a scheduler thread.
-
-    Scope honesty for 100 TB deployments: ``os.makedirs``/``os.rename``
-    operate on the DRIVER'S filesystem, so this covers local and
-    shared-POSIX (NFS-class) table paths only — an ``hdfs://`` or
-    ``s3://`` table path gets NO mutual exclusion from this lock (the
-    driver would just create a local directory named after the URI);
-    those deployments need the Hadoop FileSystem API or a table format
-    with transactional commit (Delta/Iceberg MERGE). The scheduler
-    quirk that triggers overlapping recomputes is plans/scheduler.py;
-    this makes those recomputes safe rather than assuming they never
-    overlap.
-    """
-    lock_dir = path.rstrip("/") + "._LOCK"
-    token = uuid.uuid4().hex
-    hb = heartbeat_sec if heartbeat_sec is not None else max(0.5, stale_sec / 3.0)
-    deadline = time.monotonic() + timeout_sec
-    owner_path = os.path.join(lock_dir, "owner")
-    brk_parent = os.path.dirname(lock_dir) or "."
-    brk_prefix = os.path.basename(lock_dir) + ".brk-"
-    brk_seen: dict[str, float] = {}  # breaker sentinel → first observed
-    # Breaker verify is sub-second, but a live breaker can stall (GC
-    # pause, NFS hang) on exactly the deployments this lock worries
-    # about — so the sweep grace scales with the staleness clock
-    # instead of a fixed 10 s (round-8 ADVICE).
-    brk_grace = (
-        breaker_grace_sec
-        if breaker_grace_sec is not None
-        else max(10.0, stale_sec / 4.0)
-    )
-    while True:
-        # Honor breaker sentinels (round-8 ADVICE): while any
-        # <lock>.brk-* dir exists, a breaker holds the lock renamed
-        # aside for re-verification — the lock path being momentarily
-        # free does NOT mean the lock is free. Acquiring here is the
-        # double-writer TOCTOU: the breaker's rename-back would fail
-        # and it would rmtree the new holder's lock. So waiters stand
-        # off until the sentinel clears; a sentinel that persists past
-        # the grace window is debris of a breaker that died mid-verify
-        # and is swept (equivalent to the break it was performing).
-        try:
-            brks = [n for n in os.listdir(brk_parent) if n.startswith(brk_prefix)]
-        except OSError:
-            brks = []
-        if brks:
-            now = time.monotonic()
-            for n in brks:
-                first = brk_seen.setdefault(n, now)
-                if now - first > brk_grace:
-                    shutil.rmtree(os.path.join(brk_parent, n), ignore_errors=True)
-                    brk_seen.pop(n, None)
-            if any(n in brk_seen for n in brks):
-                if time.monotonic() > deadline:
-                    raise TimeoutError(
-                        f"gold_writer_lock: {lock_dir} held past {timeout_sec}s"
-                    )
-                time.sleep(0.05)
-                continue
-        try:
-            os.makedirs(lock_dir, exist_ok=False)
-            with open(owner_path, "w") as f:
-                f.write(token)
-                f.flush()
-                os.fsync(f.fileno())
-            break
-        except FileExistsError:
-            try:
-                st = os.stat(lock_dir)
-                if time.time() - st.st_mtime > stale_sec:
-                    try:
-                        with open(owner_path) as f:
-                            seen = f.read()
-                    except OSError:
-                        seen = None
-                    brk = lock_dir + f".brk-{token}"
-                    try:
-                        os.rename(lock_dir, brk)
-                    except OSError:
-                        continue  # gone or already broken — retry acquire
-                    # re-verify on the renamed dir (mtime rides through
-                    # rename): a FRESH lock, or one whose owner token
-                    # changed since we observed it stale, belongs to a
-                    # live writer — put it back untouched
-                    try:
-                        st2 = os.stat(brk)
-                        fresh = (time.time() - st2.st_mtime) <= stale_sec
-                    except OSError:
-                        fresh = False
-                    try:
-                        with open(os.path.join(brk, "owner")) as f:
-                            got = f.read()
-                    except OSError:
-                        got = None
-                    if fresh or got != seen:
-                        try:
-                            os.rename(brk, lock_dir)
-                        except OSError:
-                            shutil.rmtree(brk, ignore_errors=True)
-                    else:
-                        shutil.rmtree(brk, ignore_errors=True)
-                    continue
-            except (FileNotFoundError, OSError):
-                continue  # holder released (or break race lost) — retry now
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"gold_writer_lock: {lock_dir} held past {timeout_sec}s"
-                )
-            time.sleep(0.05)
-    stop = threading.Event()
-
-    def _beat() -> None:
-        while not stop.wait(hb):
-            try:
-                with open(owner_path) as f:
-                    if f.read() != token:
-                        return  # lock re-acquired by another holder —
-                        # stop freshening (ADVICE r8). The read→utime
-                        # pair below is still check-then-act, so this
-                        # NARROWS (not closes) the freshen-successor
-                        # window to the microseconds between them.
-                os.utime(lock_dir)
-            except OSError:
-                continue  # transient (rename-aside verify window, or
-                # lock legitimately broken) — re-check next beat; utime
-                # is only ever applied after the owner check above
-
-    beater = threading.Thread(target=_beat, daemon=True)
-    beater.start()
-    try:
-        yield
-    finally:
-        stop.set()
-        beater.join(timeout=5.0)
-        try:
-            with open(owner_path) as f:
-                still_ours = f.read() == token
-            if still_ours:
-                os.remove(owner_path)
-                os.rmdir(lock_dir)
-        except OSError:
-            pass
-
-
-# ── crash-consistent partition swap ─────────────────────────────────
-# Linux renameat2(RENAME_EXCHANGE) atomically SWAPS two directories, so
-# a partition is never absent mid-upsert: each partition directory is
-# fully-old or fully-new at every instant, even if the writer dies
-# between partitions. glibc ≥ 2.28 exports the wrapper; on anything
-# else we fall back to hide-then-rename (microsecond absent window,
-# still journaled and recoverable).
-_AT_FDCWD = -100
-_RENAME_EXCHANGE = 2
-try:
-    _libc = ctypes.CDLL(None, use_errno=True)
-    _HAVE_EXCHANGE = hasattr(_libc, "renameat2")
-except OSError:  # pragma: no cover — non-glibc platform
-    _libc = None
-    _HAVE_EXCHANGE = False
-
-
-def _exchange_dirs(a: str, b: str) -> None:
-    rc = _libc.renameat2(
-        _AT_FDCWD, os.fsencode(a), _AT_FDCWD, os.fsencode(b), _RENAME_EXCHANGE
-    )
-    if rc != 0:
-        e = ctypes.get_errno()
-        raise OSError(e, os.strerror(e), a)
-
-
-def _fsync_path(p: str) -> None:
-    fd = os.open(p, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-def _write_fsync(path: str, data: str) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(data)
-        f.flush()
-        os.fsync(f.fileno())
-    os.rename(tmp, path)
-    _fsync_path(os.path.dirname(path))
-
-
-# Max marker files held open at once during batched stamping: well
-# under the common nofile=1024 soft limit (leaving headroom for Spark's
-# own descriptors), while one fsync burst per 256 files keeps ~all of
-# the measured 18% batching win.
-_MARKER_FSYNC_CHUNK = 256
-
-
-def _marker_name(txid: str) -> str:
-    """Per-transaction marker file stamped inside every STAGED partition
-    dir before the journal is written. The marker travels with the data
-    through rename/exchange, so recovery can DETECT (not infer) whether
-    a partition's swap committed: new data carries the marker, old data
-    never does. Underscore prefix ⇒ invisible to Spark/parquet readers."""
-    return f"_txnmark-{txid}"
-
-
-def _progress_name(txid: str) -> str:
-    """Progress file is txid-scoped (round-8 ADVICE): a fixed name let a
-    crash-orphaned progress file from txn N poison txn N+1's recovery
-    when partition values recur across batches (same `metric_date=...`
-    names marked 'done' that the new txn never swapped)."""
-    return f"_txn.progress-{txid}"
-
-
-def recover_partition_txn(path: str) -> None:
-    """Roll FORWARD any upsert a crashed writer left mid-swap, then
-    sweep its debris — called under ``gold_writer_lock`` before every
-    transactional overwrite (and safe to call any time the lock is
-    held). The journal ``_txn.json`` is written (fsync'd) only AFTER
-    the staging write AND the per-partition ``_txnmark-<txid>`` stamps
-    completed, so a journaled transaction always has complete new data
-    to roll forward to; a ``_staging-*`` directory with no journal is a
-    transaction that never started and is discarded.
-
-    Swap-state detection is positive, not inferred (round-8 ADVICE —
-    the old ``src exists ⇒ swap pending`` inference was wrong for
-    renameat2 EXCHANGE, where src exists on BOTH sides of the swap
-    holding OLD data afterwards; recovery would re-exchange back to old
-    data and sweep the new): the marker file rides with the NEW data,
-    so ``dst`` holding the marker means the swap committed (even if the
-    fsync'd progress append was lost) and ``src`` holding it means the
-    swap never happened. ``_txn.progress-<txid>`` is a fast path only —
-    partitions it lists skip the marker stat."""
-    if not os.path.isdir(path):
-        return
-    manifest_path = os.path.join(path, "_txn.json")
-    if os.path.exists(manifest_path):
-        with open(manifest_path) as f:
-            man = json.load(f)
-        txid = man["txid"]
-        progress_path = os.path.join(path, _progress_name(txid))
-        done: set[str] = set()
-        if os.path.exists(progress_path):
-            with open(progress_path) as f:
-                done = {ln.strip() for ln in f if ln.strip()}
-        staging = os.path.join(path, man["staging"])
-        marker = _marker_name(txid)
-        for p in man["partitions"]:
-            if p in done:
-                continue
-            src = os.path.join(staging, p)
-            dst = os.path.join(path, p)
-            hid = os.path.join(path, f"_old-{txid}-{p}")
-            if os.path.exists(os.path.join(dst, marker)):
-                continue  # swap committed; only the progress append was lost
-            if os.path.exists(os.path.join(src, marker)):
-                if os.path.isdir(dst):
-                    if _HAVE_EXCHANGE:
-                        _exchange_dirs(src, dst)
-                    else:  # pragma: no cover — non-Linux fallback
-                        os.rename(dst, hid)
-                        os.rename(src, dst)
-                else:
-                    os.rename(src, dst)
-            elif not os.path.isdir(dst) and os.path.isdir(hid):
-                # fallback path crashed between hide and rename-in and
-                # the staged side also vanished — restore the old data
-                os.rename(hid, dst)  # pragma: no cover
-            # neither side holds the marker and dst exists: cannot
-            # happen for a journaled partition (markers precede the
-            # journal, rename/exchange is atomic); leave dst untouched.
-        # strip markers off the committed partitions, then the journal
-        for p in man["partitions"]:
-            m = os.path.join(path, p, marker)
-            if os.path.exists(m):
-                os.remove(m)
-        for entry in (manifest_path, progress_path):
-            if os.path.exists(entry):
-                os.remove(entry)
-    # sweep: unjournaled staging dirs (txn never started), hidden olds,
-    # orphaned progress files (journal removed first ⇒ any progress
-    # file remaining here belongs to no live transaction — round-8
-    # ADVICE), and half-written journal tmps.
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if name.startswith("_staging-") or name.startswith("_old-"):
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith("_txn.progress") or name == "_txn.json.tmp":
-            try:
-                os.remove(full)
-            except OSError:
-                pass
-    _fsync_path(path)
-
-
-def _txn_partition_overwrite(
-    df: DataFrame, path: str, partition_col: str
-) -> None:
-    """Stage → journal → swap → sweep. New partition data is written
-    under ``<path>/_staging-<txid>/`` (underscore prefix: invisible to
-    Spark/parquet readers), the journal is fsync'd, then each partition
-    directory is atomically EXCHANGED into place (renameat2 — see
-    above), and only after every swap commits are the journal, the
-    displaced old data (now sitting in staging), and the staging dir
-    removed. A reader sees fully-old or fully-new per partition at
-    every point; a writer death at any point is rolled forward by
-    ``recover_partition_txn`` on the next locked write."""
-    txid = uuid.uuid4().hex
-    staging = os.path.join(path, f"_staging-{txid}")
-    df.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    parts = sorted(
-        d
-        for d in os.listdir(staging)
-        if d.startswith(partition_col + "=")
-        and os.path.isdir(os.path.join(staging, d))
-    )
-    # Stamp every staged partition with the txid marker BEFORE the
-    # journal exists (round-8 ADVICE): the marker rides with the new
-    # data through rename/exchange, making "did this partition's swap
-    # commit?" positively detectable by recovery instead of inferred
-    # from src existence (which EXCHANGE leaves true on both sides).
-    # Batched stamping (round-9, VERDICT task #6): write every marker
-    # buffered, then fsync all files, then fsync all dirs — the
-    # durability point is unchanged (every marker is durable before the
-    # journal write below), but the kernel sees the writeback as one
-    # burst instead of n interleaved write/fsync/fsync triplets.
-    # Measured (tools/fsync_probe.py, 365 partitions, median of 5):
-    # 0.252 s interleaved → 0.207 s batched (0.69 → 0.57 ms/partition).
-    # Chunked at 256 open files (round-10 ADVICE): a txn over more
-    # partitions than the fd headroom (a multi-year daily backfill
-    # under nofile=1024) must not EMFILE; the burst effect is per-chunk
-    # so the measured win survives, and try/finally closes every handle
-    # if a write or fsync fails mid-chunk.
-    marker = _marker_name(txid)
-    for lo in range(0, len(parts), _MARKER_FSYNC_CHUNK):
-        chunk = parts[lo : lo + _MARKER_FSYNC_CHUNK]
-        mfiles = []
-        try:
-            for p in chunk:
-                f = open(os.path.join(staging, p, marker), "w")
-                mfiles.append(f)
-                f.write(txid)
-                f.flush()
-            for f in mfiles:
-                os.fsync(f.fileno())
-        finally:
-            for f in mfiles:
-                try:
-                    f.close()
-                except OSError:  # pragma: no cover — close-after-fsync
-                    pass
-        for p in chunk:
-            _fsync_path(os.path.join(staging, p))
-    _write_fsync(
-        os.path.join(path, "_txn.json"),
-        json.dumps(
-            {
-                "txid": txid,
-                "staging": os.path.basename(staging),
-                "partition_col": partition_col,
-                "partitions": parts,
-            }
-        ),
-    )
-    progress_path = os.path.join(path, _progress_name(txid))
-    hidden: list[str] = []
-    for p in parts:
-        src = os.path.join(staging, p)
-        dst = os.path.join(path, p)
-        if os.path.isdir(dst):
-            if _HAVE_EXCHANGE:
-                _exchange_dirs(src, dst)  # old lands in staging for sweep
-            else:  # pragma: no cover — non-Linux fallback
-                hid = os.path.join(path, f"_old-{txid}-{p}")
-                os.rename(dst, hid)
-                hidden.append(hid)
-                os.rename(src, dst)
-        else:
-            os.rename(src, dst)
-        with open(progress_path, "a") as f:
-            f.write(p + "\n")
-            f.flush()
-            os.fsync(f.fileno())
-    # commit order: strip markers (harmless if a crash leaves some —
-    # recovery removes them), then journal, then progress, then debris.
-    for p in parts:
-        m = os.path.join(path, p, marker)
-        if os.path.exists(m):
-            os.remove(m)
-    os.remove(os.path.join(path, "_txn.json"))
-    if os.path.exists(progress_path):
-        os.remove(progress_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    for hid in hidden:  # pragma: no cover — non-Linux fallback
-        shutil.rmtree(hid, ignore_errors=True)
-    _fsync_path(path)
+from pyspark.sql import DataFrame
 
 
 def write_bronze(df: DataFrame, path: str) -> None:
     """S7 — append-only raw staging (reference services/ingestion.py:208-212).
     Bronze is immutable: appends only, no upsert."""
     df.write.mode("append").parquet(path)
-
-
-def append_silver(df: DataFrame, path: str) -> None:
-    """S8 sink half — append the deduplicated rows (the anti-join half
-    lives in ingest.upsert_clean_events). Partitioned by event date so
-    downstream day-window KPI scans prune."""
-    df.write.mode("append").parquet(path)
-
-
-def overwrite_gold_partitions(
-    df: DataFrame, path: str, lock_timeout_sec: float = 120.0
-) -> None:
-    """A4/A5 — KPI upsert: replace exactly the (metric_date) partitions in
-    this batch (reference ON CONFLICT DO UPDATE, services/kpi.py:143-180).
-
-    Serialized per table path by ``gold_writer_lock`` so a nightly full
-    recompute and an ingest-triggered incremental one can never
-    interleave file sets inside a partition directory, and made
-    CRASH-CONSISTENT by the stage→journal→swap transaction
-    (``_txn_partition_overwrite``): dynamic partition overwrite on bare
-    parquet is delete-matching-then-append, so a writer death mid-upsert
-    could previously lose a partition outright — now every partition
-    directory is fully-old or fully-new at every instant
-    (renameat2(RENAME_EXCHANGE) swap), and ``recover_partition_txn``
-    rolls an interrupted transaction forward before the next write.
-    """
-    with gold_writer_lock(path, timeout_sec=lock_timeout_sec):
-        recover_partition_txn(path)
-        _txn_partition_overwrite(df, path, "metric_date")
 
 
 def write_bucketed_gold(
@@ -527,21 +42,6 @@ def write_bucketed_gold(
     )
 
 
-def overwrite_forecast_horizon(
-    df: DataFrame, path: str, spark: SparkSession
-) -> None:
-    """S10 — forecast upsert per (source, metric) horizon (reference
-    services/forecast.py:95-107): partition by (metric) and overwrite
-    dynamically — each re-forecast replaces only its own series. Same
-    writer-lock + crash-consistent-transaction discipline as gold
-    (concurrent re-forecast requests for overlapping metrics would
-    otherwise interleave; a writer death mid-upsert would otherwise
-    lose a metric's horizon)."""
-    with gold_writer_lock(path):
-        recover_partition_txn(path)
-        _txn_partition_overwrite(df, path, "metric")
-
-
 def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """S9 — CSV export with the fixed header (reference
     services/metrics_calc.py:61-85). ``single_file`` coalesces to one
@@ -550,12 +50,6 @@ def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
         "header", True
     )
     w.csv(path)
-
-
-def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return None
 
 
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:

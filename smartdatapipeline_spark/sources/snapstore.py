@@ -1,11 +1,11 @@
-"""Snapshot-committed parquet tables — the OBJECT-STORE-SAFE upsert
-path (round 10; closes the round-9 VERDICT "missing #3").
+"""Snapshot-committed parquet tables — the repo's ONE upsert/commit
+path (round 10; closes the round-9 VERDICT "missing #3"). Silver,
+gold, the quarantine table and the sketch stores all commit here.
 
-``sources/sinks.py`` gives gold its partition upserts via a writer
-lock plus atomic directory swaps — correct on POSIX/NFS, and honestly
-scoped there as NOT covering ``s3://``-class stores (no atomic rename,
-no directory semantics, list-after-write lag). The industry answer is
-a log-structured table format: Delta Lake (Armbrust et al., VLDB 2020
+Bare parquet has no transactional commit, and a lock plus directory
+swaps only works on POSIX/NFS — not on ``s3://``-class stores (no
+atomic rename, no directory semantics, list-after-write lag). The
+industry answer is a log-structured table format: Delta Lake (Armbrust et al., VLDB 2020
 — an ordered ``_delta_log`` of JSON actions claimed by put-if-absent)
 and Apache Iceberg (snapshot manifests + an atomically-swapped table
 pointer). This module implements that commit protocol from scratch on
@@ -72,8 +72,8 @@ are tracked up to ``_MAX_TRACKED_VALUES`` distinct values; past that
 the entry is marked intersect-everything (pruning degrades,
 correctness does not).
 
-Reference parity: the call sites this serves are the same RDBMS
-``ON CONFLICT`` upserts as sinks.py (backend/app/services/kpi.py:143-231,
+Reference parity: the call sites this serves are the reference's RDBMS
+``ON CONFLICT`` upserts (backend/app/services/kpi.py:143-231,
 services/forecast.py:95-107) — here with object-store-legal atomicity.
 """
 
@@ -181,6 +181,32 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+def put_if_absent(directory: str, name: str, data: bytes) -> bool:
+    """Durable put-if-absent of ``directory/name``: write a tmp file,
+    fsync it, ``os.link`` it into place, fsync the directory. The name
+    appears atomically with complete contents; False means it already
+    existed (another writer won). The local primitive behind log
+    claims, also used for other small files a table root owns (the
+    sketch-store parameter manifest)."""
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".tmp-{uuid.uuid4().hex}")
+    final = os.path.join(directory, name)
+    fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+    try:
+        os.write(fd, data)
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+    try:
+        os.link(tmp, final)
+        _fsync_dir(directory)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(tmp)
+
+
 class LogStore:
     """The three object-store primitives the commit protocol actually
     needs (r13, r12 VERDICT #3) — everything else in this module is
@@ -214,23 +240,7 @@ class LocalLinkLogStore(LogStore):
     version."""
 
     def try_claim(self, log_dir: str, name: str, data: bytes) -> bool:
-        os.makedirs(log_dir, exist_ok=True)
-        tmp = os.path.join(log_dir, f".tmp-{uuid.uuid4().hex}")
-        final = os.path.join(log_dir, name)
-        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-        try:
-            os.write(fd, data)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        try:
-            os.link(tmp, final)
-            _fsync_dir(log_dir)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return put_if_absent(log_dir, name, data)
 
     def list_names(self, log_dir: str) -> list[str]:
         try:
@@ -1404,8 +1414,8 @@ def overwrite_partitions(
     allow_new_columns: bool = False,
 ) -> int:
     """Replace exactly the partitions present in ``df`` (the gold-KPI
-    "recompute the days this batch touched" upsert — sinks.py
-    ``overwrite_gold_partitions`` semantics, object-store-legal): adds
+    "recompute the days this batch touched" upsert, the reference's
+    ``ON CONFLICT DO UPDATE``, object-store-legal): adds
     the new batch, removes every live entry intersecting the replaced
     values, and rewrites intersecting entries' OTHER partitions as a
     residue batch in the same commit (copy-on-write). Readers see the

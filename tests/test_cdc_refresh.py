@@ -135,34 +135,45 @@ def test_ingest_and_refresh_incremental_matches_batch_mode(spark, tmp_path):
         "2025-01-02T00:00:00Z,5,m\n"
     )
     outs = {}
-    for mode, inc, ups in (
-        ("full", False, "antijoin"),
-        ("inc", True, "antijoin"),
-        ("mrg", True, "merge"),   # r12: storage-layer ON CONFLICT
-    ):
-        silver = str(tmp_path / f"silver_{mode}")
-        gold = str(tmp_path / f"gold_{mode}")
+    for ups in ("antijoin", "merge"):   # r12: storage-layer ON CONFLICT
+        silver = str(tmp_path / f"silver_{ups}")
+        gold = str(tmp_path / f"gold_{ups}")
         s1 = ingest_and_refresh(
-            spark, R.read_csv(spark, p1), silver, gold,
-            store="snapshot", incremental=inc, silver_upsert=ups,
+            spark, R.read_csv(spark, p1), silver, gold, silver_upsert=ups,
         )
         s2 = ingest_and_refresh(
-            spark, R.read_csv(spark, p2), silver, gold,
-            store="snapshot", incremental=inc, silver_upsert=ups,
+            spark, R.read_csv(spark, p2), silver, gold, silver_upsert=ups,
         )
-        outs[mode] = (
+        outs[ups] = (
             {k: v for k, v in s1.items() if k != "refresh"},
             {k: v for k, v in s2.items() if k != "refresh"},
             _gold_rows(spark, gold),
         )
-    assert outs["full"] == outs["inc"] == outs["mrg"]
-    # the incremental paths recorded their progress in the gold logs
-    assert last_refreshed_silver_version(str(tmp_path / "gold_inc")) == 2
-    assert last_refreshed_silver_version(str(tmp_path / "gold_mrg")) == 2
+        # batch mode: the whole of gold recomputed from the whole of silver
+        assert outs[ups][2] == _full_rows(SS.read_table(spark, silver))
+    assert outs["antijoin"] == outs["merge"]
+    # the refreshes recorded their progress in the gold logs
+    assert last_refreshed_silver_version(str(tmp_path / "gold_antijoin")) == 2
+    assert last_refreshed_silver_version(str(tmp_path / "gold_merge")) == 2
     # the merge route guarantees key uniqueness at the STORAGE layer —
     # silver's log shows merge commits, not blind appends
-    kinds = {h["kind"] for h in SS.history(str(tmp_path / "silver_mrg"))}
+    kinds = {h["kind"] for h in SS.history(str(tmp_path / "silver_merge"))}
     assert kinds == {"merge"}
+
+
+def test_ingest_and_refresh_rejects_removed_paths(spark, tmp_path):
+    """The lock+swap parquet sink and the full-silver gold recompute are
+    gone: asking for either raises a ValueError naming the removed path
+    before anything is read or written."""
+    import pytest
+
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    raw = spark.range(1)
+    with pytest.raises(ValueError, match="lock\\+swap parquet sink was removed"):
+        ingest_and_refresh(spark, raw, silver, gold, store="parquet")
+    with pytest.raises(ValueError, match="full-silver gold recompute was removed"):
+        ingest_and_refresh(spark, raw, silver, gold, incremental=False)
+    assert not (tmp_path / "silver").exists() and not (tmp_path / "gold").exists()
 
 
 def test_ingest_and_refresh_releases_its_checkpoint(spark, tmp_path):
@@ -184,10 +195,7 @@ def test_ingest_and_refresh_releases_its_checkpoint(spark, tmp_path):
     before = set(jsc.getPersistentRDDs().keySet())
     # the second call inserts nothing and returns early
     for _ in range(2):
-        ingest_and_refresh(
-            spark, R.read_csv(spark, p), silver, gold,
-            store="snapshot", incremental=True,
-        )
+        ingest_and_refresh(spark, R.read_csv(spark, p), silver, gold)
         assert set(jsc.getPersistentRDDs().keySet()) - before == set()
     assert len(_gold_rows(spark, gold)) == 2
 
@@ -247,7 +255,6 @@ def test_hll_store_as_incremental_materialized_view(spark, tmp_path):
             tuple(map(str, r))
             for r in distinct_from_store(
                 spark, store, key_col="source_id", by_metric=True,
-                backend="snapshot",
             ).collect()
         )
 
@@ -269,8 +276,8 @@ def test_hll_store_as_incremental_materialized_view(spark, tmp_path):
 def test_quarantine_dead_letter_table(spark, tmp_path):
     """Rejected rows are EVIDENCE, not log lines: with quarantine_path
     set, every invalid row lands in the dead-letter table with its
-    rejection reason, in both store modes, and the valid pipeline is
-    byte-identical to a run without quarantine."""
+    rejection reason, and the valid pipeline is byte-identical to a run
+    without quarantine."""
     from smartdatapipeline_spark.sources import readers as R
 
     p = str(tmp_path / "a.csv")
@@ -280,24 +287,19 @@ def test_quarantine_dead_letter_table(spark, tmp_path):
         "bad-ts,99,m\n"
         "2025-01-02T00:00:00Z,not-a-number,m\n"
     )
-    for mode in ("parquet", "snapshot"):
-        silver = str(tmp_path / f"s_{mode}")
-        gold = str(tmp_path / f"g_{mode}")
-        dlq = str(tmp_path / f"q_{mode}")
-        stats = ingest_and_refresh(
-            spark, R.read_csv(spark, p), silver, gold,
-            store=mode, quarantine_path=dlq,
-        )
-        assert stats["quarantined_rows"] == 2
-        if mode == "snapshot":
-            q = SS.read_table(spark, dlq)
-        else:
-            q = spark.read.parquet(dlq)
-        rows = {(r["reason"] is not None) for r in q.collect()}
-        assert q.count() == 2 and rows == {True}
-        reasons = sorted(r["reason"] for r in q.select("reason").collect())
-        assert len(reasons) == 2 and all(reasons)
+    silver, gold = str(tmp_path / "s"), str(tmp_path / "g")
+    dlq = str(tmp_path / "q")
+    stats = ingest_and_refresh(
+        spark, R.read_csv(spark, p), silver, gold, quarantine_path=dlq,
+    )
+    assert stats["quarantined_rows"] == 2
+    q = SS.read_table(spark, dlq)
+    rows = {(r["reason"] is not None) for r in q.collect()}
+    assert q.count() == 2 and rows == {True}
+    reasons = sorted(r["reason"] for r in q.select("reason").collect())
+    assert len(reasons) == 2 and all(reasons)
     # no-quarantine run unchanged
     silver2, gold2 = str(tmp_path / "s2"), str(tmp_path / "g2")
     stats2 = ingest_and_refresh(spark, R.read_csv(spark, p), silver2, gold2)
     assert "quarantined_rows" not in stats2
+    assert _gold_rows(spark, gold2) == _gold_rows(spark, gold)

@@ -197,3 +197,45 @@ def test_equi_width_histogram_degenerate_constant(spark):
     out = equi_width_histogram(ev, "value", 10).collect()
     assert len(out) == 1
     assert out[0]["bucket"] == 0 and out[0]["n"] == 7
+
+
+def test_loops_pin_at_most_their_result(spark):
+    """connected_components and pagerank release each superseded
+    checkpoint once the next one is materialized: after the result is
+    materialized and its plan caches released, a call leaves at most
+    ONE more persistent RDD (the result's own checkpoint), at the
+    function level and through the registry queries built on them.
+    bfs_hops is exempt: its result is the union of its checkpoints."""
+    import __spark_entry__ as E
+    from smartdatapipeline_spark.cachetrack import release_plan_caches
+    from smartdatapipeline_spark.functions import graph as G
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+
+    def pinned():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    # a 40-edge path: CC needs several rounds, so several checkpoints
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    nodes = spark.range(41).withColumnRenamed("id", "node")
+    qs = E.queries()
+    calls = {
+        "connected_components": lambda: G.connected_components(edges, nodes),
+        "pagerank": lambda: G.pagerank(edges, iterations=5),
+        **{
+            name: (lambda name=name: qs[name](spark, SF_SMALL))
+            for name in ("dup_clusters", "canonical_docs", "graph_pagerank")
+        },
+    }
+    for name, call in calls.items():
+        before = pinned()
+        out = call()
+        out.collect()
+        release_plan_caches(out)
+        grown = pinned() - before
+        assert len(grown) <= 1, (name, sorted(grown))
+        if name == "connected_components":
+            assert G.LAST_CC_ROUNDS >= 3

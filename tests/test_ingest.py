@@ -12,6 +12,7 @@ from pyspark.sql import Row
 from smartdatapipeline_spark.sources import ingest as I
 from smartdatapipeline_spark.sources import readers as R
 from smartdatapipeline_spark.sources import sinks as S
+from smartdatapipeline_spark.sources import snapstore as SS
 
 
 @pytest.fixture()
@@ -186,19 +187,19 @@ def test_end_to_end_file_to_gold(spark, tmpfile, tmp_path):
     clean = clean.withColumn("source_id", __import__("pyspark").sql.functions.lit(1))
     to_insert, _ = I.upsert_clean_events(clean.drop("_warn"), None)
     silver = str(tmp_path / "silver")
-    S.append_silver(to_insert, silver)
-    gold = K.run_daily_kpis(spark.read.parquet(silver))
+    SS.append(to_insert, silver)
+    gold = K.run_daily_kpis(SS.read_table(spark, silver))
     gold_path = str(tmp_path / "gold")
-    S.overwrite_gold_partitions(gold, gold_path)
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold_path).collect()}
+    SS.overwrite_partitions(gold, gold_path, "metric_date")
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold_path).collect()}
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 60.0
     assert out[dt.date(2025, 1, 1)]["value_avg"] == 20.0
     assert out[dt.date(2025, 1, 1)]["value_count"] == 3
     assert out[dt.date(2025, 1, 2)]["value_sum"] == 40.0
 
     # idempotent re-upsert: same gold recompute overwrites same partitions
-    S.overwrite_gold_partitions(gold, gold_path)
-    assert spark.read.parquet(gold_path).count() == 2
+    SS.overwrite_partitions(gold, gold_path, "metric_date")
+    assert SS.read_table(spark, gold_path).count() == 2
 
 
 def test_bucketed_gold_aggregation_plans_without_exchange(spark, tmp_path):
@@ -243,7 +244,7 @@ def test_ingest_and_refresh_end_to_end(spark, tmp_path):
     s1 = ingest_and_refresh(spark, R.read_csv(spark, p1), silver, gold)
     assert s1["ingested_rows"] == 2 and s1["skipped_rows"] == 1
     assert s1["duplicate_rows"] == 0
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold).collect()}
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold).collect()}
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 30.0
 
     # second ingest: one duplicate + one new event on a new day
@@ -255,17 +256,16 @@ def test_ingest_and_refresh_end_to_end(spark, tmp_path):
     )
     s2 = ingest_and_refresh(spark, R.read_csv(spark, p2), silver, gold)
     assert s2["ingested_rows"] == 2 and s2["duplicate_rows"] == 1
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold).collect()}
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold).collect()}
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 30.0  # day 1 unchanged
     assert out[dt.date(2025, 1, 2)]["value_sum"] == 5.0
-    assert spark.read.parquet(silver).count() == 3
+    assert SS.read_table(spark, silver).count() == 3
 
 
 def test_partitioned_gold_prunes_date_filter(spark, tmp_path):
-    """The partitioned gold layout must turn date filters into partition
-    pruning — the scan's PartitionFilters, not a post-scan filter."""
-    from pyspark.sql import functions as F
-
+    """The partitioned gold layout must turn a day read into pruning:
+    one overwrite per day leaves one batch per day, and a day read
+    hands Spark only that day's files (manifest-level pruning)."""
     from smartdatapipeline_spark.operators import kpi as K
 
     rows = [
@@ -274,8 +274,17 @@ def test_partitioned_gold_prunes_date_filter(spark, tmp_path):
     ]
     gold = K.run_daily_kpis(spark.createDataFrame(rows))
     path = str(tmp_path / "gold")
-    S.overwrite_gold_partitions(gold, path)
-    q = spark.read.parquet(path).filter(F.col("metric_date") == "2025-01-03")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "2025-01-03" in plan, plan
+    for day in range(1, 6):
+        SS.overwrite_partitions(
+            gold.filter(gold["metric_date"] == dt.date(2025, 1, day)),
+            path, "metric_date",
+        )
+    q = SS.read_table(
+        spark, path, partition_values=["2025-01-03"], partition_col="metric_date"
+    )
+    def batch_dirs(df):
+        return {f.split("/data/")[1].split("/")[0] for f in df.inputFiles()}
+
+    assert len(batch_dirs(q)) == 1
+    assert len(batch_dirs(SS.read_table(spark, path))) == 5
     assert q.count() == 1

@@ -1,17 +1,9 @@
 """Round-7 fixes pinned by regression tests: degree-adaptive PageRank
-bucketing (verdict r6 task #1), gold_writer_lock heartbeat + owner-token
-release guard (ADVICE r6 medium), crash-consistent transactional gold
-upsert (verdict r6 task #4), and the containment_pairs cache-ownership
+bucketing (verdict r6 task #1) and the containment_pairs cache-ownership
 propagation (ADVICE r6 medium)."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import threading
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -80,215 +72,6 @@ def test_pagerank_auto_probe_is_deterministic(spark):
     a = _rank_map(pagerank(sym, iterations=2, src_buckets="auto"))
     b = _rank_map(pagerank(sym, iterations=2, src_buckets="auto"))
     assert a == b
-
-
-# ------------------------------------------- writer-lock heartbeat
-
-
-def test_gold_writer_lock_heartbeat_survives_long_hold(tmp_path):
-    """ADVICE r6 medium: a hold longer than stale_sec must NOT be broken
-    while the holder is alive — the heartbeat refreshes the lock mtime,
-    so a concurrent waiter times out instead of breaking in."""
-    from smartdatapipeline_spark.sources.sinks import gold_writer_lock
-
-    path = str(tmp_path / "gold_hb")
-    lock_dir = path + "._LOCK"
-    entered = threading.Event()
-    release = threading.Event()
-
-    def holder():
-        with gold_writer_lock(path, timeout_sec=5.0, stale_sec=1.0):
-            entered.set()
-            release.wait(10.0)
-
-    t = threading.Thread(target=holder, daemon=True)
-    t.start()
-    assert entered.wait(5.0)
-    time.sleep(2.2)  # > 2x stale_sec: pre-fix this lock looks leaked
-    # the waiter must NOT break the heartbeating lock
-    with pytest.raises(TimeoutError):
-        with gold_writer_lock(path, timeout_sec=1.5, stale_sec=1.0):
-            pass
-    assert os.path.isdir(lock_dir)  # holder still owns it
-    release.set()
-    t.join(5.0)
-    assert not os.path.isdir(lock_dir)  # clean release
-
-
-def test_gold_writer_lock_release_respects_owner_token(tmp_path):
-    """ADVICE r6 medium (second half): a holder whose lock was broken
-    and re-acquired by someone else must NOT delete the new holder's
-    lock on release."""
-    from smartdatapipeline_spark.sources.sinks import gold_writer_lock
-
-    path = str(tmp_path / "gold_tok")
-    lock_dir = path + "._LOCK"
-    owner = os.path.join(lock_dir, "owner")
-    cm = gold_writer_lock(path, timeout_sec=2.0, stale_sec=600.0)
-    cm.__enter__()
-    # simulate: a waiter judged us stale, broke the lock, and a NEW
-    # holder acquired it with a different token
-    shutil.rmtree(lock_dir)
-    os.makedirs(lock_dir)
-    with open(owner, "w") as f:
-        f.write("someone-else")
-    cm.__exit__(None, None, None)
-    assert os.path.isdir(lock_dir), "released a lock we no longer own"
-    with open(owner) as f:
-        assert f.read() == "someone-else"
-    shutil.rmtree(lock_dir)
-
-
-def test_gold_writer_lock_stale_break_still_works(tmp_path):
-    """A genuinely leaked lock (old mtime, no live heartbeat) is still
-    broken and acquisition proceeds — the heartbeat must not have
-    removed the crashed-writer recovery path."""
-    from smartdatapipeline_spark.sources.sinks import gold_writer_lock
-
-    path = str(tmp_path / "gold_stale")
-    lock_dir = path + "._LOCK"
-    os.makedirs(lock_dir)
-    with open(os.path.join(lock_dir, "owner"), "w") as f:
-        f.write("dead-writer")
-    old = time.time() - 3600
-    os.utime(lock_dir, (old, old))
-    with gold_writer_lock(path, timeout_sec=2.0, stale_sec=600.0):
-        assert os.path.isdir(lock_dir)
-    assert not os.path.isdir(lock_dir)
-
-
-# -------------------------------------- crash-consistent gold upsert
-
-
-def _gold_batch(spark, dates, batch):
-    rows = [
-        (d, m, batch, float(i))
-        for i, d in enumerate(dates)
-        for m in ("value_sum", "value_avg")
-    ]
-    return spark.createDataFrame(
-        rows, "metric_date string, metric string, batch string, value double"
-    )
-
-
-def test_txn_overwrite_replaces_only_batch_partitions(spark, tmp_path):
-    """Baseline semantics unchanged by the txn rewrite: upsert replaces
-    exactly the partitions present in the batch (reference ON CONFLICT
-    DO UPDATE, services/kpi.py:143-180) and is idempotent."""
-    from smartdatapipeline_spark.sources.sinks import overwrite_gold_partitions
-
-    path = str(tmp_path / "gold_sem")
-    a = _gold_batch(spark, ["2024-01-01", "2024-01-02", "2024-01-03"], "A")
-    overwrite_gold_partitions(a, path)
-    b = _gold_batch(spark, ["2024-01-02"], "B")
-    overwrite_gold_partitions(b, path)
-    overwrite_gold_partitions(b, path)  # idempotent re-upsert
-    got = {
-        (str(r["metric_date"]), r["batch"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {
-        ("2024-01-01", "A"),
-        ("2024-01-02", "B"),
-        ("2024-01-03", "A"),
-    }
-    # no txn debris
-    names = set(os.listdir(path))
-    assert not any(n.startswith("_staging-") or n.startswith("_old-") for n in names)
-    assert "_txn.json" not in names and "_txn.progress" not in names
-
-
-def test_txn_overwrite_crash_mid_swap_rolls_forward(spark, tmp_path, monkeypatch):
-    """verdict r6 task #4: kill the writer between partition swaps. The
-    table must stay readable with each partition fully-old or fully-new,
-    and the next locked write must roll the journaled txn FORWARD."""
-    import smartdatapipeline_spark.sources.sinks as sinks
-
-    path = str(tmp_path / "gold_crash")
-    dates = ["2024-02-0%d" % i for i in range(1, 6)]
-    a = _gold_batch(spark, dates, "A")
-    sinks.overwrite_gold_partitions(a, path)
-
-    b = _gold_batch(spark, dates, "B")
-    calls = {"n": 0}
-
-    if sinks._HAVE_EXCHANGE:
-        real = sinks._exchange_dirs
-
-        def dying_exchange(x, y):
-            calls["n"] += 1
-            if calls["n"] == 3:
-                raise RuntimeError("injected writer death")
-            real(x, y)
-
-        monkeypatch.setattr(sinks, "_exchange_dirs", dying_exchange)
-    else:  # pragma: no cover — non-Linux fallback path
-        real_rename = os.rename
-
-        def dying_rename(x, y):
-            if os.path.basename(x).startswith("metric_date="):
-                calls["n"] += 1
-                if calls["n"] == 3:
-                    raise RuntimeError("injected writer death")
-            real_rename(x, y)
-
-        monkeypatch.setattr(sinks.os, "rename", dying_rename)
-
-    with pytest.raises(RuntimeError, match="injected"):
-        sinks.overwrite_gold_partitions(b, path)
-    monkeypatch.undo()
-
-    # mid-crash: table READABLE, every partition fully-old or fully-new
-    mid = spark.read.parquet(path)
-    per_part = {
-        str(r["metric_date"]): r["n"]
-        for r in mid.groupBy("metric_date")
-        .agg(F.countDistinct("batch").alias("n"))
-        .collect()
-    }
-    assert set(per_part) == set(dates)
-    assert all(n == 1 for n in per_part.values()), per_part
-    assert os.path.exists(os.path.join(path, "_txn.json"))  # journaled
-
-    # next locked write first rolls the txn forward, then applies itself
-    c = _gold_batch(spark, [dates[0]], "C")
-    sinks.overwrite_gold_partitions(c, path)
-    got = {
-        (str(r["metric_date"]), r["batch"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {(dates[0], "C")} | {(d, "B") for d in dates[1:]}
-    names = set(os.listdir(path))
-    assert not any(n.startswith("_staging-") or n.startswith("_old-") for n in names)
-    assert "_txn.json" not in names
-
-
-def test_txn_overwrite_crash_before_journal_discards(spark, tmp_path, monkeypatch):
-    """A writer death BEFORE the journal fsync leaves the old table
-    bit-identical — the staging dir is unjournaled debris, swept by the
-    next locked write."""
-    import smartdatapipeline_spark.sources.sinks as sinks
-
-    path = str(tmp_path / "gold_nojournal")
-    dates = ["2024-03-01", "2024-03-02"]
-    sinks.overwrite_gold_partitions(_gold_batch(spark, dates, "A"), path)
-
-    def dying_write_fsync(p, data):
-        raise RuntimeError("injected death before journal")
-
-    monkeypatch.setattr(sinks, "_write_fsync", dying_write_fsync)
-    with pytest.raises(RuntimeError, match="before journal"):
-        sinks.overwrite_gold_partitions(_gold_batch(spark, dates, "B"), path)
-    monkeypatch.undo()
-
-    got = {
-        (str(r["metric_date"]), r["batch"])
-        for r in spark.read.parquet(path).collect()
-    }
-    assert got == {(d, "A") for d in dates}  # fully old
-    sinks.overwrite_gold_partitions(_gold_batch(spark, [dates[0]], "C"), path)
-    names = set(os.listdir(path))
-    assert not any(n.startswith("_staging-") for n in names)
 
 
 # ------------------------------------- containment cache propagation

@@ -1,6 +1,6 @@
-"""Persisted register store (round 9): incremental daily builds answer
-range-distinct questions from stored registers alone, idempotently,
-through the crash-consistent txn sink."""
+"""Persisted sketch stores (rounds 9-10): incremental daily builds
+answer range questions from stored partials alone, idempotently,
+through snapshot-store commits."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from smartdatapipeline_spark.operators.sketchstore import (
     distinct_from_store,
     update_register_store,
 )
+from smartdatapipeline_spark.sources import snapstore as SS
 
 
 def _events(spark, days, users_per_day=120, metrics=("m1", "m2")):
@@ -34,20 +35,19 @@ def _est_rows(df):
     return sorted(tuple(map(str, r)) for r in df.collect())
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_incremental_build_matches_direct(spark, tmp_path, backend):
+def test_incremental_build_matches_direct(spark, tmp_path):
     store = str(tmp_path / "reg_store")
     d12 = _events(spark, ["2024-01-01", "2024-01-02"])
     d3 = _events(spark, ["2024-01-03"])
 
-    assert update_register_store(d12, store, backend=backend) == 2
+    assert update_register_store(d12, store) == 2
     # incremental day: only day 3 is scanned/written
-    assert update_register_store(d12.unionByName(d3), store, backend=backend) == 1
+    assert update_register_store(d12.unionByName(d3), store) == 1
     # re-run: nothing new, store untouched
-    assert update_register_store(d12.unionByName(d3), store, backend=backend) == 0
+    assert update_register_store(d12.unionByName(d3), store) == 0
 
     # answers from the store == direct sketch of ALL events
-    got = distinct_from_store(spark, store, by_metric=True, backend=backend)
+    got = distinct_from_store(spark, store, by_metric=True)
     all_ev = d12.unionByName(d3).withColumn("metric_date", F.to_date("ts"))
     want = hll_raw_estimate(
         hll_partial(all_ev, "user_id", by=["metric"]), by=["metric"]
@@ -55,32 +55,29 @@ def test_incremental_build_matches_direct(spark, tmp_path, backend):
     assert _est_rows(got) == _est_rows(want)
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_range_filter_prunes_days(spark, tmp_path, backend):
+def test_range_filter_prunes_days(spark, tmp_path):
     store = str(tmp_path / "reg_store2")
     ev = _events(spark, ["2024-01-01", "2024-01-02", "2024-01-03"])
-    update_register_store(ev, store, backend=backend)
+    update_register_store(ev, store)
     got = distinct_from_store(
         spark, store, start="2024-01-02", end="2024-01-03", by_metric=False,
-        backend=backend,
     )
     sub = ev.filter(F.to_date("ts") >= F.lit("2024-01-02"))
     want = hll_raw_estimate(hll_partial(sub, "user_id"))
     assert _est_rows(got) == _est_rows(want)
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_corrections_replace_one_day_only(spark, tmp_path, backend):
+def test_corrections_replace_one_day_only(spark, tmp_path):
     store = str(tmp_path / "reg_store3")
     ev = _events(spark, ["2024-01-01", "2024-01-02"])
-    update_register_store(ev, store, backend=backend)
+    update_register_store(ev, store)
 
     # day 2 gets corrected data (more users); recompute JUST that day
     extra = _events(spark, ["2024-01-02"], users_per_day=200)
-    n = update_register_store(extra, store, only_new_days=False, backend=backend)
+    n = update_register_store(extra, store, only_new_days=False)
     assert n == 1
 
-    got = distinct_from_store(spark, store, by_metric=True, backend=backend)
+    got = distinct_from_store(spark, store, by_metric=True)
     truth = (
         ev.filter(F.to_date("ts") == F.lit("2024-01-01")).unionByName(extra)
     )
@@ -91,77 +88,43 @@ def test_corrections_replace_one_day_only(spark, tmp_path, backend):
 
 
 def test_store_partitioned_by_day(spark, tmp_path):
-    import os
-
+    """Each committed batch records the days it holds as partition
+    values, so day reads prune at the manifest level."""
     store = str(tmp_path / "reg_store4")
     update_register_store(_events(spark, ["2024-01-01", "2024-01-02"]), store)
-    parts = sorted(
-        d for d in os.listdir(store) if d.startswith("metric_date=")
-    )
-    assert parts == ["metric_date=2024-01-01", "metric_date=2024-01-02"]
+    assert SS.partition_values(store) == ["2024-01-01", "2024-01-02"]
 
 
-def test_store_recovers_interrupted_txn_before_next_update(spark, tmp_path):
-    """A register upsert that died after its journal fsync (zero swaps)
-    must roll FORWARD on the next update_register_store call — the
-    store inherits the sink layer's recovery, at this call site."""
-    import json
+def test_update_ignores_retired_partition_dirs(spark, tmp_path):
+    """A store directory left by the retired lock+swap layout (bare
+    ``metric_date=…`` partition dirs and a matching manifest) holds no
+    snapshot commit: the first update builds from scratch, and reads
+    see only the store's own commits, never the old files."""
     import os
 
-    from smartdatapipeline_spark.functions.sketch import hll_partial
-    from smartdatapipeline_spark.sources import sinks
-
-    store = str(tmp_path / "reg_store_crash")
-    day1 = _events(spark, ["2024-01-01"])
-    update_register_store(day1, store)
-
-    # hand-build the interrupted transaction: day-2 registers staged,
-    # markers stamped, journal fsync'd — crash before any swap
-    txid = "deadbeef00r9feed"
-    day2 = _events(spark, ["2024-01-02"], users_per_day=70)
-    reg2 = hll_partial(
-        day2.withColumn("metric_date", F.to_date("ts")).filter(
-            F.col("user_id").isNotNull()
-        ),
+    store = str(tmp_path / "reg_legacy")
+    stale = _events(spark, ["2023-12-31", "2024-01-01"], users_per_day=300)
+    hll_partial(
+        stale.withColumn("metric_date", F.to_date("ts")),
         "user_id",
         by=["metric_date", "metric"],
-    )
-    staging = os.path.join(store, f"_staging-{txid}")
-    reg2.write.mode("overwrite").partitionBy("metric_date").parquet(staging)
-    parts = sorted(
-        d for d in os.listdir(staging) if d.startswith("metric_date=")
-    )
-    marker = sinks._marker_name(txid)
-    for p in parts:
-        with open(os.path.join(staging, p, marker), "w") as f:
-            f.write(txid)
-    sinks._write_fsync(
-        os.path.join(store, "_txn.json"),
-        json.dumps(
-            {
-                "txid": txid,
-                "staging": os.path.basename(staging),
-                "partition_col": "metric_date",
-                "partitions": parts,
-            }
-        ),
-    )
+    ).write.partitionBy("metric_date").parquet(store)
+    with open(os.path.join(store, "_sketch_manifest.json"), "w") as f:
+        f.write('{"kind": "hll", "p": 8, "key_col": "user_id", '
+                '"metric_col": "metric"}')
 
-    # next (incremental) update: recovery rolls day 2 forward FIRST, so
-    # the incremental scan sees it as already stored and writes nothing
-    wrote = update_register_store(
-        day1.unionByName(day2), store, only_new_days=True
-    )
-    assert wrote == 0
+    ev = _events(spark, ["2024-01-01", "2024-01-02"])
+    # both days are written, although 2024-01-01 has an old partition dir
+    assert update_register_store(ev, store) == 2
+    assert SS.table_version(store) == 1
+    assert SS.partition_values(store) == ["2024-01-01", "2024-01-02"]
     got = distinct_from_store(spark, store, by_metric=True)
-    truth = day1.unionByName(day2)
     want = hll_raw_estimate(
-        hll_partial(truth, "user_id", by=["metric"]), by=["metric"]
+        hll_partial(ev, "user_id", by=["metric"]), by=["metric"]
     )
     assert _est_rows(got) == _est_rows(want)
-    # no txn debris left behind
-    assert not os.path.exists(os.path.join(store, "_txn.json"))
-    assert not any(d.startswith("_staging-") for d in os.listdir(store))
+    # the old files are still on disk, just never read
+    assert "metric_date=2023-12-31" in os.listdir(store)
 
 
 # ── round 10: manifest, empty-dir guard, KMV/Bloom stores ────────────
@@ -169,7 +132,7 @@ def test_store_recovers_interrupted_txn_before_next_update(spark, tmp_path):
 
 def test_precreated_empty_dir_treated_as_empty_store(spark, tmp_path):
     """ADVICE r10: a store dir that exists but holds no committed
-    partition (pre-created, or first txn rolled back) must behave like
+    partition (pre-created, or a crashed first write) must behave like
     a missing store, not crash the incremental read."""
     import os
 
@@ -184,40 +147,37 @@ def test_precreated_empty_dir_treated_as_empty_store(spark, tmp_path):
     assert _est_rows(got) == _est_rows(want)
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_reader_on_empty_store_raises_clearly(spark, tmp_path, backend):
+def test_reader_on_empty_store_raises_clearly(spark, tmp_path):
     import os
 
     store = str(tmp_path / "reg_empty")
     os.makedirs(store)
     with pytest.raises(ValueError, match="no committed partitions"):
-        distinct_from_store(spark, store, backend=backend)
+        distinct_from_store(spark, store)
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_manifest_p_mismatch_raises(spark, tmp_path, backend):
+def test_manifest_p_mismatch_raises(spark, tmp_path):
     """ADVICE r10: the store records its HLL precision; reading or
     re-writing with a different p raises instead of computing garbage
     (negative v_empty) with the wrong register count."""
     store = str(tmp_path / "reg_p12")
     ev = _events(spark, ["2024-01-01"])
-    update_register_store(ev, store, p=12, backend=backend)
+    update_register_store(ev, store, p=12)
     with pytest.raises(ValueError, match="parameter mismatch"):
-        distinct_from_store(spark, store, p=8, backend=backend)
+        distinct_from_store(spark, store, p=8)
     with pytest.raises(ValueError, match="parameter mismatch"):
         update_register_store(
-            _events(spark, ["2024-01-02"]), store, p=8, backend=backend
+            _events(spark, ["2024-01-02"]), store, p=8
         )
     # p=None (default) reads the manifest precision and just works
-    got = distinct_from_store(spark, store, by_metric=True, backend=backend)
+    got = distinct_from_store(spark, store, by_metric=True)
     want = hll_raw_estimate(
         hll_partial(ev, "user_id", by=["metric"], p=12), by=["metric"], p=12
     )
     assert _est_rows(got) == _est_rows(want)
 
 
-@pytest.mark.parametrize("backend", ["txn", "snapshot"])
-def test_kmv_store_incremental_matches_direct(spark, tmp_path, backend):
+def test_kmv_store_incremental_matches_direct(spark, tmp_path):
     from smartdatapipeline_spark.functions.sketch import (
         kmv_distinct,
         kmv_fold,
@@ -228,16 +188,11 @@ def test_kmv_store_incremental_matches_direct(spark, tmp_path, backend):
     store = str(tmp_path / "kmv_store")
     d12 = _events(spark, ["2024-01-01", "2024-01-02"])
     d3 = _events(spark, ["2024-01-03"])
-    assert update_kmv_store(d12, store, k=32, backend=backend) == 2
-    assert update_kmv_store(d12.unionByName(d3), store, k=32, backend=backend) == 1
-    assert update_kmv_store(d12.unionByName(d3), store, k=32, backend=backend) == 0
+    assert update_kmv_store(d12, store, k=32) == 2
+    assert update_kmv_store(d12.unionByName(d3), store, k=32) == 1
+    assert update_kmv_store(d12.unionByName(d3), store, k=32) == 0
 
-    if backend == "snapshot":
-        from smartdatapipeline_spark.sources import snapstore as SS
-
-        stored = SS.read_table(spark, store)
-    else:
-        stored = spark.read.parquet(store)
+    stored = SS.read_table(spark, store)
     got = kmv_distinct(
         kmv_fold(stored, by=["metric"], k=32), by=["metric"], k=32
     )
@@ -287,7 +242,7 @@ def test_kmv_store_corrections_replace_one_day(spark, tmp_path):
     extra = _events(spark, ["2024-01-02"], users_per_day=200)
     assert update_kmv_store(extra, store, k=32, only_new_days=False) == 1
 
-    stored = spark.read.parquet(store)
+    stored = SS.read_table(spark, store)
     got = kmv_distinct(
         kmv_fold(stored, by=["metric"], k=32), by=["metric"], k=32
     )
@@ -340,7 +295,7 @@ def test_bloom_store_fold_matches_direct_words(spark, tmp_path):
     store = str(tmp_path / "bloom_words")
     ev = _events(spark, ["2024-01-01", "2024-01-02"])
     update_bloom_store(ev, store)
-    got = bloom_fold(spark.read.parquet(store).drop("metric_date", "metric"))
+    got = bloom_fold(SS.read_table(spark, store).drop("metric_date", "metric"))
     want = bloom_partial(ev, "user_id")
     assert _est_rows(got) == _est_rows(want)
 

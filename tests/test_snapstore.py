@@ -313,10 +313,13 @@ def test_commit_files_are_complete_json(spark, tmp_path):
 
 
 def test_pipeline_snapshot_store_matches_parquet(spark, tmp_path):
-    """ingest_and_refresh(store='snapshot') lands the SAME silver and
-    gold contents as the default POSIX lock+swap path across two
+    """ingest_and_refresh lands the SAME silver and gold contents as the
+    plain-parquet reference computation (clean → anti-join dedup →
+    parquet silver → daily KPIs over all of silver) across two
     overlapping batches (dup drop + scoped gold refresh included)."""
+    from smartdatapipeline_spark.operators.kpi import run_daily_kpis
     from smartdatapipeline_spark.operators.pipeline import ingest_and_refresh
+    from smartdatapipeline_spark.sources import ingest as I
     from smartdatapipeline_spark.sources import readers as R
 
     p1 = str(tmp_path / "a.csv")
@@ -332,32 +335,36 @@ def test_pipeline_snapshot_store_matches_parquet(spark, tmp_path):
         "2025-01-01T00:00:00Z,10,m\n"
         "2025-01-02T00:00:00Z,5,m\n"
     )
-    stats = {}
-    for mode in ("parquet", "snapshot"):
-        silver = str(tmp_path / f"silver_{mode}")
-        gold = str(tmp_path / f"gold_{mode}")
-        s1 = ingest_and_refresh(spark, R.read_csv(spark, p1), silver, gold, store=mode)
-        s2 = ingest_and_refresh(spark, R.read_csv(spark, p2), silver, gold, store=mode)
-        stats[mode] = (s1, s2)
-    assert stats["parquet"] == stats["snapshot"]
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    pq = str(tmp_path / "silver_parquet")
+    for i, p in enumerate((p1, p2)):
+        ingest_and_refresh(spark, R.read_csv(spark, p), silver, gold)
+        clean = I.clean_rows(R.read_csv(spark, p)).withColumn(
+            "source_id", F.lit(1)
+        )
+        valid = clean.filter("_warn IS NULL").drop("_warn")
+        existing = spark.read.parquet(pq) if i else None
+        to_insert, _ = I.upsert_clean_events(valid, existing)
+        to_insert.localCheckpoint(eager=True).write.mode("append").parquet(pq)
 
-    gold_pq = spark.read.parquet(str(tmp_path / "gold_parquet"))
-    gold_ss = SS.read_table(spark, str(tmp_path / "gold_snapshot"))
+    silver_pq = spark.read.parquet(pq)
+    silver_ss = SS.read_table(spark, silver)
+    scols = sorted(silver_pq.columns)
+    assert sorted(map(tuple, silver_pq.select(*scols).collect())) == sorted(
+        map(tuple, silver_ss.select(*scols).collect())
+    )
+    gold_pq = run_daily_kpis(silver_pq)
+    gold_ss = SS.read_table(spark, gold)
     cols = sorted(gold_pq.columns)
     assert sorted(gold_ss.columns) == cols
     assert sorted(map(tuple, gold_pq.select(*cols).collect())) == sorted(
         map(tuple, gold_ss.select(*cols).collect())
     )
-    silver_pq = spark.read.parquet(str(tmp_path / "silver_parquet"))
-    silver_ss = SS.read_table(spark, str(tmp_path / "silver_snapshot"))
-    scols = sorted(silver_pq.columns)
-    assert sorted(map(tuple, silver_pq.select(*scols).collect())) == sorted(
-        map(tuple, silver_ss.select(*scols).collect())
-    )
-    # the snapshot gold saw one append-equivalent overwrite per batch:
-    # day-1 correction did NOT rewrite day-2 and vice versa
-    h = SS.history(str(tmp_path / "gold_snapshot"))
-    assert [x["kind"] for x in h] == ["overwrite_partitions"] * 2
+    # gold saw one scoped overwrite per batch, each followed by its
+    # refresh-progress marker: the day-1 correction did NOT rewrite
+    # day 2 and vice versa
+    h = [x for x in SS.history(gold) if x["kind"] == "overwrite_partitions"]
+    assert len(h) == 2
     assert h[0]["replaced"] == ["2025-01-01"]
     # batch 2's day-1 row was a duplicate ⇒ after dedup only day 2 is
     # touched, and the refresh correctly scopes to it alone

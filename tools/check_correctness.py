@@ -5,6 +5,9 @@ rows sorted by all columns) — a local stand-in for CORRECTNESS_r{N}.json.
 
 Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 
+Naming queries runs only those, and the summary counts only them; an
+unknown name exits with status 2 before Spark starts.
+
 ``--json`` additionally writes a per-query artifact in the driver's
 CORRECTNESS shape (rows_match/schema_match/hash_match/spark_rows/
 oracle_rows/err) so the full-registry local sweep is committable and
@@ -60,6 +63,13 @@ def main() -> int:
     import __spark_entry__ as E
     from smartdatapipeline_spark.session import get_spark
 
+    qs, oracles = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    selected = [name for name in qs if not only or name in only]
+
     spark = get_spark("check-correctness")
     con = duckdb.connect()
     # Disk guard (round 10): an oracle whose intermediate explodes at
@@ -76,7 +86,6 @@ def main() -> int:
         elif os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs, oracles = E.queries(), E.oracle_sql()
     failures = []
     records: dict[str, dict] = {}
 
@@ -98,9 +107,8 @@ def main() -> int:
             records[name]["property_match"] = property_match
             records[name]["property_detail"] = property_detail
 
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in selected:
+        fn = qs[name]
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -182,7 +190,7 @@ def main() -> int:
             continue
         print(f"PASS {name}: rows={len(ns)} [{t_spark:.1f}s]")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs) if not only else len(only)} passed")
+    print(f"\n{len(selected) - len(failures)}/{len(selected)} passed")
     if json_out:
         with open(json_out, "w") as fh:
             json.dump({"sf_dir": sf_dir, "queries": records}, fh, indent=1)

@@ -423,10 +423,11 @@ def q_forecast_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_forecast_arima(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M1: from-scratch numpy ARIMA(1,1,1), CSS lattice estimation —
-    the reference SARIMAX slot (services/forecast.py:39-92) with real
-    model math and no statsmodels; oracle = the identical recursion as a
-    DuckDB list_reduce + recursive-CTE program (bit-exact)."""
+    """M1: from-scratch ARIMA(1,1,1), CSS lattice estimation, as one
+    Spark plan (``aggregate`` folds, no Python worker) — the reference
+    SARIMAX slot (services/forecast.py:39-92) with real model math and
+    no statsmodels; oracle = the identical recursion as a DuckDB
+    list_reduce + recursive-CTE program (bit-exact)."""
     return FC.forecast_arima(_gold(spark, sf_dir), horizon_days=7)
 
 
@@ -5442,11 +5443,11 @@ def oracle_sql() -> dict[str, str]:
                quality AS canonical_quality
         FROM r WHERE rn = 1
     """
-    # forecast_arima — the exact arima_css_fn program in SQL: CSS over the
+    # forecast_arima — the same program as the Spark plan: CSS over the
     # (φ,θ) = (k/20, k/20) lattice via list_reduce (struct fields ordered
     # sse→eps→w because DuckDB evaluates them sequentially against the
     # updated accumulator), then the ψ-weight forecast recursion as a
-    # recursive CTE. Same IEEE op sequence as the numpy fit ⇒ bit-exact.
+    # recursive CTE. Same IEEE op sequence as the Spark folds ⇒ bit-exact.
     o["forecast_arima"] = _GOLD_CTE.replace("WITH", "WITH RECURSIVE", 1) + """
         , per AS (
             SELECT metric, MAX(metric_date) AS last_date,

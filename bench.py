@@ -3,7 +3,8 @@
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE compact JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...},
-     "n_queries": N, "detail": "BENCH_LOCAL_r4.json", "sf": ...}
+     "n_queries": N, "detail": "BENCH_LOCAL_r4.json", "sf": ...,
+     "cpus": N, "master": "local[N]"}
 
 The FULL per-query payload (every timing, median + min, errors, the
 baselines group) goes to the ``detail`` file — the driver's tail capture
@@ -806,7 +807,8 @@ def main() -> None:
             f"BENCH_LOCAL_r{_next_round()}.json",
         ),
     )
-    spark = get_spark("bench")
+    # progress bars would fill the driver's ~2000-char stdout capture
+    spark = get_spark("bench", extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = E.queries()
@@ -971,6 +973,8 @@ def main() -> None:
                 "runs_per_query": RUNS,
                 "detail": os.path.basename(detail_path),
                 "sf": sf_val,
+                "cpus": spark.sparkContext.defaultParallelism,
+                "master": spark.sparkContext.master,
             },
             separators=(",", ":"),
         )

@@ -9,8 +9,10 @@ ETL + analytics pipeline (fencingbuddha/SmartDataPipeline) Spark-first:
   ``backend/app/services/kpi.py``)
 - rolling-window anomaly detection as Spark window functions (reference:
   ``backend/app/services/anomaly.py``, ``backend/app/routers/metrics.py``)
-- forecasting via per-group ``applyInPandas`` with the reference's naive
-  fallback semantics (reference: ``backend/app/services/forecast.py``)
+- forecasting with the reference's naive fallback semantics: SARIMAX in
+  per-group ``applyInPandas`` when statsmodels is installed, else a
+  from-scratch ARIMA(1,1,1) fit run as one Spark plan (reference:
+  ``backend/app/services/forecast.py``)
 - plus large-scale training-data-pipeline extensions: dedup (exact/
   MinHash-LSH/SimHash/Jaccard/embedding), ANN similarity search, text
   analysis, and multimodal column plumbing.

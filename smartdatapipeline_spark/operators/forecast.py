@@ -5,11 +5,13 @@ routers/forecast.py.
 
 Design: everything except the SARIMAX fit itself is declarative DataFrame
 code — date-spine gap fill, the naive-model ladder, rolling-origin fold
-construction, per-fold error metrics, and the 7-row output contract all
-run as set operations over *all* (source, metric) series at once. The
-reference loops over one series in one process; here a million series
-backtest in one shuffle. SARIMAX (when statsmodels is installed) is the
-only per-group python step, isolated in ``applyInPandas``.
+construction, per-fold error metrics, the from-scratch ARIMA(1,1,1) fit
+that stands in for SARIMAX, and the 7-row output contract all run as set
+operations over *all* (source, metric) series at once. The reference
+loops over one series in one process; here a million series backtest in
+one shuffle. Per-group Python runs only through ``forecast_with_model``
+(a pandas grouped map): SARIMAX when statsmodels is installed, and the
+drift model that keeps that path oracle-checked.
 
 Determinism: error metrics whose terms involve division (MAPE/sMAPE) are
 summed with an explicit left-fold over date-ordered arrays
@@ -288,9 +290,10 @@ def forecast_drift(
     date_col: str = "metric_date",
     value_col: str = "value",
 ) -> DataFrame:
-    """M1 via the drift model — exercises the exact ``applyInPandas``
-    grouped-map plumbing SARIMAX would use (same fallback ladder, same
-    output contract), with deterministic math an SQL oracle can verify."""
+    """M1 via the drift model — exercises the exact grouped-map plumbing
+    of ``forecast_with_model`` that SARIMAX uses (same fallback ladder, same output
+    contract), with deterministic math an SQL oracle can verify. It stays
+    on that path on purpose: it is the path's oracle-checked consumer."""
     return forecast_with_model(
         series,
         drift_model_fn,
@@ -307,76 +310,6 @@ ARIMA_GRID_K = 19
 ARIMA_GRID_DENOM = 20.0
 
 
-def arima_css_fn(s, horizon: int):
-    """From-scratch numpy ARIMA(1,1,1) — the reference's SARIMAX(1,1,1)
-    slot (services/forecast.py:39-92: order=(1,1,1), no seasonal part ⇒
-    plain ARIMA(1,1,1); strictly-future index; CI clamp) implemented with
-    no statsmodels dependency.
-
-    Estimation is **conditional sum of squares** (Box–Jenkins): on the
-    differenced series w_t = y_t − y_{t−1} the ARMA(1,1) residual
-    recursion ε_t = (w_t − φ·w_{t−1}) − θ·ε_{t−1} (conditioned on
-    ε_1 = w_1) is evaluated over a fixed (φ, θ) lattice
-    {k/20 : |k| ≤ 19}² and the CSS-minimizing pair wins (ties break to
-    the smaller (k_φ, k_θ)). A lattice argmin instead of a quasi-Newton
-    fit keeps the estimator DETERMINISTIC and exactly reproducible by a
-    DuckDB ``list_reduce`` oracle — same IEEE op sequence, bit-identical
-    floats — while still being a real CSS estimate (±0.025 of the
-    continuous optimum, far inside sampling noise at these series
-    lengths).
-
-    Forecast: ŵ_{m+1} = φ·w_m + θ·ε_m, ŵ_{m+h} = φ·ŵ_{m+h−1}, integrated
-    back as ŷ_{n+h} = y_n + Σŵ. Intervals are the standard ψ-weight
-    bands of the integrated process — Ψ_j = Ψ_{j−1} + (φ+θ)·φ^{j−1},
-    Var(h) = σ̂²·Σ_{j<h} Ψ_j², σ̂² = CSS/(m−1) — at ±1.96·SE (the
-    reference's 95% SARIMAX interval, services/forecast.py:81-87).
-
-    Not bit-identical to statsmodels (Kalman-filter ML vs CSS) — that
-    parity is environment-blocked; this is the honest from-scratch
-    replacement, exactly like the round-2 numpy isolation forest.
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = s.to_numpy(dtype=float)
-    w = np.diff(v)
-    m = len(w)
-    ks = np.arange(-ARIMA_GRID_K, ARIMA_GRID_K + 1)
-    phis = ks / ARIMA_GRID_DENOM
-    P = phis[:, None]
-    T = phis[None, :]
-    # vectorized over the lattice, sequential in t: per-cell op sequence
-    # identical to the scalar recursion (and to the DuckDB oracle)
-    eps = np.full((len(ks), len(ks)), w[0])
-    sse = np.zeros((len(ks), len(ks)))
-    aw = w[0]
-    for t in range(1, m):
-        eps = (w[t] - P * aw) - T * eps
-        sse = sse + eps * eps
-        aw = w[t]
-    # row-major argmin == first exact minimum == smallest (k_phi, k_theta)
-    i, j = divmod(int(np.argmin(sse.ravel())), len(ks))
-    phi = float(ks[i]) / ARIMA_GRID_DENOM
-    theta = float(ks[j]) / ARIMA_GRID_DENOM
-    eps_m = float(eps[i, j])
-    sigma2 = float(sse[i, j]) / float(m - 1)
-    w_last = float(w[-1])
-    last_val = float(v[-1])
-    f1 = phi * w_last + theta * eps_m
-    what, cum, psi, powp, vs = f1, f1, 1.0, 1.0, 1.0
-    rows = []
-    for _h in range(horizon):
-        yhat = last_val + cum
-        se = np.sqrt(sigma2 * vs)
-        rows.append((yhat, yhat - 1.96 * se, yhat + 1.96 * se))
-        what = phi * what
-        cum = cum + what
-        psi = psi + (phi + theta) * powp
-        powp = phi * powp
-        vs = vs + psi * psi
-    return pd.DataFrame(rows, columns=["yhat", "yhat_lower", "yhat_upper"])
-
-
 def forecast_arima(
     series: DataFrame,
     horizon_days: int = 7,
@@ -384,20 +317,136 @@ def forecast_arima(
     date_col: str = "metric_date",
     value_col: str = "value",
 ) -> DataFrame:
-    """M1 — ARIMA(1,1,1) per (source, metric) series with NO statsmodels:
-    the from-scratch CSS estimator above through the same
-    ``applyInPandas`` grouped-map plumbing (and M2 fallback ladder) the
-    SARIMAX path uses. One shuffle on the series key; the lattice fit is
-    O(grid·n) numpy per group, embarrassingly parallel across series —
-    a million series fit in one stage on a cluster."""
-    return forecast_with_model(
-        series,
-        arima_css_fn,
-        "arima-css-0.1",
-        horizon_days,
-        partition_cols,
-        date_col,
-        value_col,
+    """M1 — from-scratch ARIMA(1,1,1) per series, the reference's
+    SARIMAX(1,1,1) slot (services/forecast.py:39-92: order=(1,1,1), no
+    seasonal part ⇒ plain ARIMA(1,1,1); strictly-future index; CI
+    ffill→0) with no statsmodels, as one Spark plan: no Python worker.
+
+    Estimation is **conditional sum of squares** (Box–Jenkins): on the
+    differenced series w_t = y_t − y_{t−1} the ARMA(1,1) residual
+    recursion ε_t = (w_t − φ·w_{t−1}) − θ·ε_{t−1} (conditioned on
+    ε_1 = w_1) is evaluated over the fixed (φ, θ) lattice
+    {k/20 : |k| ≤ 19}² and the CSS-minimizing pair wins (ties break to
+    the smaller (k_φ, k_θ)). A lattice argmin instead of a quasi-Newton
+    fit keeps the estimator DETERMINISTIC and exactly reproducible by
+    the DuckDB ``list_reduce`` oracle — same IEEE op sequence,
+    bit-identical floats — while still being a real CSS estimate
+    (±0.025 of the continuous optimum, far inside sampling noise at
+    these series lengths).
+
+    Forecast: ŵ_{m+1} = φ·w_m + θ·ε_m, ŵ_{m+h} = φ·ŵ_{m+h−1}, integrated
+    back as ŷ_{n+h} = y_n + Σŵ. Intervals are the standard ψ-weight
+    bands of the integrated process — Ψ_j = Ψ_{j−1} + (φ+θ)·φ^{j−1},
+    Var(h) = σ̂²·Σ_{j<h} Ψ_j², σ̂² = CSS/(m−1) — at ±1.96·SE (the
+    reference's 95% SARIMAX interval, services/forecast.py:81-87).
+    NaN in the model output is forward-filled along the horizon, else
+    0.0 (the SARIMAX CI handling, :88-91).
+
+    The M2 ladder: a series with < MIN_POINTS points or an all-zero
+    value sum (the exact decimal(38,4) sum; NULL, NaN and values outside
+    decimal(38,4) such as ±inf count as absent) repeats its last value,
+    bounds included, as ``naive-0.1``.
+
+    The plan reads ``series`` once: one ``groupBy`` (date-sorted value
+    array + ladder sum), the differences, the lattice fit as
+    ``array_min`` over 39×39 ``aggregate`` folds (struct fields ordered
+    so the winner is numpy's row-major argmin), the ψ-weight recursion
+    as one ``aggregate`` over the horizon, then a single ``posexplode``
+    of the model or naive rows. It is written as SQL expression strings:
+    the Column-API form of the same plan took ~2,300 py4j calls and
+    ~0.4 s of driver time to build. Every fold step is interpreted JVM
+    code, 0.3–0.4 µs per lattice cell per point on one core of a
+    4-vCPU VM: a 365-point series costs ~0.2 s of CPU, ~10× a vectorized
+    numpy fit (PERF.md "Forecast in the JVM"). Not bit-identical to
+    statsmodels (Kalman-filter ML vs CSS) — that parity is
+    environment-blocked."""
+    keys = [f"`{c}`" for c in partition_cols]
+    per = series.groupBy(*partition_cols).agg(
+        F.max(date_col).alias("_last_date"),
+        # date-sorted values; pandas read NULL as NaN, where Spark
+        # arithmetic would keep NULL
+        F.expr(
+            f"transform(array_sort(collect_list(named_struct('d', `{date_col}`, "
+            f"'v', coalesce(CAST(`{value_col}` AS DOUBLE), double('NaN'))))), p -> p.v)"
+        ).alias("_v"),
+        F.expr(
+            f"coalesce(CAST(sum(try_cast(`{value_col}` AS DECIMAL(38,4))) AS DOUBLE), 0D)"
+        ).alias("_sum"),
+    )
+    model = f"size(_v) >= {MIN_POINTS} AND _sum != 0"
+    fitted = per.selectExpr(
+        *keys,
+        "_last_date",
+        f"{model} AS _model",
+        "element_at(_v, -1) AS _last",
+        # a NaN last value reaches the caller as NULL (Arrow's reading of
+        # the pandas NaN the grouped-map path returned)
+        "IF(_sum = 0, 0D, nanvl(element_at(_v, -1), CAST(NULL AS DOUBLE))) AS _naive",
+        f"IF({model}, zip_with(slice(_v, 2, size(_v)), slice(_v, 1, size(_v) - 1), "
+        "(a, b) -> a - b), NULL) AS _w",
+    )
+
+    grid = f"transform(sequence({-ARIMA_GRID_K}, {ARIMA_GRID_K}), k -> k / {ARIMA_GRID_DENOM}D)"
+    m = "size(_w)"
+    # u_t = w_t − φ·w_{t−1} depends on φ alone: one array per φ row
+    rows = (
+        f"transform({grid}, p -> named_struct('phi', p, 'u', "
+        f"zip_with(slice(_w, 2, {m} - 1), slice(_w, 1, {m} - 1), (x, a) -> x - p * a)))"
+    )
+    # ε_t = u_t − θ·ε_{t−1}, conditioned on ε_1 = w_1. The fold adds each
+    # ε² one step late (the last one in the finish), so ε_t is evaluated
+    # once per step and the sum keeps numpy's order 0 + ε_2² + … + ε_m².
+    sse = "c.sse + c.eps * c.eps"
+    cell = (
+        f"aggregate(slice(r.u, 2, {m} - 2), "
+        "named_struct('sse', 0D, 'eps', element_at(r.u, 1) - t * element_at(_w, 1)), "
+        f"(c, x) -> named_struct('sse', {sse}, 'eps', x - t * c.eps), "
+        f"c -> named_struct('not_nan', NOT isnan({sse}), 'sse', {sse}, "
+        "'phi', r.phi, 'theta', t, 'eps', c.eps))"
+    )
+    # numpy's argmin: the first NaN if any, else the first minimum. φ and
+    # θ grow with k, so (not_nan, sse, φ, θ) orders cells exactly so
+    fitted = fitted.withColumn(
+        "_fit",
+        F.expr(f"IF(_model, array_min(flatten(transform({rows}, r -> "
+               f"transform({grid}, t -> {cell})))), NULL)"),
+    )
+
+    h = max(horizon_days, 0)
+    phi, theta = "_fit.phi", "_fit.theta"
+    f1 = f"{phi} * element_at(_w, -1) + {theta} * _fit.eps"
+    yhat = "_last + s.cum"
+    se = f"sqrt(_fit.sse / CAST({m} - 1 AS DOUBLE) * s.vs)"
+    psi = f"(s.psi + ({phi} + {theta}) * s.powp)"
+    # NaN repeats the previous row's value of its column: pandas
+    # ``ffill().fillna(0.0)``, with a seed row of zeros sliced off at the end
+    cols = ("yhat", "yhat_lower", "yhat_upper")
+    row = ", ".join(
+        f"'{c}', IF(isnan({x}), element_at(s.out, -1).{c}, {x})"
+        for c, x in zip(cols, (yhat, f"{yhat} - 1.96D * {se}", f"{yhat} + 1.96D * {se}"))
+    )
+    zeros = ", ".join(f"'{c}', 0D" for c in cols)
+    arima_rows = (
+        f"aggregate(array_repeat(0, {h}), "  # one fold step per horizon day
+        f"named_struct('what', {f1}, 'cum', {f1}, 'psi', 1D, 'powp', 1D, 'vs', 1D, "
+        f"'out', array(named_struct({zeros}))), "
+        f"(s, i) -> named_struct('what', {phi} * s.what, 'cum', s.cum + {phi} * s.what, "
+        f"'psi', {psi}, 'powp', {phi} * s.powp, 'vs', s.vs + {psi} * {psi}, "
+        f"'out', concat(s.out, array(named_struct({row})))), "
+        f"s -> slice(s.out, 2, {h}))"
+    )
+    naive = ", ".join(f"'{c}', _naive" for c in cols)
+    naive_rows = f"array_repeat(named_struct({naive}), {h})"
+    return fitted.selectExpr(
+        *keys,
+        "_last_date",
+        "_model",
+        f"posexplode(IF(_model, {arima_rows}, {naive_rows})) AS (_h, _r)",
+    ).selectExpr(
+        *keys,
+        "date_add(_last_date, _h + 1) AS target_date",
+        *(f"_r.{c}" for c in cols),
+        "IF(_model, 'arima-css-0.1', 'naive-0.1') AS model_version",
     )
 
 
@@ -408,14 +457,15 @@ def forecast(
     date_col: str = "metric_date",
     value_col: str = "value",
 ) -> DataFrame:
-    """M1 — SARIMAX(1,1,1)(0,0,0,0) per group when statsmodels is
-    importable (reference services/forecast.py:39-92:
-    enforce_stationarity=False, enforce_invertibility=False, CI ffill→0),
-    else the from-scratch numpy ARIMA(1,1,1) (``arima_css_fn``) — a
-    missing statsmodels wheel degrades the reference to last-value
-    repetition (:56-66), but here it only swaps the estimator, never the
-    model class. Series with < 14 points always take the naive path
-    (:110-127)."""
+    """M1 — SARIMAX(1,1,1)(0,0,0,0) per group through
+    ``forecast_with_model`` when statsmodels is importable (reference
+    services/forecast.py:39-92: enforce_stationarity=False,
+    enforce_invertibility=False, CI ffill→0),
+    else the from-scratch ARIMA(1,1,1) of ``forecast_arima``, a pure
+    Spark plan that starts no Python worker — a missing statsmodels
+    wheel degrades the reference to last-value repetition (:56-66), but
+    here it only swaps the estimator, never the model class. Series with
+    < 14 points always take the naive path (:110-127)."""
     try:
         import statsmodels.tsa.statespace.sarimax  # noqa: F401
     except ImportError:

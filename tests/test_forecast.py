@@ -264,8 +264,8 @@ def test_ewma_fold_matches_python(spark):
 
 
 def _arima_scalar_reference(values, horizon=7):
-    """Independent plain-Python (non-vectorized) ARIMA(1,1,1) CSS
-    recursion — the test twin of operators/forecast.arima_css_fn."""
+    """Independent plain-Python ARIMA(1,1,1) CSS recursion — the test
+    twin of operators/forecast.forecast_arima's model rows."""
     import math
 
     w = [values[i] - values[i - 1] for i in range(1, len(values))]
@@ -300,27 +300,155 @@ def _arima_scalar_reference(values, horizon=7):
     return phi, theta, rows
 
 
-def test_arima_css_golden_coefficients():
-    """The lattice CSS fit recovers the generating AR signal: a strongly
-    autocorrelated differenced series pins (φ, θ), and the vectorized
-    numpy fit is bit-identical to a plain-Python scalar recursion."""
+def _arima_fixture():
+    """``{(source, metric): values}`` for the batched ARIMA checks: 200
+    seeded 2-decimal random walks (lengths 1, 2, 13, 14, 15 and 90, then
+    14–40; every metric name under three sources) plus the ladder's
+    edge cases — all-zero, constant non-zero (every SSE is 0, so the
+    fit ties to (−19, −19)), sparse-zero and zero-sum series."""
     import numpy as np
-    import pandas as pd
+
+    rng = np.random.RandomState(20250101)
+    out = {}
+    for k in range(200):
+        n = (1, 2, 13, 14, 15, 90)[k % 6] if k < 30 else int(rng.randint(14, 41))
+        step = 5.0 if k % 2 else 40.0
+        vals = np.round(100.0 + np.cumsum(rng.randn(n)) * step, 2)
+        out[(f"s{k % 3}", f"m{k // 3:03d}")] = [float(x) for x in vals]
+    sparse = [0.0] * 20
+    sparse[4], sparse[15] = 7.5, 3.25
+    out.update({
+        ("e", "zero20"): [0.0] * 20,
+        ("e", "zero3"): [0.0] * 3,
+        ("e", "const20"): [5.0] * 20,
+        ("e", "const90"): [-2.5] * 90,
+        ("e", "sparse20"): sparse,
+        ("e", "zerosum20"): [1.25, -1.25] * 10,
+        ("e", "zerosum3"): [2.0, -2.0, 0.0],
+    })
+    return out
+
+
+def _arima_expected(values, horizon):
+    """The ladder around ``_arima_scalar_reference``: ≥ 14 points and a
+    non-zero exact sum fit the model, else the last value repeats
+    (0.0 for an all-zero sum), bounds included."""
+    from decimal import Decimal
+
+    total = sum(Decimal(repr(v)) for v in values)
+    if len(values) >= FC.MIN_POINTS and total != 0:
+        return _arima_scalar_reference(values, horizon)[2], "arima-css-0.1"
+    last = 0.0 if total == 0 else float(values[-1])
+    return [(last, last, last)] * horizon, "naive-0.1"
+
+
+def _arima_frame(spark, series):
+    """One (source, metric, metric_date, value) frame; series start on
+    staggered dates so target dates differ per series."""
+    from smartdatapipeline_spark.session import local_frame
+
+    rows = []
+    for i, ((src, metric), vals) in enumerate(sorted(series.items())):
+        d0 = dt.date(2025, 1, 1) + dt.timedelta(days=i % 7)
+        rows += [(src, metric, d0 + dt.timedelta(days=j), v) for j, v in enumerate(vals)]
+    return local_frame(spark, rows, "source string, metric string, metric_date date, value double")
+
+
+def _hex(x):
+    return None if x is None else float.hex(x)
+
+
+def _arima_rows(spark, series, horizon):
+    """forecast_arima over all ``series`` in one call: ``{key:
+    ([(yhat, lower, upper) as float hex], version, first target date)}``."""
+    out = FC.forecast_arima(
+        _arima_frame(spark, series), horizon, partition_cols=("source", "metric")
+    ).collect()
+    by = {}
+    for r in sorted(out, key=lambda r: (r["source"], r["metric"], r["target_date"])):
+        by.setdefault((r["source"], r["metric"]), []).append(r)
+    return {
+        k: (
+            [tuple(_hex(r[c]) for c in ("yhat", "yhat_lower", "yhat_upper")) for r in rs],
+            {r["model_version"] for r in rs},
+            rs[0]["target_date"],
+        )
+        for k, rs in by.items()
+    }
+
+
+#: outputs of the grouped-map (pandas) fit this plan replaced, pinned per
+#: series — each horizon row is the same. NULL and NaN read as NaN: a NaN
+#: difference turns every model output NaN, which forward-fills to 0.0;
+#: a NaN last value on the naive path reaches the caller as NULL; an inf
+#: puts NaN in some lattice cells, and numpy's argmin takes the first.
+_WALK = [100.0 + i * 1.5 + (i % 3) for i in range(20)]
+_NAN = float("nan")
+ARIMA_PINNED = {
+    "null_mid": (_WALK[:5] + [None] + _WALK[6:], 0.0, "arima-css-0.1"),
+    "nan_mid": (_WALK[:5] + [_NAN] + _WALK[6:], 0.0, "arima-css-0.1"),
+    "null_last": (_WALK[:19] + [None], 0.0, "arima-css-0.1"),
+    "nan_first": ([_NAN] + _WALK[1:], 0.0, "arima-css-0.1"),
+    "inf_mid": (_WALK[:5] + [float("inf")] + _WALK[6:], 0.0, "arima-css-0.1"),
+    "nan_last_short": (_WALK[:4] + [_NAN], None, "naive-0.1"),
+    "null_last_short": (_WALK[:4] + [None], None, "naive-0.1"),
+    "null_short": ([None, 1.0, None], None, "naive-0.1"),
+    "all_null": ([None] * 20, 0.0, "naive-0.1"),
+    "all_nan": ([_NAN] * 20, 0.0, "naive-0.1"),
+    "zero_null": ([0.0] * 10 + [None] + [0.0] * 9, 0.0, "naive-0.1"),
+}
+
+
+def test_arima_plan_bit_exact_batched(spark):
+    """forecast_arima over 200+ series in one frame, two partition
+    columns, horizons 10 and 1: every row equals the scalar reference
+    plus the ladder, floats compared as hex, and the NULL/NaN series
+    give the pinned grouped-map outputs."""
+    series = _arima_fixture()
+    pinned = {("n", k): v for k, v in ARIMA_PINNED.items()}
+    frame = {**series, **{k: v[0] for k, v in pinned.items()}}
+    expected = {k: _arima_expected(v, 10) for k, v in series.items()}
+    assert {v for _, v in expected.values()} == {"arima-css-0.1", "naive-0.1"}
+    dates = {k: dt.date(2025, 1, 1) + dt.timedelta(days=i % 7 + len(frame[k]))
+             for i, k in enumerate(sorted(frame))}
+    for h in (10, 1):
+        got = _arima_rows(spark, frame, h)
+        assert set(got) == set(frame)
+        for k, (rows, version) in expected.items():
+            assert got[k] == ([tuple(map(float.hex, r)) for r in rows[:h]], {version}, dates[k]), k
+        for k, (_, value, version) in pinned.items():
+            assert got[k] == ([(_hex(value),) * 3] * h, {version}, dates[k]), k
+
+
+def test_arima_empty_input_keeps_schema(spark):
+    out = FC.forecast_arima(_arima_frame(spark, {}), 7, partition_cols=("source", "metric"))
+    assert out.dtypes == [
+        ("source", "string"), ("metric", "string"), ("target_date", "date"),
+        ("yhat", "double"), ("yhat_lower", "double"), ("yhat_upper", "double"),
+        ("model_version", "string"),
+    ]
+    assert out.collect() == []
+
+
+def test_arima_css_golden_coefficients(spark):
+    """The lattice CSS fit recovers the generating AR signal: a strongly
+    autocorrelated differenced series pins (φ, θ), and the Spark plan's
+    rows are bit-identical to a plain-Python scalar recursion."""
+    import numpy as np
 
     # AR(1)-in-differences with phi=0.6: w_t = 0.6 w_{t-1} + e_t
     rng = np.random.RandomState(11)
     w = [1.0]
     for _ in range(59):
         w.append(0.6 * w[-1] + rng.randn())
-    values = list(np.round(100.0 + np.cumsum(w), 2))
+    values = [float(x) for x in np.round(100.0 + np.cumsum(w), 2)]
 
     phi, theta, rows = _arima_scalar_reference(values)
     assert abs(phi - 0.6) <= 0.2  # lattice lands near the true AR coeff
 
-    s = pd.Series(values, index=pd.date_range("2025-01-01", periods=len(values)))
-    out = FC.arima_css_fn(s, 7)
-    got = list(zip(out["yhat"], out["yhat_lower"], out["yhat_upper"]))
-    assert got == rows  # bit-exact vs the scalar recursion
+    got, version, _ = _arima_rows(spark, {("s", "m"): values}, 7)[("s", "m")]
+    assert version == {"arima-css-0.1"}
+    assert got == [tuple(map(float.hex, r)) for r in rows]  # bit-exact
 
 
 def test_arima_interval_widens_and_ladder(spark):

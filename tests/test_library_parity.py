@@ -1,14 +1,14 @@
 """Conditional library-parity tests (round-3 VERDICT #6).
 
 The sandbox has no statsmodels/sklearn wheels, so the M1/M6 model slots
-run from-scratch numpy implementations (``arima_css_fn``,
-``_iforest_scores_1d``). These tests ``importorskip`` the reference
-libraries and, wherever they ARE installed, pin the from-scratch math
-against them — skipped here, latent green anywhere the libs exist.
+run from-scratch implementations (the ``forecast_arima`` Spark plan and
+the numpy ``_iforest_scores_1d``). These tests ``importorskip`` the
+reference libraries and, wherever they ARE installed, pin the
+from-scratch math against them — skipped here, latent green anywhere
+the libs exist.
 
-No SparkSession needed: both implementations expose their numeric core
-at the pandas/numpy level, so parity is checked below the grouped-map
-plumbing (which has its own tests).
+The isolation forest is checked at the numpy level, below its
+grouped-map plumbing; the ARIMA forecast runs through its Spark plan.
 """
 
 from __future__ import annotations
@@ -30,23 +30,20 @@ def _arma11_series(n: int, phi: float, theta: float, seed: int) -> np.ndarray:
 
 
 @pytest.mark.parametrize("phi,theta,seed", [(0.6, 0.3, 7), (-0.5, -0.3, 11)])
-def test_arima_css_matches_statsmodels_sarimax(phi, theta, seed):
+def test_arima_css_matches_statsmodels_sarimax(spark, phi, theta, seed):
     """From-scratch lattice-CSS ARIMA(1,1,1) vs statsmodels SARIMAX
     (1,1,1): fitted (φ, θ) within lattice-step + sampling tolerance of
     each other on a 400-point series generated from the true model, and
     point forecasts close relative to the series scale."""
     sm = pytest.importorskip("statsmodels.tsa.statespace.sarimax")
 
-    from smartdatapipeline_spark.operators.forecast import (
-        ARIMA_GRID_DENOM,
-        ARIMA_GRID_K,
-        arima_css_fn,
-    )
+    from smartdatapipeline_spark.operators.forecast import ARIMA_GRID_DENOM, ARIMA_GRID_K
+    from tests.test_forecast import _arima_rows
 
     y = _arma11_series(400, phi, theta, seed)
     s = pd.Series(y)
 
-    # recover the lattice argmin (same recursion arima_css_fn runs)
+    # recover the lattice argmin (same recursion forecast_arima runs)
     w = np.diff(y)
     ks = np.arange(-ARIMA_GRID_K, ARIMA_GRID_K + 1)
     P = (ks / ARIMA_GRID_DENOM)[:, None]
@@ -77,10 +74,11 @@ def test_arima_css_matches_statsmodels_sarimax(phi, theta, seed):
     assert abs(phi_css - phi_ml) <= 0.15
     assert abs(theta_css - theta_ml) <= 0.15
 
-    ours = arima_css_fn(s, 7)
+    rows, _, _ = _arima_rows(spark, {("s", "m"): [float(x) for x in y]}, 7)[("s", "m")]
+    ours = np.array([float.fromhex(r[0]) for r in rows])
     theirs = fitted.get_forecast(steps=7).predicted_mean.to_numpy()
     scale = max(1.0, float(np.abs(np.diff(y)).mean()))
-    assert np.max(np.abs(ours["yhat"].to_numpy() - theirs)) <= 5.0 * scale
+    assert np.max(np.abs(ours - theirs)) <= 5.0 * scale
 
 
 def test_iforest_numpy_flags_agree_with_sklearn():

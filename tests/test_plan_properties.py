@@ -1,10 +1,14 @@
 """Physical-plan regression gates: the properties PLANS.md audits,
 pinned in CI for a representative query per family — a plan that loses
 its pushdown/broadcast/scan discipline fails here instead of waiting
-for the next manual audit. explain() only — nothing executes."""
+for the next manual audit. explain() only — nothing executes — except
+the Python-operator guard, which runs its calls because AQE fixes the
+final plan only then."""
 
 from __future__ import annotations
 
+import datetime as dt
+import importlib.util
 import re
 
 import pytest
@@ -109,3 +113,61 @@ def test_bucketed_gold_join_has_no_exchange(spark, tmp_path):
         assert "Exchange hashpartitioning" not in p
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+#: physical operators that run Python: a pandas grouped map, a pandas or
+#: Arrow scalar UDF, a plain Python UDF, mapInPandas
+PYTHON_NODES = ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def _executed_plan(df) -> str:
+    from smartdatapipeline_spark.cachetrack import release_plan_caches
+
+    df.collect()
+    release_plan_caches(df)
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dashboard_reads_plan_no_python_operator(spark):
+    """With sklearn and statsmodels absent, the dashboard reads of the
+    ingest-and-refresh loop run in the JVM alone: no executed plan holds
+    a Python operator, so none forks a pyspark worker. forecast_drift
+    keeps the grouped-map path on purpose (it is the oracle-checked
+    consumer of ``forecast_with_model``)."""
+    for lib in ("sklearn", "statsmodels"):
+        if importlib.util.find_spec(lib) is not None:
+            pytest.skip(f"{lib} is installed, so its model path runs in Python")
+    from pyspark.sql import functions as F
+
+    from smartdatapipeline_spark.cachetrack import release_plan_caches
+    from smartdatapipeline_spark.operators import forecast as FC
+    from smartdatapipeline_spark.operators.anomaly import anomaly_iforest, rolling_zscore_api
+    from smartdatapipeline_spark.operators.metrics import export_csv_frame, fetch_metric_daily
+    from smartdatapipeline_spark.session import local_frame
+
+    rows = []
+    for m in range(3):
+        for d in range(20):
+            v = 100.0 + 7.0 * ((d * (m + 3)) % 11)
+            rows.append((dt.date(2025, 1, 1) + dt.timedelta(days=d), 1, f"m{m}", v, v / 4.0, 4, 4))
+    gold = local_frame(
+        spark, rows,
+        "metric_date date, source_id bigint, metric string, value_sum double, "
+        "value_avg double, value_count bigint, value_distinct bigint",
+    )
+    series = gold.select("metric_date", "metric", F.col("value_sum").alias("value"))
+    window = {"start_date": "2025-01-07", "end_date": "2025-01-20"}
+    folds, summary = FC.reliability(series)
+    calls = {
+        "forecast": FC.normalize_forecast_contract(FC.forecast(series, horizon_days=7)),
+        "fetch_metric_daily": fetch_metric_daily(gold, metric="m0", **window),
+        "rolling_zscore_api": rolling_zscore_api(series),
+        "anomaly_iforest": anomaly_iforest(series),
+        "reliability": summary,
+        "export_csv_frame": export_csv_frame(gold, **window),
+    }
+    for name, df in calls.items():
+        plan = _executed_plan(df)
+        assert [n for n in PYTHON_NODES if n in plan] == [], (name, plan)
+    release_plan_caches(folds)
+    assert "FlatMapGroupsInPandas" in _executed_plan(FC.forecast_drift(series))

@@ -10,7 +10,9 @@ vocabulary frame (≤ a few million rows at web scale, cached once).
 Per round: one pair-explode + weighted count (map-side combined), one
 1-row argmax to the driver (the learned merge IS driver state, like
 any model coefficient), one column rewrite of the segmentation. Round
-count is the model's merge budget — fixed, not data-dependent.
+count is the model's merge budget — fixed, not data-dependent. AQE
+sizes each round's pair-count shuffle from the exploded pairs it
+actually carries; the loop sets no partition count.
 
 At PRODUCTION merge budgets (32k) one Spark job per round is the wrong
 shape — and batching "non-interacting" merges per round is NOT
@@ -88,8 +90,6 @@ def bpe_train(
     The returned frame is a small driver-built table (the model);
     training state lives in the cached vocabulary frame, released
     before returning."""
-    from smartdatapipeline_spark.session import loop_partitions
-
     spark = df.sparkSession
     vocab = word_vocab(df, text_col).withColumn(
         "seg", _initial_seg(F.col("word"))
@@ -97,50 +97,42 @@ def bpe_train(
     try:
         merges: list[tuple[int, str, str, str, int]] = []
         cur = vocab
-        # r15 (guide §2; r14 VERDICT #1 pattern): every round's pair
-        # count shuffles a vocabulary-sized frame — run the loop at a
-        # partition count derived from the distinct-word count of the
-        # (just materialized) vocab, not from the pair volume a round
-        # explodes it into, nor the batch-sized session default. Counts are
-        # exact ints with a total-order argmax: partitioning is
-        # unobservable in the merge table.
-        with loop_partitions(spark, vocab.count()):
-            for r in range(1, n_merges + 1):
-                syms = F.split(F.col("seg"), " ")
-                # a fully-merged word (ONE symbol) contributes no pairs:
-                # sequence(1, 0) would DESCEND and index out of bounds under
-                # ANSI — guard with an explicit empty index array
-                idx = F.when(
-                    F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
-                ).otherwise(F.array().cast("array<int>"))
-                pairs = (
-                    cur.select(
-                        F.explode(
-                            F.transform(
-                                idx,
-                                lambda i: F.struct(
-                                    F.element_at(syms, i).alias("a"),
-                                    F.element_at(syms, i + 1).alias("b"),
-                                ),
-                            )
-                        ).alias("pr"),
-                        "cnt",
-                    )
-                    .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-                    .agg(F.sum("cnt").alias("n"))
+        for r in range(1, n_merges + 1):
+            syms = F.split(F.col("seg"), " ")
+            # a fully-merged word (ONE symbol) contributes no pairs:
+            # sequence(1, 0) would DESCEND and index out of bounds under
+            # ANSI — guard with an explicit empty index array
+            idx = F.when(
+                F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
+            ).otherwise(F.array().cast("array<int>"))
+            pairs = (
+                cur.select(
+                    F.explode(
+                        F.transform(
+                            idx,
+                            lambda i: F.struct(
+                                F.element_at(syms, i).alias("a"),
+                                F.element_at(syms, i + 1).alias("b"),
+                            ),
+                        )
+                    ).alias("pr"),
+                    "cnt",
                 )
-                best = (
-                    pairs.orderBy(
-                        F.col("n").desc(), F.col("a").asc(), F.col("b").asc()
-                    )
-                    .limit(1)
-                    .collect()
+                .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
+                .agg(F.sum("cnt").alias("n"))
+            )
+            best = (
+                pairs.orderBy(
+                    F.col("n").desc(), F.col("a").asc(), F.col("b").asc()
                 )
-                if not best:
-                    break
-                a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
-                merges.append((r, a, b, a + b, n))
-                cur = cur.select(_merge_once(F.col("seg"), a, b).alias("seg"), "cnt")
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
+            merges.append((r, a, b, a + b, n))
+            cur = cur.select(_merge_once(F.col("seg"), a, b).alias("seg"), "cnt")
         return local_frame(spark, merges, MERGE_SCHEMA)
     finally:
         vocab.unpersist()

@@ -11,7 +11,9 @@ edge sources — the same src-hash exchange every round, so AQE reuses
 the layout) plus one grouped fold per destination. There is no
 all-pairs anything; cost per round is O(|E|) shuffled bytes and the
 round count is fixed (not data-dependent). `localCheckpoint` cuts
-lineage each round exactly like the CC loop, keeping plans flat.
+lineage each round exactly like the CC loop, keeping plans flat. No
+loop sets a partition count: AQE sizes each round's shuffles, cached
+loop-invariant frames included (`session.get_spark`).
 
 Cross-engine determinism: per-destination contributions are summed as
 an ordered fold — `aggregate(sort_array(collect_list(struct(src, c))))`
@@ -108,113 +110,104 @@ def pagerank(
     decision is data-deterministic (same input ⇒ same mode ⇒ same
     bits).
     """
-    from smartdatapipeline_spark.session import loop_partitions
-
     # edge + degree frames are loop-invariant: cache once so the three
     # iteration jobs don't re-derive them from the source plan (the
     # final localCheckpoint cuts lineage, so both release before return)
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).cache()
-    # materialize the cache AND learn the loop volume in one pass (the
-    # derivation ran exactly once before too — deg's build consumed it)
-    n_edges = e.count()
-    # r15 (guide §2 scale-adaptive partitioning; r14 VERDICT #1): every
-    # round's shuffles run at a partition count derived from the edge
-    # volume, not the batch-sized session default — restored on exit.
-    with loop_partitions(e.sparkSession, n_edges):
-        deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_outdeg")).cache()
-        if src_buckets == "auto":
-            if undirected:
-                # r14: on a symmetrized edge list in-degree(_t) ==
-                # out-degree(_t), so the probe reads the max off the
-                # loop-invariant (cached) degree frame instead of running a
-                # second edge-sized aggregation — same decision, one fewer
-                # full-edge pass.
-                row = deg.agg(F.max("_outdeg").alias("m")).first()
-            else:
-                row = e.groupBy("_t").agg(F.count(F.lit(1)).alias("_ind")).agg(
-                    F.max("_ind").alias("m")
-                ).first()
-            max_indeg = row["m"] or 0
-            src_buckets = auto_buckets if max_indeg > hub_threshold else 0
-        nodes = (
-            e.select(F.col("_s").alias("node"))
-            .unionByName(e.select(F.col("_t").alias("node")))
-            .distinct()
-            .localCheckpoint()
+    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_outdeg")).cache()
+    if src_buckets == "auto":
+        if undirected:
+            # r14: on a symmetrized edge list in-degree(_t) ==
+            # out-degree(_t), so the probe reads the max off the
+            # loop-invariant (cached) degree frame instead of running a
+            # second edge-sized aggregation — same decision, one fewer
+            # full-edge pass.
+            row = deg.agg(F.max("_outdeg").alias("m")).first()
+        else:
+            row = e.groupBy("_t").agg(F.count(F.lit(1)).alias("_ind")).agg(
+                F.max("_ind").alias("m")
+            ).first()
+        max_indeg = row["m"] or 0
+        src_buckets = auto_buckets if max_indeg > hub_threshold else 0
+    nodes = (
+        e.select(F.col("_s").alias("node"))
+        .unionByName(e.select(F.col("_t").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    superseded = [nodes]
+    ranks = nodes.withColumn("rank", F.lit(1.0))
+    for _it in range(iterations):
+        # r14 (optimization, guide §2.3/§2.4): fold rank/outdeg on the
+        # NODE-sized frame first, then attach to edges — ONE edge-sized
+        # join per iteration instead of two, and the division happens
+        # once per node instead of once per edge (identical IEEE result:
+        # same operands, same single division, just not repeated).
+        rod = (
+            ranks.withColumnRenamed("node", "_s")
+            .join(deg, "_s")
+            .select("_s", (F.col("rank") / F.col("_outdeg")).alias("_rod"))
         )
-        superseded = [nodes]
-        ranks = nodes.withColumn("rank", F.lit(1.0))
-        for _it in range(iterations):
-            # r14 (optimization, guide §2.3/§2.4): fold rank/outdeg on the
-            # NODE-sized frame first, then attach to edges — ONE edge-sized
-            # join per iteration instead of two, and the division happens
-            # once per node instead of once per edge (identical IEEE result:
-            # same operands, same single division, just not repeated).
-            rod = (
-                ranks.withColumnRenamed("node", "_s")
-                .join(deg, "_s")
-                .select("_s", (F.col("rank") / F.col("_outdeg")).alias("_rod"))
-            )
-            contribs = e.join(rod, "_s").select(
-                F.col("_t").alias("node"),
-                F.struct(
-                    F.col("_s").alias("src"), F.col("_rod").alias("c")
-                ).alias("_sc"),
-            )
-            if src_buckets:
-                # two-level fold: (dst, src-bucket) partials in src order,
-                # then partials in bucket order — bounds per-group state at
-                # ~indeg/B for power-law hubs (docstring)
-                partials = contribs.groupBy(
-                    "node",
-                    F.pmod(F.col("_sc.src").cast("long"), F.lit(src_buckets)).alias(
-                        "_bkt"
-                    ),
-                ).agg(
-                    F.aggregate(
-                        F.sort_array(F.collect_list("_sc")),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["c"],
-                    ).alias("_p")
-                )
-                summed = partials.groupBy("node").agg(
-                    F.aggregate(
-                        F.sort_array(
-                            F.collect_list(F.struct(F.col("_bkt"), F.col("_p")))
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["_p"],
-                    ).alias("_s_in")
-                )
-            else:
-                summed = contribs.groupBy("node").agg(
-                    F.aggregate(
-                        F.sort_array(F.collect_list("_sc")),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x["c"],
-                    ).alias("_s_in")
-                )
-            ranks = nodes.join(summed, "node", "left").select(
+        contribs = e.join(rod, "_s").select(
+            F.col("_t").alias("node"),
+            F.struct(
+                F.col("_s").alias("src"), F.col("_rod").alias("c")
+            ).alias("_sc"),
+        )
+        if src_buckets:
+            # two-level fold: (dst, src-bucket) partials in src order,
+            # then partials in bucket order — bounds per-group state at
+            # ~indeg/B for power-law hubs (docstring)
+            partials = contribs.groupBy(
                 "node",
-                # residual is an explicit literal (not 1−damping) so the
-                # SQL oracle can spell the bit-identical constant
-                (
-                    F.lit(residual)
-                    + F.lit(damping) * F.coalesce(F.col("_s_in"), F.lit(0.0))
-                ).alias("rank"),
+                F.pmod(F.col("_sc.src").cast("long"), F.lit(src_buckets)).alias(
+                    "_bkt"
+                ),
+            ).agg(
+                F.aggregate(
+                    F.sort_array(F.collect_list("_sc")),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["c"],
+                ).alias("_p")
             )
-            # checkpoint every SECOND iteration and always the last (lesson
-            # 10: per-round fixed costs — checkpoint write + job — dominate
-            # locally; two propagation steps per materialization halves
-            # them, and the final cut lets the loop-invariant caches release)
-            # Intermediate checkpoints stay lazy (they materialize inside
-            # the final one's job); the final one is eager so every
-            # superseded checkpoint can be released before returning.
-            if _it == iterations - 1:
-                ranks = ranks.localCheckpoint(eager=True)
-            elif (_it + 1) % 2 == 0:
-                ranks = ranks.localCheckpoint()
-                superseded.append(ranks)
+            summed = partials.groupBy("node").agg(
+                F.aggregate(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("_bkt"), F.col("_p")))
+                    ),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["_p"],
+                ).alias("_s_in")
+            )
+        else:
+            summed = contribs.groupBy("node").agg(
+                F.aggregate(
+                    F.sort_array(F.collect_list("_sc")),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["c"],
+                ).alias("_s_in")
+            )
+        ranks = nodes.join(summed, "node", "left").select(
+            "node",
+            # residual is an explicit literal (not 1−damping) so the
+            # SQL oracle can spell the bit-identical constant
+            (
+                F.lit(residual)
+                + F.lit(damping) * F.coalesce(F.col("_s_in"), F.lit(0.0))
+            ).alias("rank"),
+        )
+        # checkpoint every SECOND iteration and always the last (lesson
+        # 10: per-round fixed costs — checkpoint write + job — dominate
+        # locally; two propagation steps per materialization halves
+        # them, and the final cut lets the loop-invariant caches release)
+        # Intermediate checkpoints stay lazy (they materialize inside
+        # the final one's job); the final one is eager so every
+        # superseded checkpoint can be released before returning.
+        if _it == iterations - 1:
+            ranks = ranks.localCheckpoint(eager=True)
+        elif (_it + 1) % 2 == 0:
+            ranks = ranks.localCheckpoint()
+            superseded.append(ranks)
     if iterations:  # with no iteration the result still reads ``nodes``
         for ck in superseded:
             release_checkpoint(ck)
@@ -293,61 +286,49 @@ def connected_components(
     # once the new one is materialized, so only the result stays pinned
     ckpt = labels
     rounds = 0
-    from smartdatapipeline_spark.session import loop_partitions
-
-    # r15 (guide §2 scale-adaptive partitioning; r14 VERDICT #1): the
-    # loop body's ~10 shuffles/checkpoints per round ran at the session
-    # default (32 locally) regardless of graph size — canonical_docs
-    # anti-scaled (15.1 s @32c vs 8.3 s @8c, driver ratio 0.55) because
-    # per-task fixed cost × partitions × rounds dominated a few-MB edge
-    # frame. Derive the loop's partition count from the materialized
-    # edge count (the count is a cheap job on the checkpointed frame)
-    # and restore the session default on exit. Labels are min-folds —
-    # partitioning is unobservable in the result.
-    with loop_partitions(both.sparkSession, both.count()):
-        for _round in range(max_iter):
-            rounds += 1
-            cur = labels.select("_id", "_label", F.col("_label").alias("_prev"))
-            for _sub in range(2):
-                nbr_min = (
-                    both.join(cur, both["_dst"] == cur["_id"])
-                    .groupBy("_src")
-                    .agg(F.min("_label").alias("_nbr"))
-                )
-                cur = cur.join(nbr_min, cur["_id"] == nbr_min["_src"], "left").select(
-                    F.col("_id"),
-                    F.least(
-                        F.col("_label"), F.coalesce(F.col("_nbr"), F.col("_label"))
-                    ).alias("_label"),
-                    F.col("_prev"),
-                )
-            if _round > 0:
-                # pointer doubling (docstring): the LUT is the round-ENTRY
-                # label frame — already materialized by last round's
-                # checkpoint, so this lookup join never recomputes the
-                # propagation subtree. Round 0's entry labels are the
-                # identity (label₀ = id), where the compression is a no-op
-                # — skip the join there.
-                lut = labels.select(
-                    F.col("_id").alias("_l_id"), F.col("_label").alias("_l_lbl")
-                )
-                cur = cur.join(lut, cur["_label"] == lut["_l_id"], "left").select(
-                    F.col("_id"),
-                    F.least(
-                        F.col("_label"),
-                        F.coalesce(F.col("_l_lbl"), F.col("_label")),
-                    ).alias("_label"),
-                    F.col("_prev"),
-                )
-            new_labels = cur.localCheckpoint(eager=True)
-            release_checkpoint(ckpt)
-            ckpt = new_labels
-            changed = (
-                new_labels.filter(F.col("_label") != F.col("_prev")).limit(1).count()
+    for _round in range(max_iter):
+        rounds += 1
+        cur = labels.select("_id", "_label", F.col("_label").alias("_prev"))
+        for _sub in range(2):
+            nbr_min = (
+                both.join(cur, both["_dst"] == cur["_id"])
+                .groupBy("_src")
+                .agg(F.min("_label").alias("_nbr"))
             )
-            labels = new_labels.drop("_prev")
-            if changed == 0:
-                break
+            cur = cur.join(nbr_min, cur["_id"] == nbr_min["_src"], "left").select(
+                F.col("_id"),
+                F.least(
+                    F.col("_label"), F.coalesce(F.col("_nbr"), F.col("_label"))
+                ).alias("_label"),
+                F.col("_prev"),
+            )
+        if _round > 0:
+            # pointer doubling (docstring): the LUT is the round-ENTRY
+            # label frame — already materialized by last round's
+            # checkpoint, so this lookup join never recomputes the
+            # propagation subtree. Round 0's entry labels are the
+            # identity (label₀ = id), where the compression is a no-op
+            # — skip the join there.
+            lut = labels.select(
+                F.col("_id").alias("_l_id"), F.col("_label").alias("_l_lbl")
+            )
+            cur = cur.join(lut, cur["_label"] == lut["_l_id"], "left").select(
+                F.col("_id"),
+                F.least(
+                    F.col("_label"),
+                    F.coalesce(F.col("_l_lbl"), F.col("_label")),
+                ).alias("_label"),
+                F.col("_prev"),
+            )
+        new_labels = cur.localCheckpoint(eager=True)
+        release_checkpoint(ckpt)
+        ckpt = new_labels
+        changed = (
+            new_labels.filter(F.col("_label") != F.col("_prev")).limit(1).count()
+        )
+        labels = new_labels.drop("_prev")
+        if changed == 0:
+            break
     release_checkpoint(both)
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = rounds
@@ -379,34 +360,26 @@ def bfs_hops(
     # join — cache it so each hop's jobs don't re-run that derivation
     # (pre-fix, 3 hops re-ran the orders⋈lineitem distinct 3×)
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t")).distinct().cache()
-    from smartdatapipeline_spark.session import loop_partitions
-
-    # r15 (guide §2; r14 VERDICT #1): materialize the loop-invariant
-    # edge cache and learn its volume in one pass (hop 1 paid that
-    # derivation anyway), then run every hop's shuffles at a partition
-    # count sized for the frame, restoring the session default on exit.
-    n_edges = e.count()
     visited = (
         seeds.select("node").distinct().withColumn("hops", F.lit(0)).localCheckpoint()
     )
     frontier = visited
-    with loop_partitions(e.sparkSession, n_edges):
-        for h in range(1, max_hops + 1):
-            nxt = (
-                frontier.join(e, frontier["node"] == e["_s"])
-                .select(F.col("_t").alias("node"))
-                .distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(h))
-            )
-            nxt = nxt.localCheckpoint()
-            if nxt.isEmpty():
-                break
-            # every leaf of this union is already materialized (seed + nxt
-            # checkpoints), so the union plan stays flat without its own
-            # checkpoint — re-checkpointing it was one pure-overhead job/hop
-            visited = visited.unionByName(nxt)
-            frontier = nxt
+    for h in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(e, frontier["node"] == e["_s"])
+            .select(F.col("_t").alias("node"))
+            .distinct()
+            .join(visited.select("node"), "node", "left_anti")
+            .withColumn("hops", F.lit(h))
+        )
+        nxt = nxt.localCheckpoint()
+        if nxt.isEmpty():
+            break
+        # every leaf of this union is already materialized (seed + nxt
+        # checkpoints), so the union plan stays flat without its own
+        # checkpoint — re-checkpointing it was one pure-overhead job/hop
+        visited = visited.unionByName(nxt)
+        frontier = nxt
     e.unpersist()
     return visited
 

@@ -46,18 +46,6 @@ def davg(col: Column | str, precision: int = 28, scale: int = 4) -> Column:
     return dsum(c, precision, scale) / F.count(F.lit(1))
 
 
-def nullif_zero(col: Column) -> Column:
-    return F.nullif(col, F.lit(0))
-
-
 def clamp(col: Column, lo: float, hi: float) -> Column:
     """clamp(x, lo, hi) — reference utils/numeric.py clamp semantics."""
     return F.least(F.greatest(col, F.lit(lo)), F.lit(hi))
-
-
-def finite_or(col: Column, default: float = 0.0) -> Column:
-    """NaN/±Inf → default (JSON-safety C5, reference routers/forecast.py:99-106)."""
-    return F.when(
-        F.isnan(col) | (col == float("inf")) | (col == float("-inf")) | col.isNull(),
-        F.lit(default),
-    ).otherwise(col)

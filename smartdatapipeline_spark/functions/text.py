@@ -64,11 +64,6 @@ def bpe_piece_count(col: Column) -> Column:
     return F.aggregate(per, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def count_token(col_tokens: Column, word: str) -> Column:
-    """occurrences of ``word`` among tokens (exact match)."""
-    return F.size(F.filter(col_tokens, lambda t: t == F.lit(word)))
-
-
 def lang_scores(tokens_col: Column) -> dict[str, Column]:
     """per-language stopword-hit counts from a MATERIALIZED token-array
     column (see ``shingles`` in functions/dedup.py for why: HOF lambdas

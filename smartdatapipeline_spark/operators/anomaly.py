@@ -349,7 +349,9 @@ def _iforest_scores_nd(X, n_estimators: int, seed_key: str):
     and a uniform split in [min, max] of q over the node's subsample;
     path length of a point = #splits to isolate it, scores
     s(x) = 2^(−E[h(x)]/c(ψ)). Seeded from ``seed_key`` (crc32) so scores
-    are partition-invariant, like the 1-D variant."""
+    are partition-invariant. A one-column ``X`` is the 1-D forest:
+    ``randint(1)`` draws nothing from the RNG, so the attribute pick
+    costs no randomness and the split sequence is the classic 1-D one."""
     import math
     import zlib
 
@@ -444,56 +446,13 @@ def anomaly_iforest_numpy(
             return pdf
         x = np.where(finite, vals, float(vals[finite].mean()))
         key = "\x1f".join(str(pdf[c].iloc[0]) for c in partition_cols)
-        scores = _iforest_scores_1d(x, n_estimators, key)
+        scores = _iforest_scores_nd(x.reshape(-1, 1), n_estimators, key)
         thresh = float(np.quantile(scores, 1.0 - contamination))
         pdf["is_outlier"] = scores >= thresh
         pdf["score"] = scores
         return pdf
 
     return df.groupBy(*partition_cols).applyInPandas(fit, schema=out_schema)
-
-
-def _iforest_scores_1d(x, n_estimators: int, seed_key: str):
-    """Anomaly scores s(x) = 2^(−E[h(x)]/c(ψ)) from ``n_estimators``
-    1-D isolation trees on ψ=min(256,n) subsamples. A 1-D isolation
-    tree is a random recursive partition of [min,max]; path length of a
-    point = #splits to isolate it. Seeded from ``seed_key`` for
-    partition-invariant determinism."""
-    import math
-    import zlib
-
-    import numpy as np
-
-    n = len(x)
-    psi = min(256, n)
-    rng = np.random.RandomState(zlib.crc32(seed_key.encode()) & 0x7FFFFFFF)
-    depth_limit = int(math.ceil(math.log2(max(psi, 2))))
-
-    def c(m: int) -> float:
-        if m <= 1:
-            return 0.0
-        h = math.log(m - 1) + 0.5772156649015329
-        return 2.0 * h - 2.0 * (m - 1) / m
-
-    def path_len(pts, sample, depth):
-        """Vectorized: one random split per node, recurse on each side."""
-        m = len(sample)
-        if depth >= depth_limit or m <= 1 or sample.min() == sample.max():
-            return np.full(len(pts), depth + c(m), dtype=float)
-        split = rng.uniform(sample.min(), sample.max())
-        left = pts < split
-        sl, sr = sample[sample < split], sample[sample >= split]
-        out = np.empty(len(pts), dtype=float)
-        out[left] = path_len(pts[left], sl, depth + 1)
-        out[~left] = path_len(pts[~left], sr, depth + 1)
-        return out
-
-    total = np.zeros(n, dtype=float)
-    for _ in range(n_estimators):
-        sample = x[rng.choice(n, size=psi, replace=False)]
-        total += path_len(x, sample, 0)
-    e_h = total / float(n_estimators)
-    return np.power(2.0, -e_h / c(psi))
 
 
 def _iforest_sklearn(

@@ -5,7 +5,11 @@ cluster reading ~100 TB; only ``master`` and the shuffle-partition count
 are local-mode artifacts (on a real cluster, leave ``master`` to the
 submitter and let AQE coalesce choose reducer counts).
 
-- AQE on: runtime re-planning, skew-join splitting, partition coalescing.
+- AQE on: runtime re-planning, skew-join splitting, partition coalescing,
+  and coalescing extends to cached plans, so AQE sizes an iterative
+  loop's shuffles from each plan's own data. No library code writes
+  session conf to size a shuffle; ``read_events`` only pins the two
+  settings a foreign session needs to read the events table.
 - Arrow on: every pandas-UDF boundary is Arrow-batched, never per-row.
 - Session timezone pinned to UTC: the reference normalizes all timestamps
   to UTC at ingest (reference services/ingestion.py:118-125); pinning the
@@ -40,6 +44,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce the final shuffle of a cached plan as well:
+        # with this off a cached frame keeps all
+        # `spark.sql.shuffle.partitions` partitions, and each round of
+        # the graph and BPE loops, which join their cached loop-invariant
+        # frames, runs at that full width (PERF.md "Loop partitions")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
@@ -64,8 +74,7 @@ def env_int(name: str, minimum: int) -> int | None:
     """Integer env knob ``name`` clamped to ``minimum``; None when unset
     or empty. A value that is not an integer raises a ``ValueError``
     naming the variable, instead of a bare ``int()`` error at some
-    distant call site — and a 0 or negative partition pin never reaches
-    ``spark.sql.shuffle.partitions``."""
+    distant call site."""
     raw = os.environ.get(name, "").strip()
     if not raw:
         return None
@@ -98,87 +107,15 @@ def stream_state_partitions(
     linearly with batch rows (1 per ``target_rows``) until they hit the
     core count — a production stream with 1e9-row batches saturates the
     cluster's parallelism, while a trickle stream stops paying per-task
-    overhead it cannot use. ``SPARK_GRAFT_STREAM_PARTS`` overrides the
-    formula outright (a cluster operator pinning state partitioning for
-    checkpoint compatibility across resizes).
+    overhead it cannot use. A restarted query keeps the count it started
+    with: Spark restores ``spark.sql.shuffle.partitions`` from the
+    checkpoint's offset log, so resizing the cluster cannot reshard the
+    state.
     """
-    explicit = env_int("SPARK_GRAFT_STREAM_PARTS", minimum=1)
-    if explicit is not None:
-        return explicit
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     derived = max(floor, rows_per_batch // target_rows)
     return max(1, min(cpus, derived))
-
-
-def loop_shuffle_partitions(
-    n_rows: int,
-    cpus: int | None = None,
-    target_rows: int = 262144,
-    floor: int = 1,
-) -> int:
-    """Shuffle-partition count for the BODY of an iterative DataFrame
-    loop (connected components, PageRank, BFS), derived from the
-    loop-invariant frame's row count instead of the session default.
-
-    Why (optimization guide §2 "make partitioning scale-adaptive"; r14
-    VERDICT next-round #1): each loop round pays (task schedule +
-    shuffle-file + checkpoint) × partitions as a FIXED cost, every
-    round. The streaming state stores had the identical diagnosis
-    (``stream_state_partitions``); batch loops inherited the session
-    default sized for one-shot batch work — canonical_docs measured
-    15.1 s on 32 cores vs 8.3 s on 8 (driver scaling ratio 0.55: MORE
-    cores made it SLOWER) because a ~271k-row edge frame was shuffled
-    into 32 partitions ~10 times per round.
-
-    The rule scales with data, not the local box: one partition per
-    ``target_rows`` loop-frame rows, capped at the core count. The
-    256k-row target is the measured local optimum (r15 pinned-value
-    sweep on canonical_docs / graph_pagerank / semantic_dedup: 4-8
-    partitions beat both 32 and 2 for 0.5-2M-row edge frames); at
-    production volumes the core-count cap governs long before the
-    target does.
-    A 10¹⁰-edge production graph derives to full cluster parallelism;
-    only the small-graph end stops paying for reducers it cannot feed.
-    ``SPARK_GRAFT_LOOP_PARTS`` pins the value outright (A/B probes,
-    cluster operators)."""
-    explicit = env_int("SPARK_GRAFT_LOOP_PARTS", minimum=1)
-    if explicit is not None:
-        return explicit
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    derived = max(floor, (n_rows + target_rows - 1) // target_rows)
-    return max(1, min(cpus, derived))
-
-
-class loop_partitions:
-    """Context manager: set ``spark.sql.shuffle.partitions`` for an
-    iterative loop body and RESTORE the session default on exit (the
-    set/restore discipline bench.py uses for the streaming group).
-    Results are partitioning-independent for every loop in this repo
-    (min-label folds, sort_array ordered folds, distinct) — only task
-    counts change.
-
-    Assumes ONE thread drives the session while the block runs: the
-    setting is session-global, so a concurrent caller on the same
-    session plans its shuffles with the loop's count, and overlapping
-    blocks restore in the wrong order (the first to exit reinstates a
-    value the other set). Results stay correct either way; only
-    partition counts leak. Per-plan ``repartition`` on the loop frames
-    would remove the assumption, but measured worse (PERF.md "Loop
-    partitions")."""
-
-    def __init__(self, spark: SparkSession, n_rows: int):
-        self.spark = spark
-        self.parts = loop_shuffle_partitions(n_rows)
-
-    def __enter__(self) -> int:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.parts))
-        return self.parts
-
-    def __exit__(self, *exc) -> None:
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
 
 
 def read_events(spark: SparkSession, sf_dir: str):

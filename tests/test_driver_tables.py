@@ -1,10 +1,11 @@
-"""Driver-built tables and session env knobs.
+"""Driver-built tables, session conf writes and session env knobs.
 
 ``session.local_frame`` is the one route from a Python list to a
 DataFrame in the library: a JVM-only ``LocalRelation``, so a UDF-free
 query never forks ``pyspark.daemon`` or a Python worker. The source
-scan below keeps every other route (``createDataFrame`` over a list or
-RDD, ``parallelize``) out of the package and the query registry.
+scans below keep every other route (``createDataFrame`` over a list or
+RDD, ``parallelize``) out of the package and the query registry, and
+keep library code from writing session conf.
 """
 from __future__ import annotations
 
@@ -15,12 +16,7 @@ import struct
 
 import pytest
 
-from smartdatapipeline_spark.session import (
-    env_int,
-    local_frame,
-    loop_shuffle_partitions,
-    stream_state_partitions,
-)
+from smartdatapipeline_spark.session import env_int, local_frame
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -84,9 +80,10 @@ def test_local_frame_lineage_has_no_python_rdd(spark):
     assert joined.count() == 256
 
 
-def _driver_table_calls(path: str) -> list[tuple[str, int, str]]:
-    """(enclosing function, line, method) of every createDataFrame(...)
-    and .parallelize(...) call in ``path``."""
+def _method_calls(path: str, wanted: set[str]) -> list[tuple[str, int, str]]:
+    """(enclosing function, line, method) of every call in ``path`` whose
+    method, spelled ``name`` or ``owner.name`` (``conf.set``), is in
+    ``wanted``."""
     tree = ast.parse(open(path).read(), filename=path)
     found: list[tuple[str, int, str]] = []
 
@@ -95,37 +92,55 @@ def _driver_table_calls(path: str) -> list[tuple[str, int, str]]:
             name = func
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 name = child.name
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in ("createDataFrame", "parallelize")
-            ):
-                found.append((func, child.lineno, child.func.attr))
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                owner = child.func.value
+                owner = getattr(owner, "attr", getattr(owner, "id", ""))
+                for method in (child.func.attr, f"{owner}.{child.func.attr}"):
+                    if method in wanted:
+                        found.append((func, child.lineno, method))
             visit(child, name)
 
     visit(tree, "<module>")
     return found
 
 
-def test_driver_tables_only_through_local_frame():
+def _scan(wanted: set[str], allowed: set[tuple[str, str, str]]):
+    """(allowed calls seen, offenders) over the package and the query
+    registry (``__spark_entry__.py``)."""
     files = [os.path.join(ROOT, "__spark_entry__.py")]
     for dirpath, _, names in os.walk(os.path.join(ROOT, "smartdatapipeline_spark")):
         files += [os.path.join(dirpath, n) for n in names if n.endswith(".py")]
-    allowed = {("smartdatapipeline_spark/session.py", "local_frame", "createDataFrame")}
-    offenders = []
-    seen_helper = False
+    seen, offenders = set(), []
     for path in files:
         rel = os.path.relpath(path, ROOT)
-        for func, line, method in _driver_table_calls(path):
+        for func, line, method in _method_calls(path, wanted):
             if (rel, func, method) in allowed:
-                seen_helper = True
+                seen.add((rel, func, method))
             else:
                 offenders.append(f"{rel}:{line} {method}( in {func}")
-    assert seen_helper, "the scan no longer finds local_frame's own call"
+    return seen, offenders
+
+
+def test_driver_tables_only_through_local_frame():
+    allowed = {("smartdatapipeline_spark/session.py", "local_frame", "createDataFrame")}
+    seen, offenders = _scan({"createDataFrame", "parallelize"}, allowed)
+    assert seen == allowed, "the scan no longer finds local_frame's own call"
     assert not offenders, (
         "driver-side tables must go through session.local_frame "
         "(a PythonRDD forks pyspark.daemon and workers): " + ", ".join(offenders)
     )
+
+
+def test_only_read_events_writes_session_conf():
+    """Session conf is shared by every plan on the session, so a library
+    call that writes it leaks into concurrent callers. The loops leave
+    shuffle sizing to AQE (``session.get_spark``); ``read_events`` alone
+    pins the two settings a session not built by ``get_spark`` needs to
+    read the events table."""
+    allowed = {("smartdatapipeline_spark/session.py", "read_events", "conf.set")}
+    seen, offenders = _scan({"conf.set"}, allowed)
+    assert seen == allowed, "the scan no longer finds read_events' own writes"
+    assert not offenders, "library code writes session conf: " + ", ".join(offenders)
 
 
 def test_env_int_unset_empty_and_clamped(monkeypatch):
@@ -144,23 +159,6 @@ def test_env_int_rejects_non_integers_naming_the_variable(monkeypatch, value):
     monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", value)
     with pytest.raises(ValueError, match="SPARK_GRAFT_TEST_KNOB"):
         env_int("SPARK_GRAFT_TEST_KNOB", minimum=1)
-
-
-def test_partition_knobs_clamp_to_one(monkeypatch):
-    for value in ("0", "-4"):
-        monkeypatch.setenv("SPARK_GRAFT_LOOP_PARTS", value)
-        monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", value)
-        assert loop_shuffle_partitions(10**9) == 1
-        assert stream_state_partitions(10**9, cpus=8) == 1
-
-
-def test_partition_knobs_reject_garbage(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_LOOP_PARTS", "eight")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_LOOP_PARTS"):
-        loop_shuffle_partitions(100)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "1e3")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTS"):
-        stream_state_partitions(100)
 
 
 def test_events_salt_knob(spark, monkeypatch):

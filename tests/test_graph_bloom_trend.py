@@ -239,3 +239,45 @@ def test_loops_pin_at_most_their_result(spark):
         assert len(grown) <= 1, (name, sorted(grown))
         if name == "connected_components":
             assert G.LAST_CC_ROUNDS >= 3
+
+
+def test_cc_restores_session_partitions_and_labels_unchanged(spark):
+    from smartdatapipeline_spark.functions.graph import connected_components
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (20, 20)], "src long, dst long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 20, 30)], "node long")
+    got = {
+        (r["node"], r["cluster"])
+        for r in connected_components(edges, nodes).collect()
+    }
+    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (30, 30)}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_pagerank_and_bfs_restore_session_partitions(spark):
+    """The loops leave session conf as they found it (bpe_train too)."""
+    from smartdatapipeline_spark.functions.bpe import bpe_train
+    from smartdatapipeline_spark.functions.graph import bfs_hops, pagerank
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 3)], "src long, dst long"
+    )
+    ranks = pagerank(edges, iterations=2)
+    assert ranks.count() == 3
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    seeds = spark.createDataFrame([(1,)], "node long")
+    hops = bfs_hops(edges, seeds, max_hops=3)
+    assert {(r["node"], r["hops"]) for r in hops.collect()} == {
+        (1, 0),
+        (2, 1),
+        (3, 1),
+    }
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    docs = spark.createDataFrame([("low lower lowest",)], "text string")
+    merges = [r["merged"] for r in bpe_train(docs, n_merges=2).collect()]
+    assert merges == ["lo", "low"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev

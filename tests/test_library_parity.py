@@ -2,7 +2,7 @@
 
 The sandbox has no statsmodels/sklearn wheels, so the M1/M6 model slots
 run from-scratch implementations (the ``forecast_arima`` Spark plan and
-the numpy ``_iforest_scores_1d``). These tests ``importorskip`` the
+the numpy ``_iforest_scores_nd``). These tests ``importorskip`` the
 reference libraries and, wherever they ARE installed, pin the
 from-scratch math against them — skipped here, latent green anywhere
 the libs exist.
@@ -82,21 +82,22 @@ def test_arima_css_matches_statsmodels_sarimax(spark, phi, theta, seed):
 
 
 def test_iforest_numpy_flags_agree_with_sklearn():
-    """From-scratch 1-D isolation forest vs seeded sklearn
+    """From-scratch isolation forest on one column (what
+    ``anomaly_iforest_numpy`` scores) vs seeded sklearn
     IsolationForest: on a fixture with 5 gross spikes in 300 normals,
     both flag every spike in their top-5%, and the score ORDERINGS agree
     (Spearman ≥ 0.8). Exact tree parity is impossible — different RNG
     consumption — so agreement is on the decisions, like for like."""
     ensemble = pytest.importorskip("sklearn.ensemble")
 
-    from smartdatapipeline_spark.operators.anomaly import _iforest_scores_1d
+    from smartdatapipeline_spark.operators.anomaly import _iforest_scores_nd
 
     rng = np.random.RandomState(3)
     x = rng.normal(100.0, 5.0, 300)
     spikes = np.array([500.0, -250.0, 800.0, 430.0, -600.0])
     x = np.concatenate([x, spikes])
 
-    ours = _iforest_scores_1d(x, 200, "parity")
+    ours = _iforest_scores_nd(x.reshape(-1, 1), 200, "parity")
     clf = ensemble.IsolationForest(
         n_estimators=200, contamination=0.05, random_state=42
     ).fit(x.reshape(-1, 1))

@@ -159,17 +159,14 @@ def test_probe_dedup_index_precomputed_sig_identical(spark, tmp_path):
     assert plain == reused and len(plain) >= 1
 
 
-def test_stream_state_partitions_scales_with_volume(monkeypatch):
+def test_stream_state_partitions_scales_with_volume():
     """The streaming state-partition rule (session.py) must derive from
     per-batch volume — growing with rows, capped by cores, floored to
-    keep minimal parallelism — and obey the explicit env override."""
+    keep minimal parallelism."""
     from smartdatapipeline_spark.session import stream_state_partitions
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_PARTS", raising=False)
     assert stream_state_partitions(100, cpus=32) == 4          # floor
     assert stream_state_partitions(12_500, cpus=32) == 4       # bench shape
     assert stream_state_partitions(300_000, cpus=32) == 32     # volume-capped
     assert stream_state_partitions(3_000_000, cpus=8) == 8     # core-capped
     assert stream_state_partitions(10, cpus=2) == 2            # floor <= cpus
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTS", "7")
-    assert stream_state_partitions(12_500, cpus=32) == 7       # override wins

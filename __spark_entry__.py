@@ -3396,8 +3396,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0,8), the dimension replicates 8× with every salt, and the join
     runs on (key, salt) so one hot key spreads over 8 reducers. Output
     is provably identical to the plain join — the oracle IS the plain
-    join — operators/relational.py salted_join."""
-    from smartdatapipeline_spark.operators.relational import salted_join
+    join — functions/skew.py salted_join."""
+    from smartdatapipeline_spark.functions.skew import salted_join
 
     T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     j = salted_join(

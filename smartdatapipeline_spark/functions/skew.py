@@ -9,13 +9,16 @@ boilerplate fingerprint) holds 10% of all rows.
 
 ``salted_join`` implements the classic replicate-small-side pattern:
 
-    large: key → (key, salt = hash(row) % S)
+    large: key → (key, salt = xxhash64(row_col) mod S)
     small: key → exploded to (key, salt ∈ [0, S))
     join on (key, salt)
 
-Each hot key's rows spread over S tasks; the small side grows ×S, which
-is the price — use only for genuinely skewed keys (the ``hot_keys``
-parameter restricts salting to those, keeping the rest a plain join).
+Each hot key's rows spread over S reducers; the small side grows ×S,
+which is the price — use it only for genuinely skewed keys
+(``key_skew_report`` below detects them; ``layout_salt`` and
+``salted_layout`` are the layout-side twin). Beyond AQE it is the tool
+for aggregations-after-join, stream-static joins (no AQE) and sessions
+with AQE off.
 """
 
 from __future__ import annotations
@@ -25,36 +28,46 @@ from pyspark.sql import functions as F
 
 
 def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt: int = 16,
-    hot_keys: list | None = None,
+    left: DataFrame,
+    right: DataFrame,
+    left_key: str,
+    right_key: str,
+    row_col: str,
+    n_salts: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Join ``large ⋈ small`` on ``key`` with salt-spread hot keys.
+    """Equi-join with the pair space spread over ``n_salts`` reducers
+    per key: the (big, possibly skewed) ``left`` side gets a
+    deterministic per-row salt — ``xxhash64(row_col) mod n_salts``, so
+    one hot key's rows scatter uniformly — and the ``right`` side
+    replicates ``n_salts``× carrying every salt value. The join key
+    becomes (key, salt); every original (left row, right row) pair
+    still meets on exactly one salt, so the OUTPUT IS IDENTICAL to the
+    plain join (the correctness oracle runs the plain join).
 
-    When ``hot_keys`` is given, only those keys are salted (the rest join
-    with salt 0 and one small-side copy); when None, every key is salted
-    — correct but multiplies the whole small side by ``salt``.
+    Cost model: right-side shuffle volume × n_salts buys per-key
+    parallelism × n_salts — worth it exactly when a hot key's reducer
+    is the stage's critical path. ``row_col`` is any per-row column
+    with good hash spread (a primary key; it need not be unique, only
+    well-distributed).
+
+    Supported ``how``: inner / left (semantics preserved because right
+    replication never duplicates matches per salt — each left row holds
+    ONE salt value).
     """
-    if hot_keys is not None:
-        is_hot = F.col(key).isin(hot_keys)
-        l_salt = F.when(is_hot, F.pmod(F.xxhash64(*large.columns), salt)).otherwise(0)
-        s_salts = F.when(is_hot, F.sequence(F.lit(0), F.lit(salt - 1))).otherwise(
-            F.array(F.lit(0))
-        )
-    else:
-        l_salt = F.pmod(F.xxhash64(*large.columns), salt)
-        s_salts = F.sequence(F.lit(0), F.lit(salt - 1))
-    lg = large.withColumn("_salt", l_salt.cast("int"))
-    sm = (
-        small.withColumn("_salts", s_salts)
-        .withColumn("_salt", F.explode("_salts"))
-        .withColumn("_salt", F.col("_salt").cast("int"))
-        .drop("_salts")
+    if how not in ("inner", "left"):
+        raise ValueError(f"salted_join supports inner|left, got {how!r}")
+    sl = left.withColumn(
+        "_saltl",
+        F.pmod(F.xxhash64(F.col(row_col)), F.lit(n_salts)).cast("int"),
     )
-    return lg.join(sm, [key, "_salt"], how).drop("_salt")
+    sr = right.withColumn(
+        "_saltr", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
+    ).withColumn("_saltr", F.col("_saltr").cast("int"))
+    cond = (F.col(left_key) == F.col(right_key)) & (
+        F.col("_saltl") == F.col("_saltr")
+    )
+    return sl.join(sr, on=cond, how=how).drop("_saltl", "_saltr")
 
 
 def layout_salt(

@@ -43,7 +43,7 @@ def funnel(
     the identical repeated step subplans at execution (3 ReusedExchange
     nodes in the final adaptive plan — each step frame's shuffle is
     computed once and replayed), so the caches bought nothing and paid
-    materialization barriers: measured at sf0.1 (tools/funnel_probe.py,
+    materialization barriers: measured at sf0.1 (PERF.md lesson 14,
     5 warm reps) — all-cached 1.24 s / step-1-only 0.83 s / uncached
     0.61 s median. Static-ledger scans ≠ runtime scans; adjudicate on
     the final adaptive plan (PERF.md lesson 14 boundary).

@@ -146,17 +146,6 @@ def distinct_rollup(
     )
 
 
-def ts_minmax(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """MIN(ts)/MAX(ts) window-default scan (reference services/kpi.py:26-35).
-
-    Parquet footer statistics answer this without reading data pages when
-    aggregate pushdown applies — O(#files), not O(rows), at any scale.
-    """
-    return events.agg(
-        F.min(ts_col).alias("min_ts"), F.max(ts_col).alias("max_ts")
-    )
-
-
 def ingest_stats(
     events: DataFrame,
     ts_col: str = "ts",

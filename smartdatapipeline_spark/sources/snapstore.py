@@ -46,7 +46,7 @@ the same public design:
   the residue entries), exactly Delta's DELETE/MERGE file rewrite. In
   the steady nightly flow batches are single-day, so residues are rare.
 - **Checkpoints.** Every ``checkpoint_interval`` commits the full live
-  set is written to ``<v>.checkpoint.json``; readers replay only the
+  set is written to ``<v>.checkpoint.parquet``; readers replay only the
   log tail after the newest checkpoint, so snapshot cost is O(tail),
   not O(history). Checkpoints also carry the idempotency-key set.
 - **Idempotent retries.** A commit may carry an ``idempotency_key``
@@ -59,18 +59,22 @@ the same public design:
 
 Scale honesty: commits are driver-side JSON, but checkpoints — the
 bulk of any snapshot load — are PARQUET manifests (r12, the Iceberg
-manifest-file answer), and the three access paths materialize only
-what they need (tools/snapstore_ceiling_probe.py at 10⁵ live files):
-READS prune partition values inside Arrow before pythonizing entries
-(``_snapshot_for_read``: ~20 ms plans a 1-day read of a 10⁵-file
-table); COMMITS take version + idempotency keys from the checkpoint
-FOOTER alone (``_snapshot_meta``: claims stay 3-14 ms flat to 10⁵);
-only ops that genuinely rewrite the live set (overwrite/compact/merge
-recomputes) pay the full manifest pythonization (~0.6 s at 10⁵).
-Pre-r12 JSON checkpoints remain readable. Partition values per entry
-are tracked up to ``_MAX_TRACKED_VALUES`` distinct values; past that
-the entry is marked intersect-everything (pruning degrades,
-correctness does not).
+manifest-file answer). One replay serves every reader: ``_log_view``
+lists the log, picks the checkpoint and reads the tail; ``_manifest``
+folds them into the live set as ONE Arrow table, and each access path
+materializes only what it needs (tools/snapstore_ceiling_probe.py at
+10⁵ live files, PERF.md): READS prune partition values inside Arrow
+before pythonizing entries (``_snapshot_for_read``); COMMITS take
+version + idempotency keys from the checkpoint FOOTER and the tail
+alone (``_snapshot_meta``: no manifest rows read); checkpoints write
+the Arrow table as is; only ops that genuinely rewrite the live set
+(overwrite/compact/merge recomputes) pythonize the full manifest
+(``_snapshot``). The pre-r12 JSON checkpoint format is not read: a
+log truncated above v1 without a parquet checkpoint raises
+``NoSuchTableError`` rather than replay a partial table. Partition
+values per entry are tracked up to ``_MAX_TRACKED_VALUES`` distinct
+values; past that the entry is marked intersect-everything (pruning
+degrades, correctness does not).
 
 Reference parity: the call sites this serves are the reference's RDBMS
 ``ON CONFLICT`` upserts (backend/app/services/kpi.py:143-231,
@@ -85,6 +89,10 @@ import os
 import time
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,6 +101,7 @@ _DATA_DIR = "data"
 _V_WIDTH = 20
 _MAX_TRACKED_VALUES = 1024
 _CHECKPOINT_INTERVAL = 10
+_CP_SUFFIX = ".checkpoint.parquet"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -267,26 +276,24 @@ def set_log_store(store: LogStore) -> LogStore:
     return prev
 
 
+def _cp_path(root: str, v: int) -> str:
+    return os.path.join(_log_path(root), f"{v:0{_V_WIDTH}d}{_CP_SUFFIX}")
+
+
 def _list_log(root: str) -> tuple[list[int], list[int]]:
     """(sorted committed versions, sorted checkpoint versions)."""
-    names = _LOG_STORE.list_names(_log_path(root))
-    commits, cps = [], set()
-    for n in names:
-        if n.endswith(".checkpoint.json"):
-            try:
-                cps.add(int(n[: -len(".checkpoint.json")]))
-            except ValueError:
-                pass
-        elif n.endswith(".checkpoint.parquet"):
-            try:
-                cps.add(int(n[: -len(".checkpoint.parquet")]))
-            except ValueError:
-                pass
+    commits, cps = [], []
+    for n in _LOG_STORE.list_names(_log_path(root)):
+        if n.endswith(_CP_SUFFIX):
+            out, stem = cps, n[: -len(_CP_SUFFIX)]
         elif n.endswith(".json") and not n.startswith(".tmp-"):
-            try:
-                commits.append(int(n[: -len(".json")]))
-            except ValueError:
-                pass
+            out, stem = commits, n[: -len(".json")]
+        else:
+            continue
+        try:
+            out.append(int(stem))
+        except ValueError:
+            pass  # not a log object (e.g. a pre-r12 JSON checkpoint)
     return sorted(commits), sorted(cps)
 
 
@@ -307,124 +314,135 @@ def _try_claim(root: str, version: int, payload: dict) -> bool:
 # ------------------------------------------------------------- snapshots
 
 
-def _snapshot(root: str, version: int | None = None) -> tuple[int, list[dict], set[str]]:
-    """(version, live entries, idempotency keys seen ≤ version).
+def _log_view(
+    root: str, version: int | None = None
+) -> tuple[int, str | None, dict, list[dict]]:
+    """``(target version, checkpoint path or None, checkpoint footer
+    metadata, tail commits oldest first)`` — the ONE place a snapshot
+    reader lists the log. It resolves the target, picks the newest
+    parquet checkpoint ≤ target whose commit is retained, checks the
+    footer's protocol stamp (``pq.read_schema``: no manifest rows are
+    read) and reads the commits after the checkpoint.
 
-    Live set replay starts at the newest checkpoint ≤ version and
-    applies the log tail; each entry is
-    ``{"path","rows","partition_col","values"}`` with ``values`` the
-    tracked partition values (None ⇒ intersects everything)."""
+    A log whose oldest retained commit is above v1 replays only from a
+    checkpoint. Without one (the checkpoint was lost, or the log was
+    vacuumed under the pre-r12 JSON checkpoint format, which is no
+    longer read) the replay would return a partial table, so it
+    raises instead."""
     commits, cps = _list_log(root)
     if not commits:
         raise NoSuchTableError(f"no committed snapshot under {root!r}")
     target = commits[-1] if version is None else version
-    if target not in commits:
+    have = set(commits)
+    if target not in have:
         raise NoSuchTableError(f"version {target} not committed under {root!r}")
-    base_v = 0
-    live: dict[str, dict] = {}
-    keys: set[str] = set()
-    usable_cps = [c for c in cps if c <= target and c in commits]
-    if usable_cps:
-        base_v, live, keys = _read_checkpoint(root, usable_cps[-1])
-    for v in commits:
-        if v <= base_v or v > target:
-            continue
-        c = _read_json(os.path.join(_log_path(root), _vname(v)))
-        k = c.get("idempotency_key")
-        if k:
-            keys.add(k)
-        for a in c["actions"]:
-            if a["op"] == "add":
-                live[a["path"]] = {
-                    "path": a["path"],
-                    "rows": a["rows"],
-                    "partition_col": a.get("partition_col"),
-                    "values": a.get("values"),
-                    "stats": a.get("stats"),
-                }
-            elif a["op"] == "remove":
-                live.pop(a["path"], None)
-    return target, sorted(live.values(), key=lambda e: e["path"]), keys
-
-
-def _read_checkpoint(root: str, version: int) -> tuple[int, dict[str, dict], set[str]]:
-    """Load a checkpoint: PARQUET format (r12 — the Iceberg answer to
-    the driver-side JSON ceiling: columnar manifest entries parsed by
-    Arrow, ~10× faster than json.loads at 10⁵ live files) preferred,
-    falling back to the pre-r12 JSON format."""
-    d = _log_path(root)
-    pq_path = os.path.join(d, f"{version:0{_V_WIDTH}d}.checkpoint.parquet")
-    if os.path.exists(pq_path):
-        import pyarrow.parquet as _pq
-
-        t = _pq.read_table(pq_path)
-        meta = t.schema.metadata or {}
+    usable = [c for c in cps if c <= target and c in have]
+    cp_path, meta, base_v = None, {}, 0
+    if usable:
+        cp_path = _cp_path(root, usable[-1])
+        meta = pq.read_schema(cp_path).metadata or {}
         if b"protocol" in meta:
             _check_protocol(
                 {"protocol": json.loads(meta[b"protocol"])},
-                os.path.basename(pq_path),
+                os.path.basename(cp_path),
             )
-        base_v = int(meta.get(b"version", str(version).encode()))
-        keys = set(json.loads(meta.get(b"txn_keys", b"[]")))
-        live: dict[str, dict] = {}
-        cols = t.to_pydict()
-        for i in range(t.num_rows):
-            st = cols["stats"][i]
-            live[cols["path"][i]] = {
-                "path": cols["path"][i],
-                "rows": cols["rows"][i],
-                "partition_col": cols["partition_col"][i],
-                "values": cols["values"][i],
-                "stats": json.loads(st) if st else None,
+        base_v = int(meta.get(b"version", str(usable[-1]).encode()))
+    elif commits[0] > 1:
+        raise NoSuchTableError(
+            f"the log under {root!r} starts at v{commits[0]} and no parquet "
+            f"checkpoint ≤ v{target} holds the versions below it"
+        )
+    tail = [
+        _read_json(os.path.join(_log_path(root), _vname(v)))
+        for v in commits
+        if base_v < v <= target
+    ]
+    return target, cp_path, meta, tail
+
+
+def _txn_keys(meta: dict, tail: list[dict]) -> set[str]:
+    """Idempotency keys: the checkpoint footer's folded set plus the
+    tail commits' own keys."""
+    keys = set(json.loads(meta.get(b"txn_keys", b"[]")))
+    keys.update(c["idempotency_key"] for c in tail if c.get("idempotency_key"))
+    return keys
+
+
+#: one manifest row per live entry — the checkpoint file's schema and
+#: the in-memory live set alike; ``stats`` is sorted-key JSON
+_MANIFEST = pa.schema(
+    [
+        ("path", pa.string()),
+        ("rows", pa.int64()),
+        ("partition_col", pa.string()),
+        ("values", pa.list_(pa.string())),
+        ("stats", pa.string()),
+    ]
+)
+
+
+def _manifest(root: str, version: int | None = None) -> tuple[int, pa.Table, set[str]]:
+    """``(version, live set, idempotency keys ≤ version)``, the live set
+    as ONE Arrow table in the ``_MANIFEST`` schema: the checkpoint's
+    rows (or none), minus every path the tail removes or re-adds (an
+    analyze stats backfill re-adds live entries, r14 — the newest add
+    wins), plus the tail's adds. Row order is unspecified."""
+    target, cp_path, meta, tail = _log_view(root, version)
+    adds: dict[str, dict] = {}
+    gone: set[str] = set()
+    for c in tail:
+        for a in c["actions"]:
+            if a["op"] == "add":
+                adds[a["path"]] = a
+            elif a["op"] == "remove":
+                adds.pop(a["path"], None)
+                gone.add(a["path"])
+    t = pq.read_table(cp_path).cast(_MANIFEST) if cp_path else _MANIFEST.empty_table()
+    gone |= adds.keys()
+    if gone:
+        t = t.filter(
+            pc.invert(pc.is_in(t["path"], value_set=pa.array(sorted(gone), pa.string())))
+        )
+    if adds:
+        rows = [
+            {
+                "path": a["path"],
+                "rows": a["rows"],
+                "partition_col": a.get("partition_col"),
+                "values": a.get("values"),
+                "stats": json.dumps(a["stats"], sort_keys=True) if a.get("stats") else None,
             }
-        return base_v, live, keys
-    cp = _read_json(os.path.join(d, f"{version:0{_V_WIDTH}d}.checkpoint.json"))
-    return cp["version"], {e["path"]: e for e in cp["live"]}, set(cp.get("txn_keys", []))
+            for a in adds.values()
+        ]
+        t = pa.concat_tables([t, pa.Table.from_pylist(rows, schema=_MANIFEST)])
+    return target, t, _txn_keys(meta, tail)
+
+
+def _entries(t: pa.Table) -> list[dict]:
+    """Manifest rows as ``{"path","rows","partition_col","values",
+    "stats"}`` dicts, stats parsed; ``values`` None ⇒ untracked
+    (intersects everything)."""
+    out = t.to_pylist()
+    for e in out:
+        e["stats"] = json.loads(e["stats"]) if e["stats"] else None
+    return out
+
+
+def _snapshot(root: str, version: int | None = None) -> tuple[int, list[dict], set[str]]:
+    """(version, live entries sorted by path, idempotency keys seen ≤
+    version) — ``_manifest`` as dicts."""
+    target, t, keys = _manifest(root, version)
+    return target, _entries(t.sort_by("path")), keys
 
 
 def _snapshot_meta(root: str, version: int | None = None) -> tuple[int, set[str]]:
     """(version, idempotency keys) WITHOUT materializing the live set —
     the write path's snapshot (r12): an append/commit needs only the
-    current version and the replay-protection keys, and a parquet
-    checkpoint serves both from its FOOTER metadata (pq.read_schema —
-    no manifest rows read), so a commit against a 10⁵-file table costs
-    milliseconds, not the 0.6 s full-manifest pythonization. Falls back
-    to ``_snapshot`` for legacy JSON checkpoints."""
-    commits, cps = _list_log(root)
-    if not commits:
-        raise NoSuchTableError(f"no committed snapshot under {root!r}")
-    target = commits[-1] if version is None else version
-    if target not in commits:
-        raise NoSuchTableError(f"version {target} not committed under {root!r}")
-    usable = [c for c in cps if c <= target and c in commits]
-    base_v = 0
-    keys: set[str] = set()
-    if usable:
-        pq_path = os.path.join(
-            _log_path(root), f"{usable[-1]:0{_V_WIDTH}d}.checkpoint.parquet"
-        )
-        if os.path.exists(pq_path):
-            import pyarrow.parquet as _pq
-
-            meta = _pq.read_schema(pq_path).metadata or {}
-            if b"protocol" in meta:
-                _check_protocol(
-                    {"protocol": json.loads(meta[b"protocol"])},
-                    os.path.basename(pq_path),
-                )
-            base_v = int(meta.get(b"version", str(usable[-1]).encode()))
-            keys = set(json.loads(meta.get(b"txn_keys", b"[]")))
-        else:
-            base_v, _, keys = _read_checkpoint(root, usable[-1])
-            keys = set(keys)
-    for v in commits:
-        if v <= base_v or v > target:
-            continue
-        c = _read_json(os.path.join(_log_path(root), _vname(v)))
-        k = c.get("idempotency_key")
-        if k:
-            keys.add(k)
-    return target, keys
+    current version and the replay-protection keys, which the
+    checkpoint FOOTER plus the log tail serve (no manifest rows read),
+    so a commit against a 10⁵-file table costs milliseconds."""
+    target, _, meta, tail = _log_view(root, version)
+    return target, _txn_keys(meta, tail)
 
 
 def _snapshot_for_read(
@@ -435,158 +453,51 @@ def _snapshot_for_read(
     null_col: str | None = None,
 ) -> tuple[int, list[dict], int, str | None, list[dict]]:
     """Scan-planning snapshot: ``(version, PRUNED live DATA entries,
-    total_live_data_count, sample_live_path, live DV sidecar entries)``.
-    Deletion-vector sidecars are split out BEFORE pruning — a pruned
-    read must still see every live sidecar or deleted rows resurface —
-    and never count toward the data totals.
+    total_live_data_count, sample_live_path, live DV sidecar entries)``,
+    entries and sidecars sorted by path, the sample the smallest live
+    data path. Deletion-vector sidecars are split out BEFORE pruning — a
+    pruned read must still see every live sidecar or deleted rows
+    resurface — and never count toward the data totals.
 
-    The r12 scale path: when the newest usable checkpoint is a PARQUET
-    manifest, partition-value pruning runs INSIDE Arrow (flatten the
-    tracked-values lists, vectorized ``is_in``, filter) and only the
-    surviving entries are materialized as Python dicts — a pruned read
-    of a 10⁵-file table pythonizes dozens of entries, not the whole
-    manifest (the 0.7 s/10⁵ row-dict build measured in the ceiling
-    probe never happens on the read path). The ≤ checkpoint-interval
-    log-tail commits are applied as plain dicts. Column-range stats
-    pruning applies AFTER partition pruning on the (small) survivor
-    set. Tables with legacy JSON checkpoints (or none) fall back to the
-    full ``_snapshot`` with Python-side pruning — same results."""
-    commits, cps = _list_log(root)
-    if not commits:
-        raise NoSuchTableError(f"no committed snapshot under {root!r}")
-    target = commits[-1] if version is None else version
-    if target not in commits:
-        raise NoSuchTableError(f"version {target} not committed under {root!r}")
-    usable = [c for c in cps if c <= target and c in commits]
-    pq_path = (
-        os.path.join(_log_path(root), f"{usable[-1]:0{_V_WIDTH}d}.checkpoint.parquet")
-        if usable
-        else None
-    )
-
-    def _prune_py(entries: list[dict]) -> list[dict]:
-        out = entries
-        if partition_values is not None:
-            out = [e for e in out if _values_intersect(e, partition_values)]
-        for scol, lo, hi in column_ranges or ():
-            # ANDed ranges (r14, r13 VERDICT #4): every predicate must
-            # be able to intersect — an (x, y)-z-ordered table prunes on
-            # BOTH dimensions in one read
-            out = [e for e in out if _stats_intersect(e, scol, lo, hi)]
-        if null_col is not None:
-            out = [e for e in out if _stats_nulls_possible(e, null_col)]
-        return out
-
-    if pq_path is None or not os.path.exists(pq_path):
-        _, live, _ = _snapshot(root, target)
-        live, dvs = _split_dvs(live)
-        sample = live[0]["path"] if live else None
-        return target, _prune_py(live), len(live), sample, dvs
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as _pq
-
-    t = _pq.read_table(pq_path)
-    _meta = t.schema.metadata or {}
-    if b"protocol" in _meta:
-        _check_protocol(
-            {"protocol": json.loads(_meta[b"protocol"])},
-            os.path.basename(pq_path),
-        )
-    base_v = int(_meta.get(b"version", str(usable[-1]).encode()))
-    # log tail: adds as dicts, removes as a path set
-    tail_adds: dict[str, dict] = {}
-    tail_removes: set[str] = set()
-    for v in commits:
-        if v <= base_v or v > target:
-            continue
-        c = _read_json(os.path.join(_log_path(root), _vname(v)))
-        for a in c["actions"]:
-            if a["op"] == "add":
-                tail_adds[a["path"]] = {
-                    "path": a["path"],
-                    "rows": a["rows"],
-                    "partition_col": a.get("partition_col"),
-                    "values": a.get("values"),
-                    "stats": a.get("stats"),
-                }
-            elif a["op"] == "remove":
-                if a["path"] in tail_adds:
-                    del tail_adds[a["path"]]
-                else:
-                    tail_removes.add(a["path"])
-    # a tail ADD of a path already in the checkpoint (analyze stats
-    # backfill re-adds live entries, r14) REPLACES the checkpoint row —
-    # newest add wins, same as the dict replay in _snapshot
-    overridden = tail_removes | set(tail_adds)
-    if overridden:
-        t = t.filter(
-            pc.invert(
-                pc.is_in(t["path"], value_set=pa.array(sorted(overridden)))
-            )
-        )
+    Partition-value pruning runs INSIDE Arrow on the manifest table
+    (flatten the tracked-values lists, vectorized ``is_in``, filter),
+    so only surviving entries are pythonized — a pruned read of a
+    10⁵-file table builds dozens of dicts, not the whole manifest.
+    Column-range stats and null-count pruning then run on the (small)
+    survivor set."""
+    target, t, _ = _manifest(root, version)
     # split sidecars out: a cheap vectorized substring probe on the
     # stats JSON pre-filters candidates, then each candidate is PARSED
     # and re-checked with _is_dv — a data entry whose tracked min/max
     # string value is literally ``__dv__`` serializes as '"__dv__"' and
-    # must return to the data table, not vanish as a phantom sidecar
+    # must stay in the data table, not vanish as a phantom sidecar
     # (r13 ADVICE: silent data loss on a pathological but legal value)
-    dvs: list[dict] = []
-    dv_false_pos: list[dict] = []
-    dv_mask = pc.match_substring(
-        pc.fill_null(t["stats"], pa.scalar("", pa.string())), '"__dv__"'
-    )
-    if pc.any(dv_mask).as_py():
-        for e in t.filter(dv_mask).to_pylist():
-            st = e.get("stats")
-            e["stats"] = json.loads(st) if isinstance(st, str) else st
-            (dvs if _is_dv(e) else dv_false_pos).append(e)
-        t = t.filter(pc.invert(dv_mask))
-    tail_dv = {p: e for p, e in tail_adds.items() if _is_dv(e)}
-    if tail_dv:
-        dvs.extend(tail_dv.values())
-        tail_adds = {p: e for p, e in tail_adds.items() if p not in tail_dv}
-    total_live = t.num_rows + len(tail_adds) + len(dv_false_pos)
-    sample = t["path"][0].as_py() if t.num_rows else (
-        next(iter(tail_adds))
-        if tail_adds
-        else (dv_false_pos[0]["path"] if dv_false_pos else None)
-    )
-    if partition_values is not None and t.num_rows:
-        # vectorized manifest pruning: an entry survives if its tracked
-        # values intersect the wanted set, or its values are untracked
-        import numpy as np
-
+    probe = pc.fill_null(pc.match_substring(t["stats"], '"__dv__"'), False)
+    idx = np.flatnonzero(probe.to_numpy(zero_copy_only=False))
+    cand = _entries(t.take(idx))
+    is_dv = np.array([_is_dv(e) for e in cand], dtype=bool)
+    dvs = sorted((e for e, d in zip(cand, is_dv) if d), key=lambda e: e["path"])
+    keep = np.ones(t.num_rows, dtype=bool)
+    keep[idx[is_dv]] = False
+    total_live = int(keep.sum())
+    sample = pc.min(t["path"].filter(pa.array(keep))).as_py()
+    if partition_values is not None:
+        # an entry survives if its tracked values intersect the wanted
+        # set, or its values are untracked
         want = pa.array(sorted(partition_values), pa.string())
-        vals = (
-            t["values"].combine_chunks()
-            if t["values"].num_chunks != 1
-            else t["values"].chunk(0)
+        vals = t["values"].combine_chunks()
+        hits = pc.is_in(pc.list_flatten(vals), value_set=want).to_numpy(
+            zero_copy_only=False
         )
-        flat_hit = pc.is_in(pc.list_flatten(vals), value_set=want)
         parents = pc.list_parent_indices(vals).to_numpy(zero_copy_only=False)
-        hits = flat_hit.to_numpy(zero_copy_only=False)
-        mask = np.zeros(t.num_rows, dtype=bool)
-        if parents.size:
-            mask[parents[hits]] = True
-        mask |= pc.is_null(vals).to_numpy(zero_copy_only=False)
-        t = t.filter(pa.array(mask))
-    survivors = t.to_pylist()
-    for e in survivors:
-        st = e.get("stats")
-        e["stats"] = json.loads(st) if isinstance(st, str) else st
-    entries = survivors + [
-        e
-        for e in tail_adds.values()
-        if partition_values is None or _values_intersect(e, partition_values)
-    ]
-    if dv_false_pos:
-        # substring-probe false positives rejoin the data table, subject
-        # to the same partition/stats pruning (they were filtered out of
-        # the Arrow table before vectorized pruning ran)
-        entries.extend(_prune_py(dv_false_pos))
+        part = pc.is_null(vals).to_numpy(zero_copy_only=False)
+        part[parents[hits]] = True
+        keep &= part
+    entries = _entries(t.filter(pa.array(keep)))
     for scol, lo, hi in column_ranges or ():
+        # ANDed ranges (r14, r13 VERDICT #4): every predicate must be
+        # able to intersect — an (x, y)-z-ordered table prunes on BOTH
+        # dimensions in one read
         entries = [e for e in entries if _stats_intersect(e, scol, lo, hi)]
     if null_col is not None:
         entries = [e for e in entries if _stats_nulls_possible(e, null_col)]
@@ -598,56 +509,29 @@ def _maybe_checkpoint(root: str, version: int) -> None:
     if version % _CHECKPOINT_INTERVAL != 0:
         return
     try:
-        v, live, keys = _snapshot(root, version)
+        v, t, keys = _manifest(root, version)
     except NoSuchTableError:
         return
-    import pyarrow as pa
-    import pyarrow.parquet as _pq
-
-    d = _log_path(root)
-    tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}")
-    final = os.path.join(d, f"{version:0{_V_WIDTH}d}.checkpoint.parquet")
+    tmp = os.path.join(_log_path(root), f".tmp-{uuid.uuid4().hex}")
+    final = _cp_path(root, version)
     # r14: carry the table schema and CHECK constraints in the
     # checkpoint so vacuum_log can truncate the stamping commits
     # without losing enforcement
     rec_schema = table_schema(root, version)
-    rec_cons = table_constraints(root, version)
-    table = pa.table(
-        {
-            "path": pa.array([e["path"] for e in live], pa.string()),
-            "rows": pa.array([e["rows"] for e in live], pa.int64()),
-            "partition_col": pa.array(
-                [e.get("partition_col") for e in live], pa.string()
-            ),
-            "values": pa.array(
-                [e.get("values") for e in live], pa.list_(pa.string())
-            ),
-            "stats": pa.array(
-                [
-                    json.dumps(e["stats"], sort_keys=True) if e.get("stats") else None
-                    for e in live
-                ],
-                pa.string(),
-            ),
-        },
-        metadata={
-            b"version": str(v).encode(),
-            b"txn_keys": json.dumps(sorted(keys)).encode(),
-            b"protocol": json.dumps(
-                {
-                    "min_reader_version": _READER_VERSION,
-                    "min_writer_version": _WRITER_VERSION,
-                }
-            ).encode(),
-            **(
-                {b"schema": json.dumps(rec_schema).encode()}
-                if rec_schema is not None
-                else {}
-            ),
-            b"constraints": json.dumps(rec_cons).encode(),
-        },
-    )
-    _pq.write_table(table, tmp)
+    metadata = {
+        b"version": str(v).encode(),
+        b"txn_keys": json.dumps(sorted(keys)).encode(),
+        b"protocol": json.dumps(
+            {
+                "min_reader_version": _READER_VERSION,
+                "min_writer_version": _WRITER_VERSION,
+            }
+        ).encode(),
+        b"constraints": json.dumps(table_constraints(root, version)).encode(),
+    }
+    if rec_schema is not None:
+        metadata[b"schema"] = json.dumps(rec_schema).encode()
+    pq.write_table(t.sort_by("path").replace_schema_metadata(metadata), tmp)
     fd = os.open(tmp, os.O_RDONLY)
     try:
         os.fsync(fd)  # durable before publication, same as the log claim
@@ -773,46 +657,26 @@ def _schema_of(df: DataFrame) -> list[list[str]]:
 
 def _newest_meta_stamp(root: str, version: int | None, key: str):
     """Newest-stamp-wins resolution for log-carried table metadata
-    (schema / constraints, r14): walk commits newest-first for ``key``,
-    stopping at the newest checkpoint ≤ target — the checkpoint's
-    metadata carries the folded stamp for everything below it, so the
-    walk is bounded by the checkpoint interval, and stamps vacuumed out
-    of the log survive. Returns the raw stamped value or None.
+    (schema / constraints, r14): walk the log view's tail newest-first
+    for ``key``, then read the checkpoint footer, which carries the
+    folded stamp for everything at or below it — the walk is bounded by
+    the checkpoint interval, and stamps vacuumed out of the log
+    survive. Returns the raw stamped value or None (also for a missing
+    table or version).
 
     Stamps are written ONLY by commits that CHANGE the value (schema
     adoption/evolution, add/drop constraint) — an unchanged write does
     not re-stamp, so a concurrent stale writer can never roll back a
     newer change by committing after it."""
-    commits, cps = _list_log(root)
-    if not commits:
+    try:
+        _, _, meta, tail = _log_view(root, version)
+    except NoSuchTableError:
         return None
-    target = commits[-1] if version is None else version
-    usable = [c for c in cps if c <= target and c in commits]
-    floor = usable[-1] if usable else None
-    for v in reversed([c for c in commits if c <= target]):
-        if floor is not None and v < floor:
-            break  # the checkpoint at `floor` folds everything below
-        c = _read_json(os.path.join(_log_path(root), _vname(v)))
+    for c in reversed(tail):
         if key in c:
             return c[key]
-    if floor is not None:
-        pq_path = os.path.join(
-            _log_path(root), f"{floor:0{_V_WIDTH}d}.checkpoint.parquet"
-        )
-        if os.path.exists(pq_path):
-            import pyarrow.parquet as _pq
-
-            meta = _pq.read_schema(pq_path).metadata or {}
-            bkey = key.encode()
-            if bkey in meta:
-                return json.loads(meta[bkey])
-        else:
-            # legacy JSON checkpoint: keep walking the remaining commits
-            for v in reversed([c for c in commits if c < floor]):
-                c = _read_json(os.path.join(_log_path(root), _vname(v)))
-                if key in c:
-                    return c[key]
-    return None
+    raw = meta.get(key.encode())
+    return json.loads(raw) if raw is not None else None
 
 
 def table_schema(root: str, version: int | None = None) -> list[list[str]] | None:
@@ -1295,6 +1159,8 @@ def _commit(
     try:
         read_v, keys = _snapshot_meta(root)
     except NoSuchTableError:
+        if table_version(root):
+            raise  # committed but unreadable (truncated log): never v1 over it
         read_v, keys = 0, set()
     if read_v:
         # writer gate (r14): the newest commit carries the table's
@@ -2148,8 +2014,7 @@ def resolve_partition_col(root: str, upto: int | None = None) -> str | None:
             continue
         if cp_v not in commits:
             continue
-        _, live, _ = _read_checkpoint(root, cp_v)
-        for e in live.values():
+        for e in _snapshot(root, cp_v)[1]:
             if e.get("partition_col"):
                 return e["partition_col"]
     return None
@@ -3273,15 +3138,12 @@ def vacuum_log(root: str, keep_versions: int = 100) -> list[str]:
     for c in cps:
         if c >= base:
             continue
-        for suffix in (".checkpoint.parquet", ".checkpoint.json"):
-            p = os.path.join(d, f"{c:0{_V_WIDTH}d}{suffix}")
-            try:
-                os.unlink(p)
-                deleted.append(os.path.basename(p))
-            except FileNotFoundError:
-                pass
-            except OSError:
-                pass
+        p = _cp_path(root, c)
+        try:
+            os.unlink(p)
+            deleted.append(os.path.basename(p))
+        except OSError:
+            pass
     return deleted
 
 

@@ -95,6 +95,30 @@ def test_csv_header_validation(spark, tmpfile):
     assert R.csv_header_ok(spark, bad) == (False, "MISSING_COLUMNS")
 
 
+def test_infer_source_name_precedence(spark):
+    """S5: a ``source`` field in the data wins, then the query
+    parameter, then 'default' (reference routers/ingest.py:224-246)."""
+    with_src = spark.createDataFrame(
+        [("web", 1.0), (None, 2.0)], "Source string, value double"
+    )
+    got = R.infer_source_name(with_src, "param").orderBy("value").collect()
+    assert [r["source_name"] for r in got] == ["web", "param"]
+    plain = spark.createDataFrame([(1.0,)], "value double")
+    assert [
+        R.infer_source_name(plain, p).first()["source_name"]
+        for p in ("param", None, "")
+    ] == ["param", "default", "default"]
+
+
+def test_write_bronze_appends(spark, tmp_path):
+    """S7: bronze is append-only — a second write adds to the first."""
+    path = str(tmp_path / "bronze")
+    S.write_bronze(spark.createDataFrame([(1, "a")], "id int, v string"), path)
+    S.write_bronze(spark.createDataFrame([(2, "b")], "id int, v string"), path)
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    assert got == [(1, "a"), (2, "b")]
+
+
 def test_strict_preflight_rejects_file_with_any_bad_row(spark, tmpfile):
     path = tmpfile("h.csv", "timestamp,value\n2025-01-01,1\nbad,2\n")
     clean = I.clean_rows(R.read_csv(spark, path))

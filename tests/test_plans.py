@@ -37,23 +37,23 @@ def test_salted_join_matches_plain_join(spark):
         [("hot", i) for i in range(500)] + [("cold", i) for i in range(5)],
         "k string, v int",
     )
-    small = spark.createDataFrame([("hot", 1.0), ("cold", 2.0)], "k string, w double")
-    out = salted_join(large, small, "k", salt=8, hot_keys=["hot"])
-    plain = large.join(small, "k")
+    small = spark.createDataFrame([("hot", 1.0), ("cold", 2.0)], "sk string, w double")
+    out = salted_join(large, small, "k", "sk", row_col="v", n_salts=8)
+    plain = large.join(small, large.k == small.sk)
     assert out.count() == plain.count() == 505
     assert (
         out.agg(F.sum("w")).first()[0] == plain.agg(F.sum("w")).first()[0]
     )
     # salted rows really spread: the hot key occupies >1 salt bucket
-    lg = large.withColumn("_salt", F.pmod(F.xxhash64(*large.columns), F.lit(8)))
+    lg = large.withColumn("_salt", F.pmod(F.xxhash64("v"), F.lit(8)))
     n_buckets = lg.filter(F.col("k") == "hot").select("_salt").distinct().count()
     assert n_buckets > 1
 
 
 def test_salted_join_all_keys_salted(spark):
     large = spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], "k string, v int")
-    small = spark.createDataFrame([("a", 10), ("b", 20)], "k string, w int")
-    out = salted_join(large, small, "k", salt=4).orderBy("v")
+    small = spark.createDataFrame([("a", 10), ("b", 20)], "sk string, w int")
+    out = salted_join(large, small, "k", "sk", row_col="v", n_salts=4).orderBy("v")
     assert [(r["k"], r["v"], r["w"]) for r in out.collect()] == [
         ("a", 1, 10),
         ("b", 2, 20),

@@ -567,43 +567,47 @@ def test_refresh_window_spanning_compact_reads_no_compact_files(spark, tmp_path)
     assert rows == [("2025-01-01", 10.0), ("2025-01-02", 5.0), ("2025-01-03", 7.0)]
 
 
-def test_parquet_checkpoint_and_legacy_json_equivalence(spark, tmp_path):
-    """r12 manifest checkpoints are PARQUET (Arrow-parsed, flat to 10⁵
-    live files); a pre-r12 JSON checkpoint of the same version must
-    load to the identical snapshot."""
+def test_truncated_log_without_parquet_checkpoint_raises(spark, tmp_path):
+    """A log vacuumed above v1 replays only from a parquet checkpoint.
+    With that checkpoint lost, or present only in the pre-r12 JSON
+    format (no longer read), every snapshot reader raises
+    NoSuchTableError instead of replaying the retained tail as if it
+    were the whole table, and no write lands over it."""
     import json
 
     root = str(tmp_path / "t")
-    for i in range(SS._CHECKPOINT_INTERVAL + 2):
-        SS.append(
-            _frame(spark, [(i, f"d{i}", i)]), root, "day",
-            idempotency_key=f"b{i}",
-        )
-    _, cps = SS._list_log(root)
-    assert cps
-    cp_v = cps[-1]
+    n = SS._CHECKPOINT_INTERVAL * 2 + 5  # checkpoints at 10 and 20
+    for i in range(n):
+        SS.append(_frame(spark, [(i, f"d{i}", i)]), root, "day")
+    SS.vacuum_log(root, keep_versions=5)
+    commits, cps = SS._list_log(root)
+    assert commits[0] == cps[-1] == SS._CHECKPOINT_INTERVAL * 2
     pq_path = os.path.join(
-        root, "_log", f"{cp_v:0{SS._V_WIDTH}d}.checkpoint.parquet"
+        root, "_log", f"{cps[-1]:0{SS._V_WIDTH}d}.checkpoint.parquet"
     )
-    assert os.path.exists(pq_path)
-    v1, live1, keys1 = SS._snapshot(root)
-    # rewrite the checkpoint in the legacy JSON shape and hide parquet
-    base_v, live_map, keys = SS._read_checkpoint(root, cp_v)
-    with open(pq_path.replace(".parquet", ".json"), "w") as f:
-        json.dump(
-            {
-                "version": base_v,
-                "live": sorted(live_map.values(), key=lambda e: e["path"]),
-                "txn_keys": sorted(keys),
-            },
-            f,
-        )
+    json_path = pq_path[: -len(".parquet")] + ".json"
     os.rename(pq_path, pq_path + ".hide")
-    try:
-        v2, live2, keys2 = SS._snapshot(root)
-    finally:
-        os.rename(pq_path + ".hide", pq_path)
-    assert (v1, live1, keys1) == (v2, live2, keys2)
+    readers = (
+        lambda: SS._snapshot(root),
+        lambda: SS._snapshot_meta(root),
+        lambda: SS._snapshot_for_read(root, None, None, None),
+        lambda: SS.read_table(spark, root),
+    )
+    for legacy in (True, False):
+        if legacy:
+            with open(json_path, "w") as f:
+                json.dump({"version": cps[-1], "live": [], "txn_keys": []}, f)
+        elif os.path.exists(json_path):
+            os.unlink(json_path)
+        for read in readers:
+            with pytest.raises(SS.NoSuchTableError, match="checkpoint"):
+                read()
+    with pytest.raises(SS.NoSuchTableError, match="checkpoint"):
+        SS.append(_frame(spark, [(99, "d99", 99)]), root, "day")
+    assert SS.table_version(root) == n
+    # the checkpoint back in place, the table reads whole again
+    os.rename(pq_path + ".hide", pq_path)
+    assert len(_rows(SS.read_table(spark, root))) == n
 
 
 def test_streaming_merge_sink_dedups_across_batches_exactly_once(spark, tmp_path):

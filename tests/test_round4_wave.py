@@ -421,7 +421,7 @@ def test_k_anonymity_verdict(spark):
 
 
 def test_salted_join_equals_plain_join(spark):
-    from smartdatapipeline_spark.operators.relational import salted_join
+    from smartdatapipeline_spark.functions.skew import salted_join
 
     left = spark.createDataFrame(
         [(i, i % 3, float(i)) for i in range(30)] + [(100, 99, 1.0)],

@@ -244,33 +244,56 @@ def test_idempotency_key_prevents_double_apply(spark, tmp_path):
 
 
 def test_checkpoint_replay_equivalence(spark, tmp_path):
-    """Past the checkpoint interval, a snapshot built from the newest
-    checkpoint + tail equals one replayed from scratch."""
+    """Past the checkpoint interval, every snapshot reader built from the
+    newest checkpoint + tail equals a from-scratch replay: the live set,
+    the commit path's (version, keys) and a pruned read plan. Both sides
+    of the checkpoint hold a deletion-vector sidecar and a data entry
+    whose stats JSON contains the literal ``"__dv__"``."""
     root = str(tmp_path / "t")
-    for i in range(SS._CHECKPOINT_INTERVAL + 3):
-        SS.append(_df(spark, [(f"2024-01-{i + 1:02d}", f"k{i}", i)]), root, "d")
+
+    def add(i, k):
+        d = f"2024-01-{i + 1:02d}"
+        SS.append(
+            _df(spark, [(d, k, i), (d, f"x{i}", 100 + i)]), root, "d",
+            idempotency_key=f"b{i}", stats_cols=("k", "v"),
+        )
+
+    add(0, "__dv__")
+    for i in range(1, SS._CHECKPOINT_INTERVAL - 2):
+        add(i, f"k{i}")
+    SS.delete_where(spark, root, "v = 103", mode="dv")
+    add(SS._CHECKPOINT_INTERVAL - 2, f"k{SS._CHECKPOINT_INTERVAL - 2}")
     _, cps = SS._list_log(root)
     assert cps, "expected a checkpoint to have been written"
-    v, live_cp, keys = SS._snapshot(root)
-    # force a from-scratch replay by hiding checkpoints (parquet since
-    # r12; any legacy json checkpoints would be hidden the same way)
-    cp_paths = [
-        p
-        for c in cps
-        for p in (
-            os.path.join(root, "_log", f"{c:0{SS._V_WIDTH}d}.checkpoint.parquet"),
-            os.path.join(root, "_log", f"{c:0{SS._V_WIDTH}d}.checkpoint.json"),
+    add(20, "__dv__")
+    SS.delete_where(spark, root, "v = 105", mode="dv")
+    want = {"2024-01-01", "2024-01-04", "2024-01-06", "2024-01-21"}
+
+    def views():
+        return (
+            SS._snapshot(root),
+            SS._snapshot_meta(root),
+            SS._snapshot_for_read(root, None, want, [("v", 0, 100)]),
         )
-        if os.path.exists(p)
+
+    shown = views()
+    _, pruned, total, _, dvs = shown[2]
+    assert len(dvs) == 2 and total == len(shown[0][1]) - 2
+    assert {e["stats"]["k"]["min"] for e in pruned} >= {"__dv__", "k3", "k5"}
+    # force a from-scratch replay by hiding the checkpoints
+    cp_paths = [
+        os.path.join(root, "_log", f"{c:0{SS._V_WIDTH}d}.checkpoint.parquet")
+        for c in cps
     ]
     for p in cp_paths:
         os.rename(p, p + ".hide")
     try:
-        v2, live_full, _ = SS._snapshot(root)
+        assert SS._list_log(root)[1] == []
+        hidden = views()
     finally:
         for p in cp_paths:
             os.rename(p + ".hide", p)
-    assert (v, live_cp) == (v2, live_full)
+    assert shown == hidden
 
 
 def test_vacuum_removes_orphans_keeps_retained(spark, tmp_path):

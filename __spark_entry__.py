@@ -433,8 +433,8 @@ def q_forecast_arima(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_anomaly_iforest_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M6 with real model math: from-scratch numpy isolation forest
-    (200 trees, per-series crc32 seed) through the same applyInPandas
-    shape as the sklearn path. Randomized-ensemble scores are not
+    (200 trees, per-series crc32 seed) — the 4-D variant's grouped map
+    on the value column alone. Randomized-ensemble scores are not
     SQL-expressible — driver records the rows-only check; the math is
     pinned by tests/test_anomaly.py goldens."""
     return A.anomaly_iforest_numpy(_gold(spark, sf_dir))
@@ -3489,26 +3489,27 @@ def q_partition_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer training (Sennrich 2016 / SentencePiece shape):
-    learn 6 merges from the corpus word vocabulary — per round one
-    vocabulary-sized pair count + a 1-row argmax (the merge IS model
-    state) + a two-pass literal merge rewrite, portable bit-exact to
-    the unrolled SQL oracle — functions/bpe.py bpe_train."""
+    learn 6 merges from the corpus word vocabulary — one distributed
+    word-count aggregation, then the incremental greedy trainer runs
+    driver-side on the vocabulary (the merges ARE model state), with
+    the total (count desc, left asc, right asc) tie-break and greedy
+    merge scan the unrolled SQL oracle replays bit-exact —
+    functions/bpe.py bpe_train."""
     from smartdatapipeline_spark.functions.bpe import bpe_train
 
     return bpe_train(_docs(spark, sf_dir), n_merges=6)
 
 
 def q_bpe_merges_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-budget BPE trainer (functions/bpe.py bpe_train_fast):
-    one distributed word-count aggregation, then the classic
-    incremental greedy trainer runs driver-side on the bounded
-    vocabulary — 32k merges cost zero extra Spark jobs. Trained here at
-    the oracle's 6-merge budget so the SAME unrolled SQL oracle proves
-    it merge-for-merge bit-exact (the merge-equivalence property test
-    covers it against bpe_train at depth 8)."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train_fast
+    """The production-budget name for the same trainer
+    (functions/bpe.py bpe_train): a 32k merge budget costs zero extra
+    Spark jobs past the one word-count aggregation. Trained here at the
+    oracle's 6-merge budget so the SAME unrolled SQL oracle proves it
+    merge-for-merge bit-exact (tests/test_bpe.py checks it against a
+    textbook recount-every-round trainer at depth 8)."""
+    from smartdatapipeline_spark.functions.bpe import bpe_train
 
-    return bpe_train_fast(_docs(spark, sf_dir), n_merges=6)
+    return bpe_train(_docs(spark, sf_dir), n_merges=6)
 
 
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3547,7 +3548,7 @@ def q_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.pq_rerank_topk(cb, codes, emb, queries, k=10, shortlist=50)
 
 
-#: per-corpus trained merge list — train once (bpe_train_fast), encode
+#: per-corpus trained merge list — train once (bpe_train), encode
 #: everywhere; same build/score split as the PQ codebooks and the
 #: quality classifier.
 _BPE_MERGES: dict[str, list] = {}
@@ -3559,13 +3560,13 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-pass literal replace per merge, zero UDFs), aggregated per doc
     to (n_words, n_pieces, pieces_per_word). Completes the
     train→encode tokenizer story; merges train once per corpus snapshot
-    (memoized, bpe_train_fast at the oracle's 6-merge budget so the
+    (memoized, bpe_train at the oracle's 6-merge budget so the
     unrolled-SQL oracle proves the END-TO-END encode bit-exact)."""
-    from smartdatapipeline_spark.functions.bpe import bpe_apply, bpe_train_fast
+    from smartdatapipeline_spark.functions.bpe import bpe_apply, bpe_train
 
     docs = _docs(spark, sf_dir)
     if sf_dir not in _BPE_MERGES:
-        rows = bpe_train_fast(docs, n_merges=6).orderBy("round").collect()
+        rows = bpe_train(docs, n_merges=6).orderBy("round").collect()
         _BPE_MERGES[sf_dir] = [(r["left"], r["right"]) for r in rows]
     enc = bpe_apply(docs, _BPE_MERGES[sf_dir])
     return enc.groupBy("doc_id").agg(
@@ -7527,8 +7528,7 @@ def oracle_sql() -> dict[str, str]:
                    / CAST(COUNT(*) AS DOUBLE) AS pieces_per_word
         FROM enc GROUP BY doc_id""")
     o["bpe_encode"] = "".join(_enc)
-    # the fast (driver-side incremental) trainer is defined to produce the
-    # IDENTICAL merge table — same oracle, independently proven
+    # bpe_merges_fast runs the same trainer — same oracle
     o["bpe_merges_fast"] = o["bpe_merges"]
 
     # salted_join's oracle IS the plain join — identical output proves

@@ -3,43 +3,34 @@ learning step of a training-data pipeline (Sennrich et al. 2016,
 "Neural Machine Translation of Rare Words with Subword Units"; the
 word-count formulation SentencePiece/HuggingFace trainers use).
 
-Scale design: BPE learns from the WORD VOCABULARY (distinct words +
-corpus counts), never the raw text — the fact-sized work is one
-tokenize+count aggregation, and every merge round then runs on the
-vocabulary frame (≤ a few million rows at web scale, cached once).
-Per round: one pair-explode + weighted count (map-side combined), one
-1-row argmax to the driver (the learned merge IS driver state, like
-any model coefficient), one column rewrite of the segmentation. Round
-count is the model's merge budget — fixed, not data-dependent. AQE
-sizes each round's pair-count shuffle from the exploded pairs it
-actually carries; the loop sets no partition count.
+Scale design: aggregate the big data, fit the small result. BPE learns
+from the WORD VOCABULARY (distinct words + corpus counts), never the
+raw text, so the one fact-sized pass is a tokenize+count aggregation.
+The vocabulary (a few million rows at web scale) collects to the
+driver, where the classic incremental-pair-count greedy trainer runs
+every merge round in memory: the learned merges are driver state like
+any model coefficient, and a 32k merge budget costs 32k dict updates,
+not 32k Spark jobs. Batching "non-interacting" merges into one round
+is NOT greedy-equivalent — merging (a,b) can mint a new pair (x,ab)
+whose count beats the round's runner-up, so greedy takes it first (a
+counterexample lives in tests/test_bpe.py).
 
-At PRODUCTION merge budgets (32k) one Spark job per round is the wrong
-shape — and batching "non-interacting" merges per round is NOT
-greedy-equivalent (merging (a,b) can mint a new pair (x,ab) whose
-count beats the round's runner-up, so greedy would take it first; a
-counterexample lives in the round-6 tests). The correct scale design
-is ``bpe_train_fast``: the distributed part stays the one fact-sized
-word-count aggregation, and the (vocabulary-sized — a few million
-rows, bounded, optionally capped) training state collects to the
-driver where the classic incremental-pair-count greedy trainer runs
-all 32k rounds in memory with zero further jobs — the same
-aggregate-big/fit-small split as the quality-model L-BFGS build, and
-what SentencePiece/HF trainers do. Property-tested merge-for-merge
-identical to the distributed ``bpe_train``.
-
-Cross-engine determinism: pair counts are exact ints; the argmax
-tie-break is total (count desc, left asc, right asc); and the merge
-rewrite uses TWO passes of plain space-delimited string replace — a
-left-to-right non-overlapping scan whose first pass consumes the
-boundary space of an immediately-following occurrence ("a b a b"),
-which the second pass then catches. Two passes reach the classic
-greedy-scan fixpoint (property-tested against a reference scalar BPE
-in tests), and literal replace behaves identically in Spark and DuckDB
-— unlike regex lookaround, which RE2 (DuckDB) lacks.
+Cross-engine determinism: pair counts are exact ints and the argmax
+tie-break is total (count desc, left asc, right asc). ``bpe_apply``
+rewrites a segmentation with TWO passes of plain space-delimited
+string replace — a left-to-right non-overlapping scan whose first
+pass consumes the boundary space of an immediately-following
+occurrence ("a b a b"), which the second pass then catches. Two passes
+reach the greedy-scan fixpoint the trainer applies (property-tested
+against a reference scalar BPE in tests), and literal replace behaves
+identically in Spark and DuckDB — unlike regex lookaround, which RE2
+(DuckDB) lacks — so the unrolled-SQL oracle replays training and
+encoding bit-exact.
 """
 
 from __future__ import annotations
+
+from collections import Counter, defaultdict
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -80,93 +71,27 @@ def word_vocab(
 
 def bpe_train(
     df: DataFrame,
-    n_merges: int = 6,
-    text_col: str = "text",
-) -> DataFrame:
-    """Learn ``n_merges`` BPE merges. Returns one row per round:
-    (round, left, right, merged, pair_count) — the merge table that
-    parameterizes ``bpe_apply``.
-
-    The returned frame is a small driver-built table (the model);
-    training state lives in the cached vocabulary frame, released
-    before returning."""
-    spark = df.sparkSession
-    vocab = word_vocab(df, text_col).withColumn(
-        "seg", _initial_seg(F.col("word"))
-    ).select("seg", "cnt").cache()
-    try:
-        merges: list[tuple[int, str, str, str, int]] = []
-        cur = vocab
-        for r in range(1, n_merges + 1):
-            syms = F.split(F.col("seg"), " ")
-            # a fully-merged word (ONE symbol) contributes no pairs:
-            # sequence(1, 0) would DESCEND and index out of bounds under
-            # ANSI — guard with an explicit empty index array
-            idx = F.when(
-                F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
-            ).otherwise(F.array().cast("array<int>"))
-            pairs = (
-                cur.select(
-                    F.explode(
-                        F.transform(
-                            idx,
-                            lambda i: F.struct(
-                                F.element_at(syms, i).alias("a"),
-                                F.element_at(syms, i + 1).alias("b"),
-                            ),
-                        )
-                    ).alias("pr"),
-                    "cnt",
-                )
-                .groupBy(F.col("pr.a").alias("a"), F.col("pr.b").alias("b"))
-                .agg(F.sum("cnt").alias("n"))
-            )
-            best = (
-                pairs.orderBy(
-                    F.col("n").desc(), F.col("a").asc(), F.col("b").asc()
-                )
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
-            merges.append((r, a, b, a + b, n))
-            cur = cur.select(_merge_once(F.col("seg"), a, b).alias("seg"), "cnt")
-        return local_frame(spark, merges, MERGE_SCHEMA)
-    finally:
-        vocab.unpersist()
-
-
-def bpe_train_fast(
-    df: DataFrame,
     n_merges: int = 256,
     text_col: str = "text",
-    vocab_limit: int | None = None,
 ) -> DataFrame:
-    """Greedy BPE training at production merge budgets: ONE distributed
-    word-count aggregation (the only fact-sized pass), then the
-    vocabulary — bounded at a few million rows at web scale, optionally
-    capped to the top ``vocab_limit`` words by (cnt desc, word asc) —
-    collects to the driver and the classic incremental trainer runs
-    every merge round in memory. 32k merges cost 32k dict updates, not
-    32k Spark jobs (module docstring has the why-not-batching proof
-    sketch). Output schema and values are IDENTICAL to ``bpe_train``:
-    (round, left, right, merged, pair_count) with the same (count desc,
-    left asc, right asc) tie-break and the same greedy left-to-right
-    non-overlapping merge scan the two-pass replace implements.
+    """Learn up to ``n_merges`` greedy BPE merges. Returns one row per
+    round: (round, left, right, merged, pair_count) — the merge table
+    that parameterizes ``bpe_apply``, as a small driver-built frame.
+
+    One distributed word-count aggregation, then the vocabulary
+    collects and the incremental trainer runs every round in memory:
+    each round takes the most frequent adjacent pair (count desc, left
+    asc, right asc), merges it in every word holding it with the
+    greedy left-to-right non-overlapping scan, and updates only those
+    words' pair counts. Training stops early once no word has two
+    symbols left.
     """
     spark = df.sparkSession
-    v = word_vocab(df, text_col)
-    if vocab_limit is not None:
-        v = v.orderBy(F.col("cnt").desc(), F.col("word").asc()).limit(vocab_limit)
-    rows = v.collect()
+    rows = word_vocab(df, text_col).collect()
 
     words: list[tuple[list[str], int]] = [
         (list(r["word"]) + [END], int(r["cnt"])) for r in rows
     ]
-    from collections import Counter, defaultdict
-
     pair_counts: Counter = Counter()
     pair_words: defaultdict[tuple[str, str], set[int]] = defaultdict(set)
     for wi, (syms, cnt) in enumerate(words):

@@ -154,6 +154,38 @@ def minhash_bands(
     )
 
 
+def _sig_agreement(sig_a: str, sig_b: str) -> Column:
+    """Signature-estimated Jaccard: the fraction of the minhashes that
+    agree between two signature columns."""
+    return F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
+    ) / F.lit(float(len(MINHASH_PARAMS)))
+
+
+def _bucket_pairs(sig: DataFrame, bb: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard): docs sharing any band bucket of
+    ``bb`` (a < b), deduplicated across bands, scored by signature
+    agreement."""
+    left, right = bb.alias("l"), bb.alias("r")
+    pairs = (
+        left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.doc_id") < F.col("r.doc_id")),
+        )
+        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
+    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select("doc_a", "doc_b", _sig_agreement("_sa", "_sb").alias("est_jaccard"))
+    )
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -191,31 +223,7 @@ def minhash_candidate_pairs(
             .select("band", "bucket")
         )
         bb = bb.join(small, ["band", "bucket"])
-    left = bb.alias("l")
-    right = bb.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
-    est = F.size(
-        F.filter(
-            F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda m: m
-        )
-    ) / F.lit(float(len(MINHASH_PARAMS)))
-    return _track_cache(
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", est.alias("est_jaccard")),
-        sig,
-    )
+    return _track_cache(_bucket_pairs(sig, bb), sig)
 
 
 def dedup_pipeline(
@@ -272,26 +280,9 @@ def dedup_pipeline(
         )
     else:
         small_bb, mega_star = bb, None
-    left, right = small_bb.alias("l"), small_bb.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
-    est = F.size(
-        F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(len(MINHASH_PARAMS)))
     verified = (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(est >= min_est_jaccard)
+        _bucket_pairs(sig, small_bb)
+        .filter(F.col("est_jaccard") >= min_est_jaccard)
         .select("doc_a", "doc_b")
     )
     edges = (
@@ -570,13 +561,10 @@ def probe_dedup_index(
         F.col("doc_id").alias("corpus_id"), F.col("sig").alias("_sc")
     )
     ns = new_sig.select(F.col("doc_id").alias("new_id"), F.col("sig").alias("_sn"))
-    est = F.size(
-        F.filter(F.zip_with("_sn", "_sc", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(len(MINHASH_PARAMS)))
     out = (
         hits.join(F.broadcast(ns), "new_id")
         .join(idx_sig, "corpus_id")
-        .select("new_id", "corpus_id", est.alias("est_jaccard"))
+        .select("new_id", "corpus_id", _sig_agreement("_sn", "_sc").alias("est_jaccard"))
     )
     return _track_cache(out, new_sig) if owns_sig else out
 

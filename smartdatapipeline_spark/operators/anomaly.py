@@ -422,37 +422,17 @@ def anomaly_iforest_numpy(
     all-inlier with NULL score; NaN features filled with the series'
     finite mean; ``score`` = anomaly score in [0,1] (higher = more
     anomalous); outlier = top-``contamination`` quantile per series.
+    This is the one-column case of ``_iforest_numpy_nd``'s grouped map.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("is_outlier", T.BooleanType()),
-            T.StructField("score", T.DoubleType()),
-        ]
+    return _iforest_numpy_nd(
+        df,
+        contamination,
+        partition_cols,
+        date_col,
+        value_col,
+        feature_cols=(value_col,),
+        n_estimators=n_estimators,
     )
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(date_col).reset_index(drop=True)
-        vals = pdf[value_col].astype(float).to_numpy()
-        finite = np.isfinite(vals)
-        if int(finite.sum()) < 5:
-            pdf["is_outlier"] = False
-            pdf["score"] = None
-            return pdf
-        x = np.where(finite, vals, float(vals[finite].mean()))
-        key = "\x1f".join(str(pdf[c].iloc[0]) for c in partition_cols)
-        scores = _iforest_scores_nd(x.reshape(-1, 1), n_estimators, key)
-        thresh = float(np.quantile(scores, 1.0 - contamination))
-        pdf["is_outlier"] = scores >= thresh
-        pdf["score"] = scores
-        return pdf
-
-    return df.groupBy(*partition_cols).applyInPandas(fit, schema=out_schema)
 
 
 def _iforest_sklearn(

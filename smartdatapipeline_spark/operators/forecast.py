@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from smartdatapipeline_spark.cachetrack import track_cache
+
 MIN_POINTS = 14  # reference services/forecast.py:113
 
 
@@ -1190,10 +1192,10 @@ def ols_trend(
         )
         .groupBy("metric", "_d")
         .agg(F.sum("_y").alias("_y"))
-        # day-grain frame consumed twice (first-day probe + xy) — cut
-        # the lineage so events scans once (r14 opt; the mann_kendall
-        # pattern)
-        .localCheckpoint()
+        # consumed twice (first-day probe + xy), and column pruning
+        # gives the probe its own exchange, so without the cache events
+        # scans twice; the lazy plan hands the cache to the caller
+        .cache()
     )
     first_day = daily.groupBy("metric").agg(F.min("_d").alias("_d0"))
     xy = daily.join(F.broadcast(first_day), "metric").select(
@@ -1218,7 +1220,7 @@ def ols_trend(
         "double"
     )
     slope = num / F.nullif(den, F.lit(0.0))
-    return sums.select(
+    out = sums.select(
         "metric",
         F.col("_n").cast("long").alias("n_days"),
         slope.alias("slope"),
@@ -1227,6 +1229,7 @@ def ols_trend(
             / F.col("_n").cast("double")
         ).alias("intercept"),
     )
+    return track_cache(out, daily)
 
 
 def ewma_daily(
@@ -1359,10 +1362,10 @@ def theilsen_trend(
         )
         .groupBy("metric", "_d")
         .agg(F.sum("_y").cast("double").alias("_y"))
-        # day-grain frame is tiny (days × metrics) but consumed THREE
-        # times (pairs×2, n_days) — cut the lineage so events scans
-        # once, not three times (r14 opt; the mann_kendall pattern)
-        .localCheckpoint()
+        # consumed three times (pairs×2, n_days); AQE reuses the
+        # exchange for the pair sides only, so cache it and hand the
+        # cache out with the lazy plan — events scans once
+        .cache()
     )
     a, b = daily.alias("a"), daily.alias("b")
     slopes = (
@@ -1384,11 +1387,12 @@ def theilsen_trend(
         F.col("_rn") == F.greatest(F.ceil(F.lit(0.5) * F.col("_n")), F.lit(1))
     )
     days = daily.groupBy("metric").agg(F.count(F.lit(1)).alias("n_days"))
-    return (
+    out = (
         med.select("metric", F.col("_n").alias("n_pairs"), F.col("_s").alias("slope"))
         .join(F.broadcast(days), "metric")
         .select("metric", "n_days", "n_pairs", "slope")
     )
+    return track_cache(out, daily)
 
 
 def mann_kendall(
@@ -1421,11 +1425,10 @@ def mann_kendall(
         )
         .groupBy("metric", "_d")
         .agg(F.sum("_y").cast("double").alias("_y"))
-        # day-grain frame is tiny (days × metrics) but consumed FOUR
-        # times (pairs×2, ties, n) — cut the lineage so events scans
-        # once, not four times (PERF lesson: cache multiply-consumed
-        # frames; localCheckpoint releases itself with the plan)
-        .localCheckpoint()
+        # consumed four times (pairs×2, ties, n); AQE reuses the
+        # exchange for the pair sides only, so cache it and hand the
+        # cache out with the lazy plan — events scans once
+        .cache()
     )
     a, b = daily.alias("a"), daily.alias("b")
     s_stat = (
@@ -1479,4 +1482,6 @@ def mann_kendall(
             ),
         )
     )
-    return joined.select("metric", "n_days", "s_stat", "tau", "var_s", "z")
+    return track_cache(
+        joined.select("metric", "n_days", "s_stat", "tau", "var_s", "z"), daily
+    )

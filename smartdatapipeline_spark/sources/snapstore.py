@@ -3169,8 +3169,7 @@ def vacuum(root: str, keep_versions: int = 3, grace_sec: float = 86_400.0) -> li
         return []
     keep: set[str] = set()
     for v in commits[-keep_versions:]:
-        _, live, _ = _snapshot(root, v)
-        keep.update(e["path"] for e in live)
+        keep.update(_manifest(root, v)[1]["path"].to_pylist())
     data_dir = os.path.join(root, _DATA_DIR)
     deleted = []
     now = time.time()

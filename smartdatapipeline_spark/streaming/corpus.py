@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.cachetrack import release_checkpoint
 from smartdatapipeline_spark.functions.dedup import (
     exact_dedup,
     minhash_bands,
@@ -90,6 +91,9 @@ def stream_corpus_ingest(
             .parquet(f"{index_path}/bands")
         )
         sig.write.mode("append").parquet(f"{index_path}/sigs")
+        # both checkpoints stay pinned until a JVM GC otherwise
+        release_checkpoint(survivors)
+        release_checkpoint(uniq_sig)
 
     return (
         docs_stream.writeStream.foreachBatch(ingest_batch)

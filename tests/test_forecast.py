@@ -512,3 +512,22 @@ def test_uat_ramp_forecast_contract(spark):
     for h, r in enumerate(rows, start=1):
         assert abs(r["yhat"] - (129.0 + h)) < 2.0  # ramp continues ~ +1/day
         assert r["yhat_lower"] <= r["yhat"] <= r["yhat_upper"]
+
+
+def test_trend_queries_leave_no_persistent_rdds(spark):
+    """ols_trend, theilsen_trend and mann_kendall cache their day-grain
+    frame and hand it out with the lazy plan: once the result is
+    materialized and its plan caches released, no RDD stays persisted."""
+    import __spark_entry__ as E
+    from smartdatapipeline_spark.cachetrack import release_plan_caches
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    qs = E.queries()
+    for name in ("ols_trend", "theilsen_trend", "mann_kendall"):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = qs[name](spark, SF_SMALL)
+        assert out.count() > 0
+        release_plan_caches(out)
+        grown = set(jsc.getPersistentRDDs().keySet()) - before
+        assert not grown, (name, sorted(grown))

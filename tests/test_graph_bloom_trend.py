@@ -258,8 +258,7 @@ def test_cc_restores_session_partitions_and_labels_unchanged(spark):
 
 
 def test_pagerank_and_bfs_restore_session_partitions(spark):
-    """The loops leave session conf as they found it (bpe_train too)."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train
+    """The loops leave session conf as they found it."""
     from smartdatapipeline_spark.functions.graph import bfs_hops, pagerank
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -276,8 +275,4 @@ def test_pagerank_and_bfs_restore_session_partitions(spark):
         (2, 1),
         (3, 1),
     }
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    docs = spark.createDataFrame([("low lower lowest",)], "text string")
-    merges = [r["merged"] for r in bpe_train(docs, n_merges=2).collect()]
-    assert merges == ["lo", "low"]
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev

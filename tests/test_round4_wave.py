@@ -217,60 +217,6 @@ def test_skyline_front_dominance(spark):
     assert got2 == {10, 12}
 
 
-def _ref_greedy_merge(seg: str, a: str, b: str) -> str:
-    """Reference scalar BPE merge: greedy left-to-right scan."""
-    syms = seg.split(" ")
-    out, i = [], 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return " ".join(out)
-
-
-def test_bpe_two_pass_replace_equals_greedy(spark):
-    """The two-pass literal replace (engine-portable) must equal the
-    classic greedy scan on adversarial repetition patterns."""
-    import random
-
-    from smartdatapipeline_spark.functions.bpe import _merge_once
-
-    random.seed(7)
-    cases = ["a b a b", "a a a", "a a a a", "a b a b a b a b", "b a b a b",
-             "a b b", "x a b a b y a b"]
-    for _ in range(40):
-        cases.append(" ".join(random.choice("ab") for _ in range(random.randint(1, 12))))
-    df = spark.createDataFrame([(c,) for c in cases], "seg string")
-    got = [
-        r["m"]
-        for r in df.select(_merge_once(F.col("seg"), "a", "b").alias("m")).collect()
-    ]
-    want = [_ref_greedy_merge(c, "a", "b") for c in cases]
-    assert got == want
-
-
-def test_bpe_train_textbook_corpus(spark):
-    """Sennrich's running example shape: 'low'x5 + 'lower'x2 +
-    'newest'x6 + 'widest'x3 — first merges must pick the dominant
-    'es'/'est' family."""
-    from smartdatapipeline_spark.functions.bpe import bpe_apply, bpe_train
-
-    text = " ".join(["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3)
-    docs = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
-    m = bpe_train(docs, n_merges=4).collect()
-    assert [r["round"] for r in m] == [1, 2, 3, 4]
-    assert (m[0]["left"], m[0]["right"], m[0]["pair_count"]) == ("e", "s", 9)
-    assert (m[1]["left"], m[1]["right"]) == ("es", "t")
-    # apply the learned merges: 'newest' must contain the 'est' piece
-    enc = bpe_apply(docs, [(r["left"], r["right"]) for r in m])
-    pieces = {r["word"]: r["pieces"] for r in enc.collect()}
-    assert any("est" in p for p in pieces["newest"])
-    assert pieces["newest"] != list("newest")  # actually merged
-
-
 def test_pq_roundtrip_and_adc_recall(spark):
     """PQ: codebooks per subspace, m-byte codes, ADC top-k finds the
     planted same-cluster neighbors that exact search finds."""
@@ -453,15 +399,3 @@ def test_salted_join_equals_plain_join(spark):
         salted_join(left, right, "k", "rk", row_col="row_id", how="full")
 
 
-def test_bpe_train_fully_merged_word(spark):
-    """A corpus dominated by a 1-char word: after merge 1 ('a </w>' →
-    'a</w>') the word is ONE symbol and must contribute no pairs in
-    later rounds instead of raising (round-4 scale-probe regression)."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train
-
-    docs = spark.createDataFrame(
-        [(1, "a a a a a bc bc")], "doc_id bigint, text string"
-    )
-    m = bpe_train(docs, n_merges=3).collect()
-    assert [r["round"] for r in m] == [1, 2, 3]
-    assert (m[0]["left"], m[0]["right"]) == ("a", "</w>")

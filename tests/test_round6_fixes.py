@@ -416,64 +416,3 @@ def test_gold_upsert_interleaved_writers(spark, tmp_path):
     assert got.count() == len(dates) * 4  # no leftover files
     kinds = [h["kind"] for h in SS.history(path)]
     assert kinds == ["overwrite_partitions"] * 8
-
-
-# ------------------------------------------------- fast BPE trainer
-
-
-def _bpe_rows(df):
-    return [
-        (r["round"], r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in df.orderBy("round").collect()
-    ]
-
-
-def test_bpe_fast_matches_distributed(spark):
-    """bpe_train_fast must be merge-for-merge identical to the
-    distributed bpe_train — same tie-break, same greedy scan —
-    including overlap-heavy words ('aaaa' → (a,a) then (aa,aa))."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train, bpe_train_fast
-
-    texts = [
-        "low lower lowest newest newest widest",
-        "aaaa aaaa aaaa baaab",
-        "the quick brown fox the quick fox",
-        "abab abab cdcd",
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    slow = _bpe_rows(bpe_train(df, n_merges=8))
-    fast = _bpe_rows(bpe_train_fast(df, n_merges=8))
-    assert fast == slow
-
-
-def test_bpe_batching_counterexample(spark):
-    """Why bpe_train_fast is NOT a 'batch non-interacting merges'
-    scheme: merging the best pair can mint a new pair whose count beats
-    the round's runner-up. Corpus: 'xab'×10 + 'cd'×9 — after merge 1
-    (a,b), greedy round 2 must take the minted (ab,</w>) at count 10,
-    not the disjoint (c,d) at 9 a batcher would have pre-committed."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train_fast
-
-    text = " ".join(["xab"] * 10 + ["cd"] * 9)
-    df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    got = _bpe_rows(bpe_train_fast(df, n_merges=2))
-    assert got[0][1:4] == ("a", "b", "ab")
-    assert got[1][1:4] == ("ab", "</w>", "ab</w>")  # minted pair wins
-    assert got[1][4] == 10  # ...at count 10 > (c,d)'s 9
-
-
-def test_bpe_fast_production_budget(spark):
-    """256-merge budget runs in one Spark job (the word-count collect)
-    plus driver memory — rounds are dense 1..k and pair counts are
-    non-increasing-feasible (every count positive)."""
-    from smartdatapipeline_spark.functions.bpe import bpe_train_fast
-
-    texts = [
-        f"{(i * 2654435761) % 2**32:08x} {(i * 40503) % 2**16:04x} word{i % 29}"
-        for i in range(400)
-    ]
-    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
-    rows = _bpe_rows(bpe_train_fast(df, n_merges=256))
-    assert len(rows) == 256
-    assert [r[0] for r in rows] == list(range(1, 257))
-    assert all(r[4] > 0 for r in rows)

@@ -1,11 +1,9 @@
-"""Round-7 wave-2 operators: linear interpolation gap-fill,
-tolerance-window duplicate suppression, and the BPE encode step."""
+"""Round-7 wave-2 operators: linear interpolation gap-fill and
+tolerance-window duplicate suppression."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
 
 
 def _series(spark, day_vals):
@@ -115,40 +113,3 @@ def test_debounce_dedup_chaining_exceeds_tolerance_total(spark):
     got = debounce_exact_dedup(df, tolerance_sec=5).collect()
     assert len(got) == 1 and got[0]["event_id"] == 0
     assert got[0]["n_suppressed"] == 4
-
-
-# ------------------------------------------------------- BPE encode
-
-
-def test_bpe_apply_known_merges(spark):
-    from smartdatapipeline_spark.functions.bpe import bpe_apply
-
-    df = spark.createDataFrame(
-        [(1, "low lower lowest")], "doc_id long, text string"
-    )
-    out = {
-        r["word"]: list(r["pieces"])
-        for r in bpe_apply(df, [("l", "o"), ("lo", "w")]).collect()
-    }
-    assert out["low"] == ["low", "</w>"]
-    assert out["lower"] == ["low", "e", "r", "</w>"]
-    assert out["lowest"] == ["low", "e", "s", "t", "</w>"]
-
-
-def test_bpe_encode_roundtrip_property(spark):
-    """Every encoded word reassembles exactly: concat(pieces) minus the
-    end marker == the word — merges can never lose or invent chars."""
-    from smartdatapipeline_spark.functions.bpe import bpe_apply, bpe_train_fast
-    from smartdatapipeline_spark.functions.text import tokens  # noqa: F401
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    merges = [
-        (r["left"], r["right"])
-        for r in bpe_train_fast(docs, n_merges=10).orderBy("round").collect()
-    ]
-    enc = bpe_apply(docs, merges)
-    bad = enc.withColumn(
-        "_re", F.array_join(F.col("pieces"), "")
-    ).filter(F.col("_re") != F.concat(F.col("word"), F.lit("</w>"))).count()
-    assert bad == 0
-    assert enc.filter(F.col("n_pieces") < 1).count() == 0

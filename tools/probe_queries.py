@@ -1,7 +1,9 @@
 """Clean-window re-probe for bench adjudications: time the named
 registry queries (and/or streaming stages) with N warm reps each and
 print one JSON line — the evidence a BENCH_ADJUDICATIONS.md entry
-cites when deciding drift vs regression for a >25% mover.
+cites when deciding drift vs regression for a >25% mover. Each query
+also reports ``leaked_rdds``: how many more RDDs stay persisted after
+its reps than before them, each rep's plan caches released.
 
 Usage:
     python tools/probe_queries.py [--runs 5] [--sf-dir DIR]
@@ -52,26 +54,34 @@ def main() -> int:
         if f.endswith(".parquet"):
             spark.read.parquet(os.path.join(args.sf_dir, f)).limit(1).count()
 
+    jsc = spark.sparkContext._jsc
     out: dict[str, dict] = {}
     for name in args.queries:
         if name not in qs:
             print(f"probe: no such query {name!r}", file=sys.stderr)
             continue
+        pinned = set(jsc.getPersistentRDDs().keySet())
         reps: list[float] = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            df = qs[name](spark, args.sf_dir)
-            try:
-                df.write.format("noop").mode("overwrite").save()
-            finally:
-                release_plan_caches(df)
-            reps.append(time.perf_counter() - t0)
+        try:
+            for _ in range(args.runs):
+                t0 = time.perf_counter()
+                df = qs[name](spark, args.sf_dir)
+                try:
+                    df.write.format("noop").mode("overwrite").save()
+                finally:
+                    release_plan_caches(df)
+                reps.append(time.perf_counter() - t0)
+        except Exception as e:  # noqa: BLE001 — one failing query must not end the probe
+            print(f"probe: {name} FAILED: {e!r}", file=sys.stderr)
+            out[name] = {"error": repr(e)}
+            continue
         reps.sort()
         out[name] = {
             "median": round(statistics.median(reps), 4),
             "min": round(reps[0], 4),
             "max": round(reps[-1], 4),
             "runs": args.runs,
+            "leaked_rdds": len(set(jsc.getPersistentRDDs().keySet()) - pinned),
         }
 
     if args.streaming:

@@ -606,14 +606,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoted/aggregated inside long ones, which Jaccard-thresholded dedup
     structurally misses (the union term dilutes the score). Directed
     pairs; exact integer set algebra — functions/dedup.py
-    containment_pairs. The final orderBy rides through propagate_caches
-    so the cached shingle frame's ownership survives to bench.py's
-    release (a bare .orderBy() returns a NEW DataFrame object without
-    the _sdp_caches attribute — the round-4 leak hole)."""
-    from smartdatapipeline_spark.cachetrack import propagate_caches
-
-    raw = DD.containment_pairs(_docs(spark, sf_dir))
-    return propagate_caches(raw, raw.orderBy("doc_a", "doc_b"))
+    containment_pairs."""
+    return DD.containment_pairs(_docs(spark, sf_dir)).orderBy("doc_a", "doc_b")
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -623,27 +617,23 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smoothed linear likelihood ratio. Every intermediate is an
     exact integer; the only doubles are four correctly-rounded casts +
     three IEEE ops, mirrored op-for-op by the oracle — bit-exact."""
-    from smartdatapipeline_spark.cachetrack import propagate_caches
     from smartdatapipeline_spark.functions.sampling import importance_weights
 
     d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    raw = importance_weights(d, F.col("lang") == "en")
-    return propagate_caches(raw, raw.orderBy("doc_id"))
+    return importance_weights(d, F.col("lang") == "en").orderBy("doc_id")
 
 
 def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DSIR selection step: top-100 docs by importance weight
     (deterministic id tiebreak) — the keep-list a target-domain
     curation run actually ships."""
-    from smartdatapipeline_spark.cachetrack import propagate_caches
     from smartdatapipeline_spark.functions.sampling import (
         importance_resample,
         importance_weights,
     )
 
     d = _docs(spark, sf_dir).select("doc_id", "text", "lang")
-    raw = importance_weights(d, F.col("lang") == "en")
-    return propagate_caches(raw, importance_resample(raw, 100))
+    return importance_resample(importance_weights(d, F.col("lang") == "en"), 100)
 
 
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,10 +675,9 @@ def q_crossmodal_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id in the testdata) with an agreement class per pair — the
     signal fusion step a production dedup pipeline runs before deciding
     what to drop."""
-    from smartdatapipeline_spark.cachetrack import propagate_caches
-
-    _tp_raw = DD.minhash_candidate_pairs(_docs(spark, sf_dir))
-    text_pairs = _tp_raw.select("doc_a", "doc_b", "est_jaccard")
+    text_pairs = DD.minhash_candidate_pairs(_docs(spark, sf_dir)).select(
+        "doc_a", "doc_b", "est_jaccard"
+    )
     emb_pairs = SIM.embedding_near_dup_pairs(
         _emb(spark, sf_dir), threshold=0.25, nbits=8
     ).select(
@@ -702,12 +691,9 @@ def q_crossmodal_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("est_jaccard").isNotNull(), "text_only")
         .otherwise("embedding_only")
     )
-    out = j.select(
+    return j.select(
         "doc_a", "doc_b", "est_jaccard", "cos_sim", agreement.alias("agreement")
     )
-    # the signature cache's ownership attribute does not survive the
-    # .select above — re-attach it so bench's release frees it per rep
-    return propagate_caches(_tp_raw, out)
 
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3220,13 +3206,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from smartdatapipeline_spark.functions.graph import triangle_count
 
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     # r14 opt (guide §2.4): ps feeds BOTH sides of the co-supply
     # self-join — uncached, the lineitem scan + distinct ran twice.
-    # Bounded at |distinct (part, supplier)| rows; ownership rides the
-    # returned frame via cachetrack (the triangle_count pattern).
+    # Bounded at |distinct (part, supplier)| rows; the caller releases
+    # it from the result's plan (the triangle_count pattern).
     ps = (
         li.select(F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s"))
         .distinct()
@@ -3263,7 +3247,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("_rn") <= 8)
         .select(F.col("sa").alias("src"), F.col("sb").alias("dst"))
     )
-    return track_cache(triangle_count(knn), ps)
+    return triangle_count(knn)
 
 
 def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4906,17 +4890,19 @@ def q_snapshot_analyze_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted) and matches the oracle straight off events."""
     from smartdatapipeline_spark.sources import snapstore as SS
 
-    root = _tmp_store("analyze", sf_dir)
+    root = _tmp_store("analyze2", sf_dir)
     if SS.find_commit_by_key(root, "az-done") is None:
         ev = (
             _events(spark, sf_dir)
             .filter(F.col("user_id").isNotNull())
             .withColumn("event_date", F.to_date("ts"))
         )
-        # legacy slices split by user range — NO stats recorded
+        # legacy slices split by user range — NO stats recorded; the
+        # split at 10 leaves both slices non-empty at every scale and
+        # puts the first wholly below the [10, 40] read range
         for key, cond in (
-            ("az-b1", F.col("user_id") < 75),
-            ("az-b2", F.col("user_id") >= 75),
+            ("az-b1", F.col("user_id") < 10),
+            ("az-b2", F.col("user_id") >= 10),
         ):
             SS.append(ev.filter(cond), root, "event_date", idempotency_key=key)
         SS.analyze_table(spark, root, ("user_id",), idempotency_key="az-done")

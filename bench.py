@@ -848,12 +848,17 @@ def main() -> None:
     from smartdatapipeline_spark.cachetrack import release_plan_caches
 
     errors: dict[str, str] = {}
+    # per query, the RDDs still persisted after its reps released their
+    # plans' caches (detail file only)
+    leaked_rdds: dict[str, int] = {}
+    jsc = spark.sparkContext._jsc
 
     def time_group(group: list[str]) -> tuple[dict[str, float], dict[str, float]]:
         med: dict[str, float] = {}
         mn: dict[str, float] = {}
         for name in group:
             reps: list[float] = []
+            pinned = set(jsc.getPersistentRDDs().keySet())
             for _ in range(RUNS):
                 t0 = time.perf_counter()
                 df = None
@@ -866,10 +871,11 @@ def main() -> None:
                     print(f"bench: {name} FAILED: {errors[name]}", file=sys.stderr)
                     break
                 finally:
-                    # cache bookkeeping, not query cost: operators that
-                    # cache intermediates hand ownership to the caller
+                    # cache bookkeeping, not query cost: the caller frees
+                    # what the result's plan reads
                     if df is not None:
                         release_plan_caches(df)
+            leaked_rdds[name] = len(set(jsc.getPersistentRDDs().keySet()) - pinned)
             if reps:
                 reps.sort()
                 med[name] = round(reps[len(reps) // 2], 4)
@@ -944,6 +950,7 @@ def main() -> None:
         "runs_per_query": RUNS,
         "n_queries": len(timings),
         "sf": sf_val,
+        "leaked_rdds": leaked_rdds,
         **({"streaming_detail": streaming_detail} if streaming_detail else {}),
         **({"errors": errors} if errors else {}),
     }

@@ -1,60 +1,59 @@
-"""Cache-lifetime bookkeeping for lazy-return operators.
+"""Release the persisted frames a plan reads.
 
-Operators that ``.cache()`` an intermediate frame but return a LAZY
-plan (``minhash_candidate_pairs``, ``dedup_pipeline``,
-``probe_dedup_index``, ``bigram_lm_features`` with an internal model)
-cannot unpersist internally — the cache is only populated/used when the
-caller runs an action. Ownership therefore transfers with the returned
-frame: the operator records its cached intermediates via
-``track_cache`` and the caller releases them with
-``release_plan_caches`` once the result is materialized (round-3
-ADVICE: unreleased signature caches pinned executor storage for the
-application lifetime). Eager operators (``build_dedup_index``)
-unpersist themselves and never appear here.
+Every frame an operator persists and hands out inside a lazy result is
+a leaf of that result's plan once Spark substitutes cached data: an
+``InMemoryRelation`` for a ``.cache()``, a ``LogicalRDD`` for a
+``localCheckpoint``. ``release_plan_caches`` reads the release set from
+there, so no operator records what it persisted, and a frame derived
+from an operator's result (a ``.select``, a join, an ``.orderBy``)
+releases exactly what the result would.
+
+The contract:
+
+- ``release_plan_caches(df)`` frees every cache and local checkpoint
+  ``df``'s plan reads, including any the caller made itself, and any
+  cache nested inside one of those caches.
+- Call it only once nothing reads them again: a freed cache is
+  recomputed on its next read, and a freed local checkpoint cannot be
+  read at all, because it keeps no lineage to recompute from.
+- Operators release whatever their returned plan does not read before
+  they return; what it does read, the caller releases through this
+  function after materializing the result.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
-def track_cache(out: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Attach ``cached`` frames to ``out`` for later release."""
-    existing = list(getattr(out, "_sdp_caches", ()))
-    out._sdp_caches = existing + list(cached)  # type: ignore[attr-defined]
-    return out
+def _leaves(plan) -> list:
+    seq = plan.collectLeaves()
+    return [seq.apply(i) for i in range(seq.size())]
 
 
-def propagate_caches(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Move cache ownership from ``src`` onto a frame DERIVED from it.
-
-    The ownership attribute rides on the exact DataFrame object, so any
-    transformation (``.select``, ``.filter``, a join) silently drops it
-    and ``release_plan_caches`` on the result becomes a no-op (round-4
-    ADVICE: the MinHash signature cache leaked per bench rep through
-    exactly this hole). Call this on every frame you transform after
-    receiving it from a cache-tracking operator."""
-    out = track_cache(out, *getattr(src, "_sdp_caches", ()))
-    src._sdp_caches = []  # type: ignore[attr-defined]
-    return out
+def _release(session, cache_manager, plan) -> None:
+    for leaf in _leaves(plan):
+        kind = leaf.getClass().getSimpleName()
+        if kind == "InMemoryRelation":
+            cached = leaf.cacheBuilder().logicalPlan()
+            cache_manager.uncacheQuery(session, cached, False, False)
+            # with the outer entry gone, the caches its own plan read
+            # surface as leaves of the substituted plan
+            _release(session, cache_manager, cache_manager.useCachedData(cached))
+        elif kind == "LogicalRDD":
+            leaf.rdd().unpersist(False)
 
 
 def release_plan_caches(df: DataFrame) -> None:
-    """Unpersist every intermediate cached while building ``df``'s plan
-    (no-op for plans that cached nothing). Call AFTER materializing."""
-    for c in getattr(df, "_sdp_caches", ()):
-        try:
-            c.unpersist()
-        except Exception:  # noqa: BLE001 — session may already be stopped
-            pass
-    df._sdp_caches = []  # type: ignore[attr-defined]
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Unpersist the RDD behind a ``localCheckpoint`` frame. Its blocks
-    otherwise stay pinned until a JVM GC lets Spark's ContextCleaner
-    notice the RDD is unreachable — on a shared session that can be many
-    calls later. Call once nothing will read ``df`` again: reading it
-    afterwards fails, because a local checkpoint keeps no lineage to
-    recompute from."""
-    df._jdf.logicalPlan().rdd().unpersist(False)
+    """Unpersist every cache and local checkpoint ``df``'s plan reads
+    (a no-op for plans that read none). Call AFTER materializing."""
+    try:
+        session = df.sparkSession._jsparkSession
+        _release(
+            session,
+            session.sharedState().cacheManager(),
+            df._jdf.queryExecution().withCachedData(),
+        )
+    except Py4JError:  # the session may already be stopped
+        pass

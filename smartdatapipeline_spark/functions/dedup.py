@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from smartdatapipeline_spark.cachetrack import release_plan_caches
 from smartdatapipeline_spark.functions.text import normalize_text, tokens
 
 P31 = 2_147_483_647  # 2^31 - 1 (prime)
@@ -34,12 +35,6 @@ P31 = 2_147_483_647  # 2^31 - 1 (prime)
 MINHASH_PARAMS: list[tuple[int, int]] = [
     (1 + 4 * i, 7 + 11 * i) for i in range(16)
 ]
-
-
-from smartdatapipeline_spark.cachetrack import (  # noqa: F401 — re-export
-    release_plan_caches,
-    track_cache as _track_cache,
-)
 
 
 def h60(col: Column) -> Column:
@@ -223,7 +218,7 @@ def minhash_candidate_pairs(
             .select("band", "bucket")
         )
         bb = bb.join(small, ["band", "bucket"])
-    return _track_cache(_bucket_pairs(sig, bb), sig)
+    return _bucket_pairs(sig, bb)
 
 
 def dedup_pipeline(
@@ -290,16 +285,13 @@ def dedup_pipeline(
     )
     nodes = df.select(F.col(id_col).alias("doc_id")).distinct()
     clusters = duplicate_clusters(edges, nodes)
-    return _track_cache(
-        clusters.select(
-            F.col("doc_id").alias(id_col),
-            "cluster",
-            # compare against the cluster frame's literal column — duplicate_
-            # clusters always emits `doc_id`; referencing `id_col` here broke
-            # every non-default id_col caller (round-3 ADVICE, medium)
-            (F.col("cluster") == F.col("doc_id")).alias("is_representative"),
-        ),
-        sig,
+    return clusters.select(
+        F.col("doc_id").alias(id_col),
+        "cluster",
+        # compare against the cluster frame's literal column — duplicate_
+        # clusters always emits `doc_id`; referencing `id_col` here broke
+        # every non-default id_col caller (round-3 ADVICE, medium)
+        (F.col("cluster") == F.col("doc_id")).alias("is_representative"),
     )
 
 
@@ -543,10 +535,8 @@ def probe_dedup_index(
     ``new_sig`` (r14): a precomputed ``minhash_signature`` frame for
     ``new_docs`` — callers that also APPEND signatures to the index
     (streaming ingest) pass it so the batch's text is hashed once, not
-    once for the probe and once for the index write. Ownership of a
-    passed frame stays with the caller (no cache tracking here)."""
-    owns_sig = new_sig is None
-    if owns_sig:
+    once for the probe and once for the index write."""
+    if new_sig is None:
         new_sig = minhash_signature(new_docs, id_col, text_col, k).cache()
     new_bb = minhash_bands(new_sig, bands, rows).withColumnRenamed(
         "doc_id", "new_id"
@@ -561,12 +551,11 @@ def probe_dedup_index(
         F.col("doc_id").alias("corpus_id"), F.col("sig").alias("_sc")
     )
     ns = new_sig.select(F.col("doc_id").alias("new_id"), F.col("sig").alias("_sn"))
-    out = (
+    return (
         hits.join(F.broadcast(ns), "new_id")
         .join(idx_sig, "corpus_id")
         .select("new_id", "corpus_id", _sig_agreement("_sn", "_sc").alias("est_jaccard"))
     )
-    return _track_cache(out, new_sig) if owns_sig else out
 
 
 def ngram_jaccard_pairs(
@@ -607,7 +596,7 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"))
-    out = (
+    return (
         inter.join(F.broadcast(sa), "doc_a")
         .join(F.broadcast(sb), "doc_b")
         .withColumn(
@@ -670,6 +659,7 @@ def build_cluster_index(
     by cluster so per-cluster consumers get run-length locality."""
     labels = duplicate_clusters(pairs, nodes, id_col, a_col, b_col)
     labels.sortWithinPartitions("cluster").write.mode("overwrite").parquet(path)
+    release_plan_caches(labels)
 
 
 def probe_cluster_index(spark, path: str) -> DataFrame:
@@ -1213,8 +1203,6 @@ def containment_pairs(
     self-join — the standard frequency guard that keeps the pair space
     near-linear; NULL disables it (exact, quadratic in the worst case).
     """
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     sh = (
         exploded_shingles(df, id_col, text_col, k)
         .filter(F.col("sh").isNotNull())
@@ -1237,8 +1225,8 @@ def containment_pairs(
         )
     # sh feeds the size agg AND both self-join sides: cache it so the
     # tokenize+hash+guard pipeline runs once, not per consumer (the
-    # weak-plan pattern round 6 fixed in graph/copurchase); ownership
-    # transfers to the caller via cachetrack
+    # weak-plan pattern round 6 fixed in graph/copurchase); the caller
+    # releases it from the result's plan
     sh = sh.cache()
     # sizes AFTER the frequency guard, so containment stays a true
     # fraction of the shingles that actually entered the join
@@ -1255,7 +1243,7 @@ def containment_pairs(
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"))
-    out = (
+    return (
         inter.join(F.broadcast(sa), "doc_a")
         .withColumn(
             "containment", F.col("n_inter") / F.col("n_a").cast("double")
@@ -1263,4 +1251,3 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("doc_a", "doc_b", "n_inter", "n_a", "containment")
     )
-    return track_cache(out, sh)

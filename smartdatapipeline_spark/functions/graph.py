@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smartdatapipeline_spark.cachetrack import release_checkpoint
+from smartdatapipeline_spark.cachetrack import release_plan_caches
 
 
 # round count of the most recent connected_components() call — probe /
@@ -210,7 +210,7 @@ def pagerank(
             superseded.append(ranks)
     if iterations:  # with no iteration the result still reads ``nodes``
         for ck in superseded:
-            release_checkpoint(ck)
+            release_plan_caches(ck)
     e.unpersist()
     deg.unpersist()
     return ranks
@@ -283,7 +283,8 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # each round's checkpoint supersedes the last: release the old one
-    # once the new one is materialized, so only the result stays pinned
+    # once the new one is materialized, so only the result's stays
+    # persisted, for the caller to release from the result's plan
     ckpt = labels
     rounds = 0
     for _round in range(max_iter):
@@ -321,7 +322,7 @@ def connected_components(
                 F.col("_prev"),
             )
         new_labels = cur.localCheckpoint(eager=True)
-        release_checkpoint(ckpt)
+        release_plan_caches(ckpt)
         ckpt = new_labels
         changed = (
             new_labels.filter(F.col("_label") != F.col("_prev")).limit(1).count()
@@ -329,7 +330,7 @@ def connected_components(
         labels = new_labels.drop("_prev")
         if changed == 0:
             break
-    release_checkpoint(both)
+    release_plan_caches(both)
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = rounds
     return labels.select(
@@ -408,12 +409,9 @@ def triangle_count(
     The canonical edge frame feeds BOTH sides of the wedge join AND the
     closing join (three consumers), so it is cached — otherwise the
     whole upstream derivation (often a heavy fact-table self-join) re-
-    runs up to 5×. The returned plan is lazy, so cache ownership rides
-    out via ``track_cache``; callers release after materializing
-    (bench.py does; see cachetrack.py).
+    runs up to 5×. The returned plan is lazy and reads the cache, so
+    callers release it with ``release_plan_caches`` after materializing.
     """
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -433,4 +431,4 @@ def triangle_count(
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
-    return track_cache(per_corner, canon)
+    return per_corner

@@ -304,8 +304,8 @@ def importance_weights(
     # join and tots, so without it the explode lineage runs 3x and
     # first-run codegen JIT-compiles 3 copies of the md5-lambda stage
     # (the bench-vs-probe dispersion adjudicated in r10 — see
-    # BENCH_ADJUDICATIONS.md r11 dsir entry). Ownership transfers to
-    # the caller via cachetrack (bench/check/probe release it).
+    # BENCH_ADJUDICATIONS.md r11 dsir entry). The result's plan reads
+    # it, so the caller releases it (bench/check/probe do).
     buckets = (
         feat.groupBy("_bk")
         .agg(
@@ -330,9 +330,7 @@ def importance_weights(
             ).alias("_B"),
         )
     )
-    from smartdatapipeline_spark.cachetrack import track_cache
-
-    out = (
+    return (
         df.select(F.col(id_col), target_pred.alias("is_target"))
         .join(scored, id_col, "left")
         .crossJoin(F.broadcast(tots))
@@ -345,7 +343,6 @@ def importance_weights(
             ).alias("weight"),
         )
     )
-    return track_cache(out, buckets)
 
 
 def importance_resample(

@@ -655,8 +655,6 @@ def basket_jaccard_pairs(
     Output: (id_a, id_b, n_common, size_a, size_b, jaccard), id_a <
     id_b, ordered by (jaccard desc, id_a, id_b), top_k rows.
     """
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     b = baskets.select(F.col(id_col).alias("_id"), F.col(item_col).alias("_it"))
     if max_block_size is not None:
         small_items = (
@@ -668,7 +666,7 @@ def basket_jaccard_pairs(
         b = b.join(small_items, "_it")
     # b feeds sizes + both sides of the intersection join (three
     # consumers over an often-expensive distinct fact derivation):
-    # cache it and hand ownership out on the lazy result (cachetrack).
+    # cache it; the lazy result reads it, so the caller releases it.
     b = b.cache()
     sizes = b.groupBy("_id").agg(F.count(F.lit(1)).alias("_sz"))
     l = b.select(F.col("_id").alias("id_a"), "_it")
@@ -681,7 +679,7 @@ def basket_jaccard_pairs(
     )
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_sz").alias("size_a"))
     sb = sizes.select(F.col("_id").alias("id_b"), F.col("_sz").alias("size_b"))
-    out = (
+    return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
         .select(
@@ -702,7 +700,6 @@ def basket_jaccard_pairs(
         )
         .limit(top_k)
     )
-    return track_cache(out, b)
 
 
 def quantize_embeddings(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:

@@ -487,15 +487,14 @@ def bigram_lm_score(
 
     Output: (id_col, n_bigrams, n_oov, oov_frac, mean_p).
     """
-    _own_model = None
     if model is None:
         # cache: the model frame feeds three consumers (bigram join,
         # w1-total join, vocab scalar) — uncached, each re-runs the
         # corpus explode + aggregation (measured 7 scans / 16 shuffles
-        # in the plan audit; cached it is one). Ownership of the cache
-        # transfers with the returned frame (cachetrack) — callers
-        # release via release_plan_caches after materializing.
-        model = _own_model = bigram_counts(df, text_col).cache()
+        # in the plan audit; cached it is one). The result's plan reads
+        # the cache, so callers release it via release_plan_caches after
+        # materializing.
+        model = bigram_counts(df, text_col).cache()
     vocab = model.agg(F.countDistinct("w2").alias("_v"))
     toks = df.select(
         F.col(id_col), tokens(F.col(text_col)).alias("_toks")
@@ -534,17 +533,12 @@ def bigram_lm_score(
         F.collect_list(F.struct(F.col("pos").alias("o"), F.col("_p").alias("t")))
     )
     total = F.aggregate(arr, F.lit(0.0), lambda a, x: a + x["t"])
-    out = scored.groupBy(id_col).agg(
+    return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("_oov").cast("bigint").alias("n_oov"),
         (F.sum("_oov") / F.count(F.lit(1))).alias("oov_frac"),
         (total / F.count(F.lit(1))).alias("mean_p"),
     )
-    if _own_model is not None:
-        from smartdatapipeline_spark.cachetrack import track_cache
-
-        out = track_cache(out, _own_model)
-    return out
 
 
 def lexical_diversity(

@@ -855,14 +855,12 @@ def growth_accounting(
     Output: (week, n_active, n_new, n_retained, n_resurrected,
     n_churned).
     """
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     week = lambda c: F.date_trunc("week", c).cast("date")  # noqa: E731
     # uw feeds FIVE consumers (first-seen, prior-week shift, the cur
     # join's left side, the churn shift, and the churn anti-join's
     # right side) — cache it so the events scan + distinct run once,
-    # not per consumer (r14, guide §2.4; ownership rides out via
-    # cachetrack, the containment_pairs pattern)
+    # not per consumer (r14, guide §2.4; the caller releases it from
+    # the result's plan)
     uw = (
         events.select(
             F.col(user_col).alias("_u"), week(F.col(ts_col)).alias("week")
@@ -894,7 +892,7 @@ def growth_accounting(
         .groupBy("week")
         .agg(F.count(F.lit(1)).alias("n_churned"))
     )
-    out = (
+    return (
         active.join(churned, "week", "left")
         .select(
             "week",
@@ -905,7 +903,6 @@ def growth_accounting(
             F.coalesce("n_churned", F.lit(0)).alias("n_churned"),
         )
     )
-    return track_cache(out, uw)
 
 
 def audience_overlap(
@@ -923,11 +920,9 @@ def audience_overlap(
     as exact integer set algebra. Output: (type_a, type_b, n_a, n_b,
     n_both, n_either, jaccard), type_a < type_b.
     """
-    from smartdatapipeline_spark.cachetrack import track_cache
-
     # basket feeds the size agg and BOTH intersection sides — cache it
-    # so the events scan + distinct run once (r14, guide §2.4; same
-    # ownership pattern as basket_jaccard_pairs)
+    # so the events scan + distinct run once (r14, guide §2.4; the
+    # caller releases it, as for basket_jaccard_pairs)
     basket = (
         events.select(user_col, F.col(type_col).alias("_t"))
         .distinct()
@@ -944,7 +939,7 @@ def audience_overlap(
     )
     sa = sizes.select(F.col("_t").alias("type_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("_t").alias("type_b"), F.col("n").alias("n_b"))
-    out = (
+    return (
         inter.join(F.broadcast(sa), "type_a")
         .join(F.broadcast(sb), "type_b")
         .select(
@@ -960,7 +955,6 @@ def audience_overlap(
             ).alias("jaccard"),
         )
     )
-    return track_cache(out, basket)
 
 
 def attribution_linear(

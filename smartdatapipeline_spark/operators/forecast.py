@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from smartdatapipeline_spark.cachetrack import track_cache
 
 MIN_POINTS = 14  # reference services/forecast.py:113
 
@@ -1194,7 +1193,7 @@ def ols_trend(
         .agg(F.sum("_y").alias("_y"))
         # consumed twice (first-day probe + xy), and column pruning
         # gives the probe its own exchange, so without the cache events
-        # scans twice; the lazy plan hands the cache to the caller
+        # scans twice; the caller releases it from the result's plan
         .cache()
     )
     first_day = daily.groupBy("metric").agg(F.min("_d").alias("_d0"))
@@ -1220,7 +1219,7 @@ def ols_trend(
         "double"
     )
     slope = num / F.nullif(den, F.lit(0.0))
-    out = sums.select(
+    return sums.select(
         "metric",
         F.col("_n").cast("long").alias("n_days"),
         slope.alias("slope"),
@@ -1229,7 +1228,6 @@ def ols_trend(
             / F.col("_n").cast("double")
         ).alias("intercept"),
     )
-    return track_cache(out, daily)
 
 
 def ewma_daily(
@@ -1363,8 +1361,8 @@ def theilsen_trend(
         .groupBy("metric", "_d")
         .agg(F.sum("_y").cast("double").alias("_y"))
         # consumed three times (pairs×2, n_days); AQE reuses the
-        # exchange for the pair sides only, so cache it and hand the
-        # cache out with the lazy plan — events scans once
+        # exchange for the pair sides only, so cache it (the caller
+        # releases it from the result's plan) — events scans once
         .cache()
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -1387,12 +1385,11 @@ def theilsen_trend(
         F.col("_rn") == F.greatest(F.ceil(F.lit(0.5) * F.col("_n")), F.lit(1))
     )
     days = daily.groupBy("metric").agg(F.count(F.lit(1)).alias("n_days"))
-    out = (
+    return (
         med.select("metric", F.col("_n").alias("n_pairs"), F.col("_s").alias("slope"))
         .join(F.broadcast(days), "metric")
         .select("metric", "n_days", "n_pairs", "slope")
     )
-    return track_cache(out, daily)
 
 
 def mann_kendall(
@@ -1426,8 +1423,8 @@ def mann_kendall(
         .groupBy("metric", "_d")
         .agg(F.sum("_y").cast("double").alias("_y"))
         # consumed four times (pairs×2, ties, n); AQE reuses the
-        # exchange for the pair sides only, so cache it and hand the
-        # cache out with the lazy plan — events scans once
+        # exchange for the pair sides only, so cache it (the caller
+        # releases it from the result's plan) — events scans once
         .cache()
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -1482,6 +1479,4 @@ def mann_kendall(
             ),
         )
     )
-    return track_cache(
-        joined.select("metric", "n_days", "s_stat", "tau", "var_s", "z"), daily
-    )
+    return joined.select("metric", "n_days", "s_stat", "tau", "var_s", "z")

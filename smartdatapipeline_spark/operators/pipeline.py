@@ -26,7 +26,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smartdatapipeline_spark.cachetrack import release_checkpoint
+from smartdatapipeline_spark.cachetrack import release_plan_caches
 from smartdatapipeline_spark.operators.kpi import run_daily_kpis
 from smartdatapipeline_spark.sources.ingest import (
     clean_rows,
@@ -364,7 +364,7 @@ def ingest_and_refresh(
                     partition_col="event_date",
                 )
         finally:
-            release_checkpoint(to_insert)
+            release_plan_caches(to_insert)
     stats["duplicate_rows"] = stats["ingested_rows"] - inserted
     if inserted:
         stats["refresh"] = refresh_gold_from_changes(spark, silver_path, gold_path)

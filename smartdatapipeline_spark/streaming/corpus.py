@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smartdatapipeline_spark.cachetrack import release_checkpoint
+from smartdatapipeline_spark.cachetrack import release_plan_caches
 from smartdatapipeline_spark.functions.dedup import (
     exact_dedup,
     minhash_bands,
@@ -91,9 +91,9 @@ def stream_corpus_ingest(
             .parquet(f"{index_path}/bands")
         )
         sig.write.mode("append").parquet(f"{index_path}/sigs")
-        # both checkpoints stay pinned until a JVM GC otherwise
-        release_checkpoint(survivors)
-        release_checkpoint(uniq_sig)
+        # sig reads both checkpoints, which stay pinned until a JVM GC
+        # otherwise
+        release_plan_caches(sig)
 
     return (
         docs_stream.writeStream.foreachBatch(ingest_batch)

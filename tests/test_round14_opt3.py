@@ -244,9 +244,11 @@ def test_hll_rollup_uncached_leaf(spark):
 
     rows = [(f"u{i % 37}", f"m{i % 3}", i % 5) for i in range(400)]
     df = spark.createDataFrame(rows, "k string, metric string, day int")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     out = hll_rollup(df, "k", dims=["metric", "day"])
-    assert not getattr(out, "_sdp_caches", ())
     got = out.collect()
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
     # leaf + per-metric + grand total, every grain present
     gids = {r["gid"] for r in got}
     assert gids == {0, 1, 3}

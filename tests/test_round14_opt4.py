@@ -102,9 +102,9 @@ def test_rfm_bounds_unchanged_by_batched_probe(spark):
 
 def test_graph_triangles_query_caches_ps_with_ownership(spark, tmp_path):
     # r14 opt: q_graph_triangles caches the distinct (part, supplier)
-    # frame feeding both sides of the co-supply self-join; ownership
-    # must ride the returned frame so the caller releases it (alongside
-    # triangle_count's own canonical-edge cache)
+    # frame feeding both sides of the co-supply self-join; the result's
+    # plan reads it (nested in triangle_count's own canonical-edge
+    # cache), so the caller's release frees both
     import os as _os
 
     import __spark_entry__ as E
@@ -114,13 +114,14 @@ def test_graph_triangles_query_caches_ps_with_ownership(spark, tmp_path):
         import pytest
 
         pytest.skip("sf0.001 testdata missing")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     out = E.q_graph_triangles(spark, sf_dir)
-    caches = getattr(out, "_sdp_caches", ())
-    assert len(caches) == 2  # triangle_count's canon + the ps frame
     out.collect()
-    assert all(c.is_cached for c in caches)
+    # triangle_count's canon cache, and the ps cache its plan reads
+    assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 2
     release_plan_caches(out)
-    assert not any(c.is_cached for c in caches)
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 def test_bm25_single_pass_matches_definitional_shape(spark):
     # the single-pass bm25 must reproduce the former postings-join

@@ -100,13 +100,14 @@ def test_minhash_caches_released(spark):
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
         "doc_id bigint, text string",
     )
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
     out = DD.minhash_candidate_pairs(df)
     assert out.count() >= 0
-    cached = list(getattr(out, "_sdp_caches"))
-    assert cached, "minhash plan should track its signature cache"
-    assert all(c.storageLevel.useMemory for c in cached)
+    assert set(jsc.getPersistentRDDs().keySet()) - before, (
+        "minhash plan should read its signature cache"
+    )
     release_plan_caches(out)
-    assert all(not c.storageLevel.useMemory for c in cached)
-    assert getattr(out, "_sdp_caches") == []
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
     # idempotent
     release_plan_caches(out)

@@ -1,5 +1,5 @@
 """Regression tests for the round-5 ADVICE findings and round-6 verdict
-items: cachetrack ownership transfer, partition_checksums NULL/
+items: cache release from an operator's result, partition_checksums NULL/
 transposition/separator discipline + empty-id_cols guard, the cached
 multi-consumer frames in triangle_count / basket_jaccard_pairs, and the
 interval_overlap_join multiplicity precondition."""
@@ -11,11 +11,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from smartdatapipeline_spark.cachetrack import (
-    propagate_caches,
-    release_plan_caches,
-    track_cache,
-)
+from smartdatapipeline_spark.cachetrack import release_plan_caches
 from smartdatapipeline_spark.operators.quality import partition_checksums
 
 TS = dt.datetime
@@ -24,42 +20,28 @@ TS = dt.datetime
 # ---------------------------------------------------------------- cachetrack
 
 
-def test_propagate_caches_transfers_and_clears(spark):
-    """ADVICE low: the leak fix (`propagate_caches`) had no dedicated
-    test — ownership must MOVE (src cleared, dst holding) so a release
-    on the derived frame frees the intermediates exactly once."""
-    inter = spark.range(10).cache()
-    src = spark.range(5)
-    src = track_cache(src, inter)
-    out = src.select((F.col("id") * 2).alias("id2"))
-    assert getattr(out, "_sdp_caches", []) == []  # transform drops it
-    out = propagate_caches(src, out)
-    assert list(out._sdp_caches) == [inter]
-    assert list(src._sdp_caches) == []  # moved, not copied
-    out.count()
-    assert inter.is_cached
-    release_plan_caches(out)
-    assert not inter.is_cached
-    assert list(out._sdp_caches) == []
-
-
-def test_track_cache_rides_out_of_operators(spark):
-    """triangle_count and basket_jaccard_pairs now cache their multi-
-    consumer intermediate and hand ownership to the caller; releasing
-    the result must unpersist it (no storage pinned past the action)."""
+def test_operator_caches_release_from_plan(spark):
+    """triangle_count and basket_jaccard_pairs cache their multi-
+    consumer intermediate inside the lazy result; releasing the result
+    must unpersist it (no storage pinned past the action)."""
     from smartdatapipeline_spark.functions.graph import triangle_count
     from smartdatapipeline_spark.functions.similarity import basket_jaccard_pairs
+
+    jsc = spark.sparkContext._jsc
+
+    def grown():
+        return set(jsc.getPersistentRDDs().keySet()) - before
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4)], "src int, dst int"
     )
+    before = set(jsc.getPersistentRDDs().keySet())
     tri = triangle_count(edges)
     got = {r["node"]: r["n_triangles"] for r in tri.collect()}
     assert got == {1: 1, 2: 1, 3: 1}
-    caches = list(tri._sdp_caches)
-    assert len(caches) == 1 and caches[0].is_cached
+    assert len(grown()) == 1
     release_plan_caches(tri)
-    assert not caches[0].is_cached
+    assert grown() == set()
 
     baskets = spark.createDataFrame(
         [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "c")],
@@ -68,10 +50,9 @@ def test_track_cache_rides_out_of_operators(spark):
     bj = basket_jaccard_pairs(baskets, "cust", "item", top_k=5)
     rows = bj.collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in rows] == [(1, 2, 1.0)]
-    caches = list(bj._sdp_caches)
-    assert len(caches) == 1 and caches[0].is_cached
+    assert len(grown()) == 1
     release_plan_caches(bj)
-    assert not caches[0].is_cached
+    assert grown() == set()
 
 
 # ---------------------------------------------- partition_checksums encoding

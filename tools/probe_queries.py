@@ -2,8 +2,10 @@
 registry queries (and/or streaming stages) with N warm reps each and
 print one JSON line — the evidence a BENCH_ADJUDICATIONS.md entry
 cites when deciding drift vs regression for a >25% mover. Each query
-also reports ``leaked_rdds``: how many more RDDs stay persisted after
-its reps than before them, each rep's plan caches released.
+also reports the leak gate's two counts, each rep's plan caches
+released: ``leaked_rdds``, how many more RDDs stay persisted after its
+reps than before them, and ``leaked_caches``, how many more CacheManager
+entries stay registered.
 
 Usage:
     python tools/probe_queries.py [--runs 5] [--sf-dir DIR]
@@ -30,6 +32,15 @@ import __spark_entry__ as E  # noqa: E402
 import bench  # noqa: E402
 from smartdatapipeline_spark.cachetrack import release_plan_caches  # noqa: E402
 from smartdatapipeline_spark.session import get_spark  # noqa: E402
+
+
+def cache_entries(spark) -> int:
+    """Entries registered in the session's CacheManager (its entry list
+    is private, so it is read by reflection)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
 
 
 def main() -> int:
@@ -61,6 +72,7 @@ def main() -> int:
             print(f"probe: no such query {name!r}", file=sys.stderr)
             continue
         pinned = set(jsc.getPersistentRDDs().keySet())
+        cached = cache_entries(spark)
         reps: list[float] = []
         try:
             for _ in range(args.runs):
@@ -82,6 +94,7 @@ def main() -> int:
             "max": round(reps[-1], 4),
             "runs": args.runs,
             "leaked_rdds": len(set(jsc.getPersistentRDDs().keySet()) - pinned),
+            "leaked_caches": cache_entries(spark) - cached,
         }
 
     if args.streaming:

@@ -28,7 +28,7 @@ from smartdatapipeline_spark.operators import anomaly as A
 from smartdatapipeline_spark.operators import forecast as FC
 from smartdatapipeline_spark.operators import kpi as K
 from smartdatapipeline_spark.operators import metrics as M
-from smartdatapipeline_spark.session import env_int, local_frame, read_events
+from smartdatapipeline_spark.session import local_frame, read_events
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -49,23 +49,11 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-grain agg 0.85→0.40 s. user_id is high-cardinality and
     near-uniform in this corpus (key_skew_report: no single user near
     the hot threshold), so the plain hash layout wins by measurement.
-
-    Skew insurance (r15; guide §2.5): a production deployment with a
-    bot user hot enough that ``skew.layout_salt(top1_share, N)`` fires
-    sets ``SPARK_GRAFT_EVENTS_SALT`` to that salt — the layout then
-    splits each user over up to ``salt`` partitions via a deterministic
-    ts-derived secondary hash key (``skew.salted_layout``), bounding
-    the largest task at ~top1_share/salt of the rows. Results are
-    unchanged either way (partitioning is not observable); user-grain
-    consumers pay one extra exchange, which is why the salt is opt-in
-    rather than always-on — pinned by
-    tests/test_round15_opt.py::test_salted_layout_bounds_hot_key."""
-    from smartdatapipeline_spark.functions.skew import salted_layout
-
-    df = read_events(spark, sf_dir)
-    salt = env_int("SPARK_GRAFT_EVENTS_SALT", minimum=0) or 0
-    return salted_layout(
-        df, spark.sparkContext.defaultParallelism, "user_id", salt, "ts"
+    A hot key would call for ``skew.salted_join`` at the join that
+    suffers, not a salted layout here: user-grain consumers would pay
+    one extra exchange for it."""
+    return read_events(spark, sf_dir).repartition(
+        spark.sparkContext.defaultParallelism, "user_id"
     )
 
 

@@ -15,8 +15,7 @@ boilerplate fingerprint) holds 10% of all rows.
 
 Each hot key's rows spread over S reducers; the small side grows ×S,
 which is the price — use it only for genuinely skewed keys
-(``key_skew_report`` below detects them; ``layout_salt`` and
-``salted_layout`` are the layout-side twin). Beyond AQE it is the tool
+(``key_skew_report`` below detects them). Beyond AQE it is the tool
 for aggregations-after-join, stream-static joins (no AQE) and sessions
 with AQE off.
 """
@@ -68,47 +67,6 @@ def salted_join(
         F.col("_saltl") == F.col("_saltr")
     )
     return sl.join(sr, on=cond, how=how).drop("_saltl", "_saltr")
-
-
-def layout_salt(
-    top1_share: float,
-    num_partitions: int,
-    factor: float = 4.0,
-    salt: int = 8,
-) -> int:
-    """Decide the LAYOUT salt for a hash repartition from a
-    ``key_skew_report`` row (r15; guide §2.5 skew): with a near-uniform
-    key the largest partition holds ~1/num_partitions of the rows; when
-    the hottest single key's share (``top1_share``) alone exceeds
-    ``factor``× that, one reducer owns the whole hot key — every
-    downstream per-task cost rides that straggler. Returns 0 (plain
-    hash layout) or ``salt``. The report is an offline pre-flight
-    diagnostic, so the decision costs no query-path pass."""
-    return salt if top1_share * num_partitions > factor else 0
-
-
-def salted_layout(
-    df: DataFrame,
-    num_partitions: int,
-    key: str,
-    salt: int,
-    salt_from: str,
-) -> DataFrame:
-    """Hash layout on ``key`` with a deterministic secondary salt
-    (r15; guide §2.5): ``repartition(N, key, pmod(xxhash64(salt_from),
-    salt))`` splits each hot key's rows over up to ``salt`` partitions
-    while keeping the layout retry-deterministic (the salt derives from
-    a row column, never ``rand()`` — SPARK-38388). ``salt <= 1`` is the
-    plain single-key hash layout. Trade-off: key-grain consumers lose
-    the exchange-reuse the plain layout gives them — use only when
-    ``layout_salt`` says the key is genuinely hot."""
-    if salt <= 1:
-        return df.repartition(num_partitions, key)
-    return df.repartition(
-        num_partitions,
-        F.col(key),
-        F.pmod(F.xxhash64(F.col(salt_from)), F.lit(salt)),
-    )
 
 
 def key_skew_report(

@@ -6,7 +6,8 @@
 touched day partitions (A1/A4) → the A7 stats dict. A user of the
 reference switches by pointing this at their raw frame. Silver, gold
 and the quarantine table all commit through the snapshot store
-(sources/snapstore.py), the repo's one commit mechanism.
+(sources/snapstore.py), the repo's one commit mechanism. It is the one
+ingest loop: ``streaming/ingest.py`` runs it on every micro-batch.
 
 r11 adds the scale-correct version of the reference's "ingest then
 recompute affected KPIs" loop (backend/app/routers/ingest.py:183-189,
@@ -253,7 +254,6 @@ def ingest_and_refresh(
     store: str = "snapshot",
     incremental: bool = True,
     quarantine_path: str | None = None,
-    silver_upsert: str = "antijoin",
 ) -> dict:
     """Ingest a raw frame and refresh the affected gold slices.
 
@@ -276,17 +276,6 @@ def ingest_and_refresh(
     ``True``: the POSIX lock+swap parquet sink and the full-silver
     gold recompute they once selected were removed, and any other
     value raises ``ValueError``.
-
-    ``silver_upsert="merge"`` (r12) routes the ON-CONFLICT-DO-NOTHING
-    dedup through the snapshot store's row-level ``merge`` instead of
-    the read→anti-join→append dance: the storage layer itself
-    guarantees key uniqueness (keys ``(source_id, ts, metric)``,
-    matching scoped to the batch's day partitions), reading only the
-    key columns of the key-range-intersecting files rather than ALL of
-    silver, and conflicting cleanly with concurrent same-day writers.
-    ``duplicate_rows`` comes off the merge commit's recorded row
-    counts. Results are identical to the default path by construction
-    (tests pin the equality).
 
     ``quarantine_path`` (r11): the reference DROPS invalid rows after
     50 capped warnings (services/ingestion.py:178-206) — fine at demo
@@ -313,10 +302,6 @@ def ingest_and_refresh(
             "gold recompute was removed; gold refreshes only from silver's "
             "change feed"
         )
-    if silver_upsert not in ("antijoin", "merge"):
-        raise ValueError(
-            f"silver_upsert must be 'antijoin' or 'merge', got {silver_upsert!r}"
-        )
     clean = clean_rows(raw, default_metric=default_metric).withColumn(
         "source_id", F.lit(source_id)
     )
@@ -331,40 +316,28 @@ def ingest_and_refresh(
         if n_bad:
             SS.append(bad, quarantine_path, partition_col=None)
 
-    if silver_upsert == "merge":
-        keys = ["source_id", "ts", "metric"]
-        batch = valid.dropDuplicates(keys).withColumn(
-            "event_date", F.to_date("ts")
-        )
-        v = SS.merge(
-            batch, silver_path, keys=keys, when_matched="ignore",
-            partition_col="event_date",
-        )
-        info = SS.commit_info(silver_path, v) or {}
-        inserted = info["added_rows"] if info.get("kind") == "merge" else 0
-    else:
-        existing = (
-            SS.read_table(spark, silver_path).drop("event_date")
-            if SS.table_version(silver_path) > 0
-            else None
-        )
-        to_insert, _ = upsert_clean_events(valid, existing)
-        # localCheckpoint: the count and the append (value-set scan,
-        # write, stats read-back) each evaluate the frame; the
-        # checkpoint runs the anti-join against silver once. Released
-        # right after the append: left to the ContextCleaner, its blocks
-        # outlive the call until a JVM GC happens to run.
-        to_insert = to_insert.localCheckpoint(eager=True)
-        try:
-            inserted = to_insert.count()
-            if inserted:
-                SS.append(
-                    to_insert.withColumn("event_date", F.to_date("ts")),
-                    silver_path,
-                    partition_col="event_date",
-                )
-        finally:
-            release_plan_caches(to_insert)
+    existing = (
+        SS.read_table(spark, silver_path).drop("event_date")
+        if SS.table_version(silver_path) > 0
+        else None
+    )
+    to_insert, _ = upsert_clean_events(valid, existing)
+    # localCheckpoint: the count and the append (value-set scan,
+    # write, stats read-back) each evaluate the frame; the
+    # checkpoint runs the anti-join against silver once. Released
+    # right after the append: left to the ContextCleaner, its blocks
+    # outlive the call until a JVM GC happens to run.
+    to_insert = to_insert.localCheckpoint(eager=True)
+    try:
+        inserted = to_insert.count()
+        if inserted:
+            SS.append(
+                to_insert.withColumn("event_date", F.to_date("ts")),
+                silver_path,
+                partition_col="event_date",
+            )
+    finally:
+        release_plan_caches(to_insert)
     stats["duplicate_rows"] = stats["ingested_rows"] - inserted
     if inserted:
         stats["refresh"] = refresh_gold_from_changes(spark, silver_path, gold_path)

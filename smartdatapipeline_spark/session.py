@@ -70,21 +70,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def env_int(name: str, minimum: int) -> int | None:
-    """Integer env knob ``name`` clamped to ``minimum``; None when unset
-    or empty. A value that is not an integer raises a ``ValueError``
-    naming the variable, instead of a bare ``int()`` error at some
-    distant call site."""
-    raw = os.environ.get(name, "").strip()
-    if not raw:
-        return None
-    try:
-        value = int(raw)
-    except ValueError:
-        raise ValueError(f"{name} must be an integer, got {raw!r}") from None
-    return max(minimum, value)
-
-
 def stream_state_partitions(
     rows_per_batch: int,
     cpus: int | None = None,

@@ -1908,21 +1908,9 @@ def read_table(
         if total_live == 0:
             # The table EXISTS but holds no live files (every row was
             # deleted/overwritten away): an empty frame is the correct
-            # answer. Schema comes from the newest retained version
-            # that still has a readable file; only a table with no
-            # usable history anywhere raises.
-            commits, _ = _list_log(root)
-            for v in reversed([c for c in commits if c <= target]):
-                old_live, _ = _split_dvs(_snapshot(root, v)[1])
-                for e in old_live:
-                    if os.path.isdir(os.path.join(root, e["path"])):
-                        return spark.read.parquet(
-                            os.path.join(root, e["path"])
-                        ).limit(0)
-            raise NoSuchTableError(
-                f"snapshot has no live files under {root!r} and no "
-                "retained historical batch to derive a schema from"
-            )
+            # answer, with the schema of the newest retained version
+            # that still has a readable file.
+            return _empty_like(spark, root, target)
         # The table exists — pruning just matched nothing. An empty
         # frame with the table's schema is the correct answer, not an
         # exception (r11 ADVICE: a pruned read of a valid-but-empty
@@ -2420,14 +2408,20 @@ def table_changes(
 
 def _empty_like(spark: SparkSession, root: str, version: int | None) -> DataFrame:
     """Empty frame with the table's schema, derived from any retained
-    batch (newest snapshot first, walking history for emptied tables)."""
+    batch (newest snapshot first, walking history for emptied tables).
+    Each version's manifest is read as its ``path`` and ``stats``
+    columns, never pythonized whole; only a stats string that mentions
+    ``__dv__`` is parsed, to skip deletion-vector sidecars. Raises
+    ``NoSuchTableError`` when no version has a readable data batch."""
     commits, _ = _list_log(root)
     target = commits[-1] if version is None else version
     for v in reversed([c for c in commits if c <= target]):
-        live, _ = _split_dvs(_snapshot(root, v)[1])
-        for e in live:
-            if os.path.isdir(os.path.join(root, e["path"])):
-                return spark.read.parquet(os.path.join(root, e["path"])).limit(0)
+        t = _manifest(root, v)[1].select(["path", "stats"]).sort_by("path")
+        for path, stats in zip(t["path"].to_pylist(), t["stats"].to_pylist()):
+            if stats and '"__dv__"' in stats and json.loads(stats).get("__dv__"):
+                continue
+            if os.path.isdir(os.path.join(root, path)):
+                return spark.read.parquet(os.path.join(root, path)).limit(0)
     raise NoSuchTableError(
         f"no retained batch under {root!r} to derive a schema from"
     )

@@ -2,21 +2,22 @@
 
 The reference's ingest is request-scoped batch: parse → clean → upsert →
 recompute affected KPIs (routers/ingest.py:183-189,301-306). The
-streaming analog reproduces that loop continuously:
+streaming analog runs that same request loop once per micro-batch:
 
-    readStream(files|kafka) → clean_rows → watermarked dedup →
-    foreachBatch: anti-join upsert silver + recompute affected gold days
+    readStream(files|kafka) → foreachBatch: ingest_and_refresh
 
-- ``withWatermark`` bounds the dedup state exactly like the reference's
-  UNIQUE constraint bounds re-ingest: duplicates within the late-data
-  horizon are dropped by ``dropDuplicates`` state; older re-sends are
-  caught by the anti-join against stored silver inside foreachBatch.
-- Each micro-batch recomputes gold ONLY for the (metric_date) partitions
-  it touched — the streaming twin of "recompute affected (source,
-  metric) pairs per request".
+- ``operators/pipeline.py::ingest_and_refresh`` is the one ingest loop:
+  clean, upsert silver ON CONFLICT DO NOTHING, refresh the touched gold
+  days from silver's change feed. Silver, gold and the dead-letter
+  table are snapshot-store tables (sources/snapstore.py); read them
+  with ``snapstore.read_table``.
+- The stream holds no watermark state. Dedup is the upsert's: duplicates
+  within a micro-batch are dropped, and the anti-join against committed
+  silver drops re-sends from any earlier batch, however late — so a
+  replay of the same files (a lost checkpoint) adds no silver row.
 
-At cluster scale this runs with exactly-once file sinks per micro-batch
-(parquet + checkpointing); state size = O(events within the watermark).
+The checkpoint records which files each micro-batch consumed; the
+snapshot store's commits are the sinks.
 """
 
 from __future__ import annotations
@@ -24,8 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smartdatapipeline_spark.operators.kpi import run_daily_kpis
-from smartdatapipeline_spark.sources.ingest import clean_rows
+from smartdatapipeline_spark.operators.pipeline import ingest_and_refresh
 
 
 def stream_csv_ingest(
@@ -36,22 +36,18 @@ def stream_csv_ingest(
     checkpoint: str,
     schema: str = "timestamp string, value string, metric string",
     default_metric: str | None = "events_total",
-    watermark: str = "1 day",
     source_id: int = 1,
     dead_letter_path: str | None = None,
 ):
     """File-source streaming ingest. Returns the started StreamingQuery.
 
-    Every micro-batch is the reference's request loop: clean → dedup →
-    append silver → recompute the touched gold partitions.
+    Every micro-batch is one ``ingest_and_refresh`` call over the raw
+    rows: clean → upsert silver → refresh the touched gold days.
 
     ``dead_letter_path``: when set, invalid rows are QUARANTINED there
-    (parquet, with their ``reason``) instead of silently dropped — the
-    dead-letter-queue pattern; the reference only counts its skipped
-    rows in capped warning strings (P4). In this mode within-batch
-    dedup moves inside ``foreachBatch`` (bad rows may have no event
-    time, which watermarked stream state can't carry); cross-batch
-    dedup stays the silver anti-join either way.
+    (a snapshot table, with their ``reason``) instead of silently
+    dropped — the dead-letter-queue pattern; the reference only counts
+    its skipped rows in capped warning strings (P4).
     """
     raw = (
         spark.readStream.schema(schema)
@@ -59,78 +55,16 @@ def stream_csv_ingest(
         .option("maxFilesPerTrigger", 16)
         .csv(input_dir)
     )
-    cleaned = clean_rows(raw, default_metric=default_metric).withColumn(
-        "source_id", F.lit(source_id)
-    )
-    if dead_letter_path is None:
-        cleaned = (
-            cleaned.filter(F.col("_warn").isNull())
-            .drop("_warn")
-            .withWatermark("ts", watermark)
-            .dropDuplicates(["source_id", "ts", "metric"])
-        )
 
     def upsert_batch(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        if batch.isEmpty():
-            return
-        # both caches are micro-batch-scoped: released in the finally
-        # below (the old single trailing unpersist leaked the first cache
-        # on the dead-letter path and both on the empty-batch early return)
-        _caches = [batch.cache()]
-        try:
-            _upsert_batch_cached(batch, batch_id, spark_b, _caches)
-        finally:
-            for c in _caches:
-                c.unpersist()
-
-    def _upsert_batch_cached(batch, batch_id, spark_b, _caches):
-        import os
-
-        if dead_letter_path is not None:
-            (
-                batch.filter(F.col("_warn").isNotNull())
-                .withColumnRenamed("_warn", "reason")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(dead_letter_path)
-            )
-            batch = (
-                batch.filter(F.col("_warn").isNull())
-                .drop("_warn")
-                .dropDuplicates(["source_id", "ts", "metric"])
-            ).cache()
-            _caches.append(batch)
-            if batch.isEmpty():
-                return
-        # S8 upsert: anti-join against stored silver (cross-batch dedup
-        # beyond the watermark horizon)
-        if os.path.exists(silver_path):
-            existing = spark_b.read.parquet(silver_path)
-            to_insert = batch.join(
-                existing.select("source_id", "ts", "metric"),
-                ["source_id", "ts", "metric"],
-                "left_anti",
-            )
-        else:
-            to_insert = batch
-        to_insert.write.mode("append").parquet(silver_path)
-        # recompute gold ONLY for the touched days (the reference's
-        # "recompute affected metrics" loop, routers/ingest.py:301-306)
-        touched = [r["d"] for r in batch.select(F.to_date("ts").alias("d")).distinct().collect()]
-        silver = spark_b.read.parquet(silver_path).filter(
-            F.to_date("ts").isin(touched)
-        )
-        gold = run_daily_kpis(silver)
-        (
-            gold.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("metric_date")
-            .parquet(gold_path)
+        ingest_and_refresh(
+            batch.sparkSession, batch, silver_path, gold_path,
+            default_metric=default_metric, source_id=source_id,
+            quarantine_path=dead_letter_path,
         )
 
     return (
-        cleaned.writeStream.foreachBatch(upsert_batch)
+        raw.writeStream.foreachBatch(upsert_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -144,15 +78,16 @@ def kafka_events_stream(
     value_schema: str = "timestamp string, value string, metric string",
     starting_offsets: str = "latest",
 ) -> DataFrame:
-    """Kafka source → cleaned event stream (the cluster ingest path; the
-    file source above is the test/demo path — both feed the SAME
-    clean/dedup/upsert pipeline).
+    """Kafka source → parsed raw event stream (the cluster ingest path;
+    the file source above is the test/demo path — both feed the SAME
+    ``ingest_and_refresh`` loop).
 
-    Returns the cleaned streaming DataFrame; the caller wires it to
-    ``writeStream.foreachBatch`` exactly like ``stream_csv_ingest``.
-    Requires the spark-sql-kafka package on the cluster (not in this
-    container — no broker to test against), so any failure surfaces at
-    ``load()`` with Spark's own missing-data-source error.
+    Returns the parsed, uncleaned streaming DataFrame; the caller wires
+    it to ``writeStream.foreachBatch`` exactly like
+    ``stream_csv_ingest``, whose micro-batch body cleans the rows.
+    Requires the spark-sql-kafka package on the cluster (pyspark does
+    not bundle it, and the tests run no broker), so any failure surfaces
+    at ``load()`` with Spark's own missing-data-source error.
     """
     raw = (
         spark.readStream.format("kafka")
@@ -161,7 +96,6 @@ def kafka_events_stream(
         .option("startingOffsets", starting_offsets)
         .load()
     )
-    parsed = raw.select(
+    return raw.select(
         F.from_json(F.col("value").cast("string"), value_schema).alias("j")
     ).select("j.*")
-    return clean_rows(parsed)

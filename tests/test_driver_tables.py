@@ -1,11 +1,12 @@
-"""Driver-built tables, session conf writes and session env knobs.
+"""Driver-built tables, session conf writes and the ingest loop's writes.
 
 ``session.local_frame`` is the one route from a Python list to a
 DataFrame in the library: a JVM-only ``LocalRelation``, so a UDF-free
 query never forks ``pyspark.daemon`` or a Python worker. The source
 scans below keep every other route (``createDataFrame`` over a list or
-RDD, ``parallelize``) out of the package and the query registry, and
-keep library code from writing session conf.
+RDD, ``parallelize``) out of the package and the query registry, keep
+library code from writing session conf, and keep the ingest loop
+committing only through the snapshot store.
 """
 from __future__ import annotations
 
@@ -16,7 +17,7 @@ import struct
 
 import pytest
 
-from smartdatapipeline_spark.session import env_int, local_frame
+from smartdatapipeline_spark.session import local_frame
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -143,29 +144,31 @@ def test_only_read_events_writes_session_conf():
     assert not offenders, "library code writes session conf: " + ", ".join(offenders)
 
 
-def test_env_int_unset_empty_and_clamped(monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_TEST_KNOB", raising=False)
-    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) is None
-    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", " ")
-    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) is None
-    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", " 12 ")
-    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=1) == 12
-    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", "-3")
-    assert env_int("SPARK_GRAFT_TEST_KNOB", minimum=0) == 0
+#: every way to start a ``DataFrameWriter`` chain, spelled as the scan
+#: sees it (``df.write.mode(...)`` is ``write.mode``)
+_WRITER_CALLS = {
+    f"write.{m}"
+    for m in (
+        "mode", "format", "option", "options", "partitionBy", "bucketBy",
+        "sortBy", "save", "saveAsTable", "insertInto", "parquet", "csv",
+        "json", "orc", "text",
+    )
+} | {"writeTo"}
 
 
-@pytest.mark.parametrize("value", ["abc", "2.5", "4k"])
-def test_env_int_rejects_non_integers_naming_the_variable(monkeypatch, value):
-    monkeypatch.setenv("SPARK_GRAFT_TEST_KNOB", value)
-    with pytest.raises(ValueError, match="SPARK_GRAFT_TEST_KNOB"):
-        env_int("SPARK_GRAFT_TEST_KNOB", minimum=1)
-
-
-def test_events_salt_knob(spark, monkeypatch):
-    import __spark_entry__ as E
-
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_SALT", "-2")
-    assert "user_id" in E._events(spark, E.SF0001).columns
-    monkeypatch.setenv("SPARK_GRAFT_EVENTS_SALT", "two")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_EVENTS_SALT"):
-        E._events(spark, E.SF0001)
+def test_ingest_loop_commits_only_through_the_snapshot_store():
+    """The batch ingest (``operators/pipeline.py``) and the streaming
+    ingest (``streaming/ingest.py``) are one loop, and it commits silver,
+    gold and the dead-letter table only through the snapshot store: no
+    ``DataFrameWriter`` call of its own."""
+    loop = (
+        "smartdatapipeline_spark/operators/pipeline.py",
+        "smartdatapipeline_spark/streaming/ingest.py",
+    )
+    _, offenders = _scan(_WRITER_CALLS, set())
+    assert any(
+        o.startswith("smartdatapipeline_spark/sources/snapstore.py")
+        for o in offenders
+    ), "the scan no longer finds the snapshot store's own writer"
+    in_loop = [o for o in offenders if o.startswith(loop)]
+    assert not in_loop, "the ingest loop writes around the snapshot store: " + ", ".join(in_loop)

@@ -768,6 +768,27 @@ def test_pruned_read_of_existing_table_returns_empty(spark, tmp_path):
         SS.read_table(spark, str(tmp_path / "nope"))
 
 
+def test_emptied_table_reads_empty_with_its_schema(spark, tmp_path):
+    """A table whose partitions were all deleted reads as zero rows with
+    its original schema, at the latest version and at an older emptied
+    one. The deletion-vector sidecar that outlives the partition delete
+    is never taken as the schema source."""
+    root = str(tmp_path / "t")
+    SS.append(
+        _df(spark, [("2024-01-01", "a", 1), ("2024-01-02", "b", 2)]), root, "d"
+    )
+    v_emptied = SS.delete_partitions(spark, root, "d", ["2024-01-01", "2024-01-02"])
+    SS.append(_df(spark, [("2024-01-03", "c", 3), ("2024-01-03", "d", 4)]), root, "d")
+    SS.delete_where(spark, root, "v = 4", mode="dv")
+    SS.delete_partitions(spark, root, "d", ["2024-01-03"])
+    assert SS.dv_debt(root)["sidecars"] == 1
+    want = _df(spark, []).schema
+    for version in (None, v_emptied):
+        empty = SS.read_table(spark, root, version=version)
+        assert empty.schema == want
+        assert empty.count() == 0
+
+
 def test_optimize_zorder_enables_column_skipping(spark, tmp_path):
     """OPTIMIZE ZORDER (r11): ingest-order batches each span the full
     value range (column_range skips nothing); after a z-ordered

@@ -9,6 +9,7 @@ import time
 
 import pytest
 
+from smartdatapipeline_spark.sources import snapstore as SS
 from smartdatapipeline_spark.streaming.ingest import stream_csv_ingest
 
 
@@ -28,7 +29,7 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
     q = stream_csv_ingest(spark, str(inp), silver, gold, ckpt)
     q.awaitTermination(120)
 
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold).collect()}
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold).collect()}
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 30.0
     assert out[dt.date(2025, 1, 1)]["value_count"] == 2  # bad row skipped
 
@@ -41,11 +42,67 @@ def test_stream_ingest_end_to_end(spark, tmp_path):
     q2 = stream_csv_ingest(spark, str(inp), silver, gold, ckpt)
     q2.awaitTermination(120)
 
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold).collect()}
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold).collect()}
     # duplicate dropped by anti-join; only the new event added
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 35.0
     assert out[dt.date(2025, 1, 1)]["value_count"] == 3
-    assert spark.read.parquet(silver).count() == 3
+    assert SS.read_table(spark, silver).count() == 3
+
+
+def test_stream_ingest_matches_batch_ingest_and_replays_safely(spark, tmp_path):
+    """The stream's micro-batch IS ``ingest_and_refresh``: two files fed
+    as two stream runs on one checkpoint leave silver and gold identical
+    to two batch calls. A replay of both files under a fresh checkpoint
+    adds no silver row and leaves gold unchanged."""
+    from smartdatapipeline_spark.operators.pipeline import ingest_and_refresh
+
+    schema = "timestamp string, value string, metric string"
+    files = [
+        "timestamp,value,metric\n"
+        "2025-01-01T00:00:00Z,10,m\n"
+        "2025-01-01T01:00:00Z,20,n\n"
+        "2025-01-01T01:00:00Z,20,n\n"
+        "bad-ts,99,m\n",
+        "timestamp,value,metric\n"
+        "2025-01-01T00:00:00Z,10,m\n"
+        "2025-01-02T03:00:00Z,5,m\n"
+        "2025-01-02T04:00:00Z,7,\n",
+    ]
+    inp = tmp_path / "par_in"
+    inp.mkdir()
+    s_silver, s_gold = str(tmp_path / "s_silver"), str(tmp_path / "s_gold")
+    b_silver, b_gold = str(tmp_path / "b_silver"), str(tmp_path / "b_gold")
+    for i, text in enumerate(files):
+        (inp / f"f{i}.csv").write_text(text)
+        stream_csv_ingest(
+            spark, str(inp), s_silver, s_gold, str(tmp_path / "ckpt")
+        ).awaitTermination(120)
+        raw = (
+            spark.read.schema(schema).option("header", True)
+            .csv(str(inp / f"f{i}.csv"))
+        )
+        ingest_and_refresh(
+            spark, raw, b_silver, b_gold, default_metric="events_total"
+        )
+
+    def rows(root):
+        df = SS.read_table(spark, root)
+        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+    silver, gold = rows(s_silver), rows(s_gold)
+    assert silver == rows(b_silver)
+    assert gold == rows(b_gold)
+    assert len(silver) == 4  # in-batch dup, cross-file dup, bad row dropped
+    days = SS.read_table(spark, s_gold).select("metric_date").distinct().collect()
+    assert {r[0] for r in days} == {dt.date(2025, 1, 1), dt.date(2025, 1, 2)}
+
+    v = SS.table_version(s_silver)
+    stream_csv_ingest(
+        spark, str(inp), s_silver, s_gold, str(tmp_path / "ckpt_fresh")
+    ).awaitTermination(120)
+    assert SS.table_version(s_silver) == v
+    assert rows(s_silver) == silver
+    assert rows(s_gold) == gold
 
 
 def test_windowed_kpis_stream_matches_batch(spark, tmp_path):
@@ -380,7 +437,7 @@ def test_stream_corpus_ingest_incremental_dedup(spark, tmp_path):
 
 
 def test_stream_ingest_dead_letter_quarantine(spark, tmp_path):
-    """Dead-letter mode: invalid rows land in the quarantine parquet
+    """Dead-letter mode: invalid rows land in the quarantine table
     with their reason; valid rows flow to silver/gold unchanged."""
     inp = tmp_path / "dl_in"
     inp.mkdir()
@@ -401,10 +458,10 @@ def test_stream_ingest_dead_letter_quarantine(spark, tmp_path):
         spark, str(inp), silver, gold, ckpt, dead_letter_path=dl
     )
     q.awaitTermination(120)
-    out = {r["metric_date"]: r for r in spark.read.parquet(gold).collect()}
+    out = {r["metric_date"]: r for r in SS.read_table(spark, gold).collect()}
     assert out[dt.date(2025, 1, 1)]["value_sum"] == 15.0
     assert out[dt.date(2025, 1, 1)]["value_count"] == 2  # dup dropped too
-    quarantined = spark.read.parquet(dl).collect()
+    quarantined = SS.read_table(spark, dl).collect()
     assert len(quarantined) == 2
     assert all(r["reason"] is not None for r in quarantined)
 

@@ -260,7 +260,7 @@ def ingest_and_refresh(
     Returns the reference's stats contract (services/ingestion.py:277-286)
     plus ``duplicate_rows`` (rows dropped by the ON-CONFLICT-DO-NOTHING
     upsert, reference :224-226) and ``refresh`` (the
-    ``refresh_gold_from_changes`` result) when rows were inserted.
+    ``refresh_gold_from_changes`` result).
 
     Both tables are snapshot-committed (sources/snapstore.py): silver
     takes blind appends carrying a materialized ``event_date``
@@ -302,32 +302,42 @@ def ingest_and_refresh(
             "gold recompute was removed; gold refreshes only from silver's "
             "change feed"
         )
-    clean = clean_rows(raw, default_metric=default_metric).withColumn(
-        "source_id", F.lit(source_id)
+    # localCheckpoint: the two stats jobs, the quarantine append and
+    # the silver anti-join each read the cleaned batch; the checkpoint
+    # parses the raw rows once. Released as soon as the insert set is
+    # materialized.
+    clean = (
+        clean_rows(raw, default_metric=default_metric)
+        .withColumn("source_id", F.lit(source_id))
+        .localCheckpoint(eager=True)
     )
-    stats = ingest_stats_from_clean(clean)
-    valid = clean.filter(F.col("_warn").isNull()).drop("_warn")
-    if quarantine_path is not None:
-        bad = clean.filter(F.col("_warn").isNotNull()).withColumnRenamed(
-            "_warn", "reason"
+    try:
+        stats = ingest_stats_from_clean(clean)
+        if quarantine_path is not None:
+            stats["quarantined_rows"] = stats["skipped_rows"]
+            if stats["skipped_rows"]:
+                bad = clean.filter(F.col("_warn").isNotNull())
+                SS.append(
+                    bad.withColumnRenamed("_warn", "reason"),
+                    quarantine_path,
+                    partition_col=None,
+                )
+        existing = (
+            SS.read_table(spark, silver_path).drop("event_date")
+            if SS.table_version(silver_path) > 0
+            else None
         )
-        n_bad = bad.count()
-        stats["quarantined_rows"] = n_bad
-        if n_bad:
-            SS.append(bad, quarantine_path, partition_col=None)
-
-    existing = (
-        SS.read_table(spark, silver_path).drop("event_date")
-        if SS.table_version(silver_path) > 0
-        else None
-    )
-    to_insert, _ = upsert_clean_events(valid, existing)
-    # localCheckpoint: the count and the append (value-set scan,
-    # write, stats read-back) each evaluate the frame; the
-    # checkpoint runs the anti-join against silver once. Released
-    # right after the append: left to the ContextCleaner, its blocks
-    # outlive the call until a JVM GC happens to run.
-    to_insert = to_insert.localCheckpoint(eager=True)
+        valid = clean.filter(F.col("_warn").isNull()).drop("_warn")
+        # localCheckpoint: the count and the append (value-set scan,
+        # write, stats read-back) each evaluate the frame; the
+        # checkpoint runs the anti-join against silver once. Released
+        # right after the append: left to the ContextCleaner, its blocks
+        # outlive the call until a JVM GC happens to run.
+        to_insert = upsert_clean_events(valid, existing)[0].localCheckpoint(
+            eager=True
+        )
+    finally:
+        release_plan_caches(clean)
     try:
         inserted = to_insert.count()
         if inserted:
@@ -339,6 +349,9 @@ def ingest_and_refresh(
     finally:
         release_plan_caches(to_insert)
     stats["duplicate_rows"] = stats["ingested_rows"] - inserted
-    if inserted:
-        stats["refresh"] = refresh_gold_from_changes(spark, silver_path, gold_path)
+    # refresh even when nothing was inserted: a call that crashed after
+    # its silver append and before this refresh is retried as a batch of
+    # duplicates, and only the change feed still names its days. With
+    # gold current this is one log read.
+    stats["refresh"] = refresh_gold_from_changes(spark, silver_path, gold_path)
     return stats

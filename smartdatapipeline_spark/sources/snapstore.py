@@ -445,6 +445,25 @@ def _snapshot_meta(root: str, version: int | None = None) -> tuple[int, set[str]
     return target, _txn_keys(meta, tail)
 
 
+def _dv_rows(t: pa.Table) -> tuple[np.ndarray, list[dict]]:
+    """``(mask of the manifest rows that are deletion-vector sidecars,
+    those sidecar entries sorted by path)``. A cheap vectorized
+    substring probe on the stats JSON pre-filters candidates, then each
+    candidate is PARSED and re-checked with ``_is_dv`` — a data entry
+    whose tracked min/max string value is literally ``__dv__``
+    serializes as '"__dv__"' and must stay a data entry, not vanish as
+    a phantom sidecar (r13 ADVICE: silent data loss on a pathological
+    but legal value)."""
+    probe = pc.fill_null(pc.match_substring(t["stats"], '"__dv__"'), False)
+    idx = np.flatnonzero(probe.to_numpy(zero_copy_only=False))
+    cand = _entries(t.take(idx))
+    is_dv = np.array([_is_dv(e) for e in cand], dtype=bool)
+    mask = np.zeros(t.num_rows, dtype=bool)
+    mask[idx[is_dv]] = True
+    dvs = sorted((e for e, d in zip(cand, is_dv) if d), key=lambda e: e["path"])
+    return mask, dvs
+
+
 def _snapshot_for_read(
     root: str,
     version: int | None,
@@ -466,19 +485,8 @@ def _snapshot_for_read(
     Column-range stats and null-count pruning then run on the (small)
     survivor set."""
     target, t, _ = _manifest(root, version)
-    # split sidecars out: a cheap vectorized substring probe on the
-    # stats JSON pre-filters candidates, then each candidate is PARSED
-    # and re-checked with _is_dv — a data entry whose tracked min/max
-    # string value is literally ``__dv__`` serializes as '"__dv__"' and
-    # must stay in the data table, not vanish as a phantom sidecar
-    # (r13 ADVICE: silent data loss on a pathological but legal value)
-    probe = pc.fill_null(pc.match_substring(t["stats"], '"__dv__"'), False)
-    idx = np.flatnonzero(probe.to_numpy(zero_copy_only=False))
-    cand = _entries(t.take(idx))
-    is_dv = np.array([_is_dv(e) for e in cand], dtype=bool)
-    dvs = sorted((e for e, d in zip(cand, is_dv) if d), key=lambda e: e["path"])
-    keep = np.ones(t.num_rows, dtype=bool)
-    keep[idx[is_dv]] = False
+    is_dv, dvs = _dv_rows(t)
+    keep = ~is_dv
     total_live = int(keep.sum())
     sample = pc.min(t["path"].filter(pa.array(keep))).as_py()
     if partition_values is not None:
@@ -2409,17 +2417,16 @@ def table_changes(
 def _empty_like(spark: SparkSession, root: str, version: int | None) -> DataFrame:
     """Empty frame with the table's schema, derived from any retained
     batch (newest snapshot first, walking history for emptied tables).
-    Each version's manifest is read as its ``path`` and ``stats``
-    columns, never pythonized whole; only a stats string that mentions
-    ``__dv__`` is parsed, to skip deletion-vector sidecars. Raises
-    ``NoSuchTableError`` when no version has a readable data batch."""
+    Each version's manifest stays an Arrow table: ``_dv_rows`` drops
+    the deletion-vector sidecars and only the data paths are
+    pythonized. Raises ``NoSuchTableError`` when no version has a
+    readable data batch."""
     commits, _ = _list_log(root)
     target = commits[-1] if version is None else version
     for v in reversed([c for c in commits if c <= target]):
-        t = _manifest(root, v)[1].select(["path", "stats"]).sort_by("path")
-        for path, stats in zip(t["path"].to_pylist(), t["stats"].to_pylist()):
-            if stats and '"__dv__"' in stats and json.loads(stats).get("__dv__"):
-                continue
+        t = _manifest(root, v)[1]
+        paths = t["path"].filter(pa.array(~_dv_rows(t)[0])).to_pylist()
+        for path in sorted(paths):
             if os.path.isdir(os.path.join(root, path)):
                 return spark.read.parquet(os.path.join(root, path)).limit(0)
     raise NoSuchTableError(

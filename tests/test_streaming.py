@@ -105,6 +105,48 @@ def test_stream_ingest_matches_batch_ingest_and_replays_safely(spark, tmp_path):
     assert rows(s_gold) == gold
 
 
+def test_stream_ingest_heals_gold_after_crash_before_refresh(
+    spark, tmp_path, monkeypatch
+):
+    """A micro-batch that dies after its silver append but before the
+    gold refresh is replayed as a batch of duplicates. The replay still
+    refreshes gold from silver's change feed, so gold catches up with
+    the committed silver version and gains the new day."""
+    from smartdatapipeline_spark.operators import pipeline as P
+
+    inp = tmp_path / "crash_in"
+    inp.mkdir()
+    silver, gold = str(tmp_path / "silver"), str(tmp_path / "gold")
+    ckpt = str(tmp_path / "ckpt")
+    (inp / "f0.csv").write_text(
+        "timestamp,value,metric\n2025-01-01T00:00:00Z,10,m\n"
+    )
+    stream_csv_ingest(spark, str(inp), silver, gold, ckpt).awaitTermination(120)
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the gold refresh")
+
+    (inp / "f1.csv").write_text(
+        "timestamp,value,metric\n2025-01-02T00:00:00Z,5,m\n"
+    )
+    monkeypatch.setattr(P, "refresh_gold_from_changes", crash)
+    raw = (
+        spark.read.schema("timestamp string, value string, metric string")
+        .option("header", True)
+        .csv(str(inp / "f1.csv"))
+    )
+    with pytest.raises(RuntimeError):
+        P.ingest_and_refresh(spark, raw, silver, gold, default_metric="events_total")
+    monkeypatch.undo()
+    assert P.last_refreshed_silver_version(gold) < SS.table_version(silver)
+
+    stream_csv_ingest(spark, str(inp), silver, gold, ckpt).awaitTermination(120)
+    assert P.last_refreshed_silver_version(gold) == SS.table_version(silver)
+    days = {r[0] for r in SS.read_table(spark, gold).select("metric_date").collect()}
+    assert days == {dt.date(2025, 1, 1), dt.date(2025, 1, 2)}
+    assert SS.read_table(spark, silver).count() == 2
+
+
 def test_windowed_kpis_stream_matches_batch(spark, tmp_path):
     """The same windowed_kpis call runs on a readStream source with a
     watermark and must produce the batch answer once the stream drains."""

@@ -155,13 +155,19 @@ def _stats_cte(preceding: int, following: str = "1 PRECEDING") -> str:
     """
 
 
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The ``name`` table of the scale-factor dir (``<sf_dir>/<name>.parquet``)."""
+    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1/J2 broadcast-join pattern at TPC-H shape: fact lineitem joins
     orders, then the small dims (customer/nation/region) broadcast —
     one shuffle for the fact-fact join, zero for the dims."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, orders = T("lineitem"), T("orders")
-    cust, nation, region = T("customer"), T("nation"), T("region")
+    li, orders = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
+    cust, nation, region = (
+        _t(spark, sf_dir, n) for n in ("customer", "nation", "region")
+    )
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("_rev")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -184,8 +190,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 ordering+limit with deterministic tiebreak: top-10 customers by
     order revenue (orderBy + limit ⇒ Spark TakeOrderedAndProject — no
     full sort at scale)."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    orders, cust = T("orders"), T("customer")
+    orders, cust = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "customer")
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -801,7 +806,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature extraction (md5-derived deterministic features stand in for
     a model forward pass; real header decode is `image_decode` /
     `audio_decode`; real pixel decode is `png_pixel_decode` /
-    `jpeg_pixel_decode` — codec-free since r6)."""
+    `jpeg_pixel_decode` / `gif_pixel_decode` — codec-free since r6)."""
     d = MM.attach_blob(_docs(spark, sf_dir))
     return MM.extract_features(d)
 
@@ -855,43 +860,33 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_image_features(d.withColumn("blob", blob))
 
 
-def q_png_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PNG PIXEL decode end-to-end (round 6 — the compressed-
-    format gap closed, stdlib-only): an Arrow-batched encoder builds a
-    valid 8-bit PNG per doc (width/height/color-type and every pixel
-    byte are formulas of doc_id; scanline filters cycle 0..4 so
-    None/Sub/Up/Average/Paeth ALL exercise), functions/multimodal.py
-    ``decode_png_pixels`` inflates + reverse-filters it back, and the
-    pixel summary (byte sum, first/last byte) is computed JVM-side from
-    the decoded binary via hex/conv expressions. The oracle recomputes
-    width/height/channels/sum/first/last from doc_id arithmetic alone —
-    any defect in chunk walk, CRC, inflate, or any filter reversal
-    breaks the bit-exact match."""
+def _encoded_blobs(
+    spark: SparkSession, sf_dir: str, encode: Callable[[int], bytes]
+) -> DataFrame:
+    """(doc_id, blob) with ``encode(doc_id)`` building each doc's blob
+    inside one Arrow-batched ``mapInPandas`` — the synthetic media corpus
+    of the pixel and PCM decode queries, every byte a formula of doc_id
+    that the oracles recompute."""
     import pandas as pd
     from pyspark.sql import types as PT
 
     d = _docs(spark, sf_dir).select("doc_id")
-    enc_schema = PT.StructType(
+    schema = PT.StructType(
         [d.schema["doc_id"], PT.StructField("blob", PT.BinaryType())]
     )
 
     def _enc(batches):
-        from smartdatapipeline_spark.functions.multimodal import encode_png
-
         for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = did % 13 + 1
-                h = did % 11 + 1
-                ch = (1, 3, 2, 4)[did % 4]
-                px = bytes(
-                    (did * 31 + j * 7) % 256 for j in range(w * h * ch)
-                )
-                blobs.append(encode_png(w, h, ch, px))
+            blobs = [encode(int(did)) for did in pdf["doc_id"]]
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
 
-    dec = MM.decode_png_pixels(d.mapInPandas(_enc, schema=enc_schema))
+    return d.mapInPandas(_enc, schema=schema)
+
+
+def _pixel_summary(dec: DataFrame) -> DataFrame:
+    """(doc_id, width, height, n_channels, pixel_sum, first_px, last_px)
+    of a pixel decode, computed JVM-side from the decoded binary via
+    hex/conv expressions."""
     hexed = dec.withColumn("_hex", F.hex("pixels"))
     n = F.octet_length("pixels").cast("int")
 
@@ -915,6 +910,28 @@ def q_png_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def q_png_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL PNG PIXEL decode end-to-end (round 6 — the compressed-
+    format gap closed, stdlib-only): an Arrow-batched encoder builds a
+    valid 8-bit PNG per doc (width/height/color-type and every pixel
+    byte are formulas of doc_id; scanline filters cycle 0..4 so
+    None/Sub/Up/Average/Paeth ALL exercise), functions/multimodal.py
+    ``decode_image_pixels`` inflates + reverse-filters it back, and the
+    pixel summary (byte sum, first/last byte) is computed JVM-side from
+    the decoded binary via hex/conv expressions. The oracle recomputes
+    width/height/channels/sum/first/last from doc_id arithmetic alone —
+    any defect in chunk walk, CRC, inflate, or any filter reversal
+    breaks the bit-exact match."""
+
+    def _png(did: int) -> bytes:
+        w, h, ch = did % 13 + 1, did % 11 + 1, (1, 3, 2, 4)[did % 4]
+        px = bytes((did * 31 + j * 7) % 256 for j in range(w * h * ch))
+        return MM.encode_png(w, h, ch, px)
+
+    blobs = _encoded_blobs(spark, sf_dir, _png)
+    return _pixel_summary(MM.decode_image_pixels(blobs))
+
+
 def q_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JPEG PIXEL decode end-to-end (round 6 — the LAST
     compressed-format gap closed, no codec library): an Arrow-batched
@@ -922,7 +939,7 @@ def q_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks are each uniform (value a formula of doc_id and the block
     coordinates; every third doc also gets DRI/RSTn restart intervals
     so the restart path is exercised), functions/multimodal.py
-    ``decode_jpeg_pixels`` Huffman-decodes + IDCTs it back, and the
+    ``decode_image_pixels`` Huffman-decodes + IDCTs it back, and the
     pixel summary is computed JVM-side from the decoded binary.
 
     Block-uniform gray content with all-ones quant tables round-trips
@@ -931,58 +948,20 @@ def q_jpeg_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id arithmetic alone — any defect in the marker walk, Huffman
     tables, zigzag, dequantize, IDCT, or restart handling breaks the
     match."""
-    import pandas as pd
-    from pyspark.sql import types as PT
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    enc_schema = PT.StructType(
-        [d.schema["doc_id"], PT.StructField("blob", PT.BinaryType())]
-    )
-
-    def _enc(batches):
-        from smartdatapipeline_spark.functions.multimodal import encode_jpeg
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = did % 17 + 1
-                h = did % 13 + 1
-                px = bytes(
-                    (did * 37 + (x // 8) * 11 + (y // 8) * 5) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                blobs.append(
-                    encode_jpeg(
-                        w, h, 1, px,
-                        restart_interval=2 if did % 3 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    dec = MM.decode_jpeg_pixels(d.mapInPandas(_enc, schema=enc_schema))
-    hexed = dec.withColumn("_hex", F.hex("pixels"))
-    n = F.octet_length("pixels").cast("int")
-
-    def byte_at(i):
-        return F.conv(F.col("_hex").substr(i * 2 + 1, F.lit(2)), 16, 10).cast(
-            "long"
+    def _jpeg(did: int) -> bytes:
+        w, h = did % 17 + 1, did % 13 + 1
+        px = bytes(
+            (did * 37 + (x // 8) * 11 + (y // 8) * 5) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        return MM.encode_jpeg(
+            w, h, 1, px, restart_interval=2 if did % 3 == 0 else 0
         )
 
-    return hexed.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.aggregate(
-            F.sequence(F.lit(0), n - 1),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc + byte_at(i),
-        ).alias("pixel_sum"),
-        byte_at(F.lit(0)).alias("first_px"),
-        byte_at(n - 1).alias("last_px"),
-    )
+    blobs = _encoded_blobs(spark, sf_dir, _jpeg)
+    return _pixel_summary(MM.decode_image_pixels(blobs))
 
 
 def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1324,8 +1303,7 @@ def q_order_priority_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     having at least one near-full-quantity lineitem, counted per
     priority — the TPC-H Q4 shape (EXISTS ⇒ semi join, no fact-row
     duplication before the aggregate)."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    orders, li = T("orders"), T("lineitem")
+    orders, li = _t(spark, sf_dir, "orders"), _t(spark, sf_dir, "lineitem")
     hits = li.filter(F.col("l_quantity") >= 48).select("l_orderkey")
     return (
         orders.join(hits, orders.o_orderkey == hits.l_orderkey, "left_semi")
@@ -1338,8 +1316,7 @@ def q_cust_order_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left OUTER join + double aggregate (TPC-H Q13 shape): order count
     per customer including zero-order customers, then the distribution
     of those counts."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    cust, orders = T("customer"), T("orders")
+    cust, orders = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left_outer")
         .groupBy("c_custkey")
@@ -1352,8 +1329,7 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional aggregation over a dim join (TPC-H Q14 shape): PROMO
     revenue share for one shipment month — date predicate pushed to the
     lineitem scan, part broadcast, CASE inside the decimal sum."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, part = T("lineitem"), T("part")
+    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
     return (
@@ -1420,8 +1396,7 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation is decorrelated by hand into a per-part aggregate +
     equi-join — the plan Catalyst produces for the subquery form, made
     explicit."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, part = T("lineitem"), T("part")
+    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
     pq = li.groupBy("l_partkey").agg(
         (N.dsum("l_quantity") / F.count(F.lit(1))).alias("avg_qty")
     )
@@ -1439,8 +1414,9 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds 300, with customer attribution — the aggregate runs first
     on (orderkey) so the join back to orders/customer touches only
     qualifying keys."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, orders, cust = T("lineitem"), T("orders"), T("customer")
+    li, orders, cust = (
+        _t(spark, sf_dir, n) for n in ("lineitem", "orders", "customer")
+    )
     big = (
         li.groupBy("l_orderkey")
         .agg(N.dsum("l_quantity").alias("sum_qty"))
@@ -1498,8 +1474,7 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     size ≤ 15) are applied explicitly pre-join — those DO reach the
     parquet scans, and the join then runs on the pruned inputs with
     the exact disjunction as a post-join filter."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, part = T("lineitem"), T("part")
+    li, part = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "part")
     disj = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -1537,11 +1512,10 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     one market segment. Both date filters and the segment filter push
     to their scans; customer broadcasts; TakeOrderedAndProject caps
     the result without a global sort."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     cutoff = F.lit("1998-06-01").cast("timestamp")
-    li = T("lineitem").filter(F.col("l_shipdate") > cutoff)
-    orders = T("orders").filter(F.col("o_orderdate") < cutoff)
-    cust = T("customer").filter(F.col("c_mktsegment") == "BUILDING")
+    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -1558,8 +1532,7 @@ def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reused for both the max and the final rows (no correlated rescan);
     the one-row max broadcasts. The equality join on the revenue double
     is deterministic because revenue is an exact decimal sum."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, supp = T("lineitem"), T("supplier")
+    li, supp = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "supplier")
     rev = (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
@@ -1586,8 +1559,9 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (distinct suppliers, distinct late suppliers) — a single
     shuffle of the fact table instead of two self-joins, the plan that
     survives at 100 TB."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, orders, supp = T("lineitem"), T("orders"), T("supplier")
+    li, orders, supp = (
+        _t(spark, sf_dir, n) for n in ("lineitem", "orders", "supplier")
+    )
     lo = li.join(
         orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey", "o_orderdate"),
         li.l_orderkey == F.col("o_orderkey"),
@@ -1619,14 +1593,13 @@ def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-recent-orders test is a left-anti join against the date-filtered
     orders (filter + single-column projection both push to the scan, so
     the anti build side is narrow)."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     segs = ["AUTOMOBILE", "BUILDING", "MACHINERY"]
-    cust = T("customer").filter(F.col("c_mktsegment").isin(segs))
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment").isin(segs))
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         N.davg("c_acctbal").alias("_avg_bal")
     )
     recent = (
-        T("orders")
+        _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp"))
         .select("o_custkey")
     )
@@ -1650,20 +1623,19 @@ def q_bination_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact join — only customers/suppliers of the two nations survive to
     broadcast — and the pair disjunction runs post-join on two tiny
     string columns."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     n1, n2 = "NATION_3", "NATION_7"
-    nat = T("nation").filter(F.col("n_name").isin(n1, n2))
+    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(n1, n2))
     cn = (
-        T("customer")
+        _t(spark, sf_dir, "customer")
         .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
     sn = (
-        T("supplier")
+        _t(spark, sf_dir, "supplier")
         .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
-    li, orders = T("lineitem"), T("orders")
+    li, orders = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
     return (
         li.join(orders.select("o_orderkey", "o_custkey"), li.l_orderkey == F.col("o_orderkey"))
         .join(F.broadcast(cn), F.col("o_custkey") == cn.c_custkey)
@@ -1678,21 +1650,23 @@ def q_bination_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
 def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """National market share (TPC-H Q8 shape, no partsupp in this
     schema): NATION_3's share of PROMO-part revenue sold to EUROPE
     customers, by order year. Part/customer/supplier dims all shrink
     BEFORE broadcast; the ratio is decimal-sum / decimal-sum in double
     (cross-engine exact)."""
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+    part = (
+        _t(spark, sf_dir, "part")
+        .filter(F.col("p_type") == "PROMO")
+        .select("p_partkey")
+    )
     eur_nat = (
         _t(spark, sf_dir, "nation")
         .join(
-            F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")),
+            F.broadcast(
+                _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+            ),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey")
@@ -1868,9 +1842,9 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cost-equality join is deterministic because both sides are the
     SAME exact-decimal-ratio double. Dims all broadcast; the only wide
     shuffle is the (part, supplier) aggregate over lineitem."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     li, part, supp, nat, reg = (
-        T("lineitem"), T("part"), T("supplier"), T("nation"), T("region")
+        _t(spark, sf_dir, n)
+        for n in ("lineitem", "part", "supplier", "nation", "region")
     )
     europe_supp = (
         supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
@@ -1909,8 +1883,7 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem). The scalar total broadcasts; HAVING value > 0.01% of it.
     One wide shuffle (part aggregate); threshold compare is exact-
     decimal-derived doubles on both sides."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, supp, nat = T("lineitem"), T("supplier"), T("nation")
+    li, supp, nat = (_t(spark, sf_dir, n) for n in ("lineitem", "supplier", "nation"))
     nation_supp = (
         supp.join(
             F.broadcast(nat.filter(F.col("n_name") == "NATION_7")),
@@ -2485,10 +2458,12 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode against its own two-level oracle."""
     from smartdatapipeline_spark.functions.graph import pagerank, symmetrize
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     pairs = (
-        T("orders")
-        .join(T("lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
+        _t(spark, sf_dir, "orders")
+        .join(
+            _t(spark, sf_dir, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
         .select(
             (F.col("o_custkey") * 2).alias("src"),
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
@@ -2514,10 +2489,12 @@ def q_graph_pagerank_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical (dst, src%32) two-level fold, so the match is bit-exact."""
     from smartdatapipeline_spark.functions.graph import pagerank, symmetrize
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     pairs = (
-        T("orders")
-        .join(T("lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
+        _t(spark, sf_dir, "orders")
+        .join(
+            _t(spark, sf_dir, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
         .select(
             (F.col("o_custkey") * 2).alias("src"),
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
@@ -2540,9 +2517,8 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom bitmap only prunes the probe side pre-shuffle)."""
     from smartdatapipeline_spark.functions.bloom import bloom_semi_join
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    cust = T("customer").filter(F.col("c_mktsegment") == "BUILDING")
-    kept = bloom_semi_join(T("orders"), cust, "o_custkey", "c_custkey")
+    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    kept = bloom_semi_join(_t(spark, sf_dir, "orders"), cust, "o_custkey", "c_custkey")
     return kept.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         N.dsum("o_totalprice").alias("total_price"),
@@ -2591,10 +2567,12 @@ def q_copurchase_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     basket_jaccard_pairs."""
     from smartdatapipeline_spark.functions.similarity import basket_jaccard_pairs
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     baskets = (
-        T("orders")
-        .join(T("lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
+        _t(spark, sf_dir, "orders")
+        .join(
+            _t(spark, sf_dir, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part"))
         .distinct()
     )
@@ -2636,10 +2614,12 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion."""
     from smartdatapipeline_spark.functions.graph import bfs_hops, symmetrize
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     pairs = (
-        T("orders")
-        .join(T("lineitem"), F.col("o_orderkey") == F.col("l_orderkey"))
+        _t(spark, sf_dir, "orders")
+        .join(
+            _t(spark, sf_dir, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
         .select(
             (F.col("o_custkey") * 2).alias("src"),
             (F.col("l_suppkey") * 2 + 1).alias("dst"),
@@ -2647,7 +2627,7 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     seeds = (
-        T("supplier")
+        _t(spark, sf_dir, "supplier")
         .filter(F.col("s_suppkey") % 10 == 0)
         .select((F.col("s_suppkey") * 2 + 1).alias("node"))
     )
@@ -2677,14 +2657,16 @@ def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins, dims broadcast)."""
     from smartdatapipeline_spark.operators.quality import fk_orphans
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
-    li, od = T("lineitem"), T("orders")
+    li, od = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
     return fk_orphans(
         [
             (li, "l_orderkey", od, "o_orderkey", "lineitem.order"),
-            (li, "l_partkey", T("part"), "p_partkey", "lineitem.part"),
-            (li, "l_suppkey", T("supplier"), "s_suppkey", "lineitem.supplier"),
-            (od, "o_custkey", T("customer"), "c_custkey", "orders.customer"),
+            (li, "l_partkey", _t(spark, sf_dir, "part"), "p_partkey",
+             "lineitem.part"),
+            (li, "l_suppkey", _t(spark, sf_dir, "supplier"), "s_suppkey",
+             "lineitem.supplier"),
+            (od, "o_custkey", _t(spark, sf_dir, "customer"), "c_custkey",
+             "orders.customer"),
         ]
     )
 
@@ -2831,23 +2813,26 @@ def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized shuffle is the lineitem⋈orders equi join; the
     same-nation predicate prunes AFTER the broadcast lookups, JVM-side.
     Completes the TPC-H query-shape sweep (Q1-Q22)."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     nations = (
-        T("nation")
+        _t(spark, sf_dir, "nation")
         .join(
-            F.broadcast(T("region").filter(F.col("r_name") == "ASIA")),
+            F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey", "n_name")
     )
-    cust = T("customer").select("c_custkey", F.col("c_nationkey").alias("_cn"))
-    supp = T("supplier").select("s_suppkey", F.col("s_nationkey").alias("_sn"))
-    orders = T("orders").filter(
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_custkey", F.col("c_nationkey").alias("_cn")
+    )
+    supp = _t(spark, sf_dir, "supplier").select(
+        "s_suppkey", F.col("s_nationkey").alias("_sn")
+    )
+    orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
     return (
-        T("lineitem")
+        _t(spark, sf_dir, "lineitem")
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -2932,19 +2917,23 @@ def q_nation_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share-of-parent: each nation's revenue share and rank within its
     region (ratio_to_report window over the dim-grain rollup); dims
     broadcast, one fact shuffle."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     from pyspark.sql.window import Window
 
     rev = (
-        T("lineitem")
-        .join(T("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(T("customer")), F.col("o_custkey") == F.col("c_custkey"))
+        _t(spark, sf_dir, "lineitem")
         .join(
-            F.broadcast(T("nation")),
+            _t(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
+        .join(
+            F.broadcast(_t(spark, sf_dir, "customer")),
+            F.col("o_custkey") == F.col("c_custkey"),
+        )
+        .join(
+            F.broadcast(_t(spark, sf_dir, "nation")),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(T("region")),
+            F.broadcast(_t(spark, sf_dir, "region")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
@@ -3307,12 +3296,16 @@ def q_revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotal planes in ONE pass (grouping-sets expand at the partial
     agg — no re-scan per plane; gid disambiguates NULL keys from NULL
     totals)."""
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     j = (
-        T("lineitem")
-        .join(T("orders"), F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(T("customer"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(T("nation")), F.col("c_nationkey") == F.col("n_nationkey"))
+        _t(spark, sf_dir, "lineitem")
+        .join(
+            _t(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey")
+        )
+        .join(_t(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(
+            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.col("c_nationkey") == F.col("n_nationkey"),
+        )
         .select(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("order_year"),
@@ -3371,10 +3364,9 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — functions/skew.py salted_join."""
     from smartdatapipeline_spark.functions.skew import salted_join
 
-    T = lambda n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))  # noqa: E731
     j = salted_join(
-        T("orders"),
-        T("customer").select("c_custkey", "c_mktsegment"),
+        _t(spark, sf_dir, "orders"),
+        _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
         left_key="o_custkey",
         right_key="c_custkey",
         row_col="o_orderkey",
@@ -3623,64 +3615,21 @@ def q_gif_pixel_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, dims, and every pixel a formula of doc_id; every third doc
     INTERLACED so the 4-pass path exercises; palettes up to 64 colors
     force LZW code-width growth), functions/multimodal.py
-    ``decode_gif_pixels`` LZW-decodes it back, and the pixel summary is
+    ``decode_image_pixels`` LZW-decodes it back, and the pixel summary is
     computed JVM-side. The oracle recomputes everything from doc_id
     arithmetic alone — any defect in the block walk, color table, LZW
     width schedule, or deinterlace breaks the bit-exact match."""
-    import pandas as pd
-    from pyspark.sql import types as PT
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    enc_schema = PT.StructType(
-        [d.schema["doc_id"], PT.StructField("blob", PT.BinaryType())]
-    )
-
-    def _enc(batches):
-        from smartdatapipeline_spark.functions.multimodal import encode_gif
-
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = did % 13 + 1
-                h = did % 11 + 1
-                ncol = did % 63 + 2
-                rgb = b"".join(
-                    bytes(
-                        (
-                            ((did * 31 + j * 7) % ncol * 41 + k) % 256
-                            for k in range(3)
-                        )
-                    )
-                    for j in range(w * h)
-                )
-                blobs.append(
-                    encode_gif(w, h, rgb, interlace=(did % 3 == 0))
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    dec = MM.decode_gif_pixels(d.mapInPandas(_enc, schema=enc_schema))
-    hexed = dec.withColumn("_hex", F.hex("pixels"))
-    n = F.octet_length("pixels").cast("int")
-
-    def byte_at(i):
-        return F.conv(F.col("_hex").substr(i * 2 + 1, F.lit(2)), 16, 10).cast(
-            "long"
+    def _gif(did: int) -> bytes:
+        w, h, ncol = did % 13 + 1, did % 11 + 1, did % 63 + 2
+        rgb = b"".join(
+            bytes(((did * 31 + j * 7) % ncol * 41 + k) % 256 for k in range(3))
+            for j in range(w * h)
         )
+        return MM.encode_gif(w, h, rgb, interlace=(did % 3 == 0))
 
-    return hexed.select(
-        "doc_id",
-        "width",
-        "height",
-        "n_channels",
-        F.aggregate(
-            F.sequence(F.lit(0), n - 1),
-            F.lit(0).cast("long"),
-            lambda acc, i: acc + byte_at(i),
-        ).alias("pixel_sum"),
-        byte_at(F.lit(0)).alias("first_px"),
-        byte_at(n - 1).alias("last_px"),
-    )
+    blobs = _encoded_blobs(spark, sf_dir, _gif)
+    return _pixel_summary(MM.decode_image_pixels(blobs))
 
 
 def q_wav_sample_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3693,36 +3642,17 @@ def q_wav_sample_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes every feature from doc_id arithmetic alone —
     any defect in the chunk walk, block math, scaling, or channel
     de-interleave breaks the bit-exact match."""
-    import pandas as pd
-    from pyspark.sql import types as PT
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    enc_schema = PT.StructType(
-        [d.schema["doc_id"], PT.StructField("blob", PT.BinaryType())]
-    )
-
-    def _enc(batches):
+    def _wav(did: int) -> bytes:
         import numpy as np
 
-        from smartdatapipeline_spark.functions.multimodal import encode_wav
+        pcm = np.array(
+            [((did * 37 + j * 11) % 4001) - 2000 for j in range(did % 50 + 10)],
+            dtype=np.float64,
+        )
+        return MM.encode_wav(pcm / 32768.0, 8000, 16, channels=did % 2 + 1)
 
-        for pdf in batches:
-            blobs = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = did % 50 + 10
-                pcm = np.array(
-                    [((did * 37 + j * 11) % 4001) - 2000 for j in range(n)],
-                    dtype=np.float64,
-                )
-                blobs.append(
-                    encode_wav(
-                        pcm / 32768.0, 8000, 16, channels=did % 2 + 1
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "blob": blobs})
-
-    return MM.decode_audio_samples(d.mapInPandas(_enc, schema=enc_schema))
+    return MM.decode_audio_samples(_encoded_blobs(spark, sf_dir, _wav))
 
 
 # ── round 9: HLL / Count-Min / char_diversity (wiring the r8 family) ─
@@ -4297,7 +4227,7 @@ def q_snapshot_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (value, user_id) into 8 tight-range batches
     (sources/snapstore.py compact(zorder_by=…) over
     functions/layout.py Morton keys). The benched read aggregates a
-    narrow value band via ``column_range`` — batches whose recorded
+    narrow value band via ``column_ranges`` — batches whose recorded
     min/max cannot intersect are never listed to Spark. Oracle: the
     same aggregate from events directly."""
     from smartdatapipeline_spark.sources import snapstore as SS
@@ -4323,7 +4253,7 @@ def q_snapshot_zorder_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, target_batches=8, zorder_by=("value", "user_id"),
             idempotency_key="z-optimize",
         )
-    band = SS.read_table(spark, root, column_range=("value", 20.0, 40.0))
+    band = SS.read_table(spark, root, column_ranges=[("value", 20.0, 40.0)])
     sum_dec = F.sum(F.col("value").cast("decimal(28,4)")).cast("double")
     return (
         band.groupBy(F.col("event_type").alias("metric"))
@@ -4618,7 +4548,7 @@ def q_snapshot_zorder_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     sum_dec = F.sum(F.col("value").cast("decimal(28,4)")).cast("double")
     return (
-        SS.read_table(spark, root, column_range=("user_id", 10, 19))
+        SS.read_table(spark, root, column_ranges=[("user_id", 10, 19)])
         .groupBy(F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_rows"), sum_dec.alias("value_sum"))
     )
@@ -4899,7 +4829,7 @@ def q_snapshot_analyze_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert len(pruned) < len(total), (len(pruned), len(total))
     sum_dec = F.sum(F.col("value").cast("decimal(28,4)")).cast("double")
     return (
-        SS.read_table(spark, root, column_range=("user_id", 10, 40))
+        SS.read_table(spark, root, column_ranges=[("user_id", 10, 40)])
         .groupBy(F.col("event_type").alias("metric"))
         .agg(
             F.count(F.lit(1)).alias("n_rows"),

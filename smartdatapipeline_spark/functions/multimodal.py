@@ -2,26 +2,30 @@
 metadata, Arrow-batched feature extraction, and REAL from-scratch
 decoders (BASELINE.json north-star extension).
 
-No codec library is needed anywhere in the pixel path (round 6): PNG
-decodes via stdlib zlib inflate + full scanline-filter reversal,
-uncompressed 24-bpp BMP via struct walking, and baseline JPEG via a
-from-scratch T.81 implementation (Huffman entropy decode, dequantize,
-orthonormal IDCT, chroma upsample, BT.601 color transform) — each with
-an encoder twin for golden round-trips. Headers for PNG/GIF/BMP/JPEG
-and RIFF/WAV parse stdlib-only as well. Out-of-contract payloads
-(progressive JPEG, palette PNG, 16-bit depths) fail soft to NULL rows —
-mixed corpora keep flowing.
+No codec library is needed anywhere: PNG decodes via stdlib zlib
+inflate + full scanline-filter reversal, uncompressed 24-bpp BMP via
+struct walking, baseline JPEG via a from-scratch T.81 implementation
+(Huffman entropy decode, dequantize, orthonormal IDCT, chroma upsample,
+BT.601 color transform), GIF via LZW decode + deinterlace, and 8/16-bit
+PCM WAV via the RIFF chunk walk — each with an encoder twin for golden
+round-trips. Headers for PNG/GIF/BMP/JPEG and RIFF/WAV parse
+stdlib-only as well. Out-of-contract payloads (progressive JPEG,
+palette PNG, 16-bit depths) fail soft to NULL rows — mixed corpora keep
+flowing.
 
-At 100 TB the pattern is: binary column stays in parquet (never
-collected), metadata travels as a sibling struct for predicate pushdown
-(filter on width/height/duration without touching bytes), and per-batch
-python work happens once per Arrow batch inside ``mapInPandas`` — the
-only copy is columnar.
+Every public blob function (``decode_image_features``,
+``decode_audio_features``, ``decode_image_pixels``, ``extract_features``,
+``decode_audio_samples``) is one per-blob row function run by
+``_map_blobs``, the module's single ``mapInPandas`` call. At 100 TB the
+pattern is: binary column stays in parquet (never collected), metadata
+travels as a sibling struct for predicate pushdown (filter on
+width/height/duration without touching bytes), and python work happens
+once per Arrow batch — the only copy is columnar.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,33 +42,45 @@ from pyspark.sql import types as T
 _MAX_PIXELS = 1 << 24
 
 
-def _blob_bytes(b) -> bytes | None:
-    """Per-row NULL guard for the mapInPandas decode kernels: a NULL
-    binary cell arrives as None and ``bytes(None)`` raises TypeError,
-    failing the whole task — out-of-contract payloads must fail soft to
-    NULL rows instead (round-7 ADVICE)."""
-    return None if b is None else bytes(b)
+def _map_blobs(
+    df: DataFrame,
+    id_col: str,
+    blob_col: str,
+    parse: Callable[[bytes | None], tuple | None],
+    fields: list[tuple[str, T.DataType]],
+) -> DataFrame:
+    """The one Arrow-batched blob kernel every decoder runs through:
+    ``parse`` maps each blob to a tuple of ``fields`` (name, Spark type)
+    once per row inside one ``mapInPandas``; bytes never leave the
+    executor. The id column keeps its own name and type (string ids
+    included). A NULL binary cell reaches ``parse`` as None rather than
+    ``bytes(None)`` failing the task, and a None result becomes an
+    all-NULL row, so out-of-contract payloads fail soft and mixed
+    corpora keep flowing. Int/Long fields go out as pandas nullable
+    arrays so their NULLs survive the Arrow conversion."""
+    import pandas as pd
 
-
-def _id_field(df: DataFrame, id_col: str) -> "T.StructField":
-    """The id column's OWN StructField (name + type preserved) — decode
-    outputs key by whatever id the caller passed, string ids included,
-    instead of a hardcoded int64 'doc_id' (ADVICE round 2)."""
-    return T.StructField(id_col, df.schema[id_col].dataType)
-
-
-def _feature_schema(df: DataFrame, id_col: str) -> T.StructType:
-    return T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("n_bytes", T.IntegerType()),
-            T.StructField("header_hash", T.LongType()),
-            T.StructField("feat_0", T.DoubleType()),
-            T.StructField("feat_1", T.DoubleType()),
-            T.StructField("feat_2", T.DoubleType()),
-            T.StructField("feat_3", T.DoubleType()),
-        ]
+    schema = T.StructType(
+        [T.StructField(id_col, df.schema[id_col].dataType)]
+        + [T.StructField(name, typ) for name, typ in fields]
     )
+    nullable = {"int": "Int32", "bigint": "Int64"}
+    dtypes = [nullable.get(typ.simpleString()) for _, typ in fields]
+    empty = (None,) * len(fields)
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                parse(None if b is None else bytes(b)) for b in pdf[blob_col]
+            ]
+            rows = [empty if r is None else r for r in rows]
+            out = {id_col: pdf[id_col]}
+            for i, ((name, _), dtype) in enumerate(zip(fields, dtypes)):
+                col = [r[i] for r in rows]
+                out[name] = pd.array(col, dtype=dtype) if dtype else col
+            yield pd.DataFrame(out)
+
+    return df.select(id_col, blob_col).mapInPandas(_run, schema=schema)
 
 
 def attach_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -85,9 +101,9 @@ def parse_image_header(data: bytes) -> tuple[str | None, int | None, int | None]
 
     Returns (format, width, height) for PNG / GIF / BMP / JPEG payloads,
     (None, None, None) for anything unrecognized or truncated. This is
-    the driver-side kernel the Arrow-batched decoder below runs per blob;
-    full pixel decode is equally codec-free (``decode_image_pixels``
-    dispatches to the from-scratch PNG/BMP/JPEG decoders).
+    the per-blob row function of ``decode_image_features``; full pixel
+    decode is equally codec-free (``decode_image_pixels`` dispatches to
+    the from-scratch PNG/BMP/JPEG/GIF decoders).
     """
     import struct
 
@@ -154,63 +170,30 @@ def parse_wav_header(
 
 
 def decode_image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched image header decode over the binary column — the
-    real (stdlib) decoder wired through ``mapInPandas``. One Python loop
-    per Arrow batch; bytes never leave the executor."""
-    import pandas as pd
-
-    schema = T.StructType(
+    """Image header decode (``parse_image_header``) over the binary
+    ``blob`` column: (id, format, width, height)."""
+    return _map_blobs(
+        df, id_col, "blob", parse_image_header,
         [
-            _id_field(df, id_col),
-            T.StructField("format", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-        ]
+            ("format", T.StringType()),
+            ("width", T.IntegerType()),
+            ("height", T.IntegerType()),
+        ],
     )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_header(_blob_bytes(b)) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "format": [p[0] for p in parsed],
-                    "width": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "height": pd.array([p[2] for p in parsed], dtype="Int32"),
-                }
-            )
-
-    return df.select(id_col, "blob").mapInPandas(_decode, schema=schema)
 
 
 def decode_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched WAV header decode over the binary column."""
-    import pandas as pd
-
-    schema = T.StructType(
+    """WAV header decode (``parse_wav_header``) over the binary ``blob``
+    column: (id, channels, sample_rate, bits, duration_sec)."""
+    return _map_blobs(
+        df, id_col, "blob", parse_wav_header,
         [
-            _id_field(df, id_col),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("bits", T.IntegerType()),
-            T.StructField("duration_sec", T.DoubleType()),
-        ]
+            ("channels", T.IntegerType()),
+            ("sample_rate", T.IntegerType()),
+            ("bits", T.IntegerType()),
+            ("duration_sec", T.DoubleType()),
+        ],
     )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_wav_header(_blob_bytes(b)) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "channels": pd.array([p[0] for p in parsed], dtype="Int32"),
-                    "sample_rate": pd.array([p[1] for p in parsed], dtype="Int32"),
-                    "bits": pd.array([p[2] for p in parsed], dtype="Int32"),
-                    "duration_sec": [p[3] for p in parsed],
-                }
-            )
-
-    return df.select(id_col, "blob").mapInPandas(_decode, schema=schema)
 
 
 def parse_bmp_pixels(data: bytes) -> tuple[int, int, bytes] | None:
@@ -246,46 +229,6 @@ def parse_bmp_pixels(data: bytes) -> tuple[int, int, bytes] | None:
         out[dst + 1 : dst + w * 3 : 3] = row[1::3]
         out[dst + 2 : dst + w * 3 : 3] = row[0::3]
     return w, height, bytes(out)
-
-
-def decode_bmp_pixels(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
-    """Arrow-batched pixel decode for uncompressed 24-bpp BMPs via
-    ``parse_bmp_pixels`` — same ``mapInPandas`` plumbing as the header
-    decoders; bytes never leave the executor. Non-BMP / compressed rows
-    yield NULL pixels (fail-soft for mixed media corpora).
-
-    Output: (id, width, height, pixels binary — RGB row-major top-down).
-    """
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_bmp_pixels(_blob_bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array(
-                        [p[0] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "pixels": [p[2] if p else None for p in parsed],
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
 
 
 def parse_png_pixels(data: bytes) -> tuple[int, int, int, bytes] | None:
@@ -440,50 +383,6 @@ def encode_png(
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
     )
-
-
-def decode_png_pixels(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
-    """Arrow-batched PNG pixel decode via ``parse_png_pixels`` — same
-    ``mapInPandas`` plumbing as ``decode_bmp_pixels``; bytes never
-    leave the executor; non-PNG / unsupported rows yield NULLs.
-
-    Output: (id, width, height, n_channels, pixels binary — raw
-    channel bytes row-major top-down).
-    """
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_png_pixels(_blob_bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array(
-                        [p[0] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "pixels": [p[3] if p else None for p in parsed],
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -1063,46 +962,6 @@ def encode_jpeg(
     return b"".join(head) + scan + b"\xff\xd9"
 
 
-def decode_jpeg_pixels(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
-    """Arrow-batched baseline-JPEG pixel decode via ``parse_jpeg_pixels``
-    — identical ``mapInPandas`` plumbing to ``decode_png_pixels``; bytes
-    never leave the executor; non-JPEG / out-of-contract rows → NULLs."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_jpeg_pixels(_blob_bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array(
-                        [p[0] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "pixels": [p[3] if p else None for p in parsed],
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
-
-
 def parse_any_pixels(
     data: bytes,
 ) -> tuple[str, int, int, int, bytes] | None:
@@ -1130,89 +989,46 @@ def parse_any_pixels(
 def decode_image_pixels(
     df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
-    """Arrow-batched UNIFIED pixel decode (PNG + BMP + baseline JPEG,
-    all from scratch — stdlib zlib for PNG's inflate, pure numpy DCT for
-    JPEG; no codec library). Until round 6 this was the PIL
-    NotImplementedError gate; the gate no longer exists. Rows in none of
-    the three formats (or out of a decoder's documented contract, e.g.
-    progressive JPEG) yield NULLs — fail-soft for mixed corpora."""
-    import pandas as pd
-
-    schema = T.StructType(
+    """Unified pixel decode (``parse_any_pixels``: PNG, BMP, baseline
+    JPEG and GIF, all from scratch, no codec library): (id, format,
+    width, height, n_channels, pixels binary — raw channel bytes
+    row-major top-down). Rows in none of the formats, or out of a
+    decoder's documented contract (e.g. progressive JPEG), yield NULLs."""
+    return _map_blobs(
+        df, id_col, blob_col, parse_any_pixels,
         [
-            _id_field(df, id_col),
-            T.StructField("format", T.StringType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
+            ("format", T.StringType()),
+            ("width", T.IntegerType()),
+            ("height", T.IntegerType()),
+            ("n_channels", T.IntegerType()),
+            ("pixels", T.BinaryType()),
+        ],
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_any_pixels(_blob_bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "format": [p[0] if p else None for p in parsed],
-                    "width": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [p[3] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "pixels": [p[4] if p else None for p in parsed],
-                }
-            )
 
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
+def _md5_features(data: bytes | None) -> tuple | None:
+    """(n_bytes, header_hash, feat_0..feat_3) of one blob, md5-derived."""
+    import hashlib
+
+    if data is None:
+        return None
+    d = hashlib.md5(data).hexdigest()
+    feats = (int(d[8 * i : 8 * i + 8], 16) / 4294967296.0 for i in range(4))
+    return (len(data), int(d[:15], 16), *feats)
 
 
 def extract_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched deterministic feature extraction over the binary
-    column — the ``mapInPandas`` shape a real embedding/feature model
-    plugs into (swap ``_fake_features`` for the model forward pass).
+    """Deterministic feature extraction over the binary ``blob`` column
+    — the per-blob slot a real embedding/feature model plugs into (swap
+    ``_md5_features`` for the model forward pass).
 
     Features are md5-derived so the DuckDB oracle can verify the full
     plumbing end-to-end: feat_i = int(md5_hex[8i:8i+8], 16) / 2^32.
     """
-    import hashlib
-
-    import pandas as pd
-
-    def _fake_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [_blob_bytes(b) for b in pdf["blob"]]
-            digests = [
-                hashlib.md5(b).hexdigest() if b is not None else None
-                for b in blobs
-            ]
-            out = pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": pd.array(
-                        [len(b) if b is not None else None for b in blobs],
-                        dtype="Int32",
-                    ),
-                    "header_hash": pd.array(
-                        [int(d[:15], 16) if d else None for d in digests],
-                        dtype="Int64",
-                    ),
-                }
-            )
-            for i in range(4):
-                out[f"feat_{i}"] = [
-                    int(d[8 * i : 8 * i + 8], 16) / 4294967296.0 if d else None
-                    for d in digests
-                ]
-            yield out
-
-    return df.select(id_col, "blob").mapInPandas(
-        _fake_features, schema=_feature_schema(df, id_col)
+    return _map_blobs(
+        df, id_col, "blob", _md5_features,
+        [("n_bytes", T.IntegerType()), ("header_hash", T.LongType())]
+        + [(f"feat_{i}", T.DoubleType()) for i in range(4)],
     )
 
 
@@ -1489,46 +1305,6 @@ def encode_gif(
     return head + desc + body + b"\x3b"
 
 
-def decode_gif_pixels(
-    df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
-) -> DataFrame:
-    """Arrow-batched GIF pixel decode via ``parse_gif_pixels`` — same
-    ``mapInPandas`` plumbing as the other pixel decoders; NULL rows for
-    non-GIF / out-of-contract payloads."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_channels", T.IntegerType()),
-            T.StructField("pixels", T.BinaryType()),
-        ]
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_gif_pixels(_blob_bytes(b)) for b in pdf[blob_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": pd.array(
-                        [p[0] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [p[1] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "n_channels": pd.array(
-                        [p[2] if p else None for p in parsed], dtype="Int32"
-                    ),
-                    "pixels": [p[3] if p else None for p in parsed],
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
-
-
 # ---------------------------------------------------------------------------
 # WAV PCM sample decode — round 7: the audio story past the header
 # (8/16-bit integer PCM; the 100 TB posture is identical to the pixel
@@ -1616,84 +1392,47 @@ def encode_wav(
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _pcm_stats(data: bytes | None) -> tuple | None:
+    """Per-clip PCM features of one WAV blob in EXACT integer arithmetic
+    over the raw codes (sum, square-sum, peak |code|, zero crossings of
+    the sign), so the summary is bit-reproducible and oracle-checkable —
+    floats would make RMS order-dependent."""
+    import numpy as np
+
+    p = parse_wav_samples(data)
+    if p is None:
+        return None
+    ch, rate, n, x = p
+    # back to integer codes (16-bit scale; 8-bit files land on
+    # multiples of 256) — exact arithmetic from here on
+    codes = np.round(x * 32768.0).astype(np.int64)
+    s = np.sign(codes)
+    sv = s[s != 0]
+    return (
+        ch,
+        rate,
+        n,
+        int(codes.sum()),
+        int((codes * codes).sum()),
+        int(np.abs(codes).max()),
+        int(np.count_nonzero(sv[1:] != sv[:-1])),
+    )
+
+
 def decode_audio_samples(
     df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob"
 ) -> DataFrame:
-    """Arrow-batched PCM decode + per-clip feature extraction: integer
-    stats computed in EXACT arithmetic over the raw PCM codes (sum of
-    codes, sum of squared codes, peak |code|, zero crossings of the
-    sign) so the downstream summary is bit-reproducible and oracle-
-    checkable — floats would make RMS order-dependent.
-
-    Output: (id, channels, sample_rate, n_frames, code_sum, code_sq_sum,
-    peak_code, zero_crossings) — NULL row for out-of-contract payloads."""
-    import pandas as pd
-
-    schema = T.StructType(
-        [
-            _id_field(df, id_col),
-            T.StructField("channels", T.IntegerType()),
-            T.StructField("sample_rate", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("code_sum", T.LongType()),
-            T.StructField("code_sq_sum", T.LongType()),
-            T.StructField("peak_code", T.LongType()),
-            T.StructField("zero_crossings", T.LongType()),
-        ]
-    )
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = []
-            for b in pdf[blob_col]:
-                p = parse_wav_samples(_blob_bytes(b))
-                if p is None:
-                    rows.append((None,) * 7)
-                    continue
-                ch, rate, n, x = p
-                # back to integer codes (16-bit scale; 8-bit files land
-                # on multiples of 256) — exact arithmetic from here on
-                codes = np.round(x * 32768.0).astype(np.int64)
-                s = np.sign(codes)
-                nz = s != 0
-                sv = s[nz]
-                zc = int(np.count_nonzero(sv[1:] != sv[:-1]))
-                rows.append(
-                    (
-                        ch,
-                        rate,
-                        n,
-                        int(codes.sum()),
-                        int((codes * codes).sum()),
-                        int(np.abs(codes).max()),
-                        zc,
-                    )
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "channels",
-                    "sample_rate",
-                    "n_frames",
-                    "code_sum",
-                    "code_sq_sum",
-                    "peak_code",
-                    "zero_crossings",
-                ],
-            )
-            out.insert(0, id_col, pdf[id_col].values)
-            for c in ("channels", "sample_rate"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in (
-                "n_frames",
-                "code_sum",
-                "code_sq_sum",
-                "peak_code",
+    """PCM decode + per-clip features (``_pcm_stats``): (id, channels,
+    sample_rate, n_frames, code_sum, code_sq_sum, peak_code,
+    zero_crossings) — NULL row for out-of-contract payloads."""
+    return _map_blobs(
+        df, id_col, blob_col, _pcm_stats,
+        [("channels", T.IntegerType()), ("sample_rate", T.IntegerType())]
+        + [
+            (name, T.LongType())
+            for name in (
+                "n_frames", "code_sum", "code_sq_sum", "peak_code",
                 "zero_crossings",
-            ):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
-
-    return df.select(id_col, blob_col).mapInPandas(_decode, schema=schema)
+            )
+        ],
+    )

@@ -160,7 +160,7 @@ def _read_store_range(
     lo = str(start) if start is not None else None
     hi = str(end) if end is not None else None
     return SS.read_table(
-        spark, store_path, column_range=("metric_date", lo, hi)
+        spark, store_path, column_ranges=[("metric_date", lo, hi)]
     )
 
 

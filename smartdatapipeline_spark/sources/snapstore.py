@@ -1867,7 +1867,6 @@ def read_table(
     partition_values: list | None = None,
     partition_col: str | list[str] | None = None,
     merge_schema: bool = False,
-    column_range: tuple | None = None,
     as_of=None,
     where_null: str | None = None,
     column_ranges: list | None = None,
@@ -1884,14 +1883,13 @@ def read_table(
     live batches' schemas (columns added by later appends read as NULL
     in older batches — Delta's additive schema evolution); off by
     default because schema merging costs a footer pass per file.
-    ``column_range=(col, lo, hi)`` filters rows to ``lo <= col <= hi``
-    (either bound may be None) AND skips manifest entries whose
-    recorded min/max cannot intersect — Iceberg-style column-stats
-    data skipping on NON-partition predicates; entries without stats
-    for the column are conservatively read. ``column_ranges=[(col, lo,
-    hi), ...]`` (r14, r13 VERDICT #4) is the ANDed multi-predicate
-    form — an (x, y)-z-ordered table prunes on BOTH dimensions in one
-    read; it composes with ``column_range`` and ``where_null``.
+    ``column_ranges=[(col, lo, hi), ...]`` filters rows to
+    ``lo <= col <= hi`` for every listed range (ANDed; either bound may
+    be None) AND skips manifest entries whose recorded min/max cannot
+    intersect one of them — Iceberg-style column-stats data skipping
+    on NON-partition predicates, so an (x, y)-z-ordered table prunes on
+    BOTH dimensions in one read; entries without stats for a column
+    are conservatively read. It composes with ``where_null``.
     ``where_null=col`` filters rows to ``col IS NULL`` AND skips
     entries whose recorded null count is zero (r12 VERDICT #7 — the
     scrub/quality-audit read pattern)."""
@@ -1904,9 +1902,7 @@ def read_table(
         if partition_values is not None
         else None
     )
-    ranges = ([tuple(column_range)] if column_range is not None else []) + [
-        tuple(r) for r in (column_ranges or [])
-    ]
+    ranges = [tuple(r) for r in (column_ranges or [])]
     # scan planning goes through the Arrow-pruned manifest path (r12):
     # only entries surviving partition/stats pruning are materialized
     target, live, total_live, sample, dvs = _snapshot_for_read(
@@ -2459,7 +2455,7 @@ def compact(
     range-partitions the table on the Morton key of the two columns
     (functions/layout.py) and lands each z-range as its OWN batch with
     min/max stats recorded for both columns — so after maintenance,
-    ``read_table(column_range=…)`` skips whole batches at the MANIFEST
+    ``read_table(column_ranges=…)`` skips whole batches at the MANIFEST
     level for predicates on EITHER clustered column (ingest-order
     batches each span the full value range and skip nothing).
     ``stats_cols`` adds further stat-tracked columns to every rewritten
@@ -2798,7 +2794,7 @@ def analyze_table(
     batch dir), and ONE metadata commit re-adds those entries with the
     merged stats. A table ingested before the stats discipline (or
     before a column existed) retroactively gains manifest pruning —
-    ``column_range`` / ``where_null`` skipping and merge key-range
+    ``column_ranges`` / ``where_null`` skipping and merge key-range
     candidate pruning — at metadata cost, no byte of data moved.
 
     Batches already carrying stats for every requested column are

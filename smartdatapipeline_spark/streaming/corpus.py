@@ -5,12 +5,16 @@ the end-to-end composition the 100 TB story runs nightly/continuously:
   MinHash index (only colliding buckets read) → append survivors to the
   corpus AND their signatures/bands to the index.
 
-``foreachBatch`` gives exactly-once batch semantics against plain
-parquet sinks (each micro-batch id is committed atomically by the
-streaming checkpoint); the index grows append-only, so the probe cost
-per batch is bounded by bucket collisions, never corpus size. Unlike
-re-running corpus-wide dedup per ingest (O(corpus) every time), the
-incremental path is O(batch + collisions).
+``foreachBatch`` is at-least-once: the checkpoint commits a micro-batch
+id only after the body returns, and a restart replays an uncommitted
+batch. The body's plain-parquet appends are three separate writes, not
+one commit, so a crash after the corpus append and before the index
+append replays the batch against an index that lacks its survivors,
+and they are appended to the corpus a second time. The index grows
+append-only, so the probe cost per batch is bounded by bucket
+collisions, never corpus size. Unlike re-running corpus-wide dedup
+per ingest (O(corpus) every time), the incremental path is
+O(batch + collisions).
 """
 
 from __future__ import annotations

@@ -70,7 +70,7 @@ def test_dv_pruned_read_still_applies(spark, store):
     SS.delete_where(spark, store, "id % 5 = 0", mode="dv")
     pr = _ids(SS.read_table(spark, store, partition_values=["d0"]))
     assert pr == [i for i in range(20) if i % 3 == 0 and i % 5]
-    cr = _ids(SS.read_table(spark, store, column_range=("id", 0, 9)))
+    cr = _ids(SS.read_table(spark, store, column_ranges=[("id", 0, 9)]))
     assert cr == [i for i in range(10) if i % 5]
 
 
@@ -204,7 +204,7 @@ def test_dv_delete_prune_stats_skip(spark, tmp_path):
         if not SS._is_dv(e) and (e["stats"] or {}).get("id", {}).get("max") == 99
     )
     assert lo_batch not in tgt_dirs
-    assert _ids(SS.read_table(spark, root, column_range=("id", 1040, 1060))) == [
+    assert _ids(SS.read_table(spark, root, column_ranges=[("id", 1040, 1060)])) == [
         i for i in range(1040, 1061) if i != 1050
     ]
 

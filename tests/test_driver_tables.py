@@ -1,12 +1,14 @@
-"""Driver-built tables, session conf writes and the ingest loop's writes.
+"""Driver-built tables, session conf writes, the ingest loop's writes and
+the Arrow-batched Python operators.
 
 ``session.local_frame`` is the one route from a Python list to a
 DataFrame in the library: a JVM-only ``LocalRelation``, so a UDF-free
 query never forks ``pyspark.daemon`` or a Python worker. The source
 scans below keep every other route (``createDataFrame`` over a list or
 RDD, ``parallelize``) out of the package and the query registry, keep
-library code from writing session conf, and keep the ingest loop
-committing only through the snapshot store.
+library code from writing session conf, keep the ingest loop
+committing only through the snapshot store, and keep ``mapInPandas`` to
+its three runners.
 """
 from __future__ import annotations
 
@@ -172,3 +174,18 @@ def test_ingest_loop_commits_only_through_the_snapshot_store():
     ), "the scan no longer finds the snapshot store's own writer"
     in_loop = [o for o in offenders if o.startswith(loop)]
     assert not in_loop, "the ingest loop writes around the snapshot store: " + ", ".join(in_loop)
+
+
+def test_arrow_batched_python_only_through_the_three_runners():
+    """A pandas-UDF operator forks Python workers and round-trips every
+    row through Arrow, so each one is written once: the blob kernel
+    every multimodal decoder runs through, the Misra-Gries partial, and
+    the registry's one encoder of synthetic media blobs."""
+    allowed = {
+        ("smartdatapipeline_spark/functions/multimodal.py", "_map_blobs", "mapInPandas"),
+        ("smartdatapipeline_spark/functions/sketch.py", "misra_gries_partial", "mapInPandas"),
+        ("__spark_entry__.py", "_encoded_blobs", "mapInPandas"),
+    }
+    seen, offenders = _scan({"mapInPandas"}, allowed)
+    assert seen == allowed, "the scan no longer finds a runner's own call"
+    assert not offenders, "mapInPandas outside the three runners: " + ", ".join(offenders)

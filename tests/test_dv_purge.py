@@ -80,7 +80,7 @@ def test_purge_preserves_zorder_pruning(spark, tmp_path):
     assert not [e for e in live if SS._is_dv(e)]
     # every live batch still carries a z envelope
     assert all((e["stats"] or {}).get("__zorder__") for e in live)
-    got = _ids(SS.read_table(spark, root, column_range=("id", 40, 49)))
+    got = _ids(SS.read_table(spark, root, column_ranges=[("id", 40, 49)]))
     assert got == [i for i in range(40, 50) if i != 42]
     # pruning still bites: the narrow range reads fewer files than all
     narrow = SS._snapshot_for_read(root, None, None, [("id", 40, 49)])[1]

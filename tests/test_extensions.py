@@ -590,19 +590,6 @@ def test_parse_bmp_pixels_golden():
     assert MM.parse_bmp_pixels(b"BM" + b"\x00" * 10) is None
 
 
-def test_decode_bmp_pixels_on_spark(spark):
-    """mapInPandas plumbing: BMP rows decode, non-BMP rows yield NULLs."""
-    bmp = _make_bmp_3x2()
-    df = spark.createDataFrame(
-        [(1, bytearray(bmp)), (2, bytearray(b"not an image"))],
-        "doc_id long, blob binary",
-    )
-    out = {r["doc_id"]: r for r in MM.decode_bmp_pixels(df).collect()}
-    assert (out[1]["width"], out[1]["height"]) == (3, 2)
-    assert bytes(out[1]["pixels"])[:9] == bytes([255, 0, 0, 0, 255, 0, 0, 0, 255])
-    assert out[2]["width"] is None and out[2]["pixels"] is None
-
-
 def test_every_format_decodes_codec_free():
     """Round 6: PNG, BMP, and baseline JPEG all decode from scratch —
     parse_any_pixels dispatches by magic and no format needs PIL."""

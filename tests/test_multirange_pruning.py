@@ -53,11 +53,10 @@ def test_anded_ranges_prune_more_than_either(spark, quadrants):
 
 
 def test_ranges_compose_with_single_and_rows_filtered(spark, quadrants):
-    # column_range (legacy singular) composes with column_ranges
+    # the ranges AND together on rows inside surviving batches too
     got = SS.read_table(
         spark, quadrants,
-        column_range=("id", 12, 14),
-        column_ranges=[("value", 10.0, 15.0)],
+        column_ranges=[("id", 12, 14), ("value", 10.0, 15.0)],
     )
     rows = sorted((r["id"], r["value"]) for r in got.collect())
     assert rows == [(i, v) for i in range(12, 15) for v in (10.0, 15.0)]

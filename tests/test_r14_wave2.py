@@ -112,7 +112,7 @@ def test_analyze_backfills_stats_without_rewrite(spark, tmp_path):
     # pruning now bites
     narrow = SS._snapshot_for_read(root, None, None, [("id", 0, 9)])[1]
     assert len(narrow) == 1
-    assert _ids(SS.read_table(spark, root, column_range=("id", 0, 9))) == list(range(10))
+    assert _ids(SS.read_table(spark, root, column_ranges=[("id", 0, 9)])) == list(range(10))
     # CDC-transparent
     assert SS.table_changes(spark, root, v - 1, v).count() == 0
     # idempotent: nothing left to do
@@ -129,7 +129,7 @@ def test_analyze_across_checkpoint_no_duplicates(spark, tmp_path):
     SS.analyze_table(spark, root, ("id",))
     got = _ids(SS.read_table(spark, root))
     assert got == list(range(SS._CHECKPOINT_INTERVAL))  # no dups
-    narrow = SS.read_table(spark, root, column_range=("id", 2, 3))
+    narrow = SS.read_table(spark, root, column_ranges=[("id", 2, 3)])
     assert _ids(narrow) == [2, 3]
 
 
@@ -160,7 +160,7 @@ def test_analyze_dv_covered_stats_are_superset(spark, tmp_path):
     data = [e for e in live if not SS._is_dv(e)]
     assert data[0]["stats"]["id"]["max"] == 9  # raw envelope
     # the deleted row stays deleted through the analyzed read
-    assert _ids(SS.read_table(spark, root, column_range=("id", 5, 9))) == [5, 6, 7, 8]
+    assert _ids(SS.read_table(spark, root, column_ranges=[("id", 5, 9)])) == [5, 6, 7, 8]
 
 
 # ---------------------------------------------------- CHECK constraints

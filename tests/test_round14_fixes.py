@@ -206,7 +206,7 @@ def test_dv_literal_string_value_not_misclassified(spark, tmp_path):
     assert 999 in got  # the poison batch survives the checkpointed read
     # and a stats-pruned read still sees it
     assert _ids(
-        SS.read_table(spark, root, column_range=("tag", "__dv__", "__dv__"))
+        SS.read_table(spark, root, column_ranges=[("tag", "__dv__", "__dv__")])
     ) == [999]
 
 

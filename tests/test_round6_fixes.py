@@ -316,30 +316,6 @@ def test_png_rejects_malformed():
         assert parse_png_pixels(blob) is None
 
 
-def test_decode_png_pixels_frame(spark):
-    """The mapInPandas wrapper: PNG rows decode, non-PNG rows go NULL
-    (mixed-corpus fail-soft), id column name/type preserved."""
-    from smartdatapipeline_spark.functions.multimodal import (
-        decode_png_pixels,
-        encode_png,
-    )
-
-    px = bytes((i * 3) % 256 for i in range(4 * 2 * 3))
-    rows = [
-        ("a", bytearray(encode_png(4, 2, 3, px))),
-        ("b", bytearray(b"\xff\xd8\xff\xe0 jpeg-ish")),
-    ]
-    df = spark.createDataFrame(rows, "name string, blob binary")
-    got = {r["name"]: r for r in decode_png_pixels(df, id_col="name").collect()}
-    assert (got["a"]["width"], got["a"]["height"], got["a"]["n_channels"]) == (
-        4,
-        2,
-        3,
-    )
-    assert bytes(got["a"]["pixels"]) == px
-    assert got["b"]["width"] is None and got["b"]["pixels"] is None
-
-
 # ------------------------------------------- gold-upsert concurrency
 
 

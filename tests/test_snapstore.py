@@ -621,14 +621,14 @@ def test_column_stats_data_skipping(spark, tmp_path):
     assert stats == [(5, 9), (100, 200)]
     # range [0, 20]: the hi batch is SKIPPED at the manifest, the
     # stats-less batch is read (conservative) and filtered
-    df = SS.read_table(spark, root, column_range=("v", 0, 20))
+    df = SS.read_table(spark, root, column_ranges=[("v", 0, 20)])
     assert _rows(df) == [("2024-01-01", "lo", 5), ("2024-01-01", "lo2", 9)]
     # the scan's file list (not just surviving rows): lo batch +
     # stats-less batch; the hi batch never reaches the plan
     dirs = {os.path.dirname(f) for f in df.inputFiles()}
     assert len(dirs) == 2
     # unbounded-low range
-    assert _rows(SS.read_table(spark, root, column_range=("v", 100, None))) == [
+    assert _rows(SS.read_table(spark, root, column_ranges=[("v", 100, None)])) == [
         ("2024-01-02", "hi", 100),
         ("2024-01-02", "hi2", 200),
     ]
@@ -762,7 +762,7 @@ def test_pruned_read_of_existing_table_returns_empty(spark, tmp_path):
     empty = SS.read_table(spark, root, partition_values=["2030-12-31"])
     assert empty.count() == 0
     assert empty.columns == ["d", "k", "v"]
-    empty2 = SS.read_table(spark, root, column_range=("v", 100, 200))
+    empty2 = SS.read_table(spark, root, column_ranges=[("v", 100, 200)])
     assert empty2.count() == 0 and empty2.columns == ["d", "k", "v"]
     with pytest.raises(SS.NoSuchTableError):
         SS.read_table(spark, str(tmp_path / "nope"))
@@ -791,7 +791,7 @@ def test_emptied_table_reads_empty_with_its_schema(spark, tmp_path):
 
 def test_optimize_zorder_enables_column_skipping(spark, tmp_path):
     """OPTIMIZE ZORDER (r11): ingest-order batches each span the full
-    value range (column_range skips nothing); after a z-ordered
+    value range (a column range skips nothing); after a z-ordered
     compact, each rewritten batch holds one tight z-range, so a narrow
     predicate on EITHER clustered column prunes most batches at the
     manifest level — contents unchanged, CDC across it empty."""
@@ -833,7 +833,7 @@ def test_optimize_zorder_enables_column_skipping(spark, tmp_path):
     assert got == sorted((d, x, y) for d, x, y in rows)
     assert SS.table_changes(spark, root, v_before, v).count() == 0
     # the pruned read returns exactly the filtered rows
-    narrow = SS.read_table(spark, root, column_range=("x", 10.0, 12.0))
+    narrow = SS.read_table(spark, root, column_ranges=[("x", 10.0, 12.0)])
     assert narrow.count() == sum(1 for _, x, _ in rows if 10.0 <= x <= 12.0)
 
 

@@ -114,7 +114,7 @@ def test_partial_zorder_preserves_column_pruning(spark, tmp_path):
     assert len(listed("x", 10.0, 12.0)) < len(live)
     assert len(listed("y", 90.0, 92.0)) < len(live)
     # pruned read returns exactly the filtered rows
-    narrow = SS.read_table(spark, root, column_range=("x", 10.0, 12.0))
+    narrow = SS.read_table(spark, root, column_ranges=[("x", 10.0, 12.0)])
     full = SS.read_table(spark, root).filter(
         (F.col("x") >= 10.0) & (F.col("x") <= 12.0)
     )
@@ -222,5 +222,5 @@ def test_partial_zorder_out_of_domain_values_clamp(spark, tmp_path):
     assert got == want
     # the out-of-domain read still finds its rows (stats are the batch's
     # own min/max, which DO cover the outliers)
-    hi = SS.read_table(spark, root, column_range=("x", 200.0, 300.0))
+    hi = SS.read_table(spark, root, column_ranges=[("x", 200.0, 300.0)])
     assert hi.count() == 1
